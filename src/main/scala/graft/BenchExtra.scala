@@ -53,67 +53,6 @@ object BenchExtra {
               " levenshtein=" + "levenshtein".r.findAllIn(plan).size)
             plan.split("\n").filter(l => l.contains("Filter") || l.contains("Project"))
               .take(12).foreach(l => println("[erplan] " + l.take(400)))
-          case "@erblock" =>
-            // blocking-stage decomposition: materialize each sub-stage of
-            // candidatePairs in isolation (separate sessions of the same
-            // shapes — evidence for OPTIMIZATION_r06.md only)
-            import org.apache.spark.sql.functions._
-            val cfgB = er.Pipeline.Config(
-              nPages = sys.env.getOrElse("SPARK_GRAFT_ER_PAGES", "50000").toLong,
-              nEntities = 3000, workDir = "/tmp/graft_benchextra_erb",
-              collectStats = false)
-            val pages = er.Corpus.pages(spark, cfgB.nPages, cfgB.nEntities, cfgB.seed).toDF()
-            val mentions = er.Pipeline.extractMentions(pages)
-            val (strings, _) = er.Pipeline.internStrings(mentions)
-            def t(tag: String)(body: => Unit): Unit = {
-              val t0 = System.nanoTime()
-              body
-              println(f"[erblock] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            }
-            val s = strings.persist()
-            t("strings_count") { s.count(): Unit }
-            val keyed = s.select(col("string_id"),
-              explode(graft.functions.trigram_keys(col("match_key"))).as("key")).persist()
-            t("keyed") { keyed.count(): Unit }
-            val freq = keyed.groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-            t("freq") { freq.write.format("noop").mode("overwrite").save() }
-            val prefixed = keyed.join(freq.filter(col("cnt") >= 2), Seq("key"))
-              .withColumn("rnk", org.apache.spark.sql.functions.row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("string_id")).orderBy(col("cnt").asc, col("key").asc)))
-              .filter(col("rnk") <= cfgB.prefixKeys)
-              .select(col("string_id"), col("key")).persist()
-            t("prefixed") { prefixed.count(): Unit }
-            val pfreq = prefixed.groupBy(col("key")).agg(count(lit(1)).as("cnt"))
-            val kept = pfreq.filter(col("cnt") >= 2 && col("cnt") <= cfgB.maxBlockSize)
-            val blocks = prefixed.join(kept.select(col("key")), Seq("key"))
-              .groupBy(col("key")).agg(collect_list(col("string_id")).as("members"))
-              .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-            val trigramPairs = blocks
-              .select(explode(col("members")).as("src"), col("members"))
-              .select(col("src"), explode(col("members")).as("dst"))
-              .filter(col("src") < col("dst"))
-            t("trigramPairs") { trigramPairs.write.format("noop").mode("overwrite").save() }
-            val phonKeyed = s.select(col("string_id"),
-              explode(array_distinct(transform(
-                split(col("match_key"), " "),
-                x => graft.functions.double_metaphone(x)))).as("pkey"))
-              .filter(length(col("pkey")) >= 3)
-            t("phonKeyed") { phonKeyed.write.format("noop").mode("overwrite").save() }
-            val phonFreq = phonKeyed.groupBy(col("pkey")).agg(count(lit(1)).as("cnt"))
-            val phonBlocks = phonKeyed
-              .join(phonFreq.filter(col("cnt") >= 2 && col("cnt") <= cfgB.maxBlockSize)
-                .select(col("pkey")), Seq("pkey"))
-              .groupBy(col("pkey")).agg(collect_list(col("string_id")).as("ids"))
-              .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-            val phonPairs = phonBlocks
-              .select(explode(col("ids")).as("src"), col("ids"))
-              .select(col("src"), explode(col("ids")).as("dst"))
-              .filter(col("src") < col("dst")).select(col("src"), col("dst"))
-            t("phonPairs") { phonPairs.write.format("noop").mode("overwrite").save() }
-            val pairsAll = trigramPairs.unionByName(phonPairs).dropDuplicates("src", "dst")
-            t("pairs_dedup") { pairsAll.write.format("noop").mode("overwrite").save() }
-            keyed.unpersist(); prefixed.unpersist(); s.unpersist()
           case "@er" =>
             // the Bench ER probe body (timed part only): lazy-DAG pipeline
             // run; set GRAFT_STAGE_TIMING=1 for the per-stage split

@@ -201,7 +201,8 @@ object Pipeline {
 
   // ---------------------------------------------------------------- blocking
 
-  /** distinct strings → candidate string pairs (src < dst).
+  /** distinct strings → candidate string pairs (src < dst), each pair
+    * emitted exactly once.
     *
     * Prefix-filtered blocking (the size/prefix filters of the fuzzy-join
     * literature — PAPERS.md MF-Join; the reference's analogue is the
@@ -216,6 +217,25 @@ object Pipeline {
     * Precision is NOT blocking's job here — every candidate pair goes
     * through the codegen'd scalar gate + hub rule (scorePairs/matchEdges).
     * Double-Metaphone phonetic keys union in as a second key family.
+    *
+    * Exactly-once ownership (canonical-block dedup: the prefix-filter
+    * dedup of Fuzzy Joins Using MapReduce, ICDE 2012, and SparkER's
+    * redundancy-free meta-blocking, EDBT 2019). Let K(s) be s's KEPT
+    * prefix keys (2 ≤ pfreq ≤ maxBlockSize) and Q(s) its kept phonetic
+    * keys. A pair sits in the block of every key its members share, and
+    * only one block emits it:
+    *  - trigram block k emits (a, b) iff k = min(K(a) ∩ K(b));
+    *  - phonetic block p emits (a, b) iff K(a) ∩ K(b) = ∅ and
+    *    p = min(Q(a) ∩ Q(b)).
+    * Ownership ranges over kept keys only, so a pair whose smallest
+    * shared key is hot or a prefix singleton is still emitted by its
+    * smallest kept one. Both rules are one rule over a single long key
+    * space in which every trigram key orders before every phonetic key:
+    * block x emits (a, b) iff x = min(own(a) ∩ own(b)), own = K ∪ Q.
+    * Each block member carries its own(s) (≤ prefixKeys + a few codes)
+    * and `gf.block_pairs` applies the test while walking i < j, so the
+    * pair set is duplicate-free by construction: no global (src, dst)
+    * exchange.
     */
   def candidatePairs(strings: DataFrame, cfg: Config): (DataFrame, BlockingStats) = {
     val spark = strings.sparkSession
@@ -266,50 +286,54 @@ object Pipeline {
       } else (-1L, -1L, -1L, -1L)
     val kept = pfreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize)
 
-    // AQE sizes stages by their INPUT bytes, so the aggregated block list
-    // (~small) gets coalesced to a couple of partitions — and the pair
-    // explosion below (quadratic in block size) would then run in those
-    // few tasks, serializing the whole stage (measured: blocking 47 s at
-    // 2 cores → 41 s at 8 cores before this repartition). Explicit
-    // round-robin repartition of the cheap aggregated rows restores full
-    // parallelism for the expensive explode.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val blocks = prefixed
-      .join(kept.select($"key"), Seq("key")) // drops singleton + capped keys
-      .groupBy($"key")
-      .agg(collect_list($"string_id").as("members"))
-      .repartition(sessionParts)
-
-    // map-side pair expansion: bounded by maxBlockSize² per key, ≤
-    // prefixKeys blocks per string
-    val trigramPairs = blocks
-      .select(explode($"members").as("src"), $"members")
-      .select($"src", explode($"members").as("dst"))
-      .filter($"src" < $"dst")
-
     // phonetic blocking: per-token Double Metaphone codes (len >= 3);
-    // the scorer does the precision work on these coarse keys.
+    // the scorer does the precision work on these coarse keys. A code
+    // (≤ 6 ASCII letters/digits, ExprKernels.doubleMetaphone) packs
+    // exactly into a long above 2^56, so every phonetic key orders after
+    // every 24-bit trigram key
     val phonKeyed = strings
       .select($"string_id",
         explode(array_distinct(transform(
           split($"match_key", " "),
           t => gf.double_metaphone(t)))).as("pkey"))
       .filter(length($"pkey") >= 3)
-    val phonFreq = phonKeyed.groupBy($"pkey").agg(count(lit(1)).as("cnt"))
-    val phonBlocks = phonKeyed
-      .join(phonFreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize).select($"pkey"), Seq("pkey"))
-      .groupBy($"pkey").agg(collect_list($"string_id").as("ids"))
-      .repartition(sessionParts) // same explode-parallelism guard as above
-    val phonPairs = phonBlocks
-      .select(explode($"ids").as("src"), $"ids")
-      .select($"src", explode($"ids").as("dst"))
-      .filter($"src" < $"dst")
-      .select($"src", $"dst")
+    val phonKept = phonKeyed.groupBy($"pkey").agg(count(lit(1)).as("cnt"))
+      .filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize)
+    val phonId = when(octet_length($"pkey") <= 7,
+      lit(1L << 56) + conv(hex($"pkey"), 16, 10).cast("long"))
+      .otherwise(raise_error(lit("phonetic key longer than 7 bytes")).cast("long"))
 
-    val pairs = trigramPairs.unionByName(phonPairs).dropDuplicates("src", "dst")
+    // one ownership set per string: its kept prefix keys K(s) and its
+    // kept phonetic keys Q(s), in one key space ordered K before Q
+    val own = prefixed
+      .join(kept.select($"key"), Seq("key")) // drops singleton + capped keys
+      .select($"string_id", $"key".cast("long").as("key"))
+      .unionByName(phonKeyed.join(phonKept.select($"pkey"), Seq("pkey"))
+        .select($"string_id", phonId.as("key")))
+      .groupBy($"string_id")
+      .agg(collect_list($"key").as("keys"))
+
+    // AQE sizes stages by their INPUT bytes, so the aggregated block list
+    // (~small) gets coalesced to a couple of partitions — and the pair
+    // walk below (quadratic in block size) would then run in those few
+    // tasks, serializing the whole stage (measured: blocking 47 s at
+    // 2 cores → 41 s at 8 cores before this repartition). Explicit
+    // round-robin repartition of the cheap aggregated rows restores full
+    // parallelism for the expensive pair walk.
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+    // i < j walk per block, bounded by maxBlockSize²/2 per key; a block
+    // emits only the pairs whose smallest shared key it is — so a
+    // phonetic block skips every pair that shares a kept trigram key
+    val pairs = own
+      .select($"string_id", $"keys", explode($"keys").as("key"))
+      .groupBy($"key")
+      .agg(collect_list(struct($"string_id".as("id"), $"keys")).as("members"))
+      .repartition(sessionParts)
+      .select(gf.block_pairs($"key", $"members"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // always materialize here: the prefix/pfreq caches feed the pair DAG
-    // twice each, so they must still be cached when it first computes
+    // always materialize here: the keyed/prefix/pfreq caches feed the
+    // pair DAG, so they must still be cached when it first computes
     // (collectStats only gates the *extra* stats aggregation above)
     val nPairs = pairs.count()
     keyed.unpersist()

@@ -1,8 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -172,12 +173,13 @@ case class RefMatchScore(left: Expression, right: Expression)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
+      val s = ctx.freshName("graftMs")
       s"""
-         |float graft_ms = graft.text.MatchScore.matchScore($l.toString(), $r.toString());
-         |if (graft_ms == Float.MAX_VALUE) {
+         |float $s = graft.text.MatchScore.matchScore($l.toString(), $r.toString());
+         |if ($s == Float.MAX_VALUE) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = graft_ms;
+         |  ${ev.value} = $s;
          |}
        """.stripMargin
     })
@@ -201,12 +203,13 @@ case class RefMatchScorePre(left: Expression, right: Expression)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
+      val s = ctx.freshName("graftMsp")
       s"""
-         |float graft_msp = graft.text.MatchScore.matchScorePre($l.toString(), $r.toString());
-         |if (graft_msp == Float.MAX_VALUE) {
+         |float $s = graft.text.MatchScore.matchScorePre($l.toString(), $r.toString());
+         |if ($s == Float.MAX_VALUE) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = graft_msp;
+         |  ${ev.value} = $s;
          |}
        """.stripMargin
     })
@@ -274,13 +277,14 @@ case class RefBestPhrase(first: Expression, second: Expression, third: Expressio
       b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, p, b) => {
+      val r = ctx.freshName("graftBp")
       s"""
-         |org.apache.spark.sql.catalyst.InternalRow graft_bp =
+         |org.apache.spark.sql.catalyst.InternalRow $r =
          |  graft.functions.ExprKernels.refBestPhrase($l, $p, $b);
-         |if (graft_bp == null) {
+         |if ($r == null) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = graft_bp;
+         |  ${ev.value} = $r;
          |}
        """.stripMargin
     })
@@ -988,20 +992,26 @@ object ExprKernels {
     * shape shuffled every window hash of the corpus by doc_id just to
     * run a per-doc sliding min, which at 100 TB is a full-corpus shuffle
     * for a computation that never leaves the row. Returns null for docs
-    * with fewer than W tokens (the declarative filter's row drop). */
+    * with fewer than W tokens (the declarative filter's row drop); null
+    * elements are skipped, not counted. */
   def winnowFps(toks: org.apache.spark.sql.catalyst.util.ArrayData,
       w: Int, k: Int): GenericArrayData = {
-    val n = toks.numElements()
+    // the windows run over the non-null subsequence
+    val total = toks.numElements()
+    val tokBytes = new Array[Array[Byte]](total)
+    var n = 0
+    var i = 0
+    while (i < total) {
+      if (!toks.isNullAt(i)) {
+        tokBytes(n) = toks.getUTF8String(i).getBytes
+        n += 1
+      }
+      i += 1
+    }
     if (n < w) return null
     val nw = n - w + 1
     // window digests (16-byte md5 of the UTF-8 window text)
     val md = md5Local.get()
-    val tokBytes = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) {
-      tokBytes(i) = toks.getUTF8String(i).getBytes
-      i += 1
-    }
     val digests = new Array[Array[Byte]](nw)
     var p = 0
     while (p < nw) {
@@ -1135,13 +1145,14 @@ case class CosineSim(left: Expression, right: Expression)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
+      val c = ctx.freshName("graftCos")
       s"""
-         |double graft_cos = graft.functions.ExprKernels.cosine(
+         |double $c = graft.functions.ExprKernels.cosine(
          |  $l, ${isFloat(left)}, $r, ${isFloat(right)});
-         |if (Double.isNaN(graft_cos)) {
+         |if (Double.isNaN($c)) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = graft_cos;
+         |  ${ev.value} = $c;
          |}
        """.stripMargin
     })
@@ -1188,8 +1199,9 @@ case class ScriptCounts(child: Expression)
 /** Fused winnowing fingerprint selection (ExprKernels.winnowFps):
   * token array → array<struct<fp: string, pos: int>> of the selected
   * window fingerprints with their earliest selected 1-based positions;
-  * null below W tokens. Map-side replacement for the
-  * explode → sliding-min window → groupBy selection pipeline of q59. */
+  * null below W non-null tokens (null elements are skipped). Map-side
+  * replacement for the explode → sliding-min window → groupBy selection
+  * pipeline of q59. */
 case class WinnowFps(child: Expression, w: Int, k: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -1568,4 +1580,110 @@ case class AreaFold(first: Expression, second: Expression,
     copy(first = newChildren(0), second = newChildren(1),
       third = newChildren(2), fourth = newChildren(3))
   override def prettyName: String = "area_fold"
+}
+
+/** Exactly-once candidate-pair emission for one blocking key
+  * (er.Pipeline.candidatePairs): a generator over (key: bigint, members:
+  * array<struct<id: bigint, keys: array<bigint>>>). Walks members i < j
+  * only and emits (least(id), greatest(id)) iff min(keys(a) ∩ keys(b)) =
+  * key. A pair sits in the block of every key its members share, so
+  * exactly one block — the smallest shared key's — emits it:
+  * canonical-block ownership, the prefix-filter dedup of Fuzzy Joins
+  * Using MapReduce (ICDE 2012). Null members, null ids and null key
+  * elements are skipped. Rows are produced lazily into one reused row
+  * (GenerateExec projects each row before pulling the next), so a
+  * 256-member block never materializes its 32 640 candidates. */
+case class BlockPairs(key: Expression, members: Expression)
+    extends Generator with CodegenFallback {
+  override def children: Seq[Expression] = Seq(key, members)
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false)))
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (key.dataType, members.dataType) match {
+      case (LongType, ArrayType(StructType(Array(
+          StructField(_, LongType, _, _), StructField(_, ArrayType(LongType, _), _, _))), _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires (bigint, array<struct<id: bigint, keys: " +
+            s"array<bigint>>>), got ${key.dataType.simpleString}, " +
+            members.dataType.simpleString)
+    }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val k = key.eval(input)
+    val ms = members.eval(input).asInstanceOf[ArrayData]
+    if (k == null || ms == null) Iterator.empty
+    else BlockPairs.owned(k.asInstanceOf[Long], ms)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): BlockPairs =
+    copy(key = newChildren(0), members = newChildren(1))
+  override def prettyName: String = "block_pairs"
+}
+
+object BlockPairs {
+  /** min(a ∩ b), Long.MaxValue when disjoint — nested loops: the sets
+    * are a string's few ownership keys, too small to be worth sorting */
+  private def minShared(a: Array[Long], b: Array[Long]): Long = {
+    var best = Long.MaxValue
+    var i = 0
+    while (i < a.length) {
+      val x = a(i)
+      if (x < best) {
+        var j = 0
+        while (j < b.length && b(j) != x) j += 1
+        if (j < b.length) best = x
+      }
+      i += 1
+    }
+    best
+  }
+
+  private def owned(key: Long, ms: ArrayData): Iterator[InternalRow] = {
+    val ids = Array.newBuilder[Long]
+    val keys = Array.newBuilder[Array[Long]]
+    var m = 0
+    while (m < ms.numElements()) {
+      if (!ms.isNullAt(m)) {
+        val member = ms.getStruct(m, 2)
+        if (!member.isNullAt(0)) {
+          ids += member.getLong(0)
+          keys += (if (member.isNullAt(1)) Array.emptyLongArray else {
+            val ks = member.getArray(1)
+            (0 until ks.numElements()).filterNot(ks.isNullAt).map(ks.getLong).toArray
+          })
+        }
+      }
+      m += 1
+    }
+    val id = ids.result()
+    val ks = keys.result()
+    val row = new SpecificInternalRow(Seq(LongType, LongType))
+    new Iterator[InternalRow] {
+      private var i = 0
+      private var j = 0
+      private var ready = false
+      /** moves (i, j) to the next owned pair; false when exhausted */
+      private def seek(): Boolean = {
+        while (i < id.length) {
+          j += 1
+          if (j >= id.length) { i += 1; j = i }
+          else if (id(i) != id(j) && minShared(ks(i), ks(j)) == key) return true
+        }
+        false
+      }
+      override def hasNext: Boolean = ready || { ready = seek(); ready }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        ready = false
+        row.setLong(0, math.min(id(i), id(j)))
+        row.setLong(1, math.max(id(i), id(j)))
+        row
+      }
+    }
+  }
 }

@@ -120,6 +120,12 @@ package object functions {
     * document order; comment/script/style bodies excluded. */
   def html_links(c: Column): Column = col(HtmlLinks(ex(c)))
 
+  /** exactly-once pair emission for one blocking key: generator of
+    * (src, dst) rows, src < dst, for the member pairs whose smallest
+    * shared key is `key` — see [[BlockPairs]]. */
+  def block_pairs(key: Column, members: Column): Column =
+    col(BlockPairs(ex(key), ex(members)))
+
   /** Register all kernels under SQL names (idempotent, session-scoped). */
   def registerAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -147,6 +153,7 @@ package object functions {
     reg.createOrReplaceTempFunction("minhash_xx", es => MinhashXx(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("shingle_hashes", es => ShingleHashes(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("format_address", es => FormatAddress(es), "scala_udf")
+    reg.createOrReplaceTempFunction("block_pairs", es => BlockPairs(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("area_fold", es => AreaFold(es(0), es(1), es(2), es(3)), "scala_udf")
   }
 }

@@ -175,9 +175,11 @@ object StreamOps {
     * cap, where the two are provably identical (StreamingSpec).
     *
     * Pairs may repeat across micro-batches when two strings share several
-    * blocking keys (the batch path's global dropDuplicates has no
-    * bounded-state streaming equivalent without a watermark on a
-    * timestamp the pair doesn't carry); downstream scoring is idempotent
+    * blocking keys. The batch path emits a pair once, from the block of
+    * its smallest shared kept key; that rule needs every shared key's
+    * kept/hot status, which here lives in other keys' state and changes
+    * as keys saturate, so one key's state cannot decide ownership.
+    * Downstream scoring is idempotent
     * and the sink dedups by (src, dst) — the same sink-side contract as
     * [[internIdCollisions]]. State shards by blocking key, so hot-key
     * pressure spreads across the state store exactly like the batch

@@ -241,4 +241,144 @@ class ErPipelineSpec extends AnyFunSuite {
     assert(pairs.filter(col("src") === 1L && col("dst") === 2L).count() == 1,
       "the near-duplicate pair outside the hot block must still be generated")
   }
+
+  /** Driver-side sequential reference of candidatePairs' pair SET (no
+    * ownership rule, no Spark): trigram keys, freq ≥ 2 ranking, top
+    * prefixKeys prefixes, kept blocks (2 ≤ pfreq ≤ cap), kept phonetic
+    * blocks, every a < b pair in every kept block. The intermediates are
+    * returned so specs can check what a hand-built corpus covers. */
+  private case class BlockingRef(
+      kept: Map[Long, Set[Int]], // K(s): kept prefix keys
+      hot: Set[Int], // prefix keys over the cap
+      phon: Map[Long, Set[String]], // Q(s): kept phonetic keys
+      trigramPairs: Set[(Long, Long)],
+      phoneticPairs: Set[(Long, Long)]) {
+    def pairs: Set[(Long, Long)] = trigramPairs ++ phoneticPairs
+  }
+
+  private def blockingRef(strings: Seq[(Long, String)], cfg: Pipeline.Config): BlockingRef = {
+    def blockPairs(members: Map[Long, Set[_ <: Any]], keep: Int => Boolean)
+        : (Set[(Long, Long)], Map[Any, Int]) = {
+      val blocks = members.toSeq.flatMap { case (id, ks) => ks.map(k => (k: Any, id)) }
+        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
+      val pairs = for {
+        (_, ids) <- blocks.toSeq if keep(ids.size)
+        i <- ids.indices; j <- i + 1 until ids.size
+      } yield (ids(i), ids(j))
+      (pairs.toSet, blocks.map { case (k, v) => k -> v.size })
+    }
+    def isKept(n: Int) = n >= 2 && n <= cfg.maxBlockSize
+    val tris = strings.map { case (id, k) =>
+      id -> graft.text.Ngrams.trigramBlockingKeys(k).toSeq.distinct }
+    val freq = tris.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size }
+    val prefix = tris.map { case (id, ks) =>
+      id -> ks.filter(freq(_) >= 2).sortBy(k => (freq(k), k)).take(cfg.prefixKeys).toSet
+    }.toMap
+    val (triPairs, pfreq) = blockPairs(prefix, isKept)
+    val kept = prefix.map { case (id, ks) => id -> ks.filter(k => isKept(pfreq(k))) }
+    val codes = strings.map { case (id, k) =>
+      id -> k.split(" ", -1).map(graft.functions.ExprKernels.doubleMetaphone)
+        .filter(c => c.codePointCount(0, c.length) >= 3).toSet
+    }.toMap
+    val (phonPairs, cfreq) = blockPairs(codes, isKept)
+    BlockingRef(kept,
+      pfreq.collect { case (k: Int, n) if n > cfg.maxBlockSize => k }.toSet,
+      codes.map { case (id, cs) => id -> cs.filter(c => isKept(cfreq(c))) },
+      triPairs, phonPairs)
+  }
+
+  /** candidatePairs == the reference pair set, with src < dst and no
+    * duplicate (src, dst) row. */
+  private def assertBlockingMatchesRef(strings: org.apache.spark.sql.DataFrame,
+      cfg: Pipeline.Config, tag: String): BlockingRef = {
+    val ref = blockingRef(
+      strings.select($"string_id", $"match_key").as[(Long, String)].collect().toSeq, cfg)
+    val (pairs, stats) = Pipeline.candidatePairs(strings, cfg)
+    val expected = ref.pairs.toSeq.toDF("src", "dst")
+    assert(pairs.exceptAll(expected).isEmpty, s"[$tag] pairs the reference does not block")
+    assert(expected.exceptAll(pairs).isEmpty, s"[$tag] reference pairs missing")
+    assert(pairs.filter($"src" >= $"dst").isEmpty, s"[$tag] src < dst violated")
+    assert(pairs.groupBy($"src", $"dst").count().filter($"count" > 1).isEmpty,
+      s"[$tag] duplicate (src, dst) rows")
+    assert(stats.candidatePairs == ref.pairs.size, s"[$tag] candidatePairs stat")
+    pairs.unpersist()
+    ref
+  }
+
+  test("blocking emits the reference pair set exactly once (seeded corpora)") {
+    for ((seed, cap) <- Seq((42L, 256), (7L, 256), (42L, 3))) {
+      val cfg = Pipeline.Config(seed = seed, nPages = 400, nEntities = 80,
+        maxBlockSize = cap, workDir = freshDir("block_ref"))
+      val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
+      val strings = Pipeline.internStrings(Pipeline.extractMentions(pages))._1.cache()
+      val ref = assertBlockingMatchesRef(strings, cfg, s"seed $seed cap $cap")
+      assert(ref.trigramPairs.nonEmpty && (ref.phoneticPairs -- ref.trigramPairs).nonEmpty,
+        s"seed $seed: both families must contribute pairs")
+      if (cap == 3) assert(ref.hot.nonEmpty, "the small cap must drop hot prefix keys")
+      strings.unpersist()
+    }
+  }
+
+  test("blocking emits the reference pair set exactly once (hand-built ownership cases)") {
+    // "aaa" sits in the prefix of six short strings: over the cap of 4,
+    // so it is hot — and it is the smallest key aaaxzb/aaaxzc share,
+    // while their kept keys aax/axz must still emit the pair
+    val hotShare = Seq((10L, "aaaxzb"), (11L, "aaaxzc"))
+    val hotFill = Seq((12L, "aaabq"), (13L, "aaadr"), (14L, "aaafs"), (15L, "aaagt"))
+    // several kept trigram keys AND a kept phonetic key in common
+    val both = Seq((20L, "berlin hauptstrasse"), (21L, "berlin hauptstrase"))
+    // the same Double Metaphone code (FLKR), no shared trigram
+    val phonOnly = Seq((30L, "philkor"), (31L, "filcor"))
+    val strings = (hotShare ++ hotFill ++ both ++ phonOnly).toDF("string_id", "match_key")
+    val cfg = Pipeline.Config(maxBlockSize = 4, workDir = freshDir("block_hand"))
+    val ref = assertBlockingMatchesRef(strings, cfg, "hand-built")
+
+    // the corpus covers the four ownership cases it claims to
+    def shared(a: Long, b: Long) = ref.kept(a) intersect ref.kept(b)
+    def sharedPhon(a: Long, b: Long) = ref.phon(a) intersect ref.phon(b)
+    val aaa = graft.text.Ngrams.trigramBlockingKeys("aaa").head
+    assert(ref.hot.contains(aaa) && shared(10L, 11L).nonEmpty &&
+      shared(10L, 11L).forall(_ > aaa),
+      "10/11: smallest shared prefix key hot, another shared key kept")
+    assert(shared(20L, 21L).size >= 2 && sharedPhon(20L, 21L).nonEmpty,
+      "20/21: several kept trigram keys and a kept phonetic key")
+    assert(shared(30L, 31L).isEmpty && sharedPhon(30L, 31L).nonEmpty,
+      "30/31: phonetic-only pair")
+    assert(Set((10L, 11L), (20L, 21L), (30L, 31L)).subsetOf(ref.pairs))
+  }
+
+  test("forestLabels resume skips incomplete iteration directories") {
+    // a 17-vertex chain needs four pointer-doubling rounds; capping at
+    // two leaves parents_iter_0/1 complete and throws
+    val chainEdges = (1L until 17L).map(i => (i, i + 1)).toDF("src", "dst")
+    val chainVerts = (1L to 17L).map(Tuple1(_)).toDF("id")
+    // the layout below is the parquet committer's; Iceberg commits
+    // atomically and has no partial directories to skip
+    assume(graft.ops.TableIO.format == "parquet")
+    val cfg = Pipeline.Config()
+    val (full, _) = Pipeline.forestLabels(chainVerts, chainEdges,
+      cfg.copy(workDir = freshDir("forest_resume_full")))
+    val dir = freshDir("forest_resume_part")
+    intercept[IllegalStateException] {
+      Pipeline.forestLabels(chainVerts, chainEdges, cfg.copy(workDir = dir, maxIterations = 2))
+    }
+    // a killed round 2: part files (a strict subset of round 1's rows)
+    // but no _SUCCESS; a killed round 3: only the committer's _temporary
+    assert(new java.io.File(s"$dir/parents_iter_1/_SUCCESS").exists())
+    val subset = freshDir("forest_resume_subset")
+    spark.read.parquet(s"$dir/parents_iter_1").limit(3).coalesce(1).write.parquet(subset)
+    val partial = new java.io.File(s"$dir/parents_iter_2")
+    new java.io.File(subset).listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(f => org.apache.commons.io.FileUtils.copyFileToDirectory(f, partial))
+    assert(partial.list().exists(_.startsWith("part-")) &&
+      !new java.io.File(partial, "_SUCCESS").exists())
+    new java.io.File(s"$dir/parents_iter_3/_temporary/0").mkdirs()
+
+    val (resumed, metrics) = Pipeline.forestLabels(chainVerts, chainEdges,
+      cfg.copy(workDir = dir, resume = true))
+    assert(metrics.head.iteration == 2, "resume must continue after the last complete round")
+    assert(full.exceptAll(resumed).isEmpty && resumed.exceptAll(full).isEmpty,
+      "resumed labels differ from the uninterrupted run")
+    assert(resumed.select("label").distinct().count() == 1L)
+  }
 }

@@ -246,4 +246,76 @@ class ExpressionsSpec extends AnyFunSuite {
     // and it actually executes through the generated code
     assert(df.count() == 100)
   }
+
+  test("codegen: two calls of one scorer in one projection compile (fresh local names)") {
+    // non-nullable inputs put both null-safe bodies into one generated
+    // method; fixed local names made Janino reject it with a variable
+    // redefinition. Fallback off: a failed compile throws instead of
+    // silently running interpreted.
+    val a = col("a")
+    def run(conf: (String, String)*): Array[org.apache.spark.sql.Row] = {
+      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try spark.range(200)
+        .select(concat(lit("berlin "), col("id").cast("string")).as("a"),
+          array(lit(1.0), col("id").cast("double")).as("v"))
+        .select(
+          gf.ref_match_score_pre(a, lit("berlin 1")).as("p1"),
+          gf.ref_match_score_pre(a, concat(a, lit("x"))).as("p2"),
+          gf.ref_match_score(a, lit("berlin 1")).as("s1"),
+          gf.ref_match_score(a, concat(lit("b"), a)).as("s2"),
+          gf.cosine_sim(col("v"), col("v")).as("c1"),
+          gf.cosine_sim(col("v"), array(lit(2.0), lit(1.0))).as("c2"),
+          gf.ref_best_phrase(a, array(lit("berlin"), a), array(lit(1L), lit(2L))).as("b1"),
+          gf.ref_best_phrase(a, array(a), array(lit(3L))).as("b2"))
+        .collect()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val codegen = run("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.wholeStage" -> "true")
+    val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(codegen.length == 200)
+    assert(codegen.toSeq == interpreted.toSeq, "codegen and interpreted results differ")
+    assert(codegen.exists(r => !r.isNullAt(0)) && codegen.exists(r => !r.isNullAt(2)))
+  }
+
+  test("winnow_fps skips null tokens instead of throwing") {
+    import spark.implicits._
+    val toks = Seq("a", "b", "c", "d", "e", "f", "g", "h", "i", "j", "a", "b")
+    val df = Seq(
+      (1, toks.patch(3, Seq(null), 0).patch(9, Seq(null, null), 0)),
+      (2, toks.take(7) :+ null), // 7 non-null tokens: below W = 8
+      (3, Seq[String](null, null))).toDF("id", "t")
+    val got = df.select($"id",
+      gf.winnow_fps($"t", 8, 4).as("with_nulls"),
+      gf.winnow_fps(filter($"t", x => x.isNotNull), 8, 4).as("without"))
+      .collect().sortBy(_.getInt(0))
+    assert(got.forall(r => r.get(1) == r.get(2)),
+      "null elements must be skipped, as if absent")
+    assert(!got(0).isNullAt(1) && got(1).isNullAt(1) && got(2).isNullAt(1))
+  }
+
+  test("block_pairs: i < j walk emits only the pairs whose smallest shared key is the block key") {
+    import spark.implicits._
+    // block 5: 1/3 share {5, 9} (owner 5), 2/3 share {5} (owner 5), 1/2
+    // share {3, 5} (owner 3); member 4 carries a null key element
+    val block = Seq((5L, Seq((2L, Seq(5L, 3L)), (1L, Seq(3L, 5L, 9L)), (3L, Seq(9L, 5L)))))
+      .toDF("key", "members")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select(gf.block_pairs($"key", $"members")).as[(Long, Long)].collect().toSet
+    assert(pairs(block) == Set((1L, 3L), (2L, 3L)))
+    val withNull = spark.sql("SELECT 5L AS key, array(named_struct('id', 4L, 'keys', " +
+      "array(5L, CAST(NULL AS BIGINT))), named_struct('id', 1L, 'keys', array(3L, 5L))) AS members")
+    assert(pairs(withNull) == Set((1L, 4L)))
+    assert(pairs(Seq((1L, Seq.empty[(Long, Seq[Long])])).toDF("key", "members")).isEmpty)
+    val bad = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((1, Seq((1L, Seq(1))))).toDF("key", "members")
+        .select(gf.block_pairs($"key", $"members")).collect()
+    }
+    assert(bad.getMessage.contains("block_pairs"))
+  }
 }
