@@ -3,9 +3,9 @@ package graft.er
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import java.nio.file.{Files, Paths}
 import org.apache.spark.storage.StorageLevel
 import graft.{functions => gf}
+import graft.ops.Components.IterationMetrics
 
 /** The web-scale entity-resolution pipeline (BASELINE.json north_rule):
   * pages → mentions → string interning → blocking → pairwise scoring →
@@ -82,12 +82,6 @@ object Pipeline {
       maxIterations: Int = 20,
       workDir: String = "/tmp/graft_er",
       resume: Boolean = false,
-      // clustering engine: matchEdges emits a functional forest (oriented
-      // satellite→hub, one out-edge per node), so components resolve by
-      // pointer-jumping over the parent map (forestLabels) in log(depth)
-      // rounds. false = generic undirected min-label propagation
-      // (cluster) — the fallback for arbitrary edge sets / A-B testing.
-      forestCluster: Boolean = true,
       // false = skip all metric-only actions (counts/stats collects) so a
       // bench run is one lazy DAG per cluster iteration; production keeps
       // true (the north_rule wants logged stats).
@@ -539,239 +533,23 @@ object Pipeline {
 
   // ---------------------------------------------------------------- clustering
 
-  final case class IterationMetrics(
-      iteration: Int, labelDelta: java.math.BigDecimal, rows: Long, partitions: Int)
-
-  /** Transitive closure over edges: iterative min-label propagation to
-    * fixpoint (the DataFrame union-find of SURVEY.md §4 item 3). Each
-    * iteration writes `labels_iter_k` parquet plus per-partition metrics
-    * under cfg.workDir — lineage is cut every iteration and the loop can
-    * resume from the latest checkpoint after a crash (cfg.resume).
-    *
-    * label := min(id) reachable — deterministic, partition-count invariant.
-    */
-  def cluster(
-      vertices: DataFrame, // (id)
-      edges: DataFrame, // (src, dst)
-      cfg: Config): (DataFrame, Vector[IterationMetrics]) = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val (fs, workPath) = hadoopFs(spark, cfg.workDir)
-
-    val und0 = edges.select($"src".as("a"), $"dst".as("b"))
-      .unionByName(edges.select($"dst".as("a"), $"src".as("b")))
-
-    // Size the loop's shuffle width from the DATA, not the session: the
-    // match graph is orders of magnitude smaller than the corpus (edges
-    // live over interned strings), and every iteration runs shuffles +
-    // a checkpoint write at that width. Session-wide shuffle.partitions is
-    // sized for the corpus-scale stages; reusing it here turns the loop
-    // into hundreds of near-empty tasks and tiny checkpoint files whose
-    // fixed cost dominates (measured 40 s → 16 s at 500k pages just going
-    // 64 → 16 partitions). ~2M edge rows per partition keeps tasks well
-    // under executor memory while minimizing per-task overhead; at 10^12
-    // docs the same formula yields thousands of partitions.
-    // Lower bound: a small multiple of the cluster's total cores, so the
-    // loop's single-wave stages bin-pack (9 tasks on 8 cores = one full
-    // wave + one straggler = ~44% idle cores; 16 tasks = two full waves).
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val minParts = 2 * spark.sparkContext.defaultParallelism
-    val edgeRows = und0.count()
-    val loopParts = math.max(minParts.toLong, math.min(
-      math.max(sessionParts, minParts).toLong,
-      edgeRows / 2000000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // The loop width is already data-sized (above); AQE coalescing below
-    // it only breaks co-partitioning with the persisted edge table and
-    // forces the edges to reshuffle every step.
-    val prevCoalesce = spark.conf
-      .getOption("spark.sql.adaptive.coalescePartitions.enabled").getOrElse("true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    // Shuffled-HASH join for the loop: sort-merge re-sorts the (static,
-    // already partitioned) edge table every single iteration; hashing the
-    // small label side and streaming the edges is both cheaper and
-    // scale-safe (fixed-width Long keys, no sort buffers).
-    val prevPreferSMJ = spark.conf
-      .getOption("spark.sql.join.preferSortMergeJoin").getOrElse("true")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-
-    // Pre-partition the STATIC edge table by the join key once: every
-    // propagation step joins labels to edges on "b", so a persisted
-    // hash-partitioned edge side means only the (smaller) label side
-    // shuffles per step — the edge bytes cross the wire once, not once
-    // per iteration.
-    val und = und0.repartition(loopParts, $"b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    def labelPath(i: Int) = s"${cfg.workDir}/labels_iter_$i"
-
-    val startIter =
-      if (cfg.resume) resumePoint(fs, workPath, "labels_iter_")
-      else {
-        // clean BOTH families: stale complete parents_iter_* from an
-        // older forest run in the same workDir would otherwise survive a
-        // fresh generic run and poison a later forest resume
-        cleanIterFiles(fs, workPath, "labels_iter_")
-        cleanIterFiles(fs, workPath, "parents_iter_")
-        0
-      }
-
-    // Labels only ever DECREASE under min-propagation, so the exact
-    // convergence test "no label changed this round" is equivalent to
-    // "sum(label) is unchanged" (decimal sum — no overflow on Long ids).
-    // The sum rides the checkpoint write as an `observe` aggregate, so
-    // convergence costs zero extra jobs and the per-step changed-flag
-    // bookkeeping (an extra left join per propagation) disappears.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum($"label".cast(DecimalType(38, 0)))).collect()(0).getDecimal(0) match {
-        case null => java.math.BigDecimal.ZERO // empty vertex set: sum is NULL
-        case s => s
-      }
-
-    var labels =
-      if (startIter > 0) graft.ops.TableIO.read(spark, labelPath(startIter - 1))
-        .select($"id", $"label")
-      else {
-        val init = vertices.select(col(vertices.columns.head).as("id"))
-          .withColumn("label", $"id")
-        graft.ops.TableIO.write(init, s"${cfg.workDir}/labels_init")
-        graft.ops.TableIO.read(spark, s"${cfg.workDir}/labels_init")
-      }
-    var prevSum = labelSum(labels) // one tiny agg at (re)start
-
-    val metrics = Vector.newBuilder[IterationMetrics]
-    var iter = startIter
-    // on resume, PROBE the loaded checkpoint instead of assuming: a prior
-    // run that converged on its last allowed round resumes as already
-    // converged (no confirm round, no spurious exhaustion throw), while a
-    // prior CAPPED run resumes unconverged and — if maxIterations was not
-    // raised — hits the loud exhaustion failure below rather than
-    // silently returning split clusters
-    var converged = startIter > 0 && timed("cluster.resume_probe") {
-      und.join(labels.select($"id".as("b"), $"label".as("lb")), Seq("b"))
-        .join(labels.select($"id".as("a"), $"label".as("la")), Seq("a"))
-        .filter($"lb" < $"la").limit(1).isEmpty
-    }
-    try while (!converged && iter < cfg.maxIterations) {
-      // two min-label propagation steps per checkpoint round: each round
-      // has a fixed scheduling + checkpoint-IO cost that dwarfs the joins
-      // themselves on the (interned) string graph, so advancing the
-      // frontier twice per round halves the fixed overhead per unit of
-      // progress. Each step is TWO shuffles (labels→edge key; union-min
-      // by id) — the neighbor min and the self label merge in one
-      // aggregate, and the pre-partitioned edge side never reshuffles.
-      def propagate(l: DataFrame): DataFrame =
-        und.join(l.select($"id".as("b"), $"label"), Seq("b"))
-          .select($"a".as("id"), $"label")
-          .unionByName(l)
-          .groupBy($"id").agg(min($"label").as("label"))
-      // NO pointer-jumping (label := label(label)) round: it was measured
-      // 3× slower than a plain round — the self-join keys on `label`,
-      // which is exactly the maximally-skewed column once clusters start
-      // converging (every member of a cluster carries the same key) — and
-      // it saved zero rounds on real variant graphs (ER clusters are
-      // star-shaped with short chains; double propagation already covers
-      // depth 2 per round). Pathological long chains are bounded by
-      // maxIterations; a large-star/small-star rewrite is the documented
-      // escalation path if one ever appears.
-      val next = propagate(propagate(labels))
-
-      val obs = org.apache.spark.sql.Observation(s"labels_iter_$iter")
-      timed(s"cluster.write_$iter") {
-        next.observe(obs, sum($"label".cast(DecimalType(38, 0))).as("label_sum"))
-          .write.mode(SaveMode.Overwrite).format(graft.ops.TableIO.format)
-          .save(labelPath(iter)) // checkpoint: cuts lineage (Iceberg table when the runtime jar is present)
-      }
-      val curSum = obs.get.apply("label_sum") match {
-        case null => java.math.BigDecimal.ZERO // empty vertex set
-        case s: java.math.BigDecimal => s
-      }
-      val checked = graft.ops.TableIO.read(spark, labelPath(iter))
-      val delta = prevSum.subtract(curSum)
-      // per-partition lineage metrics are METRIC-ONLY work (one extra scan
-      // + collect per round) — gated on cfg.collectStats like every other
-      // stats action, per the Config contract; production keeps the JSONL
-      if (cfg.collectStats) {
-        val perPartition = timed(s"cluster.metrics_$iter") {
-          checked
-            .groupBy(spark_partition_id().as("partition_id"))
-            .agg(count(lit(1)).as("rows"))
-            .collect()
-        }
-        val rows = perPartition.map(_.getLong(1)).sum
-        metrics += IterationMetrics(iter, delta, rows, perPartition.length)
-        // per-partition lineage metrics as JSON lines via NIO — durable per
-        // iteration (resumable) without spinning a Spark job for a 32-row
-        // write (was ~0.5 s/iteration of pure scheduling overhead)
-        val metricsJson = perPartition.sortBy(_.getInt(0)).map(r =>
-          s"""{"iteration":$iter,"partition_id":${r.getInt(0)},""" +
-            s""""rows":${r.getLong(1)},"label_delta":"$delta"}""").mkString("", "\n", "\n")
-        Files.writeString(
-          Paths.get(s"${cfg.workDir}/label_metrics_iter_$iter.jsonl"), metricsJson)
-      } else {
-        metrics += IterationMetrics(iter, delta, -1L, -1)
-      }
-
-      labels = checked.select($"id", $"label")
-      // The zero-delta test only certifies convergence one full round
-      // AFTER the fixpoint — a pure "confirm" round that costs a 2-step
-      // propagate + checkpoint write. A direct fixpoint probe is far
-      // cheaper (two shuffled-hash joins over the pre-partitioned edge
-      // side, no write, early-out on first improvable edge): min-label
-      // propagation is at fixpoint iff NO edge (a,b) still has
-      // label(b) < label(a). Probing after each round replaces the
-      // whole confirm round with one ~10× cheaper aggregate.
-      converged = delta.signum() == 0 || timed(s"cluster.probe_$iter") {
-        und.join(labels.select($"id".as("b"), $"label".as("lb")), Seq("b"))
-          .join(labels.select($"id".as("a"), $"label".as("la")), Seq("a"))
-          .filter($"lb" < $"la").limit(1).isEmpty
-      }
-      prevSum = curSum
-      iter += 1
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", prevPreferSMJ)
-    }
-    und.unpersist()
-    // FAIL LOUD on iteration exhaustion: returning the last unconverged
-    // labels silently splits clusters (members still grouped under
-    // intermediate ancestors) — the one failure mode a clustering engine
-    // must never hide. The resume-entry probe above makes this exact:
-    // a resumed-converged run passes, a resumed-capped run with an
-    // unraised maxIterations throws. Checkpoints are on disk, so a rerun
-    // with a higher maxIterations resumes from here.
-    if (!converged)
-      throw new IllegalStateException(
-        s"cluster: not converged after ${cfg.maxIterations} iterations " +
-          s"(workDir=${cfg.workDir}; resume with a higher maxIterations)")
-    (labels, metrics.result())
-  }
-
   /** Connected components specialised to the FOREST `matchEdges` emits.
     *
     * Every accepted edge is oriented satellite→hub strictly upward in the
     * (freq, id) total order, and the rnk=1 top-hub cap keeps exactly one
     * out-edge per satellite — so the match graph is a functional forest:
-    * acyclic, ≤1 parent per node. Components of a forest need no
-    * undirected min-label propagation. Pointer-jumping
-    * (parent := parent(parent)) doubles the resolved depth per round over
-    * a table with ONE row per satellite — vs 2 rows per edge, a union and
-    * a groupBy per propagation STEP in `cluster` — so a depth-d tree
-    * resolves in ceil(log2 d) rounds (real variant forests: d ≤ 3), and
-    * the component label (min member id, bit-identical to `cluster`'s
-    * fixpoint on the same edges) is one partial-aggregating groupBy at
-    * the end.
+    * acyclic, ≤1 parent per node, and every edge is a tree edge. The
+    * edges therefore go straight into the pointer-doubling kernel
+    * ([[Components.pointerDoubling]]) as its parent map, with no residual
+    * level: a depth-d tree resolves in ceil(log2 d) rounds over one row
+    * per satellite (real variant forests: d ≤ 3), and the component label
+    * (min member id, equal to a sequential union-find's — ErPipelineSpec)
+    * is one partial-aggregating groupBy at the end.
     *
-    * Same operational contract as `cluster`: each round checkpoints the
-    * parent map to `parents_iter_k` parquet (lineage cut + crash resume
-    * via cfg.resume), appends per-partition metrics JSONL, and converges
-    * via a zero-advanced observe riding the write or an early-out
-    * fixpoint probe (any parent that still has a parent). Root-heavy
-    * skew (a mega-hub's satellites all carry the hub's key) stays with
-    * sort-merge joins so AQE skew-split can divide hot partitions, and
-    * the min-per-root aggregate combines map-side by construction.
+    * Each round checkpoints the parent map to `parents_iter_k` under
+    * cfg.workDir (lineage cut, crash resume via cfg.resume, per-partition
+    * metrics JSONL when cfg.collectStats) and the loop fails loudly after
+    * cfg.maxIterations rounds; see [[Components.WorkDir]].
     */
   def forestLabels(
       vertices: DataFrame, // (id)
@@ -779,10 +557,14 @@ object Pipeline {
       cfg: Config): (DataFrame, Vector[IterationMetrics]) = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    val (fs, workPath) = hadoopFs(spark, cfg.workDir)
 
-    // data-sized loop width (same rationale as `cluster`): one row per
-    // satellite, ~2M rows per partition, floor of two waves per core
+    // Size the loop's shuffle width from the DATA, not the session: the
+    // match graph lives over interned strings, orders of magnitude below
+    // the corpus-sized stages the session width is set for, and every
+    // round pays per-task scheduling and checkpoint-file cost at that
+    // width (measured 40 s → 16 s at 500k pages going 64 → 16
+    // partitions). ~2M rows per partition, with a floor of two full
+    // waves per core so single-wave stages bin-pack.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val minParts = 2 * spark.sparkContext.defaultParallelism
     val par0 = edges.select($"src".as("id"), $"dst".as("par"))
@@ -792,89 +574,11 @@ object Pipeline {
       parRows / 2000000L + 1L)).toInt
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-
-    def parPath(i: Int) = s"${cfg.workDir}/parents_iter_$i"
-    def labelPath(i: Int) = s"${cfg.workDir}/labels_iter_$i"
-    val startIter =
-      if (cfg.resume) resumePoint(fs, workPath, "parents_iter_")
-      else {
-        cleanIterFiles(fs, workPath, "parents_iter_")
-        cleanIterFiles(fs, workPath, "labels_iter_")
-        0
-      }
-
-    var par =
-      if (startIter > 0) graft.ops.TableIO.read(spark, parPath(startIter - 1))
-      else par0
-
-    val metrics = Vector.newBuilder[IterationMetrics]
-    var iter = startIter
-    // resume-entry probe (same contract as `cluster`): a resumed
-    // checkpoint is converged iff no parent still has a grandparent —
-    // a resumed-capped run with an unraised maxIterations then hits the
-    // loud exhaustion failure instead of assembling split clusters
-    var converged = startIter > 0 && timed("forest.resume_probe") {
-      par.as("p").join(par.select($"id".as("par"), $"par".as("gpar")), Seq("par"))
-        .filter($"gpar" =!= $"par").limit(1).isEmpty
-    }
-    try while (!converged && iter < cfg.maxIterations) {
-      val grand = par.select($"id".as("par"), $"par".as("gpar"))
-      val jumped = par.join(grand, Seq("par"), "left")
-        .select($"id", coalesce($"gpar", $"par").as("par"),
-          $"gpar".isNotNull.cast("long").as("advanced"))
-      val obs = org.apache.spark.sql.Observation(s"parents_iter_$iter")
-      timed(s"forest.write_$iter") {
-        jumped.observe(obs, sum($"advanced").as("advanced"))
-          .select($"id", $"par")
-          .write.mode(SaveMode.Overwrite).format(graft.ops.TableIO.format)
-          .save(parPath(iter))
-      }
-      val advanced = obs.get.apply("advanced") match {
-        case null => 0L
-        case l: java.lang.Long => l.longValue()
-      }
-      val checked = graft.ops.TableIO.read(spark, parPath(iter))
-      // per-partition lineage metrics are METRIC-ONLY work (one extra scan
-      // + collect per round) — gated on cfg.collectStats like every other
-      // stats action, per the Config contract ("false = skip all
-      // metric-only actions"); production runs keep the JSONL
-      if (cfg.collectStats) {
-        val perPartition = timed(s"forest.metrics_$iter") {
-          checked.groupBy(spark_partition_id().as("partition_id"))
-            .agg(count(lit(1)).as("rows")).collect()
-        }
-        val rows = perPartition.map(_.getLong(1)).sum
-        metrics += IterationMetrics(
-          iter, java.math.BigDecimal.valueOf(advanced), rows, perPartition.length)
-        val metricsJson = perPartition.sortBy(_.getInt(0)).map(r =>
-          s"""{"iteration":$iter,"partition_id":${r.getInt(0)},""" +
-            s""""rows":${r.getLong(1)},"advanced":$advanced}""").mkString("", "\n", "\n")
-        Files.writeString(
-          Paths.get(s"${cfg.workDir}/parent_metrics_iter_$iter.jsonl"), metricsJson)
-      } else {
-        metrics += IterationMetrics(
-          iter, java.math.BigDecimal.valueOf(advanced), -1L, -1)
-      }
-      par = checked
-      // fixpoint iff no parent still has a parent; probing after an
-      // advancing round saves the pure confirm round (early-out limit 1)
-      converged = advanced == 0L || timed(s"forest.probe_$iter") {
-        par.join(par.select($"id".as("par")), Seq("par"), "left_semi")
-          .limit(1).isEmpty
-      }
-      iter += 1
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
-    // FAIL LOUD on iteration exhaustion (same contract as `cluster`):
-    // assembling with non-root parents groups members under intermediate
-    // ancestors — silently split clusters. Exact thanks to the
-    // resume-entry probe above.
-    if (!converged)
-      throw new IllegalStateException(
-        s"forestLabels: not converged after ${cfg.maxIterations} pointer-" +
-          s"doubling rounds (workDir=${cfg.workDir}; resume with a higher " +
-          "maxIterations)")
+    val dir = graft.ops.Components.WorkDir(
+      spark, cfg.workDir, cfg.resume, cfg.maxIterations, cfg.collectStats)
+    val (par, metrics) =
+      try graft.ops.Components.pointerDoubling(par0, Some(dir))
+      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
 
     // assemble: every tree member (satellites + the root itself) grouped
     // by root, labeled with the min member id; isolated vertices label
@@ -886,22 +590,20 @@ object Pipeline {
     val assembled = vertices.select(col(vertices.columns.head).as("id"))
       .join(treeLabels, Seq("id"), "left")
       .select($"id", coalesce($"label", $"id").as("label"))
-    // materialize the FINAL labels once (same `labels_iter_k` naming as
-    // the generic engine, so every labels consumer — resume tooling,
-    // ScalingBench's cross-level identity check — reads either engine's
-    // output identically). One small write per run (one row per string),
-    // and the read-back cuts the assembly lineage before the
-    // corpus-sized membership-expand join reuses the frame.
-    timed(s"forest.labels_write") {
-      // data-sized write width (same loopParts formula as the rounds):
+    // materialize the FINAL labels once as `labels_iter_k` (k = the round
+    // after the last checkpoint), so labels consumers — resume tooling,
+    // ScalingBench's cross-level identity check — find them by max index.
+    // The read-back cuts the assembly lineage before the corpus-sized
+    // membership-expand join reuses the frame.
+    val labelPath = s"${cfg.workDir}/labels_iter_${dir.start + metrics.size}"
+    timed("forest.labels_write") {
       // the assembly joins run at session width for parallelism, but the
-      // label table itself is string-sized — committing 32 near-empty
-      // files costs more than the rows; coalesce merges post-join without
-      // reshuffling. At corpus scale loopParts is thousands — unchanged.
+      // label table is string-sized: coalesce to the loop width merges
+      // post-join without reshuffling instead of committing near-empty files
       assembled.coalesce(loopParts).write.mode(SaveMode.Overwrite)
-        .format(graft.ops.TableIO.format).save(labelPath(iter))
+        .format(graft.ops.TableIO.format).save(labelPath)
     }
-    (graft.ops.TableIO.read(spark, labelPath(iter)), metrics.result())
+    (graft.ops.TableIO.read(spark, labelPath), metrics)
   }
 
   // ---------------------------------------------------------------- eval
@@ -1077,66 +779,6 @@ object Pipeline {
       pairs: DataFrame, membership: DataFrame, labels: DataFrame,
       strings: DataFrame, stringLabels: DataFrame)
 
-  /** Hadoop filesystem for the workDir — java.io.File would silently
-    * no-op on hdfs:///s3a:// workDirs (listFiles returns null), leaving
-    * the stale-checkpoint shadowing live while claiming it fixed, and
-    * making resume silently restart from 0. */
-  private def hadoopFs(spark: SparkSession, workDir: String) = {
-    val p = new org.apache.hadoop.fs.Path(workDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p): Unit
-    (fs, p)
-  }
-
-  private def iterEntries(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, prefix: String)
-      : Vector[(Int, org.apache.hadoop.fs.Path)] =
-    (try fs.listStatus(dir).toVector
-     catch { case _: java.io.FileNotFoundException => Vector.empty })
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(prefix))
-          scala.util.Try(n.stripPrefix(prefix).toInt).toOption
-            .map(i => (i, st.getPath))
-        else None
-      }
-
-  /** Resume point for an iteration-checkpoint family: the first iteration
-    * AFTER the highest COMPLETE checkpoint. A directory that merely
-    * exists is not a checkpoint — a job killed mid-write leaves a partial
-    * task-file subset (committer v2 / object stores) or only `_temporary`
-    * (v1); resuming from either silently drops rows from every later
-    * label table. Completeness = the committer's `_SUCCESS` marker
-    * (requires the default `mapreduce.fileoutputcommitter.marksuccessfuljobs=true`;
-    * Iceberg commits atomically through its metadata layer, so a readable
-    * table IS committed there). Incomplete leftovers above the resume
-    * point are rewritten by the loop's Overwrite saves. */
-  private def resumePoint(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, prefix: String): Int = {
-    def complete(p: org.apache.hadoop.fs.Path): Boolean =
-      if (graft.ops.TableIO.format == "iceberg") fs.exists(p)
-      else fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    val done = iterEntries(fs, dir, prefix).collect {
-      case (i, p) if complete(p) => i
-    }
-    if (done.isEmpty) 0 else done.max + 1
-  }
-
-  /** Remove a previous run's iteration checkpoints from the workDir on a
-    * FRESH (non-resume) run: the final checkpoint index varies with the
-    * round count, so a stale higher-indexed table from a longer prior run
-    * would otherwise survive and be read by max-index consumers (the
-    * documented labels contract) in place of this run's output. A failed
-    * delete FAILS LOUD for the same reason — a survivor silently shadows
-    * the new run's output. */
-  private def cleanIterFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, prefix: String): Unit =
-    iterEntries(fs, dir, prefix).foreach { case (_, p) =>
-      if (!fs.delete(p, true) && fs.exists(p))
-        throw new java.io.IOException(
-          s"cannot remove stale checkpoint $p — it would shadow this run's output")
-    }
-
   private def timed[T](tag: String)(body: => T): T = {
     val t0 = System.nanoTime()
     val r = body
@@ -1166,12 +808,11 @@ object Pipeline {
     val nAccepted = timed("scoring")(if (cfg.collectStats) accepted.count() else -1L)
 
     // cluster the *string* graph only (strings are the interned minority;
-    // iterating label propagation over every mention would shuffle the
+    // iterating pointer doubling over every mention would shuffle the
     // full corpus per iteration), then expand to mentions with ONE join
     // through the membership table.
-    val (stringLabels, metrics) = timed("cluster")(
-      if (cfg.forestCluster) forestLabels(strings.select($"string_id"), accepted, cfg)
-      else cluster(strings.select($"string_id"), accepted, cfg))
+    val (stringLabels, metrics) =
+      timed("cluster")(forestLabels(strings.select($"string_id"), accepted, cfg))
     // Expand string labels to mentions with an EXPLICITLY SALTED join:
     // membership is Zipf-skewed on string_id (a hot surface form carries
     // millions of mentions on a single key at corpus scale, all hashed to

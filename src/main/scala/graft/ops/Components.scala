@@ -1,138 +1,174 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{functions => gf}
 
-/** Connected components as a standalone operator (the union-find /
-  * transitive-closure analogue of the reference's duplicate merging,
-  * generalized per north_rule). The in-query variant uses localCheckpoint
-  * to cut lineage each iteration; the checkpoint-to-parquet variant for
-  * resumable production runs lives in graft.er.Pipeline.cluster.
+/** Connected components (the union-find / transitive-closure analogue of
+  * the reference's duplicate merging, get_suggestions.cc:703-731,
+  * generalized per north_rule) on ONE kernel: pointer doubling over a
+  * parent map ([[pointerDoubling]]). [[connectedComponents]] feeds it
+  * min-neighbor forests level by level for arbitrary edge sets;
+  * er.Pipeline.forestLabels feeds it the match forest directly with
+  * resumable parquet checkpoints ([[WorkDir]]).
   */
 object Components {
   import Tables.load
 
-  /** Min-label propagation to fixpoint. vertices: (id); edges: (src, dst).
-    *
-    * Loop shape mirrors er.Pipeline.cluster: the neighbor-min and the self
-    * label merge in ONE aggregate (union + groupBy min — no changed-flag
-    * left join), TWO propagation steps amortize each checkpoint, and
-    * convergence is "sum(label) unchanged" (labels only decrease under
-    * min-propagation) — a tiny agg over the just-checkpointed frame
-    * instead of a full `filter(changed).isEmpty` recompute. Driver
-    * actions per round: 2 (checkpoint + cached-scan agg) vs 3 full-lineage
-    * actions before.
-    */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = vertices.sparkSession
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist()
-    // Size the loop's shuffle width from the DATA (same rule as
-    // er.Pipeline.cluster): the match graph is far smaller than its source
-    // tables, and every round pays per-task scheduling cost at the loop
-    // width. The count also materializes the persisted edge table before
-    // the first round.
-    val edgeRows = und.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Two regimes: big graphs get ≥ cores partitions (full scheduling
-    // waves, ~2M rows/partition memory bound); tiny graphs get only as
-    // many partitions as have ≥~512 rows of real work — scheduling 32
-    // near-empty tasks per stage × 5 stages × round costs ~1 s/round of
-    // pure task overhead on a 100-row graph.
-    val loopParts = math.min(sessionParts.toLong, math.max(
-      edgeRows / 2000000L + 1L,
-      math.min(spark.sparkContext.defaultParallelism.toLong, edgeRows / 512L + 1L))).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0).getDecimal(0)
-    def propagate(l: DataFrame): DataFrame =
-      und.join(l.select(col("id").as("b"), col("label")), Seq("b"))
-        .select(col("a").as("id"), col("label"))
-        .unionByName(l)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-    try {
-      // Only vertices TOUCHED by an edge can ever leave label = id under
-      // min-propagation — the loop runs over the edge-induced subgraph
-      // and untouched vertices join back as identity at the end. On
-      // sparse match graphs (the common case: a 200k-vertex corpus with
-      // tens of real duplicate edges) this shrinks every per-round
-      // shuffle from corpus-sized to match-graph-sized (measured
-      // 4.9 s → sub-second on q33 at sf0.1 with 10 edges), and at
-      // 10^12 rows it is the difference between iterating over the
-      // corpus and iterating over the duplicates.
-      var labels = und.select(col("a").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint(true)
-      var prevSum = labelSum(labels)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val next = propagate(propagate(labels)).localCheckpoint(true)
-        val curSum = labelSum(next)
-        labels = next
-        // sum-unchanged certifies the fixpoint one confirm round late; an
-        // early-out probe (any edge still improvable?) after an advancing
-        // round is one cheap job instead of a whole extra round (same
-        // rationale as er.Pipeline.cluster's probe)
-        converged = curSum.compareTo(prevSum) == 0 ||
-          und.join(labels.select(col("id").as("b"), col("label").as("lb")), Seq("b"))
-            .join(labels.select(col("id").as("a"), col("label").as("la")), Seq("a"))
-            .filter(col("lb") < col("la")).limit(1).isEmpty
-        prevSum = curSum
-        iter += 1
+  /** One pointer-doubling round: the parent pointers it moved and, when
+    * stats are collected, the checkpoint's rows and partitions. */
+  final case class IterationMetrics(
+      iteration: Int, pointersAdvanced: Long, rows: Option[Long], partitions: Option[Int])
+
+  /** Durable checkpoints for [[pointerDoubling]] under `path`: each round
+    * writes `parents_iter_k` (a lineage cut, and the resume point after a
+    * crash when `resume`), appends per-partition metrics JSONL when
+    * `collectStats`, and the loop fails loudly after `maxIterations`
+    * rounds. A fresh run first removes the previous run's `parents_iter_*`
+    * and `labels_iter_*`: the final index varies with the round count, so
+    * a stale higher-indexed table would shadow this run's output. The
+    * work dir goes through the Hadoop filesystem — java.io.File would
+    * silently no-op on hdfs:// and s3a:// paths. */
+  private[graft] final case class WorkDir(spark: SparkSession, path: String,
+      resume: Boolean, maxIterations: Int, collectStats: Boolean) {
+    private val root = new org.apache.hadoop.fs.Path(path)
+    private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(root): Unit
+
+    def parents(i: Int): String = s"$path/parents_iter_$i"
+
+    private def rounds(prefix: String): Vector[(Int, org.apache.hadoop.fs.Path)] =
+      (try fs.listStatus(root).toVector
+       catch { case _: java.io.FileNotFoundException => Vector.empty })
+        .flatMap { st =>
+          val n = st.getPath.getName
+          if (n.startsWith(prefix))
+            scala.util.Try(n.stripPrefix(prefix).toInt).toOption.map(i => (i, st.getPath))
+          else None
+        }
+
+    /** The first round to run. On resume: the one after the highest
+      * COMPLETE checkpoint — a directory that merely exists is not one (a
+      * job killed mid-write leaves a partial task-file subset or only
+      * `_temporary`), so completeness is the committer's `_SUCCESS` marker
+      * (Iceberg commits atomically: a readable table IS committed).
+      * Incomplete leftovers are rewritten by the Overwrite saves. A failed
+      * delete of a stale table fails loudly. */
+    lazy val start: Int =
+      if (resume) {
+        def complete(p: org.apache.hadoop.fs.Path): Boolean =
+          if (TableIO.format == "iceberg") fs.exists(p)
+          else fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
+        rounds("parents_iter_").collect { case (i, p) if complete(p) => i + 1 }
+          .foldLeft(0)(math.max)
+      } else {
+        for (prefix <- Seq("parents_iter_", "labels_iter_"); (_, p) <- rounds(prefix))
+          if (!fs.delete(p, true) && fs.exists(p))
+            throw new java.io.IOException(
+              s"cannot remove stale checkpoint $p — it would shadow this run's output")
+        0
       }
-      vertices.select(col("id"))
-        .join(labels.withColumnRenamed("label", "touched_label"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("touched_label"), col("id")).as("label"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      und.unpersist()
+
+    /** Writes one round, counting advanced pointers with an `observe`
+      * that rides the write, and returns the re-read parent map. */
+    def round(jumped: DataFrame, iter: Int): (DataFrame, IterationMetrics) = {
+      val obs = Observation(s"parents_iter_$iter")
+      TableIO.write(jumped.observe(obs, sum(col("advanced")).as("advanced"))
+        .select(col("id"), col("par")), parents(iter))
+      val advanced = obs.get("advanced") match {
+        case null => 0L
+        case l: java.lang.Long => l.longValue()
+      }
+      val checked = TableIO.read(spark, parents(iter))
+      // per-partition metrics are metric-only work (a scan + collect)
+      val perPartition = Option.when(collectStats)(
+        checked.groupBy(spark_partition_id().as("partition_id"))
+          .agg(count(lit(1)).as("rows")).collect().sortBy(_.getInt(0)))
+      perPartition.foreach(pp => Files.writeString(
+        Paths.get(s"$path/parent_metrics_iter_$iter.jsonl"),
+        pp.map(r => s"""{"iteration":$iter,"partition_id":${r.getInt(0)},""" +
+          s""""rows":${r.getLong(1)},"advanced":$advanced}""").mkString("", "\n", "\n")))
+      (checked, IterationMetrics(iter, advanced,
+        perPartition.map(_.map(_.getLong(1)).sum), perPartition.map(_.length)))
     }
   }
 
-  /** Star-contraction components: the production fast path for the
-    * dedup-lifecycle graphs (q55), where verified near-dup components are
-    * overwhelmingly CLIQUES/STARS (every member of a duplicate group
-    * passes the pairwise Jaccard gate against the rest).
+  /** Pointer doubling to fixpoint: `par0` is a parent map (id, par)
+    * holding only NON-ROOT rows of an acyclic forest; each round sets
+    * par := par(par), so a depth-d tree resolves in ⌈log₂ d⌉ advancing
+    * rounds. Returns (id, par = root of id) with per-round metrics.
     *
-    * Phase 1 — min-neighbor star forest: parent(x) = min(neighbors ∪ x).
-    * parent < x strictly for non-roots, so the map is an acyclic
-    * DECREASING forest; pointer doubling (par ← par∘par, the same kernel
-    * as er.Pipeline.forestLabels) reaches every root in ⌈log₂ depth⌉
-    * rounds — for clique/star components depth is 1 and the loop exits
-    * after one zero-advance round, vs the generic fixpoint's
-    * propagate-propagate-checkpoint-agg per round.
+    * Convergence: a round that advances nothing, or — after an advancing
+    * round — an early-out probe that no parent still has a parent (one
+    * cheap job instead of a confirm round). Without a work dir each round
+    * is cut with `localCheckpoint`; with one, see [[WorkDir]]. Root-heavy
+    * skew (a hub's satellites all carry its key) stays with sort-merge
+    * joins so AQE skew-split can divide hot partitions. */
+  private[graft] def pointerDoubling(par0: DataFrame, dir: Option[WorkDir])
+      : (DataFrame, Vector[IterationMetrics]) = {
+    val start = dir.fold(0)(_.start)
+    var par = dir.collect { case d if start > 0 =>
+      TableIO.read(par0.sparkSession, d.parents(start - 1)) }.getOrElse(par0)
+    def settled: Boolean =
+      par.join(par.select(col("id").as("par")), Seq("par"), "left_semi").limit(1).isEmpty
+    // a resumed checkpoint is probed, not assumed: a resumed-capped run
+    // with an unraised maxIterations then fails loudly below
+    var converged = start > 0 && settled
+    val metrics = Vector.newBuilder[IterationMetrics]
+    var iter = start
+    while (!converged && dir.forall(iter < _.maxIterations)) {
+      val jumped = par
+        .join(par.select(col("id").as("par"), col("par").as("gpar")), Seq("par"), "left")
+        .select(col("id"), coalesce(col("gpar"), col("par")).as("par"),
+          col("gpar").isNotNull.cast("long").as("advanced"))
+      val (next, m) = dir match {
+        case Some(d) => d.round(jumped, iter)
+        case None =>
+          val cut = jumped.localCheckpoint(true)
+          (cut.select(col("id"), col("par")), IterationMetrics(iter,
+            cut.agg(coalesce(sum(col("advanced")), lit(0L))).head().getLong(0), None, None))
+      }
+      metrics += m
+      par = next
+      converged = m.pointersAdvanced == 0L || settled
+      iter += 1
+    }
+    // non-root parents would group members under intermediate ancestors:
+    // silently split clusters. The checkpoints stay, so a rerun with a
+    // higher maxIterations resumes from here.
+    for (d <- dir if !converged) throw new IllegalStateException(
+      s"pointer doubling not converged after ${d.maxIterations} rounds " +
+        s"(workDir=${d.path}; resume with a higher maxIterations)")
+    (par, metrics.result())
+  }
+
+  /** Connected components of an undirected edge list; label = the min
+    * member id, and a vertex without edges labels itself. vertices: (id);
+    * edges: (src, dst).
     *
-    * Phase 2 — residual contraction (what makes this ALWAYS bit-equal to
-    * [[connectedComponents]], not a clique-only shortcut): an edge whose
-    * endpoints landed in different trees ("two leaves of one center":
-    * {1–3, 2–3} roots both 1 and 2) re-enters as a CONTRACTED edge
-    * between labels; the generic loop then runs on the label graph —
-    * usually EMPTY, and always ≤ the original graph, never larger. The
-    * component min is itself always a root (it has no smaller neighbor),
-    * so composing contracted labels over phase-1 labels yields exactly
-    * min-member-id labels — ComponentsSpec proves bit-equality on
-    * cliques, chains, the leaf-pair counterexample, and random graphs.
-    *
-    * Scale: phase 1 is one edge-sized aggregate plus log-depth
-    * self-joins of an (id, par) frame — no per-round full-graph
-    * propagate; at 10^12 docs the dedup graph's components are tiny and
-    * phase 2 is empty, so the whole closure costs ~3 small shuffles. */
-  def starContractedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
+    * Each level points every vertex at its smallest neighbor when that is
+    * smaller — an acyclic, strictly decreasing forest whose roots include
+    * every component min — and resolves it with [[pointerDoubling]].
+    * Edges that cross two trees ("two leaves of one center": {1–3, 2–3}
+    * roots both 1 and 2) are contracted into root space and go round
+    * again. The larger end of every residual edge gets a parent at the
+    * next level, so the root set shrinks strictly and no round cap is
+    * needed; verified near-dup graphs (cliques, stars) finish in one level
+    * with an empty residual. Only edge-touched vertices enter the loop —
+    * on sparse match graphs every shuffle is match-graph-sized, not
+    * corpus-sized. ComponentsSpec checks it against a sequential
+    * union-find. */
+  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
     val spark = vertices.sparkSession
     val und = edges.select(col("src").as("a"), col("dst").as("b"))
       .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
       .persist() // scoped: released in the finally below, not at harness drain
-    // Size the loop's shuffle width from the DATA (same two-regime rule
-    // as connectedComponents): the match graph is far smaller than its
-    // source tables, and each doubling round's join/checkpoint/agg pays
-    // per-task scheduling cost at the loop width — 32 near-empty tasks
-    // per stage on a 100-row graph is ~1 s/round of pure overhead, and
-    // tiny graphs are exactly this fast path's common case. The count
-    // also materializes the persisted edge table before round 1.
+    // Size the loop's shuffle width from the DATA: big graphs get ≥ cores
+    // partitions (~2M rows each), tiny ones only as many as have ≥~512
+    // rows of work — 32 near-empty tasks per stage on a 100-row graph cost
+    // ~1 s per round of pure scheduling. The count also materializes the
+    // persisted edges.
     val edgeRows = und.count()
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.min(sessionParts.toLong, math.max(
@@ -141,57 +177,31 @@ object Components {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     try {
-      val par0 = und.groupBy(col("a").as("id"))
-        .agg(min(col("b")).as("nmin"))
-        .select(col("id"), least(col("nmin"), col("id")).as("par"))
-      var par = par0.localCheckpoint(true)
-      var advanced = if (edgeRows == 0L) 0L else 1L
-      while (advanced > 0L) {
-        val jumped = par
-          .join(par.select(col("id").as("par"), col("par").as("gpar")),
-            Seq("par"), "left")
-          .select(col("id"), coalesce(col("gpar"), col("par")).as("par"),
-            (col("gpar").isNotNull && col("gpar") =!= col("par"))
-              .cast("long").as("adv"))
-          .localCheckpoint(true)
-        advanced = jumped.agg(coalesce(sum(col("adv")), lit(0L)))
-          .collect()(0).getLong(0)
-        par = jumped.select(col("id"), col("par"))
+      var residual = und
+      var labels = Option.empty[DataFrame] // (id, par): non-root touched vertices
+      var more = edgeRows > 0L
+      while (more) {
+        val (roots, _) = pointerDoubling(residual.groupBy(col("a").as("id"))
+          .agg(min(col("b")).as("par")).filter(col("par") < col("id")), None)
+        labels = Some(labels.fold(roots)(_
+          .join(roots.select(col("id").as("par"), col("par").as("root")), Seq("par"), "left")
+          .select(col("id"), coalesce(col("root"), col("par")).as("par"))
+          .unionByName(roots)))
+        def rootOf(c: String) = roots.select(col("id").as(c), col("par").as(s"r$c"))
+        val crossing = residual
+          .join(rootOf("a"), Seq("a"), "left").join(rootOf("b"), Seq("b"), "left")
+          .select(coalesce(col("ra"), col("a")).as("a"), coalesce(col("rb"), col("b")).as("b"))
+          .filter(col("a") =!= col("b")).distinct()
+        // probed on its lineage (usually empty), cut only when it loops
+        more = !crossing.isEmpty
+        if (more) residual = crossing.localCheckpoint(true)
       }
-      val lab = par.select(col("id"), col("par").as("label"))
-      // residual: edges crossing phase-1 trees, contracted to label space.
-      // NO checkpoint: viol is consumed EAGERLY on both paths below (the
-      // isEmpty probe; on the rare non-empty path the inner loop's own
-      // edge count) while `und` is still persisted, and the RETURNED plan
-      // never references it — the inner connectedComponents' result is
-      // built from its own checkpoints plus `lab` (checkpointed above).
-      // The former eager localCheckpoint was one whole extra job per
-      // closure call to materialize a frame that is empty in the common
-      // case.
-      val viol = und
-        .join(lab.select(col("id").as("a"), col("label").as("la")), Seq("a"))
-        .join(lab.select(col("id").as("b"), col("label").as("lb")), Seq("b"))
-        .filter(col("la") =!= col("lb"))
-        .select(col("la").as("src"), col("lb").as("dst")).distinct()
-      val resolved =
-        if (viol.isEmpty) lab
-        else {
-          val merged = connectedComponents(
-            lab.select(col("label").as("id")).distinct(), viol)
-          lab.join(
-              merged.select(col("id").as("label"), col("label").as("mlabel")),
-              Seq("label"))
-            .select(col("id"), col("mlabel").as("label"))
-        }
-      // the result plan must not reference the about-to-be-unpersisted
-      // edge frame: `resolved` is either `lab` (checkpointed) or
-      // lab ⋈ merged, where merged is built from the inner loop's own
-      // checkpoints plus lab — viol (the only und-derived frame here)
-      // was consumed eagerly above, so the final join is safe after
-      // release
-      vertices.select(col("id"))
-        .join(resolved.withColumnRenamed("label", "touched_label"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("touched_label"), col("id")).as("label"))
+      // the result is built from the kernel's checkpoints only, so it
+      // stays valid after the edge frame is released below
+      labels.fold(vertices.select(col("id"), col("id").as("label")))(l =>
+        vertices.select(col("id"))
+          .join(l.withColumnRenamed("par", "touched_label"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("touched_label"), col("id")).as("label")))
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       und.unpersist()
@@ -201,24 +211,23 @@ object Components {
   /** Incremental cluster maintenance: merge a batch of NEW edges into an
     * existing labeling without re-clustering the full edge history.
     *
-    * Under min-label propagation a component's label is its minimum
-    * member id, so a prior labeling is a lossless contraction of the
-    * prior edge set: the star {(id, label) | label ≠ id} reproduces
-    * exactly the prior components, with depth 1. Clustering
-    * (prior star ∪ new edges) therefore yields labels BIT-IDENTICAL to
-    * re-clustering (all prior edges ∪ new edges) — but the loop input is
-    * one row per previously-clustered vertex instead of the whole edge
-    * history, and it converges in ~1 doubling round unless the new edges
-    * chain many old components together (ComponentsSpec proves the
-    * bit-equality both ways).
+    * A component's label is its minimum member id, so a prior labeling is
+    * a lossless contraction of the prior edge set: the star
+    * {(id, label) | label ≠ id} reproduces exactly the prior components,
+    * with depth 1. Clustering (prior star ∪ new edges) therefore yields
+    * labels BIT-IDENTICAL to re-clustering (all prior edges ∪ new edges)
+    * — but the loop input is one row per previously-clustered vertex
+    * instead of the whole edge history, the star resolves in one
+    * pointer-doubling round, and only new cross-component bridges reach
+    * the residual level (ComponentsSpec proves the bit-equality).
     *
     * This is the micro-batch companion of [[StreamOps.incrementalBlocking]]:
     * ingest streams pairs continuously, and each maintenance window folds
     * the new accepted edges into the persisted labels — the labels table
-    * IS the checkpoint, same as er.Pipeline.cluster's resume contract.
+    * IS the checkpoint.
     *
-    * prior: (id, label) — a fixpoint of min-label propagation (labels
-    * from [[connectedComponents]] / er.Pipeline.forestLabels qualify);
+    * prior: (id, label) with label = min member id (labels from
+    * [[connectedComponents]] / er.Pipeline.forestLabels qualify);
     * newEdges: (src, dst). Output: (id, label) covering prior ids ∪ new
     * edge endpoints. */
   def incrementalComponents(prior: DataFrame, newEdges: DataFrame): DataFrame = {
@@ -228,15 +237,7 @@ object Components {
       .unionByName(newEdges.select(col("src").as("id")))
       .unionByName(newEdges.select(col("dst").as("id")))
       .distinct()
-    // star ∪ new-edges is the IDEAL input for the star-contraction path:
-    // the prior labeling is already depth-1 (every satellite points at
-    // its component min), so phase 1 resolves it in one pointer-doubling
-    // round and only the handful of NEW cross-component bridges reach
-    // the residual label graph — labels stay bit-equal to the generic
-    // fixpoint (ComponentsSpec proves both the equality and that
-    // incremental == full re-clustering through this path)
-    starContractedComponents(vertices,
-      star.unionByName(newEdges.select(col("src"), col("dst"))))
+    connectedComponents(vertices, star.unionByName(newEdges.select(col("src"), col("dst"))))
   }
 
   /** Entity clusters over distinct part names: intern (D2 street-interning
@@ -244,7 +245,7 @@ object Components {
     * connected components; label = min reachable name_id. */
   def q33Components(spark: SparkSession, dir: String): DataFrame = {
     val (interned, edges) = nameGraph(spark, dir)
-    starContractedComponents(interned.select(col("name_id").as("id")), edges)
+    connectedComponents(interned.select(col("name_id").as("id")), edges)
       .select(col("id").as("name_id"), col("label"))
   }
 
@@ -301,8 +302,7 @@ object Components {
     val (interned, edges) = nameGraph(spark, dir)
     val oldEdges = edges.filter(pmod(col("src") + col("dst"), lit(2)) === 0)
     val newEdges = edges.filter(pmod(col("src") + col("dst"), lit(2)) === 1)
-    val prior = starContractedComponents(
-      interned.select(col("name_id").as("id")), oldEdges)
+    val prior = connectedComponents(interned.select(col("name_id").as("id")), oldEdges)
     incrementalComponents(prior, newEdges)
       .select(col("id").as("name_id"), col("label"))
   }

@@ -227,8 +227,8 @@ object Dedup {
   /** q55: the END-TO-END near-dup dedup lifecycle a production pipeline
     * actually runs — banded MinHash candidates (q22's exact shape) →
     * exact-Jaccard verification rescore ([[verifyJaccard]], threshold
-    * 0.4) → transitive closure over the surviving pairs
-    * ([[Components.connectedComponents]]) → canonical-document pick
+    * 0.4) → transitive closure over the surviving pairs (pointer
+    * doubling, [[Components.connectedComponents]]) → canonical-document pick
     * (component label = min member id = the keeper; everything else is
     * marked duplicate). Output is one row per document, so the result
     * doubles as the pipeline's keep/drop manifest. Every stage is the
@@ -238,12 +238,10 @@ object Dedup {
   def q55DedupLifecycle(spark: SparkSession, dir: String): DataFrame = {
     val docs = load(spark, dir, "documents")
     val verified = verifyJaccard(docs, q22LshPairs(spark, dir), 0.4)
-    // star-contraction closure: verified near-dup components are cliques
-    // (every group member passes the pairwise gate), so the min-neighbor
-    // forest resolves them in one pointer-doubling round and the generic
-    // fixpoint loop only ever sees the (typically empty) residual label
-    // graph — bit-equal to connectedComponents per ComponentsSpec
-    val labels = Components.starContractedComponents(
+    // verified near-dup components are cliques (every group member passes
+    // the pairwise gate), so the first min-neighbor level resolves them in
+    // one pointer-doubling round and the residual level is empty
+    val labels = Components.connectedComponents(
       docs.select(col("doc_id").as("id")),
       verified.select(col("src"), col("dst")))
     labels.select(col("id").as("doc_id"), col("label").as("keeper"),

@@ -99,9 +99,8 @@ object LinkGraph {
     *    per iteration. Persist is harness-released via [[Caches]].
     *  - `localCheckpoint(eager)` every `checkpointEvery` iterations
     *    truncates lineage (same rationale as Components' loop; for
-    *    crash-RESUMABLE runs swap in a parquet checkpoint per
-    *    er.Pipeline.cluster's labelPath contract — the loop body is
-    *    identical).
+    *    crash-RESUMABLE runs swap in a parquet checkpoint per round as
+    *    Components.WorkDir does — the loop body is identical).
     *
     * Fixed-point BIGINT arithmetic (1e-12 units, floor division): on a
     * uniform-out-degree graph this is bit-identical to q49's lazy

@@ -68,10 +68,10 @@ class ErPipelineSpec extends AnyFunSuite {
       "matchEdges must emit at most one out-edge per node")
     val (forest, fm) = Pipeline.forestLabels(vertices, edges,
       cfg.copy(workDir = freshDir("forest_eq_f")))
-    val (generic, _) = Pipeline.cluster(vertices, edges,
-      cfg.copy(workDir = freshDir("forest_eq_g")))
-    assert(forest.exceptAll(generic).isEmpty && generic.exceptAll(forest).isEmpty,
-      "forest labels diverge from generic min-label fixpoint")
+    val unionFind = graft.ops.UnionFind.labels(
+      vertices.as[Long].collect(), edges.as[(Long, Long)].collect())
+    assert(forest.as[(Long, Long)].collect().toMap == unionFind,
+      "forest labels diverge from a sequential union-find")
     assert(fm.nonEmpty && fm.size <= 3,
       s"variant forest should resolve in <=3 pointer-jump rounds, took ${fm.size}")
   }
@@ -113,34 +113,35 @@ class ErPipelineSpec extends AnyFunSuite {
     val vertices = strings.select($"string_id")
 
     // full run on the corpus edges
-    val (labelsFull, mFull) = Pipeline.cluster(vertices, edges,
+    val (labelsFull, mFull) = Pipeline.forestLabels(vertices, edges,
       cfgBase.copy(workDir = dirFull))
+    // collected first: the resumed run rewrites the same labels table
+    val full = labelsFull.as[(Long, Long)].collect().toMap
     // resume from a CONVERGED checkpoint: the resume-entry probe must
     // certify it without spending a confirm round, and labels must match
-    val (labelsResumed, mResumed) = Pipeline.cluster(vertices, edges,
+    val (labelsResumed, mResumed) = Pipeline.forestLabels(vertices, edges,
       cfgBase.copy(workDir = dirFull, resume = true))
     assert(mResumed.isEmpty,
       "resume from a converged checkpoint must probe, not re-iterate")
-    assert(labelsFull.exceptAll(labelsResumed).isEmpty &&
-      labelsResumed.exceptAll(labelsFull).isEmpty,
+    assert(labelsResumed.as[(Long, Long)].collect().toMap == full,
       "resumed labels differ from uninterrupted run")
     assert(mFull.nonEmpty)
 
-    // mid-run interruption needs a graph that CANNOT converge in one
-    // double-propagation round: a 9-vertex chain (min label walks 2 hops
-    // per round). Hitting the cap unconverged must FAIL LOUD (silently
-    // returning intermediate ancestors = split clusters)...
+    // mid-run interruption needs a forest that CANNOT converge in one
+    // pointer-doubling round: a 9-vertex chain (depth 8, three rounds).
+    // Hitting the cap unconverged must FAIL LOUD (silently returning
+    // intermediate ancestors = split clusters)...
     val chainEdges = (1L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
     val chainVerts = (1L to 9L).map(Tuple1(_)).toDF("id")
     intercept[IllegalStateException] {
-      Pipeline.cluster(chainVerts, chainEdges,
+      Pipeline.forestLabels(chainVerts, chainEdges,
         cfgBase.copy(workDir = dirPart, maxIterations = 1))
     }
     // ...and resume must pick up AT iteration 1 from the complete
     // checkpoint and reach the same fixpoint as an uninterrupted run
-    val (chainFull, _) = Pipeline.cluster(chainVerts, chainEdges,
+    val (chainFull, mChainFull) = Pipeline.forestLabels(chainVerts, chainEdges,
       cfgBase.copy(workDir = freshDir("resume_chain_full")))
-    val (chainResumed, mChain) = Pipeline.cluster(chainVerts, chainEdges,
+    val (chainResumed, mChain) = Pipeline.forestLabels(chainVerts, chainEdges,
       cfgBase.copy(workDir = dirPart, resume = true))
     assert(mChain.head.iteration == 1, "resume must continue at iteration 1")
     assert(chainFull.exceptAll(chainResumed).isEmpty &&
@@ -148,6 +149,15 @@ class ErPipelineSpec extends AnyFunSuite {
       "chain resumed labels differ from uninterrupted run")
     assert(chainResumed.select("label").distinct().count() == 1L,
       "the chain is one component: every vertex must carry label 1")
+
+    // round metrics: the parent map keeps one row per satellite, and a
+    // run without stats reports no row counts rather than a sentinel
+    assert(mChainFull.map(_.pointersAdvanced) == Vector(7L, 6L, 4L))
+    assert(mChainFull.forall(m => m.rows.contains(8L) && m.partitions.exists(_ > 0)))
+    val (_, mNoStats) = Pipeline.forestLabels(chainVerts, chainEdges,
+      cfgBase.copy(workDir = freshDir("resume_chain_nostats"), collectStats = false))
+    assert(mNoStats.map(_.pointersAdvanced) == mChainFull.map(_.pointersAdvanced))
+    assert(mNoStats.forall(m => m.rows.isEmpty && m.partitions.isEmpty))
   }
 
   test("context evidence disambiguates an equidistant satellite (A6 analogue)") {
