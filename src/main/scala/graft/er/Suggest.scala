@@ -3,6 +3,7 @@ package graft.er
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import graft.{functions => gf}
 
 /** The full `get_suggestions` lifecycle (reference §3.1,
@@ -120,37 +121,19 @@ object Suggest {
     // query-time alternate enumeration (G4, normalize.h:90-134):
     // hbf↔hauptbahnhof / str↔strasse / digraph spell-outs all collapse to
     // one canonical form before any matching (MatchKeys)
-    // The composed DAG references q/names/candidates/scored MANY times
-    // (matrix, attrs join, house numbers, assembly) — without a cache each
-    // reference recomputes the whole upstream subtree (AQE's exchange
-    // reuse only catches byte-identical subplans). These frames are all
-    // bounded (queries; interned entities; ≤6000 candidates/query; ≤10000
-    // scored/branch) so a lazy MEMORY_AND_DISK persist is the right call
-    // at any scale.
-    val persistLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // Only query-side work runs per call, and none of it is persisted:
+    // candidates and the scored rows are each read once, and q, a
+    // projection of the caller's query rows, is recomputed at each of
+    // its references. The entity side comes from `entityIndex`.
     val q = queries
       .withColumn("norm", gf.match_key(col("text")))
       .filter(length(col("norm")) >= 2) // F5 min-length gate
       .withColumn("tokens", slice(split(col("norm"), " "), 1, MaxTokens))
       .withColumn("all_mask", (pow(lit(2.0d), size(col("tokens"))) - 1).cast("long"))
       .withColumn("phrases", phraseArr)
-      .persist(persistLevel)
 
     // ---- stage 4: candidate generation (A1/A2/A3/J1/K1)
-    // the canonical match key is computed ONCE per entity and reused by
-    // both the trigram index and the score matrix below (it was previously
-    // recomputed per matrix CELL — the single largest cost of the query)
-    val names = entities.select(col("entity_id"), col("name"))
-      .withColumn("mk", gf.match_key(col("name")))
-      .withColumn("tris", gf.trigram_strings(col("mk")))
-      .withColumn("n_grams", size(col("tris")))
-      .persist(persistLevel)
-    val nameKeyed = names
-      .select(col("entity_id"), col("n_grams"), explode(col("tris")).as("gram"))
-    val keptGrams = nameKeyed.groupBy(col("gram")) // hot-gram cap (scale rule)
-      .agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt") <= graft.ops.Dedup.MaxBlock)
-      .select(col("gram"))
+    val (names, postings) = entityIndex(entities)
     val qGrams = q.select(col("query_id"),
       explode(gf.trigram_strings(col("norm"))).as("gram"))
     val qN = q.select(col("query_id"),
@@ -159,7 +142,7 @@ object Suggest {
     // formula (typeahead.cc:409): mmc = 2 + n_q / (4 + n_q / 10)
     val mmc = lit(2) + floor(col("n_q") / (lit(4) + floor(col("n_q") / lit(10))))
     val candidates = qGrams
-      .join(nameKeyed.join(keptGrams, Seq("gram")), Seq("gram"))
+      .join(postings, Seq("gram"))
       .groupBy(col("query_id"), col("entity_id"))
       .agg(count(lit(1)).as("shared"), first(col("n_grams")).as("n_grams"))
       .join(qN, Seq("query_id"))
@@ -171,7 +154,6 @@ object Suggest {
         Window.partitionBy(col("query_id")).orderBy(col("cos2").desc, col("entity_id"))))
       .filter(col("crnk") <= MaxCandidates) // K1
       .select(col("query_id"), col("entity_id"))
-      .persist(persistLevel)
 
     // ---- stage 5: string × phrase score matrix (A4, scorer X6)
     // One row per (query, entity): the whole phrase dimension stays in an
@@ -181,7 +163,7 @@ object Suggest {
     // the kernel (ordering identical to min(struct(score, pidx, bits))),
     // and there is no phrase-explode shuffle or re-aggregation at all.
     val bestPhrase = candidates
-      .join(names.select(col("entity_id"), col("mk")), Seq("entity_id"))
+      .join(names, Seq("entity_id"))
       .join(q.select(col("query_id"), col("phrases")), Seq("query_id"))
       .withColumn("b", gf.ref_best_phrase(col("mk"),
         transform(col("phrases"), p => p("s")),
@@ -192,6 +174,60 @@ object Suggest {
     rankFrom(bestPhrase, entities, q, topN, userLangs,
       hn => gf.match_key(hn),
       (hnKey, s) => gf.ref_match_score_pre(hnKey, s))
+  }
+
+  /** The entity side of candidate generation, which depends on the entity
+    * table alone (the import-time index of typeahead.cc:317-337):
+    *  - `names(entity_id, mk)`: the canonical match key, computed once per
+    *    entity and read by both the trigram postings and the score matrix;
+    *  - `postings(gram, entity_id, n_grams)`: one row per name trigram,
+    *    without the grams of more than `ops.Dedup.MaxBlock` names (the
+    *    hot-gram cap that bounds each query's posting walk).
+    * Each frame is persisted only when it is not cached yet. Spark's
+    * CacheManager matches the plan of a later call over the same entity
+    * frame to that copy, so repeated requests neither recount the hot
+    * grams nor ask to cache the index again. The persists go through
+    * `ops.Caches`: a harness that drains it after each query (Verify,
+    * Bench) releases the index with the query's other frames, and a
+    * caller that never drains it keeps one index per entity table. */
+  private def entityIndex(entities: DataFrame): (DataFrame, DataFrame) = {
+    val names = cached(entities.select(col("entity_id"),
+      gf.match_key(col("name")).as("mk")))
+    val nameGrams = names
+      .select(col("entity_id"), gf.trigram_strings(col("mk")).as("tris"))
+      .select(col("entity_id"), size(col("tris")).as("n_grams"),
+        explode(col("tris")).as("gram"))
+    val keptGrams = nameGrams.groupBy(col("gram"))
+      .agg(count(lit(1)).as("gcnt"))
+      .filter(col("gcnt") <= graft.ops.Dedup.MaxBlock)
+      .select(col("gram"))
+    (names, cached(nameGrams.join(keptGrams, Seq("gram"))))
+  }
+
+  private def cached(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE) graft.ops.Caches.persist(df) else df
+
+  /** Stage 7's house-number match (J3 under the F9 numeric gate) of one
+    * row carrying `kind`, `house_numbers` and the query's `phrases`: the
+    * least non-null `struct(score, pidx, bits, hn)` over the numeric
+    * phrases × the house numbers, null for places and when no pair
+    * scores. Ties on score go to the lower phrase index, then the lower
+    * phrase bits, then the lower house number (struct order, the order
+    * of the test-side explode/join/`min` matcher `HouseNumberJoin`).
+    * `hnKeyFn` runs once per house number, `hnScoreFn` once per (numeric
+    * phrase, house number) cell. */
+  private[graft] def houseNumberMatch(hnKeyFn: Column => Column,
+      hnScoreFn: (Column, Column) => Column): Column = {
+    val numPhrases = filter(
+      transform(col("phrases"), (p, pidx) => struct(p("s").as("s"), pidx.as("pidx"),
+        p("bits").as("bits"), p("is_num").as("is_num"))),
+      p => p("is_num"))
+    val hnKeys = transform(col("house_numbers"),
+      hn => struct(hn.as("hn"), hnKeyFn(hn).as("key")))
+    val cells = flatten(transform(hnKeys, k => transform(numPhrases, p =>
+      struct(hnScoreFn(k("key"), p("s")).as("score"), p("pidx").as("pidx"),
+        p("bits").as("bits"), k("hn").as("hn")))))
+    when(col("kind") === "street", array_min(filter(cells, c => c("score").isNotNull)))
   }
 
   /** Stages 6-10 — attach attrs / K2 / house numbers / area assembly /
@@ -207,15 +243,16 @@ object Suggest {
       q: DataFrame, topN: Int, userLangs: Seq[String],
       hnKeyFn: Column => Column,
       hnScoreFn: (Column, Column) => Column): DataFrame = {
-    val persistLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-    // ---- stage 6: attach entity attrs, split branches, K2 bound
+    // ---- stages 6-7: attach entity attrs, split branches, K2 bound,
+    // street house numbers
     // ONE explicit exchange on query_id serves every per-query stage from
     // here down (guide §2.4): hash(query_id) satisfies the clustered
-    // distribution of the (query_id, kind) K2 window, the stage-7 hn
-    // aggregation, the (query_id, location) dup-mark window and the final
-    // per-query top-n — without it each window inserted its own exchange.
-    val scored = bestPhrase
+    // distribution of the (query_id, kind) K2 window, the (query_id,
+    // location) dup-mark window and the final per-query top-n; without
+    // it each window inserts its own exchange. The house-number match
+    // runs inside each row (`houseNumberMatch`), so nothing between the
+    // windows shuffles.
+    val withHn = bestPhrase
       .join(entities, Seq("entity_id"))
       .join(q.select(col("query_id"), col("tokens"), col("all_mask"),
         col("phrases")), Seq("query_id"))
@@ -224,36 +261,9 @@ object Suggest {
         Window.partitionBy(col("query_id"), col("kind"))
           .orderBy(col("b.score").asc, col("entity_id"))))
       .filter(col("srnk") <= MaxScored) // K2
-      .persist(persistLevel)
-
-    // ---- stage 7: street house numbers (J3 under the F9 numeric gate)
-    // house-number match keys are computed once per (entity, hn) — not per
-    // (query, phrase, hn) cell — and scored with the pre-normalized entry
-    val hns = entities.filter(col("kind") === "street")
-      .select(col("entity_id"), explode(col("house_numbers")).as("hn"))
-      .withColumn("mk_hn", hnKeyFn(col("hn")))
-    val numPhrases = q.select(col("query_id"),
-        posexplode(col("phrases")).as(Seq("pidx", "p")))
-      .filter(col("p.is_num")) // F9: numeric phrases only
-    val hnBest = scored.filter(col("kind") === "street")
-      .select(col("query_id"), col("entity_id"))
-      .join(numPhrases, Seq("query_id"))
-      .join(hns, Seq("entity_id"))
-      .withColumn("hn_score", hnScoreFn(col("mk_hn"), col("p.s")))
-      .filter(col("hn_score").isNotNull)
-      .groupBy(col("query_id"), col("entity_id"))
-      .agg(min(struct(col("hn_score").as("score"), col("pidx"),
-        col("p.bits").as("bits"), col("hn"))).as("h"))
+      .withColumn("h", houseNumberMatch(hnKeyFn, hnScoreFn))
 
     // ---- stages 7/8: area assembly (A6) + branch bonuses (X8-X12)
-    // the hn join re-partitions by (query_id, entity_id) — one explicit
-    // query_id repartition here serves BOTH remaining windows (the
-    // (query_id, location) dup-mark and the (query_id) top-n; a
-    // (q, loc) hash does NOT satisfy a (q) clustering, so each otherwise
-    // inserts its own exchange — guide §2.4, verified in the formatted
-    // plans: 2 ENSURE_REQUIREMENTS exchanges replaced by 1 repartition)
-    val withHn = scored.join(hnBest, Seq("query_id", "entity_id"), "left")
-      .repartition(col("query_id"))
     val maskAfterHn = when(col("h").isNotNull,
       col("b.bits").bitwiseOR(col("h.bits"))).otherwise(col("b.bits"))
     val assembled = withHn

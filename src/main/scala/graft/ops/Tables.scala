@@ -12,11 +12,18 @@ object Tables {
     * results — the driver's no-precomputation rule is untouched; it is
     * the same class of caching as Spark's own session-scoped
     * FileStatusCache, keyed per session so tests with their own sessions
-    * stay isolated). */
-  private val plans =
+    * stay isolated).
+    *
+    * Contract: the files under a loaded path do not change while the
+    * session runs; a plan keeps the file listing it was analyzed with.
+    * Each load first drops the entries of sessions whose SparkContext has
+    * stopped, so the memo does not pin them. */
+  private[ops] val plans =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    plans.keySet.removeIf(_._1.sparkContext.isStopped)
     plans.computeIfAbsent((spark, s"$dir/$name.parquet"),
       k => spark.read.parquet(k._2))
+  }
 }

@@ -1,7 +1,9 @@
 package graft.er
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.{functions => gf}
 import graft.functions.SparkTestSession
 
 /** Goldens for the composed get_suggestions DAG, mirroring the reference's
@@ -23,6 +25,9 @@ object Area { // single-language convenience (the pre-multilang fixture shape)
 case class Ent(entity_id: Long, name: String, kind: String, category: String,
     population: Long, name_lang: String, location: Long,
     areas: Seq[Area], house_numbers: Seq[String])
+case class Phrase(s: String, bits: Long, is_num: Boolean)
+case class HnQuery(query_id: Long, phrases: Seq[Phrase])
+case class HnEnt(entity_id: Long, kind: String, house_numbers: Seq[String])
 
 class SuggestSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -135,5 +140,127 @@ class SuggestSpec extends AnyFunSuite {
     assert(rows.nonEmpty, "no suggestions returned")
     assert(rows.head.getAs[Long]("entity_id") == 30L,
       s"area evidence ignored: ${rows.toSeq}")
+  }
+
+  test("per-keystroke requests equal the batched call, and the batched " +
+      "rows equal the pinned golden of the seeded request set") {
+    val ents = SuggestFixture.entities(spark)
+    val reqs = SuggestFixture.requests
+    def suggest(qs: Seq[(Long, String)]): DataFrame =
+      Suggest.suggest(qs.toDF("query_id", "text"), ents,
+        userLangs = SuggestFixture.UserLangs)
+    val batched = SuggestFixture.render(suggest(reqs))
+    val golden = SuggestFixture.golden
+    assert(batched.head == golden.head, "column list differs from the golden")
+    assert(batched.size == golden.size,
+      s"${batched.size - 1} rows, the golden has ${golden.size - 1}")
+    batched.zip(golden).zipWithIndex.foreach { case ((got, want), i) =>
+      assert(got == want, s"golden line ${i + 1} differs")
+    }
+    val byQuery = batched.tail.groupBy(_.takeWhile(_ != '\t').toLong)
+    val sample = reqs.filter(_._1 % 22 == 0) :+ reqs.last
+    sample.foreach { r =>
+      val one = SuggestFixture.render(suggest(Seq(r)))
+      assert(one.head == batched.head)
+      assert(one.tail == byQuery.getOrElse(r._1, Nil),
+        s"request ${r._1} '${r._2}' differs from the batched call")
+    }
+    // the golden exercises the ranking stages that the fixture is built for
+    val cols = golden.tail.map(_.split("\t"))
+    assert(cols.count(_(7) != "\\N") > 0, "no house number matched")
+    assert(cols.count(_(6) == "true") > 0, "no duplicate marked")
+    assert(cols.count(_(8) != "0") > 0, "no area matched")
+  }
+
+  /** Phrase windows of a space-separated query, in `suggest`'s order. */
+  private def phrasesOf(text: String): Seq[Phrase] = {
+    val toks = text.split(" ").toSeq
+    for {
+      frm <- 1 to toks.size
+      len <- 1 to math.min(Suggest.MaxPhraseLen, toks.size - frm + 1)
+    } yield {
+      val words = toks.slice(frm - 1, frm - 1 + len)
+      Phrase(words.mkString(" "), ((1L << len) - 1) << (frm - 1),
+        words.forall(w => 2 * w.count(_.isDigit) >= w.length))
+    }
+  }
+
+  test("house numbers: the in-row match equals the explode/join/groupBy " +
+      "matcher (duplicates, empty/null arrays, ties, places, q42 keys)") {
+    val q = Seq("12 7", "main 12", "bl 26 26", "hauptstrasse", "12a 7")
+      .zipWithIndex.map { case (t, i) => HnQuery(i + 1L, phrasesOf(t)) }.toDS().toDF()
+    val ents = Seq(
+      HnEnt(1, "street", Seq("12", "12", "7")),
+      HnEnt(2, "street", Seq.empty),
+      HnEnt(3, "street", null),
+      HnEnt(4, "place", Seq("12", "7", "26")),
+      HnEnt(5, "street", Seq("7", "12", "bl. 26", "26", null)),
+      HnEnt(6, "street", Seq("12b", "12a", "12")),
+      HnEnt(7, "street", Seq("26", "26"))).toDS().toDF()
+    val scored = q.select("query_id").crossJoin(ents.select("entity_id", "kind"))
+    val noScore = lit(null).cast("float")
+    val matchers: Seq[(String, Column => Column, (Column, Column) => Column)] = Seq(
+      ("suggest", hn => gf.match_key(hn), (k, s) => gf.ref_match_score_pre(k, s)),
+      ("q42", identity, (k, s) => when(k === s, lit(-1.0f)).otherwise(noScore)),
+      // every cell whose first characters agree ties at -1
+      ("ties", identity, (k, s) =>
+        when(substring(k, 1, 1) === substring(s, 1, 1), lit(-1.0f)).otherwise(noScore)))
+    def key(r: Row) = (r.getLong(0), r.getLong(1))
+    val results = matchers.map { case (name, keyFn, scoreFn) =>
+      val inRow = scored.join(ents.select("entity_id", "house_numbers"), "entity_id")
+        .join(q, "query_id")
+        .select(col("query_id"), col("entity_id"),
+          Suggest.houseNumberMatch(keyFn, scoreFn).as("h"))
+        .collect().map(r => key(r) -> Option(r.getStruct(2))).toMap
+      val reference = HouseNumberJoin.matches(scored, ents, q, keyFn, scoreFn)
+        .collect().map(r => key(r) -> r.getStruct(2)).toMap
+      assert(inRow.size == 35, name)
+      inRow.toSeq.sortBy(_._1).foreach { case (k, got) =>
+        assert(got == reference.get(k), s"$name: (query, entity) $k")
+      }
+      name -> inRow
+    }.toMap
+    def h(m: String, q: Long, e: Long) = results(m)((q, e)).map(r =>
+      (r.getFloat(0), r.getInt(1), r.getLong(2), r.getString(3)))
+    assert(results.values.forall(m => m.collect { case ((_, e), v)
+      if Set(2L, 3L, 4L)(e) => v }.forall(_.isEmpty)),
+      "empty/null arrays and places must never match")
+    assert(results.values.forall(_.values.count(_.isDefined) >= 6))
+    assert(h("q42", 1, 1) == Some((-1.0f, 0, 1L, "12")))
+    assert(h("q42", 1, 5) == Some((-1.0f, 0, 1L, "12")))
+    // bits never decides a tie: a row's pidx is unique and fixes its bits
+    assert(h("q42", 3, 7) == Some((-1.0f, 3, 2L, "26")), "score tie goes to the lower pidx")
+    assert(h("ties", 1, 6) == Some((-1.0f, 0, 1L, "12")), "pidx tie goes to the lower hn")
+    assert(h("ties", 2, 1) == Some((-1.0f, 2, 2L, "12")))
+  }
+
+  test("repeated requests reuse one entity index: no persist and no " +
+      "re-cache warning per request") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val ents = SuggestFixture.entities(spark)
+    def request(id: Long, text: String): Unit =
+      Suggest.suggest(Seq((id, text)).toDF("query_id", "text"), ents).collect()
+    val texts = SuggestFixture.texts
+    request(0, texts.head)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("suggest-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val cacheLog = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[CoreLogger]
+    cacheLog.addAppender(appender)
+    try texts.tail.take(4).zipWithIndex.foreach { case (t, i) => request(i + 1L, t) }
+    finally { cacheLog.removeAppender(appender); appender.stop() }
+    val recached = warnings.toArray.count(_.toString.contains("already cached"))
+    assert(recached == 0, s"$recached requests asked to cache cached data")
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after == persisted, s"${after - persisted} frames persisted by 4 requests")
   }
 }

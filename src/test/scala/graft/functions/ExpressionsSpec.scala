@@ -6,16 +6,22 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private var current: SparkSession = null
+
+  /** The session the specs share. A spec that stops it gets a new one on
+    * the next call, and so do the specs after it. */
+  def spark: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) {
+      current = SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      current.sparkContext.setLogLevel("WARN")
+    }
+    current
   }
 }
 
