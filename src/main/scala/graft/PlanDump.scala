@@ -105,7 +105,7 @@ object PlanDump {
     val mentions = er.Pipeline.extractMentions(pages)
     val (strings, _) = er.Pipeline.internStrings(mentions)
     val (pairs, _) = er.Pipeline.candidatePairs(strings, cfg)
-    val scored = er.Pipeline.scorePairs(pairs, strings, cfg)
+    val scored = er.Pipeline.scorePairs(pairs, strings)
     sb.append("\n## er_pipeline: scorePairs (blocking join + codegen scorers)\n\n```\n")
       .append(scored.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))

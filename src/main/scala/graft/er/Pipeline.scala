@@ -41,43 +41,12 @@ object Pipeline {
       nEntities: Int = 300,
       // blocking
       maxBlockSize: Int = 256,
-      // prefix filtering (MF-Join family): pair generation uses only each
-      // string's K globally-rarest trigrams — a 1-edit pair disturbs ≤4
-      // grams, so the rarest shared grams stay in both prefixes, while
-      // Zipf-hot grams stop generating quadratic blocks entirely
-      prefixKeys: Int = 6,
-      // JW threshold for TUNEMAIN'S SWEEP ONLY — the production accept
-      // gate deliberately excludes whole-string JW (see scorePairs: on
-      // dense entity spaces it passes corrupted variants of DIFFERENT
-      // entities faster than it recovers true pairs); the real tuning
-      // surface is siftMaxEdits/levMaxPerBytes/levMaxCap below plus the
-      // per-aligned-token constants tokLevMax/tokJwMin.
-      jwThreshold: Double = 0.96,
-      // per-aligned-token closeness gate (scorePairs tok_ok): every
-      // aligned token pair must satisfy lev ≤ tokLevMax OR jw ≥ tokJwMin
-      tokLevMax: Int = 2,
-      tokJwMin: Double = 0.92,
-      levMaxPerBytes: Double = 1.0 / 12.0, // allowed edits per byte of min length
-      levMaxCap: Int = 2, // plain Levenshtein counts a transposition as 2
-      // SIFT4 counts a transposition as 1 (the reference scorer's
-      // property); budget 2 because canonicalization can amplify one user
-      // typo into two key edits (digraph fold: deleting 'f' in "haferring"
-      // creates "ae" which folds to "a" — a 2-edit key delta). Precision
-      // at 2 edits is recovered by the distance-first hub rule.
-      siftMaxEdits: Int = 2,
-      // hub rule: a low-frequency string may only link to a hub at least
-      // this many times more frequent (frequency prior, reference X9)
-      hubFreqRatio: Double = 2.0,
-      // skew: salt buckets for the membership-expand join (hot string_ids)
-      saltBuckets: Int = 8,
       // contextual evidence (reference A6 analogue): use co-occurring
       // mention strings on the same page as a tie-breaking signal in hub
       // selection. Off by default (costs one bounded co-occurrence join);
       // needed only for entity spaces denser than the vocabulary-separated
       // default corpus.
       contextEvidence: Boolean = false,
-      maxCtxPerPage: Int = 8, // distinct strings per page entering co-occurrence
-      maxCtxPerString: Int = 64, // strongest context neighbors kept per string
       // clustering
       maxIterations: Int = 20,
       workDir: String = "/tmp/graft_er",
@@ -132,6 +101,14 @@ object Pipeline {
 
   // ---------------------------------------------------------------- intern
 
+  /** Pure-Scala mirror of Spark's `xxhash64` over a string (seed 42) —
+    * keeps the streaming incremental intern (StreamOps.incrementalIntern)
+    * assigning the same ids as the batch expression in assignStringIds. */
+  def stringIdHash(key: String): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(key),
+      org.apache.spark.sql.types.StringType, 42L)
+
   /** Deterministic, collision-FREE Long ids for the interned strings.
     * string_id = xxhash64(match_key), then ONE detect-and-rehash repair
     * round: any id carried by more than one distinct key is reassigned
@@ -144,14 +121,6 @@ object Pipeline {
     * removing the silent-cluster-fusion risk of raw 64-bit hashing.
     * Expected cost beyond the always-needed duplicate check: at 10^10
     * distinct strings ~3 colliding ids → one extra (tiny) round. */
-  /** Pure-Scala mirror of Spark's `xxhash64` over a string (seed 42) —
-    * keeps the streaming incremental intern (StreamOps.incrementalIntern)
-    * assigning the same ids as the batch expression below. */
-  def stringIdHash(key: String): Long =
-    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-      org.apache.spark.unsafe.types.UTF8String.fromString(key),
-      org.apache.spark.sql.types.StringType, 42L)
-
   private def assignStringIds(keys: DataFrame): DataFrame = {
     // Inline detect → repair → verify, with NO extra action (an eager
     // driver-side check would force the whole mentions→groupBy subtree to
@@ -195,13 +164,19 @@ object Pipeline {
 
   // ---------------------------------------------------------------- blocking
 
+  /** Prefix filtering (MF-Join family): pair generation uses only each
+    * string's K globally-rarest trigrams — a 1-edit pair disturbs ≤4
+    * grams, so the rarest shared grams stay in both prefixes, while
+    * Zipf-hot grams stop generating quadratic blocks entirely. */
+  final val PrefixKeys = 6
+
   /** distinct strings → candidate string pairs (src < dst), each pair
     * emitted exactly once.
     *
     * Prefix-filtered blocking (the size/prefix filters of the fuzzy-join
     * literature — PAPERS.md MF-Join; the reference's analogue is the
     * posting-count candidate cut, typeahead.cc:409-423): each string
-    * GENERATES pairs only from its `prefixKeys` globally-rarest trigrams.
+    * GENERATES pairs only from its [[PrefixKeys]] globally-rarest trigrams.
     * A 1-edit pair disturbs ≤4 of ~20 grams, so both sides keep their
     * rarest shared grams in-prefix and the pair is still generated, while
     * Zipf-hot grams (shared by thousands of strings — zero discriminative
@@ -226,7 +201,7 @@ object Pipeline {
     * smallest kept one. Both rules are one rule over a single long key
     * space in which every trigram key orders before every phonetic key:
     * block x emits (a, b) iff x = min(own(a) ∩ own(b)), own = K ∪ Q.
-    * Each block member carries its own(s) (≤ prefixKeys + a few codes)
+    * Each block member carries its own(s) (≤ PrefixKeys + a few codes)
     * and `gf.block_pairs` applies the test while walking i < j, so the
     * pair set is duplicate-free by construction: no global (src, dst)
     * exchange.
@@ -252,12 +227,12 @@ object Pipeline {
     // (string_id, cnt, key); the aggregate form hash-groups and sorts
     // ~20 elements per group — same selected set (array_sort on
     // struct(cnt, key) is the same lexicographic (cnt asc, key asc)
-    // order the window used; slice keeps the first prefixKeys).
+    // order the window used; slice keeps the first PrefixKeys).
     val prefixed = keyed
       .join(freq.filter($"cnt" >= 2), Seq("key"))
       .groupBy($"string_id")
       .agg(slice(array_sort(collect_list(struct($"cnt", $"key"))),
-        1, cfg.prefixKeys).as("topk"))
+        1, PrefixKeys).as("topk"))
       .select($"string_id", explode($"topk").as("e"))
       .select($"string_id", $"e.key".as("key"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -345,22 +320,38 @@ object Pipeline {
 
   // ---------------------------------------------------------------- scoring
 
+  /** Per-aligned-token closeness gate (scoreKeyed tok_ok): every aligned
+    * token pair must satisfy lev ≤ TokLevMax OR jw ≥ TokJwMin. */
+  final val TokLevMax = 2
+  final val TokJwMin = 0.92
+  /** Allowed Levenshtein edits per character of the shorter key, capped
+    * at LevMaxCap (plain Levenshtein counts a transposition as 2). */
+  final val LevMaxPerChar = 1.0 / 12.0
+  final val LevMaxCap = 2
+  /** SIFT4 counts a transposition as 1 (the reference scorer's
+    * property); budget 2 because canonicalization can amplify one user
+    * typo into two key edits (digraph fold: deleting 'f' in "haferring"
+    * creates "ae" which folds to "a" — a 2-edit key delta). Precision
+    * at 2 edits is recovered by the distance-first hub rule. */
+  final val SiftMaxEdits = 2
+
   /** candidate string pairs → scored pairs with the scalar accept gate.
     * Scores: Jaro-Winkler + banded Levenshtein + SIFT4 on the canonical
     * match keys (all codegen'd Catalyst expressions — no UDF dispatch).
-    * Accept: sift_cp ≤ siftMaxEdits ∧ lev_cp ≤ lev_max ∧ token-aligned
+    * Accept: sift_cp ≤ SiftMaxEdits ∧ lev_cp ≤ lev_max ∧ token-aligned
     * gate — all codepoint-level (one typo = one edit on any script); final
     * edge selection adds the frequency-prior hub rule — see matchEdges. */
-  def scorePairs(pairs: DataFrame, strings: DataFrame, cfg: Config): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val keys = strings.select($"string_id", $"match_key")
-    val withA = pairs
+  def scorePairs(pairs: DataFrame, strings: DataFrame): DataFrame =
+    scoreKeyed(withMatchKeys(pairs, strings)).select(col("src"), col("dst"),
+      col("jw"), col("lev"), col("sift"), col("min_len"), col("tok_ok"), col("accepted"))
+
+  /** (src, dst) pairs → the same rows plus each side's match key
+    * (`src_key`, `dst_key`), the input [[scoreKeyed]] expects. */
+  private def withMatchKeys(pairs: DataFrame, strings: DataFrame): DataFrame = {
+    val keys = strings.select(col("string_id"), col("match_key"))
+    pairs
       .join(keys.withColumnRenamed("string_id", "src").withColumnRenamed("match_key", "src_key"), Seq("src"))
-    val withB = withA
       .join(keys.withColumnRenamed("string_id", "dst").withColumnRenamed("match_key", "dst_key"), Seq("dst"))
-    scoreKeyed(withB, cfg)
-      .select($"src", $"dst", $"jw", $"lev", $"sift", $"min_len", $"tok_ok", $"accepted")
   }
 
   /** The scalar scoring gate alone, over a frame that already carries
@@ -369,7 +360,7 @@ object Pipeline {
     * scored-edge path (graft.streaming.StreamOps.incrementalScoredPairs),
     * so the two CANNOT diverge. Appends jw/lev/sift/min_len/tok_ok/
     * accepted to the input columns. */
-  def scoreKeyed(withKeys: DataFrame, cfg: Config): DataFrame = {
+  def scoreKeyed(withKeys: DataFrame): DataFrame = {
     val spark = withKeys.sparkSession
     import spark.implicits._
     withKeys
@@ -379,13 +370,13 @@ object Pipeline {
       // distances double-count multi-byte UTF-8 edits (a Cyrillic
       // transposition = 4 byte edits), silently splitting every non-Latin
       // cluster under a tight edit budget.
-      // (bounded form: -1 when the distance exceeds levMaxCap — banded DP,
+      // (bounded form: -1 when the distance exceeds LevMaxCap — banded DP,
       // O(n·cap) instead of O(n²) on the pairwise hot path)
-      .withColumn("lev", levenshtein($"src_key", $"dst_key", cfg.levMaxCap))
+      .withColumn("lev", levenshtein($"src_key", $"dst_key", LevMaxCap))
       .withColumn("sift", gf.sift4_cp($"src_key", $"dst_key"))
       .withColumn("min_len", least(length($"src_key"), length($"dst_key")))
       .withColumn("lev_max", greatest(lit(1),
-        least(lit(cfg.levMaxCap), ceil($"min_len" * cfg.levMaxPerBytes))).cast("int"))
+        least(lit(LevMaxCap), ceil($"min_len" * LevMaxPerChar))).cast("int"))
       // token-aligned gate: a whole-string score can stay high when one
       // *aligned token* is a different word entirely (long shared base +
       // short differing city, or long base + different suffix) — require
@@ -397,8 +388,8 @@ object Pipeline {
         val tb = split($"dst_key", " ")
         when(size(ta) =!= size(tb), lit(true)).otherwise(
           forall(zip_with(ta, tb, (a, b) =>
-            levenshtein(a, b) <= cfg.tokLevMax ||
-              gf.jaro_winkler(a, b) >= cfg.tokJwMin), x => x))
+            levenshtein(a, b) <= TokLevMax ||
+              gf.jaro_winkler(a, b) >= TokJwMin), x => x))
       })
       // Scalar accept: the edit-distance gate ONLY. The corruption model a
       // correct matcher must absorb is "≤1 typo per surface" — SIFT4 ≤ 1
@@ -409,10 +400,49 @@ object Pipeline {
       // measured) faster than it recovers true pairs. Precision beyond
       // this gate comes from the frequency-prior hub rule (matchEdges).
       .withColumn("accepted",
-        $"sift" <= cfg.siftMaxEdits &&
+        $"sift" <= SiftMaxEdits &&
           ($"lev" >= 0 && $"lev" <= $"lev_max") &&
           $"tok_ok")
   }
+
+  /** Context caps: distinct strings per page entering co-occurrence (a
+    * 1000-mention page is boilerplate), and strongest context neighbors
+    * kept per string. */
+  final val MaxCtxPerPage = 8
+  final val MaxCtxPerString = 64
+
+  /** Bounded page-co-occurrence context (the reference's area evidence A6,
+    * recast for ER: co-occurring mentions play the role co-occurring
+    * containment areas play in get_suggestions.cc:181-255). Returns
+    * (s, c) — string c co-occurs with string s on at least one page.
+    * Both sides are capped (strings per page, neighbors per string, kept
+    * by co-occurrence count) so the table stays linear in the corpus. */
+  def contextPairs(mentions: DataFrame, strings: DataFrame): DataFrame = {
+    val spark = mentions.sparkSession
+    import spark.implicits._
+    val pageStrings = mentions.select($"url", $"match_key")
+      .join(strings.select($"match_key", $"string_id"), Seq("match_key"))
+      .select($"url", $"string_id").distinct()
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy($"url").orderBy($"string_id")))
+      .filter($"rn" <= MaxCtxPerPage)
+      .select($"url", $"string_id")
+    pageStrings.as("x")
+      .join(pageStrings.as("y"),
+        $"x.url" === $"y.url" && $"x.string_id" =!= $"y.string_id")
+      .groupBy($"x.string_id".as("s"), $"y.string_id".as("c"))
+      .agg(count(lit(1)).as("n_pages"))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy($"s").orderBy($"n_pages".desc, $"c".asc)))
+      .filter($"rn" <= MaxCtxPerString)
+      .select($"s", $"c")
+  }
+
+  /** Hub rule: a low-frequency string may only link to a hub at least
+    * this many times more frequent (frequency prior, reference X9). */
+  final val HubFreqRatio = 2.0
 
   /** Scored pairs → accepted match edges via the frequency-prior HUB rule
     * (the reference's population/category priors X8/X9, recast for ER):
@@ -427,56 +457,22 @@ object Pipeline {
     * edit apart — no pairwise distance can separate that from a true
     * pair; the frequency prior can). Transitivity through the hub still
     * connects all same-entity satellites. */
-  /** Bounded page-co-occurrence context (the reference's area evidence A6,
-    * recast for ER: co-occurring mentions play the role co-occurring
-    * containment areas play in get_suggestions.cc:181-255). Returns
-    * (s, c) — string c co-occurs with string s on at least one page.
-    * Both sides are capped (strings per page, neighbors per string, kept
-    * by co-occurrence count) so the table stays linear in the corpus. */
-  def contextPairs(mentions: DataFrame, strings: DataFrame, cfg: Config): DataFrame = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    val pageStrings = mentions.select($"url", $"match_key")
-      .join(strings.select($"match_key", $"string_id"), Seq("match_key"))
-      .select($"url", $"string_id").distinct()
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"url").orderBy($"string_id")))
-      .filter($"rn" <= cfg.maxCtxPerPage) // cap: a 1000-mention page is boilerplate
-      .select($"url", $"string_id")
-    pageStrings.as("x")
-      .join(pageStrings.as("y"),
-        $"x.url" === $"y.url" && $"x.string_id" =!= $"y.string_id")
-      .groupBy($"x.string_id".as("s"), $"y.string_id".as("c"))
-      .agg(count(lit(1)).as("n_pages"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"s").orderBy($"n_pages".desc, $"c".asc)))
-      .filter($"rn" <= cfg.maxCtxPerString)
-      .select($"s", $"c")
-  }
-
   def matchEdges(pairs: DataFrame, strings: DataFrame, cfg: Config,
       mentions: Option[DataFrame] = None): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // Cheap-gate PRE-filter before the full scorer: the banded Levenshtein
     // at the cap is a NECESSARY condition of `accepted` (which requires
-    // lev ∈ [0, lev_max] with lev_max ≤ levMaxCap), so filtering lev ≥ 0
+    // lev ∈ [0, lev_max] with lev_max ≤ LevMaxCap), so filtering lev ≥ 0
     // first drops no accepted edge — it keeps sift4/token-gate/projection
     // work off the vast majority of candidate pairs the distance gate
     // rejects anyway (the scorer columns were previously projected for
     // every candidate pair because `sift` is needed downstream). scorePairs
-    // itself stays unfiltered — TuneMain/DebugSplits analyze rejected
-    // pairs through it.
-    val keys = strings.select($"string_id", $"match_key")
-    val withKeys = pairs
-      .join(keys.withColumnRenamed("string_id", "src")
-        .withColumnRenamed("match_key", "src_key"), Seq("src"))
-      .join(keys.withColumnRenamed("string_id", "dst")
-        .withColumnRenamed("match_key", "dst_key"), Seq("dst"))
-      .filter(levenshtein($"src_key", $"dst_key", cfg.levMaxCap) >= 0)
-    val scored = scoreKeyed(withKeys, cfg).filter($"accepted")
+    // itself stays unfiltered: StreamingSpec compares the streaming gate's
+    // verdicts on the rejected pairs too.
+    val withKeys = withMatchKeys(pairs, strings)
+      .filter(levenshtein($"src_key", $"dst_key", LevMaxCap) >= 0)
+    val scored = scoreKeyed(withKeys).filter($"accepted")
     val freqs = strings.select($"string_id", $"freq")
     val withF = scored
       .join(freqs.withColumnRenamed("string_id", "src").withColumnRenamed("freq", "src_freq"), Seq("src"))
@@ -504,7 +500,7 @@ object Pipeline {
     // two independent typos to collide — the top-1 cap bounds the damage
     // of that rare event to a single satellite's mentions.
     val eligible = oriented
-      .filter($"high_freq" >= lit(cfg.hubFreqRatio) * $"low_freq" || $"sift" <= 1)
+      .filter($"high_freq" >= lit(HubFreqRatio) * $"low_freq" || $"sift" <= 1)
     // Contextual evidence (A6 analogue, optional): when two hubs tie on
     // distance AND frequency — the exact case no pairwise string score can
     // separate — the satellite goes to the hub sharing page-co-occurrence
@@ -512,7 +508,7 @@ object Pipeline {
     // alongside both). Context RANKS, it never creates or vetoes an edge.
     val ranked = (mentions, cfg.contextEvidence) match {
       case (Some(m), true) =>
-        val ctx = contextPairs(m, strings, cfg)
+        val ctx = contextPairs(m, strings)
         val overlap = eligible.select($"low", $"high").distinct()
           .join(ctx.select($"s".as("low"), $"c"), Seq("low"))
           .join(ctx.select($"s".as("high"), $"c"), Seq("high", "c"))
@@ -779,6 +775,9 @@ object Pipeline {
       pairs: DataFrame, membership: DataFrame, labels: DataFrame,
       strings: DataFrame, stringLabels: DataFrame)
 
+  /** Skew: salt buckets for the membership-expand join (hot string_ids). */
+  final val SaltBuckets = 8
+
   private def timed[T](tag: String)(body: => T): T = {
     val t0 = System.nanoTime()
     val r = body
@@ -817,11 +816,11 @@ object Pipeline {
     // membership is Zipf-skewed on string_id (a hot surface form carries
     // millions of mentions on a single key at corpus scale, all hashed to
     // one shuffle partition). Salting the big side and replicating the
-    // small side `saltBuckets`× makes the plan skew-free by construction
+    // small side `SaltBuckets`× makes the plan skew-free by construction
     // at any scale (AQE's skew-join split only rescues sort-merge joins
     // after the fact). Salt = hash(mention_id) — deterministic, so the
     // output stays partition-count invariant.
-    val g = cfg.saltBuckets
+    val g = SaltBuckets
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // The explicit repartition on the join key pins the join width to the
     // session's shuffle partitions: AQE otherwise coalesces this exchange
@@ -852,7 +851,7 @@ object Pipeline {
 
   /** Release a PipelineOutput's persisted frames (pairs, membership,
     * labels — the three caches runPipeline leaves alive for the caller).
-    * Repeated-run harnesses (Bench min-of-3, TuneMain sweeps) MUST call
+    * Repeated-run harnesses (Bench min-of-3, ScalingBench reps) MUST call
     * this on every output they discard: each leaked mention-scale cache
     * evicts blocks the next timed run needs. */
   def release(o: PipelineOutput): Unit = {

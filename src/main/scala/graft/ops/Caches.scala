@@ -20,8 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * concurrent caller (parallel test suites, a second query sharing the
   * session) draining [[releaseAll]] can unpersist another query's frames
   * mid-action — still CORRECT (a released plan recomputes), but the
-  * persist's speedup is lost. The harness mains (Verify/Bench/TimeQuery)
-  * run queries strictly sequentially and drain between them; library
+  * persist's speedup is lost. The harness mains (Verify/Bench) run
+  * queries strictly sequentially and drain between them; library
   * callers embedding these queries outside that harness should either
   * call releaseAll() after each consuming action themselves or accept
   * session-lifetime persists.

@@ -332,7 +332,7 @@ object Dedup {
   /** q62 eval-side hot-gram cap: a normalized W-gram present in more
     * than this many DISTINCT eval documents is a common phrase /
     * benchmark boilerplate, not a contamination signal — dropped whole
-    * before the broadcast (the GPT-3 appendix-C "common n-gram"
+    * before the join (the GPT-3 appendix-C "common n-gram"
     * exclusion rule, Brown et al. 2020; PaLM and Dolma keep the same
     * rule). The oracle mirrors it as a HAVING on the eval-grams CTE. */
   val DecontamHotCap = 16L
@@ -346,15 +346,16 @@ object Dedup {
     * slots into [[decontaminate]] unchanged.
     *
     * 100 TB shape: a real eval side is benchmark-sized (MBs at ANY
-    * corpus scale), so its distinct-gram set BROADCASTS; the train side
-    * is ONE map pass (tokenize + window-hash) feeding a broadcast-hash
-    * join — zero train-side shuffle before the per-doc partial agg, and
-    * the join emits only contaminated windows. NOTE (ADVICE r5): this
-    * driver demo's modular doc_id stratum is a stand-in that grows WITH
-    * the corpus — the broadcast claim holds only for a genuinely
-    * benchmark-sized eval table passed to [[decontaminate]]; a caller
-    * with a corpus-scale "eval" side should swap the forced broadcast
-    * for a shuffle join (or size-check before broadcasting). No winnowing here: unlike
+    * corpus scale), so its distinct-gram set is small enough to
+    * broadcast, and the train side is then ONE map pass (tokenize +
+    * window-hash) feeding a broadcast-hash join — zero train-side
+    * shuffle before the per-doc partial agg, and the join emits only
+    * contaminated windows. The join carries no broadcast hint: this
+    * query's modular doc_id stratum grows WITH the corpus, so Spark's
+    * own size check picks the strategy — a broadcast under
+    * `autoBroadcastJoinThreshold` (planned statically, or converted by
+    * AQE once the eval-gram stage's real size is known), a shuffle join
+    * above it (DedupSpec runs both). No winnowing here: unlike
     * q59's dedup, decontamination must catch EVERY collision (a single
     * leaked eval n-gram matters), so the train stream hashes all
     * windows at stride 1 — linear map CPU, the published method's
@@ -382,7 +383,7 @@ object Dedup {
       .groupBy(col("fp")).agg(countDistinct(col("doc_id")).as("n_eval_docs"))
       .filter(col("n_eval_docs") <= DecontamHotCap)
     grams(train)
-      .join(broadcast(evalGrams), Seq("fp"))
+      .join(evalGrams, Seq("fp"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("fp")).as("n_contam_grams"),
         count(lit(1)).as("n_windows_hit"),

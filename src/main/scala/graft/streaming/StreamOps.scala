@@ -261,10 +261,9 @@ object StreamOps {
     * (matchEdges) stays a maintenance-window concern — it is a top-1 over
     * all of a satellite's pairs, which a stream has not all seen yet. */
   def incrementalScoredPairs(spark: SparkSession, strings: DataFrame,
-      cfg: graft.er.Pipeline.Config,
       maxBlock: Int = 256): DataFrame =
     graft.er.Pipeline.scoreKeyed(
-        incrementalKeyedBlocking(spark, strings, maxBlock).toDF(), cfg)
+        incrementalKeyedBlocking(spark, strings, maxBlock).toDF())
       .select(col("src"), col("dst"), col("jw"), col("lev"), col("sift"),
         col("accepted"))
 

@@ -254,7 +254,7 @@ class ErPipelineSpec extends AnyFunSuite {
 
   /** Driver-side sequential reference of candidatePairs' pair SET (no
     * ownership rule, no Spark): trigram keys, freq ≥ 2 ranking, top
-    * prefixKeys prefixes, kept blocks (2 ≤ pfreq ≤ cap), kept phonetic
+    * PrefixKeys prefixes, kept blocks (2 ≤ pfreq ≤ cap), kept phonetic
     * blocks, every a < b pair in every kept block. The intermediates are
     * returned so specs can check what a hand-built corpus covers. */
   private case class BlockingRef(
@@ -282,7 +282,7 @@ class ErPipelineSpec extends AnyFunSuite {
       id -> graft.text.Ngrams.trigramBlockingKeys(k).toSeq.distinct }
     val freq = tris.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size }
     val prefix = tris.map { case (id, ks) =>
-      id -> ks.filter(freq(_) >= 2).sortBy(k => (freq(k), k)).take(cfg.prefixKeys).toSet
+      id -> ks.filter(freq(_) >= 2).sortBy(k => (freq(k), k)).take(Pipeline.PrefixKeys).toSet
     }.toMap
     val (triPairs, pfreq) = blockPairs(prefix, isKept)
     val kept = prefix.map { case (id, ks) => id -> ks.filter(k => isKept(pfreq(k))) }

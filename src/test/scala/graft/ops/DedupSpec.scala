@@ -264,8 +264,23 @@ class DedupSpec extends AnyFunSuite {
     assert(r.getInt(r.fieldIndex("first_pos")) == 11)
     assert(r.getLong(r.fieldIndex("max_eval_docs")) == 1L)
 
+    // no forced broadcast: with both broadcast thresholds off, Spark plans
+    // a shuffle join and returns the same rows
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = thresholds.map(k => k -> spark.conf.getOption(k))
+    thresholds.foreach(spark.conf.set(_, "-1"))
+    try {
+      val shuffled = Dedup.decontaminate(train, evalDocs)
+      assert(shuffled.collect().toSeq == out.toSeq)
+      val plan = shuffled.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin") &&
+        (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")),
+        s"expected a shuffle join without broadcast:\n$plan")
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+
     // hot-gram rule: the same gram across 17 > DecontamHotCap eval docs
-    // is benchmark boilerplate, not signal — excluded before broadcast
+    // is benchmark boilerplate, not signal — excluded before the join
     val common = (1 to 8).map(i => s"comm$i").mkString(" ")
     def evalN(n: Int) = (1 to n).map(i =>
       (97L * i, s"e${i}a e${i}b " + common)).toDF("doc_id", "text")

@@ -163,7 +163,6 @@ class StreamingSpec extends AnyFunSuite {
     val mentions = graft.er.Pipeline.extractMentions(pages)
     val (strings, _) = graft.er.Pipeline.internStrings(mentions)
     val stringsDf = strings.select($"string_id", $"match_key")
-    val cfg = graft.er.Pipeline.Config()
 
     val d = new java.io.File("/tmp/graft_stream_scoring")
     org.apache.commons.io.FileUtils.deleteQuietly(d)
@@ -172,7 +171,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(d.getPath)
     StreamOps.runToMemory(spark,
-      StreamOps.incrementalScoredPairs(spark, stream, cfg, maxBlock = 10000),
+      StreamOps.incrementalScoredPairs(spark, stream, maxBlock = 10000),
       "score_out", OutputMode.Append())
     val streamed = spark.table("score_out")
       .select($"src", $"dst", $"jw", $"lev", $"sift", $"accepted").distinct()
@@ -181,7 +180,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch-score the SAME pair set: scores and verdicts must be
     // bit-identical (shared scoreKeyed kernel, same match keys)
     val batch = graft.er.Pipeline.scorePairs(
-        streamed.select($"src", $"dst").distinct(), stringsDf, cfg)
+        streamed.select($"src", $"dst").distinct(), stringsDf)
       .select($"src", $"dst", $"jw", $"lev", $"sift", $"accepted")
     assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
       s"streamed=${streamed.count()} batch=${batch.count()}")

@@ -87,4 +87,91 @@ class TextPropertySpec extends AnyFunSuite {
         assert(Ngrams.decompressBigram(Ngrams.compressBigram(s)).sameElements(bs.take(2)), s)
       }
   }
+
+  /** Jaro-Winkler over UTF-8 bytes, written from the definition with sets
+    * of matched positions: each byte of `a` takes the first unmatched
+    * equal byte of `b` within max(l1,l2)/2 − 1 (clamped at 0); the
+    * half-transpositions are the mismatches between the two matched
+    * sequences, integer-divided by 2; an empty side scores 0; the prefix
+    * boost (≤ 4 bytes, scale 0.1) applies only when Jaro > 0.7. */
+  private def jaroWinklerRef(a: String, b: String): Double = {
+    val s = a.getBytes(StandardCharsets.UTF_8)
+    val t = b.getBytes(StandardCharsets.UTF_8)
+    if (s.isEmpty || t.isEmpty) return 0.0
+    val window = math.max(0, math.max(s.length, t.length) / 2 - 1)
+    val matched = s.indices.foldLeft(Map.empty[Int, Int]) { (m, i) =>
+      val taken = m.values.toSet
+      (math.max(0, i - window) to math.min(t.length - 1, i + window))
+        .find(j => !taken(j) && s(i) == t(j))
+        .fold(m)(j => m + (i -> j))
+    }
+    val m = matched.size.toDouble
+    if (m == 0) return 0.0
+    val fromS = matched.keys.toSeq.sorted.map(s(_))
+    val fromT = matched.values.toSeq.sorted.map(t(_))
+    val halfTranspositions = fromS.zip(fromT).count { case (x, y) => x != y }
+    val jaro = (m / s.length + m / t.length + (m - halfTranspositions / 2) / m) / 3.0
+    if (jaro <= 0.7) jaro
+    else {
+      val prefix = s.zip(t).take(4).takeWhile { case (x, y) => x == y }.length
+      jaro + prefix * 0.1 * (1.0 - jaro)
+    }
+  }
+
+  test("property: jaroWinkler equals a set-based reference of the DuckDB " +
+      "convention") {
+    // values DuckDB's jaro_winkler_similarity documents
+    assert(math.abs(jaroWinklerRef("CRATE", "TRACE") - 0.7333333333) < 1e-9)
+    assert(math.abs(jaroWinklerRef("DwAyNE", "DuANE") - 0.84) < 1e-9)
+    val pairs = sample(nearPair, 3000, 5) ++ sample(Gen.zip(word, word), 3000, 6)
+    var boosted = 0
+    pairs.foreach { case (a, b) =>
+      val want = jaroWinklerRef(a, b)
+      if (want > EditDistances.jaro(a, b)) boosted += 1
+      assert(math.abs(EditDistances.jaroWinkler(a, b) - want) <= 1e-12,
+        s"'$a' vs '$b': ${EditDistances.jaroWinkler(a, b)} != $want")
+    }
+    assert(boosted > pairs.size / 10, s"only $boosted pairs got a prefix boost")
+  }
+
+  test("property: Sift4.distCodepoints is invariant under an injective " +
+      "renaming of codepoints (Cyrillic and CJK onto ASCII)") {
+    val script = ('а' to 'я') ++ "水火木金土山川田中日月人口女子大".toSeq
+    val scriptWord = Gen.choose(0, 20).flatMap(Gen.listOfN(_,
+      Gen.frequency(8 -> Gen.oneOf(script), 1 -> Gen.const(' ')))).map(_.mkString)
+    val scriptPair = for {
+      a <- scriptWord
+      edits <- Gen.choose(0, 3)
+      positions <- Gen.listOfN(edits, Gen.choose(0, 1000))
+      chars <- Gen.listOfN(edits, Gen.oneOf(script))
+    } yield (a, positions.zip(chars).foldLeft(a) { case (w, (p, c)) =>
+      if (w.isEmpty) c.toString
+      else {
+        val i = p % w.length
+        p % 3 match {
+          case 0 => w.substring(0, i) + c + w.substring(i)
+          case 1 => w.substring(0, i) + w.substring(i + 1)
+          case _ if i + 1 < w.length => // transposition
+            w.substring(0, i) + w(i + 1) + w(i) + w.substring(i + 2)
+          case _ => w.substring(0, i) + c
+        }
+      }
+    })
+    val ascii = (('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9')).toVector
+    val pairs = sample(scriptPair, 3000, 7) ++ sample(Gen.zip(scriptWord, scriptWord), 1000, 8)
+    for (seed <- 1 to 3) {
+      val target = new scala.util.Random(seed).shuffle(ascii)
+      val rename = (script :+ ' ').zip(target :+ ' ').toMap
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (a.map(rename), b.map(rename))
+        for (maxDistance <- Seq(0, math.min(a.length, b.length) / 2 + 2)) {
+          val d = Sift4.distCodepoints(a, b, 3, maxDistance)
+          assert(Sift4.distCodepoints(ra, rb, 3, maxDistance) == d,
+            s"'$a' vs '$b' (renamed '$ra' vs '$rb'), maxDistance $maxDistance")
+        }
+      }
+    }
+    val nonZero = pairs.count { case (a, b) => Sift4.distCodepoints(a, b, 3, 0) > 0 }
+    assert(nonZero > pairs.size / 2, s"only $nonZero of ${pairs.size} pairs differ")
+  }
 }
