@@ -7,12 +7,18 @@ import org.apache.spark.sql.SparkSession
   * file, so plan quality — pushed filters, pruned read schemas, broadcast
   * choices, whole-stage-codegen spans — is reviewable without rerunning.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outFile>
+  * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  *
+  * Both paths resolve against the working directory (the repository root
+  * under sbt). `sfDir` defaults to `perfbench/data/sf0.001`, which holds
+  * five of the sf0.001 tables, so the queries over the other tables print
+  * FAILED; pass a full sf0.001 directory to dump every plan. `outFile`
+  * defaults to `PLANS.md`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val outFile = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
+    val sfDir = if (args.length > 0) args(0) else "perfbench/data/sf0.001"
+    val outFile = if (args.length > 1) args(1) else "PLANS.md"
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-plandump")
@@ -25,7 +31,7 @@ object PlanDump {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plan evidence (`explain formatted`)\n\n")
     sb.append(s"Input: `$sfDir`. Generated by `graft.PlanDump`; regenerate with\n")
-    sb.append("`sbt \"runMain graft.PlanDump /root/testdata/sf0.001 PLANS.md\"`.\n")
+    sb.append("`sbt \"runMain graft.PlanDump <sfDir> PLANS.md\"`.\n")
     sb.append("Checkpoints to review per plan: `PushedFilters`, `ReadSchema` (column\n")
     sb.append("pruning), join strategy (broadcast vs shuffle), `WholeStageCodegen` spans.\n\n")
     sb.append("Known/intentional `BroadcastNestedLoopJoin` sites (everything else is\n")

@@ -2,7 +2,13 @@ package graft.er
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.{functions => gf}
 
@@ -100,9 +106,74 @@ object Suggest {
     *   category: string, population: long, name_lang: string,
     *   location: long, areas: array<struct<name,level,pop>>,
     *   house_numbers: array<string>)
-    * → ranked suggestions per query. */
+    * → ranked suggestions per query.
+    *
+    * The plan is prepared once per entity frame: the first call for a
+    * given (entity frame, query schema, `topN`, `userLangs`) builds the
+    * stages below over a placeholder query leaf and keeps the ANALYZED
+    * plan; every call, that one included, binds its query rows into the
+    * copies of that leaf (`bind`). A keystroke then pays for one
+    * substitution and the optimizer, not for ~40 eagerly analyzed
+    * Dataset operations and the index lookups. The optimized and physical
+    * plans are not kept: the optimizer folds the query rows into the plan
+    * (`ConvertToLocalRelation`), so they hold for one query frame only. */
   def suggest(queries: DataFrame, entities: DataFrame, topN: Int = 10,
-      userLangs: Seq[String] = Seq("default")): DataFrame = {
+      userLangs: Seq[String] = Seq("default")): DataFrame =
+    bind(prepared(entities, queries.schema, topN, userLangs), queries)
+
+  /** Stands in for the caller's query rows while the plan is built.
+    * Analysis renames each self-joined reference to it (`newInstance`),
+    * so the analyzed plan holds several copies, each with its own
+    * exprIds; `bind` replaces them all. It never reaches the optimizer. */
+  private[er] case class QueryLeaf(output: Seq[Attribute])
+      extends LeafNode with MultiInstanceRelation {
+    override def newInstance(): QueryLeaf = copy(output = output.map(_.newInstance()))
+  }
+
+  /** Prepared plans per entity frame, keyed within it by (query schema,
+    * topN, userLangs): the analyzed plan and the `postings` frame it
+    * reads. The entity frame is held weakly, so an entry lives as long as
+    * its caller keeps the frame. Contract: a DataFrame's plan is
+    * immutable, so a prepared plan stays valid for the life of its entity
+    * frame. Each call first drops the entries of sessions whose
+    * SparkContext has stopped, as `ops.Tables.load` does, so the memo
+    * does not pin them, and persists the postings again when a drain of
+    * `ops.Caches` has released them since the last call. */
+  private[er] val plans = new java.util.WeakHashMap[DataFrame,
+    Map[(StructType, Int, Seq[String]), (LogicalPlan, DataFrame)]]()
+
+  private def prepared(entities: DataFrame, schema: StructType, topN: Int,
+      userLangs: Seq[String]): LogicalPlan = plans.synchronized {
+    plans.keySet.removeIf(_.sparkSession.sparkContext.isStopped)
+    val byKey = plans.getOrDefault(entities, Map.empty)
+    val key = (schema, topN, userLangs)
+    val (plan, postings) = byKey.getOrElse(key, {
+      val leaf = Bridge.ofRows(entities.sparkSession, QueryLeaf(DataTypeUtils.toAttributes(schema)))
+      val postings = entityIndex(entities)
+      val entry = (build(leaf, entities, postings, topN, userLangs).queryExecution.analyzed, postings)
+      plans.put(entities, byKey + (key -> entry))
+      entry
+    })
+    cached(postings)
+    plan
+  }
+
+  /** The prepared plan over `queries`: each copy of the query leaf
+    * becomes a projection of the caller's analyzed rows that re-aliases
+    * every column to the copy's exprId, so the plan above it is reused
+    * as is. One substitution serves one-row keystrokes and batched calls
+    * alike. */
+  private def bind(plan: LogicalPlan, queries: DataFrame): DataFrame = {
+    val rows = queries.queryExecution.analyzed
+    Bridge.ofRows(queries.sparkSession, plan.transformUp {
+      case leaf: QueryLeaf => Project(leaf.output.zip(rows.output).map { case (p, c) =>
+        Alias(c, p.name)(exprId = p.exprId) }, rows)
+    })
+  }
+
+  /** Stages 1-10 over `queries`, built once per prepared plan. */
+  private def build(queries: DataFrame, entities: DataFrame, postings: DataFrame,
+      topN: Int, userLangs: Seq[String]): DataFrame = {
 
     // ---- stages 1-3: tokenize, phrase windows (G2/G3; alternates are
     // handled by match-key canonicalization in this engine, MatchKeys)
@@ -124,7 +195,8 @@ object Suggest {
     // Only query-side work runs per call, and none of it is persisted:
     // candidates and the scored rows are each read once, and q, a
     // projection of the caller's query rows, is recomputed at each of
-    // its references. The entity side comes from `entityIndex`.
+    // its references. The entity side is `postings` (`entityIndex`) and
+    // the caller's entity frame.
     val q = queries
       .withColumn("norm", gf.match_key(col("text")))
       .filter(length(col("norm")) >= 2) // F5 min-length gate
@@ -133,19 +205,28 @@ object Suggest {
       .withColumn("phrases", phraseArr)
 
     // ---- stage 4: candidate generation (A1/A2/A3/J1/K1)
-    val (names, postings) = entityIndex(entities)
-    val qGrams = q.select(col("query_id"),
-      explode(gf.trigram_strings(col("norm"))).as("gram"))
-    val qN = q.select(col("query_id"),
-      size(gf.trigram_strings(col("norm"))).as("n_q"))
+    // `postings` is the one frame the index persists. Everything else a
+    // request needs from the entity table is read from the caller's
+    // frame: n_q rides on the exploded query grams, and the name's match
+    // key is computed on the candidate rows after the entity join (stage
+    // 5), so no other index frame is persisted or broadcast per request.
+    val qGrams = q
+      .select(col("query_id"), gf.trigram_strings(col("norm")).as("tris"))
+      .select(col("query_id"), size(col("tris")).as("n_q"), explode(col("tris")).as("gram"))
     // min-match-count from the QUERY's n-gram count alone — the reference
     // formula (typeahead.cc:409): mmc = 2 + n_q / (4 + n_q / 10)
     val mmc = lit(2) + floor(col("n_q") / (lit(4) + floor(col("n_q") / lit(10))))
+    // ONE exchange on query_id serves the (query_id, entity_id) count and
+    // the K1 window: hash(query_id) satisfies both clustered
+    // distributions, so the count aggregates after the exchange instead
+    // of shuffling twice, and the partitioning carries through the
+    // broadcast joins of stage 5 to `rankFrom`'s windows.
     val candidates = qGrams
       .join(postings, Seq("gram"))
+      .repartition(col("query_id"))
       .groupBy(col("query_id"), col("entity_id"))
-      .agg(count(lit(1)).as("shared"), first(col("n_grams")).as("n_grams"))
-      .join(qN, Seq("query_id"))
+      .agg(count(lit(1)).as("shared"), first(col("n_q")).as("n_q"),
+        first(col("n_grams")).as("n_grams"))
       .filter(col("shared") >= mmc.cast("long") &&
         (col("shared") * col("shared")).cast("double") >= lit(0.17) * col("n_q") * col("n_grams"))
       .withColumn("cos2",
@@ -163,9 +244,9 @@ object Suggest {
     // the kernel (ordering identical to min(struct(score, pidx, bits))),
     // and there is no phrase-explode shuffle or re-aggregation at all.
     val bestPhrase = candidates
-      .join(names, Seq("entity_id"))
+      .join(entities.select(col("entity_id"), col("name")), Seq("entity_id"))
       .join(q.select(col("query_id"), col("phrases")), Seq("query_id"))
-      .withColumn("b", gf.ref_best_phrase(col("mk"),
+      .withColumn("b", gf.ref_best_phrase(gf.match_key(col("name")),
         transform(col("phrases"), p => p("s")),
         transform(col("phrases"), p => p("bits"))))
       .filter(col("b").isNotNull) // candidates where every phrase is kNoMatch
@@ -178,30 +259,27 @@ object Suggest {
 
   /** The entity side of candidate generation, which depends on the entity
     * table alone (the import-time index of typeahead.cc:317-337):
-    *  - `names(entity_id, mk)`: the canonical match key, computed once per
-    *    entity and read by both the trigram postings and the score matrix;
-    *  - `postings(gram, entity_id, n_grams)`: one row per name trigram,
-    *    without the grams of more than `ops.Dedup.MaxBlock` names (the
-    *    hot-gram cap that bounds each query's posting walk).
-    * Each frame is persisted only when it is not cached yet. Spark's
-    * CacheManager matches the plan of a later call over the same entity
-    * frame to that copy, so repeated requests neither recount the hot
-    * grams nor ask to cache the index again. The persists go through
-    * `ops.Caches`: a harness that drains it after each query (Verify,
-    * Bench) releases the index with the query's other frames, and a
-    * caller that never drains it keeps one index per entity table. */
-  private def entityIndex(entities: DataFrame): (DataFrame, DataFrame) = {
-    val names = cached(entities.select(col("entity_id"),
-      gf.match_key(col("name")).as("mk")))
-    val nameGrams = names
-      .select(col("entity_id"), gf.trigram_strings(col("mk")).as("tris"))
+    * `postings(gram, entity_id, n_grams)`, one row per trigram of a
+    * name's canonical match key, without the grams of more than
+    * `ops.Dedup.MaxBlock` names (the hot-gram cap that bounds each
+    * query's posting walk). It is persisted only when it is not cached
+    * yet (`cached`): Spark's CacheManager matches the plan of a later
+    * build over the same entity frame to that copy. A prepared plan
+    * builds the index once; each bound call reads the cached copy
+    * through the CacheManager. The persist goes through `ops.Caches`: a
+    * harness that drains it after each query (Verify, Bench) releases
+    * the index with the query's other frames, and a caller that never
+    * drains it keeps one index per entity table. */
+  private def entityIndex(entities: DataFrame): DataFrame = {
+    val nameGrams = entities
+      .select(col("entity_id"), gf.trigram_strings(gf.match_key(col("name"))).as("tris"))
       .select(col("entity_id"), size(col("tris")).as("n_grams"),
         explode(col("tris")).as("gram"))
     val keptGrams = nameGrams.groupBy(col("gram"))
       .agg(count(lit(1)).as("gcnt"))
       .filter(col("gcnt") <= graft.ops.Dedup.MaxBlock)
       .select(col("gram"))
-    (names, cached(nameGrams.join(keptGrams, Seq("gram"))))
+    cached(nameGrams.join(keptGrams, Seq("gram")))
   }
 
   private def cached(df: DataFrame): DataFrame =
@@ -251,7 +329,8 @@ object Suggest {
     // location) dup-mark window and the final per-query top-n; without
     // it each window inserts its own exchange. The house-number match
     // runs inside each row (`houseNumberMatch`), so nothing between the
-    // windows shuffles.
+    // windows shuffles. `suggest`'s rows arrive hash-partitioned on
+    // query_id from stage 4, so there Spark drops this repartition.
     val withHn = bestPhrase
       .join(entities, Seq("entity_id"))
       .join(q.select(col("query_id"), col("tokens"), col("all_mask"),

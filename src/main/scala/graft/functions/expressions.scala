@@ -218,36 +218,6 @@ case class RefMatchScorePre(left: Expression, right: Expression)
   override def prettyName: String = "ref_match_score_pre"
 }
 
-/** The score-matrix kernel: ONE dataset name vs ALL the query's phrases
-  * in a single call — the name's normalize/tokenize/phrase-enumeration
-  * (the dominant per-cell cost of the naive per-pair formulation) runs
-  * once per (candidate, query) row instead of once per matrix cell.
-  * (normName, array<string> phrases) → array<float> with NULL entries
-  * where the reference returns kNoMatch. */
-case class RefMatchScores(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = true)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (_: StringType, ArrayType(_: StringType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (string, array<string>), got " +
-            s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-    }
-  override def nullSafeEval(l: Any, r: Any): Any =
-    ExprKernels.refMatchScores(l.asInstanceOf[UTF8String],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) =>
-      s"graft.functions.ExprKernels.refMatchScores($l, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RefMatchScores =
-    copy(left = l, right = r)
-  override def prettyName: String = "ref_match_scores"
-}
-
 /** The fused score-matrix argmin: score ONE prepared name against all the
   * query's phrases and return struct(score, pidx, bits) of the winner
   * (ties → lowest pidx — the ordering of min(struct(score, pidx, bits))),
@@ -674,30 +644,6 @@ object ExprKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       graft.text.Html.extractLinks(s)
         .map(UTF8String.fromString(_).asInstanceOf[AnyRef]))
-
-  /** Multi-phrase match-score kernel (see RefMatchScores): null entries
-    * where the reference returns kNoMatch. */
-  def refMatchScores(name: UTF8String,
-      phrases: org.apache.spark.sql.catalyst.util.ArrayData):
-      org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = phrases.numElements()
-    val ps = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      ps(i) = if (phrases.isNullAt(i)) null else phrases.getUTF8String(i).toString
-      i += 1
-    }
-    val scores = graft.text.MatchScore.matchScoresPre(name.toString, ps)
-    val out = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      out(i) =
-        if (scores(i) == graft.text.MatchScore.NoMatch) null
-        else java.lang.Float.valueOf(scores(i))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
 
   /** Fused best-phrase kernel (see RefBestPhrase). */
   def refBestPhrase(name: UTF8String,

@@ -60,10 +60,6 @@ package object functions {
   def ref_match_score_pre(normName: Column, normPhrase: Column): Column =
     col(RefMatchScorePre(ex(normName), ex(normPhrase)))
 
-  /** one name vs all phrases in one call — array<float>, NULL = kNoMatch. */
-  def ref_match_scores(normName: Column, normPhrases: Column): Column =
-    col(RefMatchScores(ex(normName), ex(normPhrases)))
-
   /** fused score-matrix argmin: struct(score, pidx, bits) of the best
     * phrase for one name, NULL when all phrases are kNoMatch. */
   def ref_best_phrase(normName: Column, normPhrases: Column, bits: Column): Column =
@@ -140,7 +136,6 @@ package object functions {
     reg.createOrReplaceTempFunction("jaro_winkler", es => JaroWinkler(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("ref_match_score", es => RefMatchScore(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("ref_match_score_pre", es => RefMatchScorePre(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("ref_match_scores", es => RefMatchScores(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("double_metaphone", es => DoubleMetaphoneKey(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("match_key", es => MatchKey(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es(0), es(1)), "scala_udf")

@@ -1,6 +1,8 @@
 package graft.er
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{functions => gf}
@@ -262,5 +264,72 @@ class SuggestSpec extends AnyFunSuite {
     assert(recached == 0, s"$recached requests asked to cache cached data")
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after == persisted, s"${after - persisted} frames persisted by 4 requests")
+  }
+
+  /** The analyzed plan with the caller's query rows masked: the topmost
+    * projection that names the (query_id, text) columns keeps its
+    * exprIds and loses what it projects. Every other node, exprIds
+    * included, is compared as is. */
+  private def maskedPlan(df: DataFrame): LogicalPlan =
+    df.queryExecution.analyzed.transformDown {
+      case p: Project if p.output.map(_.name) == Seq("query_id", "text") &&
+          p.projectList.forall(_.isInstanceOf[Alias]) =>
+        Project(p.projectList.map(a => Alias(Literal(0), a.name)(exprId = a.exprId)),
+          OneRowRelation())
+    }
+
+  test("requests over one entity frame share one prepared plan: equal " +
+      "analyzed plans, exprIds included, once the query rows are masked") {
+    val ents = SuggestFixture.entities(spark)
+    val Seq(a, b) = SuggestFixture.texts.take(2).zipWithIndex.map { case (t, i) =>
+      Suggest.suggest(Seq((i.toLong, t)).toDF("query_id", "text"), ents)
+    }
+    assert(a.queryExecution.analyzed.output == b.queryExecution.analyzed.output,
+      "the two requests' output columns carry different exprIds")
+    assert(maskedPlan(a) == maskedPlan(b), "the second request planned afresh")
+    assert(a.queryExecution.analyzed != b.queryExecution.analyzed,
+      "masking hid the query rows' difference")
+    assert(a.collect().nonEmpty && b.collect().nonEmpty)
+    // a drain of ops.Caches releases the postings; the next request
+    // persists them again and still binds into the same plan
+    graft.ops.Caches.releaseAll()
+    val drained = spark.sparkContext.getPersistentRDDs.size
+    val c = Suggest.suggest(Seq((0L, SuggestFixture.texts.head)).toDF("query_id", "text"), ents)
+    assert(maskedPlan(c) == maskedPlan(a))
+    assert(c.collect().toSeq == a.collect().toSeq)
+    assert(spark.sparkContext.getPersistentRDDs.size == drained + 1)
+  }
+
+  test("a parquet-backed query frame gives the golden rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-suggest").toString
+    SuggestFixture.requests.toDF("query_id", "text")
+      .union(Seq((-1L, "zz unknown")).toDF("query_id", "text"))
+      .write.parquet(s"$dir/q.parquet")
+    val queries = spark.read.parquet(s"$dir/q.parquet").filter(col("query_id") > 0)
+    val got = SuggestFixture.render(Suggest.suggest(queries, SuggestFixture.entities(spark),
+      userLangs = SuggestFixture.UserLangs))
+    assert(got == SuggestFixture.golden)
+  }
+
+  // Stops the shared session, so it runs last in this spec.
+  test("a prepared plan does not outlive its session; a new session " +
+      "prepares afresh and gets the golden rows") {
+    val old = SparkTestSession.spark
+    val oldEnts = SuggestFixture.entities(old)
+    Suggest.suggest(Seq((1L, "ber")).toDF("query_id", "text"), oldEnts).collect()
+    assert(Suggest.plans.synchronized(Suggest.plans.containsKey(oldEnts)))
+    old.stop()
+    val fresh = SparkTestSession.spark
+    assert(fresh ne old)
+    val reqs = SuggestFixture.requests.filter(_._1 % 22 == 0)
+    val got = SuggestFixture.render(Suggest.suggest(
+      fresh.createDataFrame(reqs).toDF("query_id", "text"),
+      SuggestFixture.entities(fresh), userLangs = SuggestFixture.UserLangs))
+    val ids = reqs.map(_._1.toString).toSet
+    val golden = SuggestFixture.golden
+    assert(got == golden.head +: golden.tail.filter(l => ids(l.takeWhile(_ != '\t'))))
+    assert(Suggest.plans.synchronized(!Suggest.plans.keySet.toArray.exists(
+      _.asInstanceOf[DataFrame].sparkSession.sparkContext.isStopped)),
+      "the stopped session is still pinned")
   }
 }
