@@ -24,8 +24,9 @@ trait StringArgs extends Expression {
   * Each expression is a thin, null-safe, single-row wrapper whose codegen
   * emits one static call into the (JIT-friendly) graft.text objects —
   * so they stay inside WholeStageCodegen spans instead of falling back to
-  * interpreted UDF dispatch. See SURVEY.md §4 item 1 for why these six
-  * are the only custom-kernel functions the engine needs.
+  * interpreted UDF dispatch. Each has a `graft.functions` facade function
+  * of the same name; `graft.GraftExtensions` registers the column-only
+  * ones for SQL.
   */
 
 /** utf8proc-equivalent normalize + erase_fillers
@@ -43,22 +44,6 @@ case class NormalizeText(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): NormalizeText =
     copy(child = newChild)
   override def prettyName: String = "normalize_text"
-}
-
-/** Raw utf8proc-equivalent normalize (no filler erasure). */
-case class NormalizeRaw(child: Expression)
-    extends UnaryExpression with StringArgs {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      graft.text.Normalize.normalize(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.text.Normalize.normalize($c.toString()))")
-  override protected def withNewChildInternal(newChild: Expression): NormalizeRaw =
-    copy(child = newChild)
-  override def prettyName: String = "normalize_raw"
 }
 
 /** Distinct space-free byte trigrams of a normalized string, packed into
@@ -79,44 +64,11 @@ case class TrigramKeys(child: Expression)
   override def prettyName: String = "trigram_keys"
 }
 
-/** Distinct space-skipping byte bigrams packed into u16 ints (the
-  * reference's inverted-index keys, typeahead.cc:317-337 with the
-  * posting-list dedup of :331-336). String → Array[Int]. */
-case class BigramKeys(child: Expression)
-    extends UnaryExpression with StringArgs {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any = {
-    val all = graft.text.Ngrams.bigrams(input.asInstanceOf[UTF8String].toString)
-    new GenericArrayData(all.distinct.sorted)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.ExprKernels.bigramKeysDistinct($c.toString()))")
-  override protected def withNewChildInternal(newChild: Expression): BigramKeys =
-    copy(child = newChild)
-  override def prettyName: String = "bigram_keys"
-}
-
-/** SIFT4 edit distance, maxOffset=3, banded at min(len)/2+2 — the
-  * reference's actual pair scorer (include/adr/sift4.h:17-119, call site
-  * score.h:75-79). (String, String) → Int. */
-case class Sift4Dist(left: Expression, right: Expression)
-    extends BinaryExpression with StringArgs {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(l: Any, r: Any): Any =
-    ExprKernels.sift4(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) => s"graft.functions.ExprKernels.sift4($l, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Sift4Dist =
-    copy(left = l, right = r)
-  override def prettyName: String = "sift4"
-}
-
-/** Codepoint-level SIFT4 (maxOffset=3, banded at min(len)/2+2): one user
-  * typo = one edit on any script — the ER accept-gate distance. The byte
-  * variant above keeps reference parity (sift4.h works on bytes).
-  * (String, String) → Int. */
+/** Codepoint-level SIFT4 (maxOffset=3, banded at min(len)/2+2 with
+  * lengths in codepoints): one user typo = one edit on any script — the
+  * ER accept-gate distance. The reference's scorer (include/adr/sift4.h:
+  * 17-119, call site score.h:75-79) works on bytes; `graft.text.Sift4`
+  * keeps that variant for `MatchScore`. (String, String) → Int. */
 case class Sift4CpDist(left: Expression, right: Expression)
     extends BinaryExpression with StringArgs {
   override def dataType: DataType = IntegerType
@@ -615,25 +567,15 @@ object ExprKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def sift4(l: UTF8String, r: UTF8String): Int = {
-    val lb = l.getBytes
-    val rb = r.getBytes
-    val maxDist = math.min(lb.length, rb.length) / 2 + 2
-    graft.text.Sift4.distBytes(lb, rb, 3, maxDist)
-  }
-
+  /** The band counts codepoints, as the distance does (`String.length`
+    * would count an astral-plane codepoint twice). */
   def sift4Cp(l: UTF8String, r: UTF8String): Int = {
-    val ls = l.toString
-    val rs = r.toString
-    val maxDist = math.min(ls.length, rs.length) / 2 + 2
-    graft.text.Sift4.distCodepoints(ls, rs, 3, maxDist)
+    val maxDist = math.min(l.numChars, r.numChars) / 2 + 2
+    graft.text.Sift4.distCodepoints(l.toString, r.toString, 3, maxDist)
   }
 
   def jaroWinkler(l: UTF8String, r: UTF8String): Double =
     graft.text.EditDistances.jaroBytesWinkler(l.getBytes, r.getBytes)
-
-  def bigramKeysDistinct(s: String): Array[Int] =
-    graft.text.Ngrams.bigrams(s).distinct.sorted
 
   /** html → ArrayData of href UTF8Strings (HtmlLinks codegen target). */
   def htmlLinksBytes(b: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData =

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.Bridge
 
 /** Column-API facade over the custom Catalyst expressions, mirroring
-  * `org.apache.spark.sql.functions`. Also registers SQL names so the
-  * same kernels are reachable from `spark.sql(...)`.
+  * `org.apache.spark.sql.functions`. `graft.GraftExtensions` registers
+  * the column-only kernels here under the same names for `spark.sql(...)`.
   */
 package object functions {
   private def col(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
@@ -14,9 +14,6 @@ package object functions {
 
   /** normalize (NFD+stripmark+casefold) + erase_fillers. */
   def normalize_text(c: Column): Column = col(NormalizeText(ex(c)))
-
-  /** normalize only (reference `normalize`, normalize.h:48-71). */
-  def normalize_raw(c: Column): Column = col(NormalizeRaw(ex(c)))
 
   /** distinct space-free byte trigrams packed to 24-bit ints. */
   def trigram_keys(c: Column): Column = col(TrigramKeys(ex(c)))
@@ -35,14 +32,8 @@ package object functions {
     * array<struct<fp, pos>> of selected window fingerprints (q59 core). */
   def winnow_fps(c: Column, w: Int, k: Int): Column = col(WinnowFps(ex(c), w, k))
 
-  /** distinct space-skipping byte bigrams packed to u16 ints. */
-  def bigram_keys(c: Column): Column = col(BigramKeys(ex(c)))
-
-  /** SIFT4 distance, maxOffset=3, band min(len)/2+2 (score.h:75-79). */
-  def sift4(l: Column, r: Column): Column = col(Sift4Dist(ex(l), ex(r)))
-
-  /** codepoint-level SIFT4 (ER accept gate — one typo = one edit on any
-    * script; the byte variant keeps reference parity). */
+  /** codepoint-level SIFT4, maxOffset=3, band min(len)/2+2 in codepoints
+    * (score.h:75-79; ER accept gate — one typo = one edit on any script). */
   def sift4_cp(l: Column, r: Column): Column = col(Sift4CpDist(ex(l), ex(r)))
 
   /** banded Levenshtein, 255 sentinel on overflow (score.h:15-57). */
@@ -121,34 +112,4 @@ package object functions {
     * shared key is `key` — see [[BlockPairs]]. */
   def block_pairs(key: Column, members: Column): Column =
     col(BlockPairs(ex(key), ex(members)))
-
-  /** Register all kernels under SQL names (idempotent, session-scoped). */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("normalize_text", es => NormalizeText(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("normalize_raw", es => NormalizeRaw(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("trigram_keys", es => TrigramKeys(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("trigram_strings", es => TrigramStrings(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_keys", es => BigramKeys(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("sift4", es => Sift4Dist(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sift4_cp", es => Sift4CpDist(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("bounded_levenshtein", es => BoundedLevenshtein(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler", es => JaroWinkler(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("ref_match_score", es => RefMatchScore(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("ref_match_score_pre", es => RefMatchScorePre(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("double_metaphone", es => DoubleMetaphoneKey(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("match_key", es => MatchKey(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("point_in_ring", es => PointInRing(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_band_vals", es => LshBandVals(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("profile_hits", es => ProfileHits(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("html_text", es => HtmlText(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("html_links", es => HtmlLinks(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_md5", es => MinhashMd5(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_xx", es => MinhashXx(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes", es => ShingleHashes(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("format_address", es => FormatAddress(es), "scala_udf")
-    reg.createOrReplaceTempFunction("block_pairs", es => BlockPairs(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("area_fold", es => AreaFold(es(0), es(1), es(2), es(3)), "scala_udf")
-  }
 }

@@ -12,15 +12,9 @@ import java.nio.charset.StandardCharsets
 object MatchScore {
   final val NoMatch: Float = Float.MaxValue
 
-  /** score.h:59-135. `datasetToken` and `p` must already be normalized.
-    * Asymmetric: the dataset token is prefix-cut to the query length. */
-  def tokenMatchScore(datasetToken: String, p: String): Float = {
-    if (datasetToken == p) return -2.0f - p.getBytes(StandardCharsets.UTF_8).length * 0.75f
-    val d = datasetToken.getBytes(StandardCharsets.UTF_8)
-    val q = p.getBytes(StandardCharsets.UTF_8)
-    tokenMatchScoreBytes(d, q)
-  }
-
+  /** score.h:59-135 over the UTF-8 bytes of an already-normalized dataset
+    * token `d` and query token `q`. Asymmetric: the dataset token is
+    * prefix-cut to the query length. */
   def tokenMatchScoreBytes(d: Array[Byte], q: Array[Byte]): Float = {
     if (java.util.Arrays.equals(d, q)) return -2.0f - q.length * 0.75f
     val cutLen = math.min(d.length, q.length)

@@ -50,21 +50,6 @@ object Ngrams {
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
-  /** ngram.h:46-54 — all byte trigrams (no space skipping in the
-    * reference; we keep its exact semantics and offer a filtered variant
-    * for blocking). */
-  def trigrams(normalized: String): Array[Int] = {
-    val b = normalized.getBytes(StandardCharsets.UTF_8)
-    if (b.length < 3) return Array.emptyIntArray
-    val out = new Array[Int](b.length - 2)
-    var i = 0
-    while (i < b.length - 2) {
-      out(i) = compressTrigram(b(i), b(i + 1), b(i + 2))
-      i += 1
-    }
-    out
-  }
-
   /** Trigram *strings* (may split UTF-8 sequences mid-codepoint exactly like
     * the reference's substr — used only for golden tests on ASCII). */
   def trigramStrings(normalized: String): Vector[String] = {
@@ -72,15 +57,6 @@ object Ngrams {
     if (b.length < 3) return Vector.empty
     (0 until b.length - 2).map { i =>
       new String(b, i, 3, StandardCharsets.UTF_8)
-    }.toVector
-  }
-
-  def bigramStrings(normalized: String): Vector[String] = {
-    val b = normalized.getBytes(StandardCharsets.UTF_8)
-    if (b.length < 2) return Vector.empty
-    (0 until b.length - 1).collect {
-      case i if b(i) != Space && b(i + 1) != Space =>
-        new String(b, i, 2, StandardCharsets.UTF_8)
     }.toVector
   }
 
@@ -116,19 +92,10 @@ object Ngrams {
     capped
   }
 
-  /** Count of bigrams used as the norm in the cosine filter:
-    * n_bigrams = min(255, utf8_byte_len - 1) (typeahead.cc:324-327). */
-  def nBigrams(normalized: String): Int = {
-    val len = normalized.getBytes(StandardCharsets.UTF_8).length
-    math.min(255, math.max(0, len - 1))
-  }
-
   /** Reference candidate filter (typeahead.cc:409-423):
     * match_count >= 2 + nq/(4 + nq/10) and cos² = cnt²/(n_b·n_q) ≥ 0.17. */
   @inline def minMatchCount(nQueryGrams: Int): Int =
     2 + nQueryGrams / (4 + nQueryGrams / 10)
-
-  final val CosSimCutoff = 0.17f
 
   @inline def cosSim(matchCount: Long, nBigramsA: Int, nBigramsB: Int): Float =
     (matchCount * matchCount).toFloat / (nBigramsA.toFloat * nBigramsB.toFloat)

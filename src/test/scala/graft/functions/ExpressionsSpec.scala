@@ -40,9 +40,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val got = df.select(
       $"s",
       gf.normalize_text($"s").as("canon"),
-      gf.normalize_raw($"s").as("norm"),
       gf.trigram_keys(gf.normalize_text($"s")).as("tris"),
-      gf.bigram_keys(gf.normalize_raw($"s")).as("bis"),
       gf.double_metaphone($"s").as("dm")
     ).collect()
     got.foreach { row =>
@@ -51,33 +49,51 @@ class ExpressionsSpec extends AnyFunSuite {
         assert(row.isNullAt(1) && row.isNullAt(2))
       } else {
         assert(row.getString(1) == graft.text.Normalize.canonical(s))
-        assert(row.getString(2) == graft.text.Normalize.normalize(s))
-        assert(row.getSeq[Int](3) ==
+        assert(row.getSeq[Int](2) ==
           graft.text.Ngrams.trigramBlockingKeys(graft.text.Normalize.canonical(s)).toSeq)
-        assert(row.getSeq[Int](4) ==
-          graft.text.Ngrams.bigrams(graft.text.Normalize.normalize(s)).distinct.sorted.toSeq)
       }
     }
   }
 
+  /** `s` with each lowercase ASCII letter moved onto the astral plane
+    * (U+1D41A MATHEMATICAL BOLD SMALL A …): the same codepoints, but two
+    * UTF-16 units each. */
+  private def astral(s: String): String = s.flatMap { c =>
+    if (c >= 'a' && c <= 'z') new String(Character.toChars(0x1D41A + (c - 'a')))
+    else c.toString
+  }
+
+  private val scorerPairs = Seq(
+    ("darmstadt", "damrstadt"), ("landwehrstrasse", "landwerhstrase"),
+    ("abc", "xyz"), ("", ""), ("a", ""), ("hauptbahnhof", "hbf"),
+    ("abcdefghij", "klmnopqrst"))
+
   test("binary scorers match pure functions") {
     import spark.implicits._
-    val pairs = Seq(
-      ("darmstadt", "damrstadt"), ("landwehrstrasse", "landwerhstrase"),
-      ("abc", "xyz"), ("", ""), ("a", ""), ("индже", "инже"),
-      ("hauptbahnhof", "hbf"))
-    val df = pairs.toDF("a", "b")
+    val df = (scorerPairs :+ ("индже", "инже")).toDF("a", "b")
     val got = df.select($"a", $"b",
-      gf.sift4($"a", $"b").as("s4"),
+      gf.sift4_cp($"a", $"b").as("s4"),
       gf.bounded_levenshtein($"a", $"b").as("bl"),
       gf.jaro_winkler($"a", $"b").as("jw")).collect()
     got.foreach { r =>
       val (a, b) = (r.getString(0), r.getString(1))
-      val maxDist = math.min(a.getBytes("UTF-8").length, b.getBytes("UTF-8").length) / 2 + 2
-      assert(r.getInt(2) == graft.text.Sift4.dist(a, b, 3, maxDist))
+      val cps = (s: String) => s.codePointCount(0, s.length)
+      val maxDist = math.min(cps(a), cps(b)) / 2 + 2
+      assert(r.getInt(2) == graft.text.Sift4.distCodepoints(a, b, 3, maxDist), s"$a / $b")
       assert(r.getInt(3) == graft.text.EditDistances.boundedLevenshtein(a, b))
       assert(r.getDouble(4) == graft.text.EditDistances.jaroWinkler(a, b))
     }
+  }
+
+  test("sift4_cp counts its band in codepoints: astral-plane letters score as ASCII ones") {
+    import spark.implicits._
+    val pairs = scorerPairs.map { case (a, b) => (a, b, astral(a), astral(b)) }
+    val got = pairs.toDF("a", "b", "xa", "xb")
+      .select(gf.sift4_cp($"a", $"b"), gf.sift4_cp($"xa", $"xb")).collect()
+    got.zip(pairs).foreach { case (r, (a, b, _, _)) =>
+      assert(r.getInt(0) == r.getInt(1), s"$a / $b")
+    }
+    assert(got.last.getInt(1) == 8)
   }
 
   test("ref_match_score: NULL encodes kNoMatch") {
@@ -90,14 +106,6 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(!rows(0).isNullAt(0))
     assert(!rows(1).isNullAt(0))
     assert(rows(2).isNullAt(0))
-  }
-
-  test("SQL registration works") {
-    gf.registerAll(spark)
-    val r = spark.sql(
-      "SELECT normalize_text('Landwehrstraße') AS n, sift4('abc','acb') AS d").collect()(0)
-    assert(r.getString(0) == "landwehrstrasse")
-    assert(r.getInt(1) == 1)
   }
 
   test("property: expression == pure function on random unicode strings") {
@@ -199,15 +207,27 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  test("GraftExtensions injects SQL functions") {
-    // extensions resolve from the SparkContext static conf at session
-    // build, which a shared-context test can't exercise; apply the
-    // injection onto the live registry instead (same code path
-    // spark-submit --conf spark.sql.extensions=graft.GraftExtensions hits)
+  /** Extensions resolve from the SparkContext static conf at session
+    * build, which a shared-context test can't exercise; apply the
+    * injection onto the live registry instead (same code path
+    * spark-submit --conf spark.sql.extensions=graft.GraftExtensions hits). */
+  private def injectGraftExtensions(): Unit = {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.GraftExtensions()(ext)
     org.apache.spark.sql.graft.Bridge.applyFunctionExtensions(
       ext, spark.sessionState.functionRegistry)
+  }
+
+  test("SQL registration works") {
+    injectGraftExtensions()
+    val r = spark.sql(
+      "SELECT normalize_text('Landwehrstraße') AS n, sift4_cp('abc','acb') AS d").collect()(0)
+    assert(r.getString(0) == "landwehrstrasse")
+    assert(r.getInt(1) == 1)
+  }
+
+  test("GraftExtensions injects SQL functions") {
+    injectGraftExtensions()
     val r = spark.sql(
       "SELECT jaro_winkler('darmstadt','damrstadt') AS jw, " +
         "trigram_strings('linden bach') AS t, " +
@@ -215,6 +235,24 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(r.getDouble(0) > 0.9)
     assert(r.getSeq[String](1).head == "lin")
     assert(r.getString(2) == "17 Rue X, 31000 Toulouse, France")
+  }
+
+  test("the SQL table registers every column-only facade kernel under its prettyName") {
+    import org.apache.spark.sql.Column
+    // public methods of the facade whose arguments are all columns
+    val facade = graft.functions.`package`.getClass.getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers) &&
+        m.getReturnType == classOf[Column] && m.getParameterCount > 0 &&
+        m.getParameterTypes.forall(_ == classOf[Column]))
+      .map(m => m.getName -> m.getParameterCount).toMap
+    val table = graft.GraftExtensions.sqlFunctions
+    assert(table.map(_._1).distinct.size == table.size, "duplicate SQL name")
+    assert(table.map(_._1).toSet == facade.keySet)
+    table.foreach { case (name, builder) =>
+      val args = Seq.fill(facade(name))(
+        org.apache.spark.sql.catalyst.expressions.Literal(null))
+      assert(builder(args).prettyName == name)
+    }
   }
 
   test("BoundedLevenshteinRewrite: unbounded lev-vs-literal becomes banded form") {
@@ -245,7 +283,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val df = spark.range(100)
       .select(concat(lit("Straße "), $"id").as("a"), concat($"id", lit(" weg")).as("b"))
       .select(gf.jaro_winkler(gf.normalize_text($"a"), gf.normalize_text($"b")).as("jw"),
-        gf.sift4($"a", $"b").as("s4"), gf.trigram_keys($"a").as("t"))
+        gf.sift4_cp($"a", $"b").as("s4"), gf.trigram_keys($"a").as("t"))
     val hasCodegenStage = df.queryExecution.executedPlan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
     assert(hasCodegenStage, df.queryExecution.executedPlan.toString)
