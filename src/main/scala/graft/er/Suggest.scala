@@ -23,12 +23,12 @@ import graft.{functions => gf}
   *     (typeahead.cc:372-439, kMaxMatches typeahead.cc:428)
   *  5. string×phrase score matrix with the reference scorer
   *     (get_suggestions.cc:494-508; scorer score.h:162-269 — the
-  *     byte-exact `RefMatchScore` codegen expression, NULL = kNoMatch)
+  *     byte-exact `RefMatchScore` kernel expression, NULL = kNoMatch)
   *  6. street/place split from one candidate set, bounded top-10000 per
   *     branch (get_suggestions.cc:510-605, kMaxScoredMatches :27)
   *  7. streets: house-number matching under the numeric-phrase gate
   *     (J3/F9, get_suggestions.cc:134-169) + greedy area assembly (A6,
-  *     :181-255 — the `Extras.greedyAreaAssembly` fold) + bonuses (X12)
+  *     :181-255 — the `area_fold` kernel) + bonuses (X12)
   *  8. places: category prior (X8), population score (X9), language
   *     preference (X11) + the same area assembly (:331-492)
   * 10. duplicate marking over (query, location) (K5, :703-731) and
@@ -347,7 +347,7 @@ object Suggest {
       col("b.bits").bitwiseOR(col("h.bits"))).otherwise(col("b.bits"))
     val assembled = withHn
       .withColumn("pre_mask", maskAfterHn)
-      .withColumn("ar", graft.ops.Extras.greedyAreaAssemblyML(
+      .withColumn("ar", gf.area_fold(
         col("phrases"), col("areas"),
         array(userLangs.map(lit): _*), col("pre_mask")))
     val finalMask = col("ar")("tok")

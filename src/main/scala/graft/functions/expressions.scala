@@ -1,46 +1,110 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, QuaternaryLike, TernaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Manual input-type check (AbstractDataType is private[sql] in Spark 4,
-  * so ExpectsInputTypes is unavailable to external packages). */
-trait StringArgs extends Expression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.forall(c => c.dataType.isInstanceOf[StringType] || c.dataType == NullType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string arguments, got " +
-          children.map(_.dataType.simpleString).mkString(", "))
+/** Catalyst expressions over the pure graft.text kernels.
+  *
+  * Every kernel expression is a `RuntimeReplaceable` ([[KernelCall]]):
+  * the optimizer replaces it with Spark's `StaticInvoke` of one
+  * [[ExprKernels]] method, so interpreted evaluation (HOF lambdas,
+  * `NO_CODEGEN`) and WholeStageCodegen run the same call, and no Java
+  * source is written by hand. `ExprKernels` is the one boundary between
+  * Catalyst values (`UTF8String`, `ArrayData`, `InternalRow`, a boxed
+  * value or null for a nullable result) and graft.text. The expression
+  * keeps its name, its input check and its output type. Each has a
+  * `graft.functions` facade function of the same name;
+  * `graft.GraftExtensions` registers the column-only ones for SQL.
+  * [[BlockPairs]], a generator, is the one expression with its own eval.
+  */
+trait KernelCall extends RuntimeReplaceable {
+  override def foldable: Boolean = children.forall(_.foldable)
+
+  /** `ExprKernels.<method>(args)` returning `dataType`; `returnNullable`:
+    * the method may return null. With `propagateNull` a NULL argument
+    * gives NULL without a call, and a NULL-typed argument, which has no
+    * JVM class to find the method by, makes the call a NULL literal. */
+  protected def call(method: String, args: Seq[Expression] = children,
+      returnNullable: Boolean = false, propagateNull: Boolean = true): Expression =
+    if (propagateNull && args.exists(_.dataType == NullType)) Literal(null, dataType)
+    else StaticInvoke(ExprKernels.getClass, dataType, method, args,
+      propagateNull = propagateNull, returnNullable = returnNullable)
 }
 
-/** Catalyst expressions wrapping the pure graft.text kernel.
-  *
-  * Each expression is a thin, null-safe, single-row wrapper whose codegen
-  * emits one static call into the (JIT-friendly) graft.text objects —
-  * so they stay inside WholeStageCodegen spans instead of falling back to
-  * interpreted UDF dispatch. Each has a `graft.functions` facade function
-  * of the same name; `graft.GraftExtensions` registers the column-only
-  * ones for SQL.
-  */
+/** Manual input-type check (AbstractDataType is private[sql] in Spark 4,
+  * so ExpectsInputTypes is unavailable to external packages). */
+trait ArgCheck extends Expression {
+  protected def argsOk: Boolean
+  protected def expected: String
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (argsOk) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires $expected, got " +
+      children.map(_.dataType.simpleString).mkString(", "))
+}
+
+trait StringArgs extends ArgCheck {
+  protected def argsOk: Boolean =
+    children.forall(c => c.dataType.isInstanceOf[StringType] || c.dataType == NullType)
+  protected def expected = "string arguments"
+}
+
+trait StringArrayArg extends ArgCheck {
+  protected def argsOk: Boolean = children.forall(_.dataType match {
+    case ArrayType(_: StringType, _) | NullType => true
+    case _ => false
+  })
+  protected def expected = "array<string>"
+}
+
+/** binary or string HTML; `ExprKernels` overloads each html method on
+  * both, so the call resolves by the child's type. */
+trait HtmlArg extends ArgCheck {
+  protected def argsOk: Boolean = children.forall(_.dataType match {
+    case BinaryType | _: StringType | NullType => true
+    case _ => false
+  })
+  protected def expected = "binary or string input"
+}
+
+/** (array<struct<double,double>>, double, double): a point and a ring or
+  * polyline. */
+trait RingArgs extends ArgCheck {
+  protected def argsOk: Boolean = children.map(_.dataType) match {
+    case Seq(ArrayType(s: StructType, _), DoubleType, DoubleType) =>
+      s.fields.length == 2 && s.fields.forall(_.dataType == DoubleType)
+    case _ => false
+  }
+  protected def expected = "(array<struct<double,double>>, double, double)"
+}
+
+/** array<float> or array<double> vectors. A float array is read as float
+  * and promoted exactly like a CAST, so primitive parquet arrays need no
+  * cast projection; `isFloats` is the kernel's literal flag. */
+trait VectorArgs extends ArgCheck {
+  protected def argsOk: Boolean = children.forall(_.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  })
+  protected def expected = "array<float> or array<double> arguments"
+  protected def isFloats(e: Expression): Literal = Literal(e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  })
+}
 
 /** utf8proc-equivalent normalize + erase_fillers
   * (reference: include/adr/normalize.h:28-71). String → String. */
 case class NormalizeText(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      graft.text.Normalize.canonical(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.text.Normalize.canonical($c.toString()))")
+  override lazy val replacement: Expression = call("normalizeText")
   override protected def withNewChildInternal(newChild: Expression): NormalizeText =
     copy(child = newChild)
   override def prettyName: String = "normalize_text"
@@ -50,15 +114,9 @@ case class NormalizeText(child: Expression)
   * 24-bit ints (reference: include/adr/ngram.h:46-54) — the blocking keys.
   * String → Array[Int]. */
 case class TrigramKeys(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      graft.text.Ngrams.trigramBlockingKeys(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.text.Ngrams.trigramBlockingKeys($c.toString()))")
+  override lazy val replacement: Expression = call("trigramKeys")
   override protected def withNewChildInternal(newChild: Expression): TrigramKeys =
     copy(child = newChild)
   override def prettyName: String = "trigram_keys"
@@ -70,12 +128,9 @@ case class TrigramKeys(child: Expression)
   * 17-119, call site score.h:75-79) works on bytes; `graft.text.Sift4`
   * keeps that variant for `MatchScore`. (String, String) → Int. */
 case class Sift4CpDist(left: Expression, right: Expression)
-    extends BinaryExpression with StringArgs {
+    extends KernelCall with BinaryLike[Expression] with StringArgs {
   override def dataType: DataType = IntegerType
-  override def nullSafeEval(l: Any, r: Any): Any =
-    ExprKernels.sift4Cp(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) => s"graft.functions.ExprKernels.sift4Cp($l, $r)")
+  override lazy val replacement: Expression = call("sift4Cp")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Sift4CpDist =
     copy(left = l, right = r)
   override def prettyName: String = "sift4_cp"
@@ -84,14 +139,9 @@ case class Sift4CpDist(left: Expression, right: Expression)
 /** Banded Levenshtein with the 255 overflow sentinel
   * (include/adr/score.h:15-57). (String, String) → Int. */
 case class BoundedLevenshtein(left: Expression, right: Expression)
-    extends BinaryExpression with StringArgs {
+    extends KernelCall with BinaryLike[Expression] with StringArgs {
   override def dataType: DataType = IntegerType
-  override def nullSafeEval(l: Any, r: Any): Any =
-    graft.text.EditDistances.boundedLevenshteinBytes(
-      l.asInstanceOf[UTF8String].getBytes, r.asInstanceOf[UTF8String].getBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) =>
-      s"graft.text.EditDistances.boundedLevenshteinBytes($l.getBytes(), $r.getBytes())")
+  override lazy val replacement: Expression = call("boundedLevenshtein")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): BoundedLevenshtein =
     copy(left = l, right = r)
   override def prettyName: String = "bounded_levenshtein"
@@ -100,12 +150,9 @@ case class BoundedLevenshtein(left: Expression, right: Expression)
 /** Byte-based Jaro-Winkler similarity, DuckDB-compatible semantics
   * (prefix boost over 0.7). (String, String) → Double. */
 case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression with StringArgs {
+    extends KernelCall with BinaryLike[Expression] with StringArgs {
   override def dataType: DataType = DoubleType
-  override def nullSafeEval(l: Any, r: Any): Any =
-    ExprKernels.jaroWinkler(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) => s"graft.functions.ExprKernels.jaroWinkler($l, $r)")
+  override lazy val replacement: Expression = call("jaroWinkler")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JaroWinkler =
     copy(left = l, right = r)
   override def prettyName: String = "jaro_winkler"
@@ -115,26 +162,9 @@ case class JaroWinkler(left: Expression, right: Expression)
   * (include/adr/score.h:162-269). Returns NULL where the reference
   * returns kNoMatch. (rawName, normalizedPhrase) → Float. */
 case class RefMatchScore(left: Expression, right: Expression)
-    extends BinaryExpression with StringArgs {
+    extends KernelCall with BinaryLike[Expression] with StringArgs {
   override def dataType: DataType = FloatType
-  override def nullable: Boolean = true
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val s = graft.text.MatchScore.matchScore(
-      l.asInstanceOf[UTF8String].toString, r.asInstanceOf[UTF8String].toString)
-    if (s == graft.text.MatchScore.NoMatch) null else s
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val s = ctx.freshName("graftMs")
-      s"""
-         |float $s = graft.text.MatchScore.matchScore($l.toString(), $r.toString());
-         |if ($s == Float.MAX_VALUE) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = call("refMatchScore", returnNullable = true)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): RefMatchScore =
     copy(left = l, right = r)
   override def prettyName: String = "ref_match_score"
@@ -145,26 +175,9 @@ case class RefMatchScore(left: Expression, right: Expression)
   * on which normalize is the identity). (normName, normalizedPhrase) →
   * Float, NULL = kNoMatch. */
 case class RefMatchScorePre(left: Expression, right: Expression)
-    extends BinaryExpression with StringArgs {
+    extends KernelCall with BinaryLike[Expression] with StringArgs {
   override def dataType: DataType = FloatType
-  override def nullable: Boolean = true
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val s = graft.text.MatchScore.matchScorePre(
-      l.asInstanceOf[UTF8String].toString, r.asInstanceOf[UTF8String].toString)
-    if (s == graft.text.MatchScore.NoMatch) null else s
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val s = ctx.freshName("graftMsp")
-      s"""
-         |float $s = graft.text.MatchScore.matchScorePre($l.toString(), $r.toString());
-         |if ($s == Float.MAX_VALUE) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = call("refMatchScorePre", returnNullable = true)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): RefMatchScorePre =
     copy(left = l, right = r)
   override def prettyName: String = "ref_match_score_pre"
@@ -178,38 +191,17 @@ case class RefMatchScorePre(left: Expression, right: Expression)
   * interpreted HOF struct churn. children = (normName, array<string>
   * phrases, array<long> bits). */
 case class RefBestPhrase(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends KernelCall with TernaryLike[Expression] with ArgCheck {
   override def dataType: DataType = StructType(Seq(
     StructField("score", FloatType, nullable = false),
     StructField("pidx", IntegerType, nullable = false),
     StructField("bits", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (_: StringType, ArrayType(_: StringType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (string, array<string>, array<bigint>), got " +
-            Seq(first, second, third).map(_.dataType.simpleString).mkString(", "))
-    }
-  override def nullSafeEval(l: Any, p: Any, b: Any): Any =
-    ExprKernels.refBestPhrase(l.asInstanceOf[UTF8String],
-      p.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, p, b) => {
-      val r = ctx.freshName("graftBp")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $r =
-         |  graft.functions.ExprKernels.refBestPhrase($l, $p, $b);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
+  protected def argsOk: Boolean = children.map(_.dataType) match {
+    case Seq(_: StringType, ArrayType(_: StringType, _), ArrayType(LongType, _)) => true
+    case _ => false
+  }
+  protected def expected = "(string, array<string>, array<bigint>)"
+  override lazy val replacement: Expression = call("refBestPhrase", returnNullable = true)
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): RefBestPhrase =
     copy(first = f, second = s, third = t)
@@ -220,22 +212,14 @@ case class RefBestPhrase(first: Expression, second: Expression, third: Expressio
   * key family from BASELINE.json north_star. String → String (may be
   * empty for non-alphabetic input). */
 case class DoubleMetaphoneKey(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      ExprKernels.doubleMetaphone(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.ExprKernels.doubleMetaphone($c.toString()))")
+  override lazy val replacement: Expression = call("doubleMetaphone")
   override protected def withNewChildInternal(newChild: Expression): DoubleMetaphoneKey =
     copy(child = newChild)
   override def prettyName: String = "double_metaphone"
 }
 
-/** Static kernels referenced from generated code (one static call each —
-  * keeps codegen tiny and JIT-inlineable). */
 /** Exact point-in-polygon crossing number (reference J5 refinement,
   * /root/reference/src/area_database.cc:127-148 `tg_geom_within` after the
   * R-tree candidate pass — here the cell join supplies the candidates).
@@ -245,26 +229,9 @@ case class DoubleMetaphoneKey(child: Expression)
   * the HOF formulation is interpreted per row and ~9× slower on the
   * 67M-pair sf0.1 candidate stream. */
 case class PointInRing(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends KernelCall with TernaryLike[Expression] with RingArgs {
   override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    first.dataType match {
-      case ArrayType(s: StructType, _)
-          if s.fields.length == 2 && s.fields.forall(_.dataType == DoubleType) &&
-            second.dataType == DoubleType && third.dataType == DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<struct<double,double>>, double, double), got " +
-            Seq(first, second, third).map(_.dataType.simpleString).mkString(", "))
-    }
-  override def nullSafeEval(r: Any, x: Any, y: Any): Any =
-    ExprKernels.crossingNumber(
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, x, y) =>
-      s"graft.functions.ExprKernels.crossingNumber($r, $x, $y)")
+  override lazy val replacement: Expression = call("crossingNumber")
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): PointInRing =
     copy(first = f, second = s, third = t)
@@ -280,41 +247,44 @@ case class PointInRing(first: Expression, second: Expression, third: Expression)
   * pattern as [[PointInRing]] (HOF lambdas are interpreted per row — far
   * too slow on a cell-join candidate stream). */
 case class PolylineDist2(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends KernelCall with TernaryLike[Expression] with RingArgs {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true // NULL for < 2 points (no segment)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    first.dataType match {
-      case ArrayType(s: StructType, _)
-          if s.fields.length == 2 && s.fields.forall(_.dataType == DoubleType) &&
-            second.dataType == DoubleType && third.dataType == DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<struct<double,double>>, double, double), got " +
-            Seq(first, second, third).map(_.dataType.simpleString).mkString(", "))
-    }
-  override def nullSafeEval(l: Any, x: Any, y: Any): Any =
-    ExprKernels.polylineDist2(
-      l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, x, y) => {
-      val r = ctx.freshName("graftPld")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.ExprKernels.polylineDist2($l, $x, $y);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin
-    })
+  // NULL for < 2 points (no segment)
+  override lazy val replacement: Expression = call("polylineDist2", returnNullable = true)
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): PolylineDist2 =
     copy(first = f, second = s, third = t)
   override def prettyName: String = "polyline_dist2"
 }
 
+/** The static entries the kernel expressions call through `StaticInvoke`,
+  * one per kernel (the html kernels overload on binary and string input).
+  * Each takes and returns Catalyst values; the `UTF8String`/`String`
+  * conversions and the maps of a kernel's "undefined" result to NULL are
+  * written here once, for interpreted and generated code alike. */
 object ExprKernels {
+  def normalizeText(s: UTF8String): UTF8String =
+    UTF8String.fromString(graft.text.Normalize.canonical(s.toString))
+
+  def matchKey(s: UTF8String): UTF8String =
+    UTF8String.fromString(graft.text.MatchKeys.matchKey(s.toString))
+
+  def trigramKeys(s: UTF8String): ArrayData =
+    new GenericArrayData(graft.text.Ngrams.trigramBlockingKeys(s.toString))
+
+  def boundedLevenshtein(l: UTF8String, r: UTF8String): Int =
+    graft.text.EditDistances.boundedLevenshteinBytes(l.getBytes, r.getBytes)
+
+  /** kNoMatch → NULL */
+  private def scoreOrNull(s: Float): java.lang.Float =
+    if (s == graft.text.MatchScore.NoMatch) null else java.lang.Float.valueOf(s)
+
+  def refMatchScore(name: UTF8String, phrase: UTF8String): java.lang.Float =
+    scoreOrNull(graft.text.MatchScore.matchScore(name.toString, phrase.toString))
+
+  def refMatchScorePre(normName: UTF8String, phrase: UTF8String): java.lang.Float =
+    scoreOrNull(graft.text.MatchScore.matchScorePre(normName.toString, phrase.toString))
+
   /** Point-to-polyline kernel; per segment the clamped projection, then
     * strict-< min — every double op in the same association as the
     * unrolled oracle SQL, so the hash check is exact. Returns NULL for
@@ -322,8 +292,8 @@ object ExprKernels {
     * expression is public/SQL-reachable, and a sentinel
     * (MaxValue, 0, 0) row would flow downstream as garbage coordinates
     * unnoticed. */
-  def polylineDist2(line: org.apache.spark.sql.catalyst.util.ArrayData,
-      px: Double, py: Double): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def polylineDist2(line: ArrayData,
+      px: Double, py: Double): ArrayData = {
     val n = line.numElements()
     if (n < 2) return null
     var bestD2 = Double.MaxValue
@@ -347,13 +317,13 @@ object ExprKernels {
       if (d2 < bestD2) { bestD2 = d2; bestX = cx; bestY = cy }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       Array[Double](bestD2, bestX, bestY))
   }
 
   /** Crossing-number kernel; arithmetic order matches the unrolled oracle
     * SQL exactly (same double operations in the same association). */
-  def crossingNumber(ring: org.apache.spark.sql.catalyst.util.ArrayData,
+  def crossingNumber(ring: ArrayData,
       px: Double, py: Double): Int = {
     val n = ring.numElements()
     var cnt = 0
@@ -470,7 +440,7 @@ object ExprKernels {
     * min over shingles of Spark's xxhash64(shingle, h) — replicated
     * exactly as XXH64.hashInt(h, XXH64.hashUnsafeBytes(bytes, 42)), the
     * two-child seed chain the builtin evaluates. array<long>[8]. */
-  def minhashXx(norm: UTF8String): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+  def minhashXx(norm: UTF8String): UnsafeArrayData = {
     val shingles = shingleByteSeqs(norm.toString)
     if (shingles == null) return null
     val off = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
@@ -479,23 +449,23 @@ object ExprKernels {
     var si = 0
     while (si < shingles.length) {
       val sb = shingles(si)
-      val base = org.apache.spark.sql.catalyst.expressions.XXH64
+      val base = XXH64
         .hashUnsafeBytes(sb, off, sb.length, 42L)
       var h = 0
       while (h < 8) {
-        val v = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(h, base)
+        val v = XXH64.hashInt(h, base)
         if (v < best(h)) best(h) = v
         h += 1
       }
       si += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(best)
+    UnsafeArrayData.fromPrimitiveArray(best)
   }
 
   /** Fused q23 shingle-set hash: sorted distinct xxhash64(shingle) longs
     * (seed 42, single-child — identical values to the builtin), the
     * map-side replacement for explode→groupBy(collect_set). */
-  def shingleHashes(norm: UTF8String): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+  def shingleHashes(norm: UTF8String): UnsafeArrayData = {
     val shingles = shingleByteSeqs(norm.toString)
     if (shingles == null) return null
     val off = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
@@ -503,7 +473,7 @@ object ExprKernels {
     var i = 0
     while (i < shingles.length) {
       val sb = shingles(i)
-      hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64
+      hs(i) = XXH64
         .hashUnsafeBytes(sb, off, sb.length, 42L)
       i += 1
     }
@@ -514,7 +484,7 @@ object ExprKernels {
       if (j == 0 || hs(j) != hs(j - 1)) { hs(n) = hs(j); n += 1 }
       j += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    UnsafeArrayData
       .fromPrimitiveArray(java.util.Arrays.copyOf(hs, n))
   }
 
@@ -540,8 +510,8 @@ object ExprKernels {
     * Coordinates are integer-quantized (floor(x·10⁶) as long) before the
     * dot product, so the sum is exact and association-free — Spark and
     * DuckDB's unordered SUM can never disagree on a near-zero sign. */
-  def lshBandVals(v: org.apache.spark.sql.catalyst.util.ArrayData,
-      isFloat: Boolean): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+  def lshBandVals(v: ArrayData,
+      isFloat: Boolean): UnsafeArrayData = {
     val n = v.numElements()
     require(n >= 64, s"lsh_band_vals requires 64-dim embeddings, got $n")
     val q = new Array[Long](64)
@@ -564,7 +534,7 @@ object ExprKernels {
       if (dot > 0L) out(j >> 2) |= 1 << (j & 3)
       j += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** The band counts codepoints, as the distance does (`String.length`
@@ -577,21 +547,22 @@ object ExprKernels {
   def jaroWinkler(l: UTF8String, r: UTF8String): Double =
     graft.text.EditDistances.jaroBytesWinkler(l.getBytes, r.getBytes)
 
-  /** html → ArrayData of href UTF8Strings (HtmlLinks codegen target). */
-  def htmlLinksBytes(b: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.text.Html.extractLinksBytes(b)
-        .map(UTF8String.fromString(_).asInstanceOf[AnyRef]))
-  def htmlLinksStr(s: String): org.apache.spark.sql.catalyst.util.ArrayData =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.text.Html.extractLinks(s)
-        .map(UTF8String.fromString(_).asInstanceOf[AnyRef]))
+  def htmlText(html: Array[Byte]): UTF8String =
+    UTF8String.fromString(graft.text.Html.extractTextBytes(html))
+  def htmlText(html: UTF8String): UTF8String =
+    UTF8String.fromString(graft.text.Html.extractText(html.toString))
+
+  def htmlLinks(html: Array[Byte]): ArrayData = utf8Array(graft.text.Html.extractLinksBytes(html))
+  def htmlLinks(html: UTF8String): ArrayData = utf8Array(graft.text.Html.extractLinks(html.toString))
+
+  private def utf8Array(ss: Array[String]): ArrayData =
+    new GenericArrayData(ss.map(UTF8String.fromString(_): Any))
 
   /** Fused best-phrase kernel (see RefBestPhrase). */
   def refBestPhrase(name: UTF8String,
-      phrases: org.apache.spark.sql.catalyst.util.ArrayData,
-      bits: org.apache.spark.sql.catalyst.util.ArrayData):
-      org.apache.spark.sql.catalyst.InternalRow = {
+      phrases: ArrayData,
+      bits: ArrayData):
+      InternalRow = {
     val n = phrases.numElements()
     val ps = new Array[String](n)
     var i = 0
@@ -602,7 +573,7 @@ object ExprKernels {
     val scoreOut = new Array[Float](1)
     val idx = graft.text.MatchScore.bestPhrase(name.toString, ps, scoreOut)
     if (idx < 0) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    else new GenericInternalRow(
       Array[Any](scoreOut(0), idx, bits.getLong(idx)))
   }
 
@@ -612,23 +583,31 @@ object ExprKernels {
     m
   }
 
-  def doubleMetaphone(s: String): String = {
-    val code = metaphone.doubleMetaphone(s)
-    if (code == null) "" else code
+  /** "" for input without a code */
+  def doubleMetaphone(s: UTF8String): UTF8String = {
+    val code = metaphone.doubleMetaphone(s.toString)
+    if (code == null) UTF8String.EMPTY_UTF8 else UTF8String.fromString(code)
   }
 
-  def formatAddress(houseNumber: String, road: String, postcode: String,
-      city: String, country: String, countryCode: String): String =
-    graft.text.Formatter.format(graft.text.Formatter.Address(
-      houseNumber = houseNumber, road = road, postcode = postcode,
-      city = city, country = country, countryCode = countryCode))
+  /** NULL components format as empty ones. */
+  def formatAddress(houseNumber: UTF8String, road: UTF8String, postcode: UTF8String,
+      city: UTF8String, country: UTF8String, countryCode: UTF8String): UTF8String = {
+    def str(u: UTF8String) = if (u == null) "" else u.toString
+    UTF8String.fromString(graft.text.Formatter.format(graft.text.Formatter.Address(
+      houseNumber = str(houseNumber), road = str(road), postcode = str(postcode),
+      city = str(city), country = str(country), countryCode = str(countryCode))))
+  }
 
-  /** Returns NaN when undefined (length mismatch / zero norm).
+  /** NULL where the cosine is NaN: length mismatch, zero norm, NaN input.
     * aFloat/bFloat: element type of each side (float arrays read straight
     * from parquet stay primitive UnsafeArrayData — no cast projection, no
     * boxing; values are promoted to double exactly like a CAST). */
-  def cosine(a: org.apache.spark.sql.catalyst.util.ArrayData, aFloat: Boolean,
-      b: org.apache.spark.sql.catalyst.util.ArrayData, bFloat: Boolean): Double = {
+  def cosineSim(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): java.lang.Double = {
+    val c = cosine(a, aFloat, b, bFloat)
+    if (c.isNaN) null else java.lang.Double.valueOf(c)
+  }
+
+  private def cosine(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
     val n = a.numElements()
     if (n != b.numElements() || n == 0) return Double.NaN
     var dot = 0.0
@@ -655,7 +634,8 @@ object ExprKernels {
     * 1 cyrillic, 2 greek, 3 arabic, 4 hebrew, 5 devanagari, 6 thai,
     * 7 hangul (syllables + jamo + compat jamo), 8 hiragana, 9 katakana,
     * 10 han (unified + ext A). Surrogate-pair safe. */
-  def scriptCounts(s: String): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+  def scriptCounts(u: UTF8String): UnsafeArrayData = {
+    val s = u.toString
     val c = new Array[Int](11)
     var i = 0
     val n = s.length
@@ -679,7 +659,7 @@ object ExprKernels {
         else -1
       if (slot >= 0) c(slot) += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(c)
+    UnsafeArrayData.fromPrimitiveArray(c)
   }
 
   private val AreaNoMatch = 1e9d
@@ -739,12 +719,12 @@ object ExprKernels {
     * `is_num` in the suggest pipeline — ignored here, the rule is
     * recomputed from the string exactly like the HOF did). */
   def areaFold(
-      phrases: org.apache.spark.sql.catalyst.util.ArrayData, pFields: Int, pS: Int, pBits: Int,
-      areas: org.apache.spark.sql.catalyst.util.ArrayData, aFields: Int,
+      phrases: ArrayData, pFields: Int, pS: Int, pBits: Int,
+      areas: ArrayData, aFields: Int,
       aNames: Int, aLevel: Int, aPop: Int, levelIsLong: Boolean, popIsInt: Boolean,
       nFields: Int, nName: Int, nLang: Int,
-      langs: org.apache.spark.sql.catalyst.util.ArrayData,
-      initMask: Long): org.apache.spark.sql.catalyst.InternalRow = {
+      langs: ArrayData,
+      initMask: Long): InternalRow = {
     var tok = initMask
     var amask = 0L
     var dist = 0.0d
@@ -843,7 +823,7 @@ object ExprKernels {
       }
       pi += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new GenericInternalRow(
       Array[Any](tok, amask, dist, alang))
   }
 
@@ -851,9 +831,10 @@ object ExprKernels {
     * sibling of TrigramKeys; used where the output must be the gram text).
     * O(n) — the `transform(sequence, substr)` formulation is O(n²) on long
     * documents because UTF8String.substring re-scans from the start. */
-  def trigramStrings(s: String): Array[UTF8String] = {
+  def trigramStrings(u: UTF8String): ArrayData = {
+    val s = u.toString
     val n = s.length
-    if (n < 3) return Array.empty
+    if (n < 3) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
     var i = 0
     while (i <= n - 3) {
@@ -861,11 +842,11 @@ object ExprKernels {
         seen.add(s.substring(i, i + 3))
       i += 1
     }
-    val out = new Array[UTF8String](seen.size)
+    val out = new Array[Any](seen.size)
     val it = seen.iterator()
     var j = 0
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
-    out
+    new GenericArrayData(out)
   }
 
   /** Fused q59 winnowing selection — per document, entirely map-side:
@@ -882,7 +863,7 @@ object ExprKernels {
     * for a computation that never leaves the row. Returns null for docs
     * with fewer than W tokens (the declarative filter's row drop); null
     * elements are skipped, not counted. */
-  def winnowFps(toks: org.apache.spark.sql.catalyst.util.ArrayData,
+  def winnowFps(toks: ArrayData,
       w: Int, k: Int): GenericArrayData = {
     // the windows run over the non-null subsequence
     val total = toks.numElements()
@@ -938,7 +919,7 @@ object ExprKernels {
     i = 0
     while (it.hasNext) {
       val e = it.next()
-      out(i) = org.apache.spark.sql.catalyst.InternalRow(
+      out(i) = InternalRow(
         e.getKey, e.getValue.intValue())
       i += 1
     }
@@ -967,8 +948,8 @@ object ExprKernels {
     * instance): ONE hash probe per trigram against the static gram→mask
     * table, counts identical to the per-language filter sizes because the
     * input trigram set is distinct. Slot order = LangProfiles.all. */
-  def profileHits(tris: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+  def profileHits(tris: ArrayData)
+      : UnsafeArrayData = {
     val c = new Array[Int](graft.text.LangProfiles.all.size)
     val n = tris.numElements()
     var i = 0
@@ -983,22 +964,16 @@ object ExprKernels {
       }
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(c)
+    UnsafeArrayData.fromPrimitiveArray(c)
   }
 }
 
 /** Canonical match key: normalize + erase_fillers + synonym/postfix alt
   * expansion to the long form (graft.text.MatchKeys). String → String. */
 case class MatchKey(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      graft.text.MatchKeys.matchKey(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.text.MatchKeys.matchKey($c.toString()))")
+  override lazy val replacement: Expression = call("matchKey")
   override protected def withNewChildInternal(newChild: Expression): MatchKey =
     copy(child = newChild)
   override def prettyName: String = "match_key"
@@ -1009,41 +984,10 @@ case class MatchKey(child: Expression)
   * zip_with+aggregate costs ~10x more per pair). NULL if either side is
   * null or lengths differ. */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends KernelCall with BinaryLike[Expression] with VectorArgs {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = children.forall(_.dataType match {
-      case ArrayType(DoubleType, _) | ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim requires array<double> or array<float> arguments")
-  }
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val v = ExprKernels.cosine(a, isFloat(left), b, isFloat(right))
-    if (v.isNaN) null else v
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val c = ctx.freshName("graftCos")
-      s"""
-         |double $c = graft.functions.ExprKernels.cosine(
-         |  $l, ${isFloat(left)}, $r, ${isFloat(right)});
-         |if (Double.isNaN($c)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $c;
-         |}
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = call("cosineSim",
+    Seq(left, isFloats(left), right, isFloats(right)), returnNullable = true)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
   override def prettyName: String = "cosine_sim"
@@ -1053,16 +997,9 @@ case class CosineSim(left: Expression, right: Expression)
   * String → Array[String]. The blocking-key sibling returning the gram
   * *text* (TrigramKeys returns packed ints). */
 case class TrigramStrings(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      ExprKernels.trigramStrings(input.asInstanceOf[UTF8String].toString)
-        .asInstanceOf[Array[Any]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"(Object[]) graft.functions.ExprKernels.trigramStrings($c.toString()))")
+  override lazy val replacement: Expression = call("trigramStrings")
   override protected def withNewChildInternal(newChild: Expression): TrigramStrings =
     copy(child = newChild)
   override def prettyName: String = "trigram_strings"
@@ -1072,13 +1009,9 @@ case class TrigramStrings(child: Expression)
   * one-pass script gate for language-ID — returns array<int>[11],
   * primitive (UnsafeArrayData), fully codegen'd. */
 case class ScriptCounts(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.scriptCounts(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprKernels.scriptCounts($c.toString())")
+  override lazy val replacement: Expression = call("scriptCounts")
   override protected def withNewChildInternal(newChild: Expression): ScriptCounts =
     copy(child = newChild)
   override def prettyName: String = "script_counts"
@@ -1091,32 +1024,12 @@ case class ScriptCounts(child: Expression)
   * replacement for the explode → sliding-min window → groupBy selection
   * pipeline of q59. */
 case class WinnowFps(child: Expression, w: Int, k: Int)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] with StringArrayArg {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("fp", StringType, nullable = false),
     StructField("pos", IntegerType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: StringType, _) | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.winnowFps(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], w, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("graftWf")
-      s"""
-         |org.apache.spark.sql.catalyst.util.GenericArrayData $r =
-         |  graft.functions.ExprKernels.winnowFps($c, $w, $k);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression =
+    call("winnowFps", Seq(child, Literal(w), Literal(k)), returnNullable = true)
   override protected def withNewChildInternal(newChild: Expression): WinnowFps =
     copy(child = newChild)
   override def prettyName: String = "winnow_fps"
@@ -1126,22 +1039,10 @@ case class WinnowFps(child: Expression, w: Int, k: Int)
   * array<string> (distinct trigrams) → array<int>[#languages], primitive
   * (UnsafeArrayData), fully codegen'd — q28's trigram-profile scoring as
   * one generated pass instead of per-language interpreted filter HOFs. */
-case class ProfileHits(child: Expression) extends UnaryExpression {
+case class ProfileHits(child: Expression)
+    extends KernelCall with UnaryLike[Expression] with StringArrayArg {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: StringType, _) | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.profileHits(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprKernels.profileHits($c)")
+  override lazy val replacement: Expression = call("profileHits")
   override protected def withNewChildInternal(newChild: Expression): ProfileHits =
     copy(child = newChild)
   override def prettyName: String = "profile_hits"
@@ -1153,21 +1054,9 @@ case class ProfileHits(child: Expression) extends UnaryExpression {
   * drop). Replaces an explode(shingles×8)→groupBy(doc,h) exchange with
   * zero shuffle. String → array<string>[8]. */
 case class MinhashMd5(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.minhashMd5(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("graftMh")
-      s"""
-         |org.apache.spark.sql.catalyst.util.GenericArrayData $r =
-         |  graft.functions.ExprKernels.minhashMd5($c);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = call("minhashMd5", returnNullable = true)
   override protected def withNewChildInternal(newChild: Expression): MinhashMd5 =
     copy(child = newChild)
   override def prettyName: String = "minhash_md5"
@@ -1176,21 +1065,9 @@ case class MinhashMd5(child: Expression)
 /** Fused MinHash signature, production hash family (Spark-chained
   * xxhash64 longs, ExprKernels.minhashXx). String → array<bigint>[8]. */
 case class MinhashXx(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.minhashXx(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("graftMhx")
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.UnsafeArrayData $r =
-         |  graft.functions.ExprKernels.minhashXx($c);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = call("minhashXx", returnNullable = true)
   override protected def withNewChildInternal(newChild: Expression): MinhashXx =
     copy(child = newChild)
   override def prettyName: String = "minhash_xx"
@@ -1200,21 +1077,9 @@ case class MinhashXx(child: Expression)
   * ExprKernels.shingleHashes) — the q23/verifyJaccard per-doc set without
   * the explode→collect_set exchange. String → array<bigint>. */
 case class ShingleHashes(child: Expression)
-    extends UnaryExpression with StringArgs {
+    extends KernelCall with UnaryLike[Expression] with StringArgs {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.shingleHashes(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("graftShs")
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.UnsafeArrayData $r =
-         |  graft.functions.ExprKernels.shingleHashes($c);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r; }
-       """.stripMargin
-    })
+  override lazy val replacement: Expression = call("shingleHashes", returnNullable = true)
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
   override def prettyName: String = "shingle_hashes"
@@ -1226,26 +1091,10 @@ case class ShingleHashes(child: Expression)
   * ONE pass over the 64-dim embedding (ExprKernels.lshBandVals). Replaces
   * a 32×64 `aggregate` HOF tree — the dominant scalar cost of the
   * embedding near-dup scan. array<float|double>[64] → array<int>[8]. */
-case class LshBandVals(child: Expression) extends UnaryExpression {
+case class LshBandVals(child: Expression)
+    extends KernelCall with UnaryLike[Expression] with VectorArgs {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_band_vals requires array<float> or array<double>, got ${other.simpleString}")
-    }
-  override def nullSafeEval(input: Any): Any =
-    ExprKernels.lshBandVals(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprKernels.lshBandVals($c, $isFloat)")
+  override lazy val replacement: Expression = call("lshBandVals", Seq(child, isFloats(child)))
   override protected def withNewChildInternal(newChild: Expression): LshBandVals =
     copy(child = newChild)
   override def prettyName: String = "lsh_band_vals"
@@ -1257,29 +1106,10 @@ case class LshBandVals(child: Expression) extends UnaryExpression {
   * `html: binary` page column (the per-url `text` the rest of the
   * pipeline consumes is exactly this extraction). binary|string →
   * string, codegen-friendly like every other text kernel. */
-case class HtmlText(child: Expression) extends UnaryExpression {
+case class HtmlText(child: Expression)
+    extends KernelCall with UnaryLike[Expression] with HtmlArg {
   override def dataType: DataType = StringType
-  private def isBinary: Boolean = child.dataType == BinaryType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType | _: StringType | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"html_text requires binary or string input, got ${other.simpleString}")
-    }
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      if (isBinary) graft.text.Html.extractTextBytes(input.asInstanceOf[Array[Byte]])
-      else graft.text.Html.extractText(input.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      if (isBinary)
-        s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          s"graft.text.Html.extractTextBytes($c))"
-      else
-        s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          s"graft.text.Html.extractText($c.toString()))")
+  override lazy val replacement: Expression = call("htmlText")
   override protected def withNewChildInternal(newChild: Expression): HtmlText =
     copy(child = newChild)
   override def prettyName: String = "html_text"
@@ -1288,24 +1118,10 @@ case class HtmlText(child: Expression) extends UnaryExpression {
 /** Outlink extraction ([[graft.text.Html.extractLinks]]): `<a href>`
   * values in document order, comment/script/style bodies excluded.
   * binary|string → array<string>. */
-case class HtmlLinks(child: Expression) extends UnaryExpression {
+case class HtmlLinks(child: Expression)
+    extends KernelCall with UnaryLike[Expression] with HtmlArg {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  private def isBinary: Boolean = child.dataType == BinaryType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType | _: StringType | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"html_links requires binary or string input, got ${other.simpleString}")
-    }
-  override def nullSafeEval(input: Any): Any =
-    if (isBinary) ExprKernels.htmlLinksBytes(input.asInstanceOf[Array[Byte]])
-    else ExprKernels.htmlLinksStr(input.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      if (isBinary) s"graft.functions.ExprKernels.htmlLinksBytes($c)"
-      else s"graft.functions.ExprKernels.htmlLinksStr($c.toString())")
+  override lazy val replacement: Expression = call("htmlLinks")
   override protected def withNewChildInternal(newChild: Expression): HtmlLinks =
     copy(child = newChild)
   override def prettyName: String = "html_links"
@@ -1313,27 +1129,15 @@ case class HtmlLinks(child: Expression) extends UnaryExpression {
 
 /** Per-country address formatting (reference formatter.cc:87-159, X14).
   * children = (house_number, road, postcode, city, country, country_code),
-  * all strings. NULL inputs are treated as empty components.
-  * CodegenFallback: template rendering is a per-entity output step, never
-  * on the pairwise hot path — interpreted eval costs nothing here. */
-case class FormatAddress(children: Seq[Expression]) extends Expression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  * all strings. NULL inputs are treated as empty components, so the
+  * result is never NULL. */
+case class FormatAddress(children: Seq[Expression])
+    extends KernelCall with StringArgs {
   require(children.size == 6, "format_address takes 6 arguments")
   override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.forall(c => c.dataType.isInstanceOf[StringType] || c.dataType == NullType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "format_address requires string arguments")
-  private def str(v: Any): String =
-    if (v == null) "" else v.asInstanceOf[UTF8String].toString
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    UTF8String.fromString(ExprKernels.formatAddress(
-      str(vs(0)), str(vs(1)), str(vs(2)), str(vs(3)), str(vs(4)), str(vs(5))))
-  }
+  override lazy val replacement: Expression = call("formatAddress",
+    children.map(c => if (c.dataType == NullType) Literal(null, StringType) else c),
+    propagateNull = false)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): FormatAddress = copy(children = newChildren)
   override def prettyName: String = "format_address"
@@ -1370,20 +1174,16 @@ case class FormatAddress(children: Seq[Expression]) extends Expression
   * winning NAME must do so via `langs(nibble - 1)` against the area's
   * names list, not by subscripting names[nibble - 1]. */
 case class AreaFold(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends Expression {
-  override def children: Seq[Expression] = Seq(first, second, third, fourth)
+    third: Expression, fourth: Expression) extends KernelCall with QuaternaryLike[Expression] {
   override def dataType: DataType = StructType(Seq(
     StructField("tok", LongType, nullable = false),
     StructField("amask", LongType, nullable = false),
     StructField("dist", DoubleType, nullable = false),
     StructField("alang", LongType, nullable = false)))
   override def nullable: Boolean = false
-  override def foldable: Boolean = children.forall(_.foldable)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def fail(msg: String) =
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: $msg")
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def fail(msg: String) = TypeCheckResult.TypeCheckFailure(s"$prettyName: $msg")
     (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
       case (ArrayType(p: StructType, _), ArrayType(a: StructType, _),
           ArrayType(_: StringType, _), LongType) =>
@@ -1401,72 +1201,30 @@ case class AreaFold(first: Expression, second: Expression,
         if (!pOk) fail(s"phrases needs struct<s: string, bits: bigint>, got ${p.simpleString}")
         else if (!aOk) fail("areas needs struct<names: array<struct<name, lang>>, " +
           s"level: int|bigint, pop: int|bigint>, got ${a.simpleString}")
-        else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        else TypeCheckResult.TypeCheckSuccess
       case other =>
         fail("requires (array<struct>, array<struct>, array<string>, bigint), got " +
           other.productIterator.map(_.asInstanceOf[DataType].simpleString).mkString(", "))
     }
   }
 
-  // field-ordinal layout, resolved once at planning time
-  private lazy val pStruct =
-    first.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  private lazy val aStruct =
-    second.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  private lazy val nStruct =
-    aStruct.fields(aStruct.fieldIndex("names")).dataType
-      .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  private lazy val layout: (Int, Int, Int, Int, Int, Int, Int, Boolean, Boolean, Int, Int, Int) = (
-    pStruct.size, pStruct.fieldIndex("s"), pStruct.fieldIndex("bits"),
-    aStruct.size, aStruct.fieldIndex("names"), aStruct.fieldIndex("level"),
-    aStruct.fieldIndex("pop"),
-    aStruct.fields(aStruct.fieldIndex("level")).dataType == LongType,
-    aStruct.fields(aStruct.fieldIndex("pop")).dataType == IntegerType,
-    nStruct.size, nStruct.fieldIndex("name"), nStruct.fieldIndex("lang"))
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val (pF, pS, pB, aF, aN, aL, aP, lLong, pInt, nF, nN, nL) = layout
-    val p = first.eval(input)
-    val a = second.eval(input)
-    val l = third.eval(input)
-    val m = fourth.eval(input)
-    ExprKernels.areaFold(
-      p.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], pF, pS, pB,
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], aF, aN, aL, aP,
-      lLong, pInt, nF, nN, nL,
-      l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      if (m == null) 0L else m.asInstanceOf[Long])
+  /** Null arrays reach the kernel as null and a null `initMask` as 0, so
+    * the fold never returns NULL; the field layout is resolved by name
+    * once, into literal ordinals. */
+  override lazy val replacement: Expression = {
+    def elem(t: DataType) = t.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    def ordinals(s: StructType, fields: String*) = (s.size +: fields.map(s.fieldIndex)).map(Literal(_))
+    val (p, a) = (elem(first.dataType), elem(second.dataType))
+    call("areaFold", Seq(first) ++ ordinals(p, "s", "bits") ++
+      Seq(second) ++ ordinals(a, "names", "level", "pop") ++
+      Seq(Literal(a("level").dataType == LongType), Literal(a("pop").dataType == IntegerType)) ++
+      ordinals(elem(a("names").dataType), "name", "lang") ++
+      Seq(third, Coalesce(Seq(fourth, Literal(0L)))), propagateNull = false)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val (pF, pS, pB, aF, aN, aL, aP, lLong, pInt, nF, nN, nL) = layout
-    val p = first.genCode(ctx)
-    val a = second.genCode(ctx)
-    val l = third.genCode(ctx)
-    val m = fourth.genCode(ctx)
-    val out = ctx.freshName("graftAreaFold")
-    val resultCode =
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $out =
-         |  graft.functions.ExprKernels.areaFold(
-         |    ${p.isNull} ? null : ${p.value}, $pF, $pS, $pB,
-         |    ${a.isNull} ? null : ${a.value}, $aF, $aN, $aL, $aP, $lLong, $pInt,
-         |    $nF, $nN, $nL,
-         |    ${l.isNull} ? null : ${l.value},
-         |    ${m.isNull} ? 0L : ${m.value});
-       """.stripMargin
-    ev.copy(
-      code = p.code + a.code + l.code + m.code + code"$resultCode",
-      value = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode
-        .variable(out, dataType),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): AreaFold =
-    copy(first = newChildren(0), second = newChildren(1),
-      third = newChildren(2), fourth = newChildren(3))
+  override protected def withNewChildrenInternal(first: Expression, second: Expression,
+      third: Expression, fourth: Expression): AreaFold =
+    copy(first = first, second = second, third = third, fourth = fourth)
   override def prettyName: String = "area_fold"
 }
 
@@ -1488,13 +1246,13 @@ case class BlockPairs(key: Expression, members: Expression)
     StructField("src", LongType, nullable = false),
     StructField("dst", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     (key.dataType, members.dataType) match {
       case (LongType, ArrayType(StructType(Array(
           StructField(_, LongType, _, _), StructField(_, ArrayType(LongType, _), _, _))), _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckResult.TypeCheckSuccess
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires (bigint, array<struct<id: bigint, keys: " +
             s"array<bigint>>>), got ${key.dataType.simpleString}, " +
             members.dataType.simpleString)

@@ -260,7 +260,7 @@ object Components {
       // registered with Caches so the harness releases it after the
       // query's sink action (q33 and q45 each build the graph)
     val withTris = interned
-      .withColumn("tris", TextOps.trigramStrings(col("name")))
+      .withColumn("tris", gf.trigram_strings(col("name")))
       .withColumn("n", size(col("tris")))
     val keyed = withTris.select(col("name_id"), col("n"), explode(col("tris")).as("gram"))
     // hot-gram cap (same rule + oracle mirror as q13/q23): no gram block

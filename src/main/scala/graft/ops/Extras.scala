@@ -252,75 +252,6 @@ object Extras {
         col("is_numeric"), col("hn").isNotNull.as("hn_matched"))
   }
 
-  /** A6 greedy per-group argmin area assembly (reference
-    * get_suggestions.cc:181-255): phrases are folded IN ORDER; a phrase
-    * whose token bits overlap the accumulated matched-token mask is
-    * skipped; otherwise the areas of the entity's set are scored and the
-    * argmin area (first index wins ties, strict `>` in the reference)
-    * accumulates its bit into the matched-areas mask, its score minus the
-    * population bonus (pop/1e7·2, get_suggestions.cc:240-244) into the
-    * penalty, and the phrase's bits into the token mask. Zip-level areas
-    * (admin level 12) only match numeric phrases (F9). The whole fold is
-    * ONE codegen-able expression: `aggregate` over the phrase array with
-    * a struct accumulator and a nested `array_min` argmin — no UDF, no
-    * shuffle beyond the input scan.
-    *
-    * Score here is the bounded-Levenshtein gate 2·lev ≤ min(len) (the
-    * simplified X6 reject band, score.h:132-134); the full reference
-    * scorer lives in text.MatchScore/q16. */
-  def greedyAreaAssembly(phrases: Column, areas: Column): Column =
-    greedyAreaAssembly(phrases, areas, lit(0L))
-
-  /** Variant seeding the token mask with the item's already-matched bits
-    * (reference: `matched_tokens_mask = item_matched_mask`,
-    * get_suggestions.cc:182). Single-language convenience shape
-    * (areas: array<struct<name,level,pop>>) — delegates to the
-    * multi-language fold with one 'default' name per area and drops the
-    * matched-language nibbles from the result. */
-  def greedyAreaAssembly(phrases: Column, areas: Column, initMask: Column): Column = {
-    val ml = greedyAreaAssemblyML(phrases,
-      transform(areas, a => struct(
-        array(struct(a("name").as("name"), lit("default").as("lang"))).as("names"),
-        a("level").as("level"), a("pop").as("pop"))),
-      array(lit("default")), initMask)
-    struct(ml("tok").as("tok"), ml("amask").as("amask"), ml("dist").as("dist"))
-  }
-
-  /** A6 greedy argmin area assembly, MULTI-LANGUAGE names (reference
-    * `activate_areas`, get_suggestions.cc:88-104: per (area, phrase) the
-    * score is the best match across the USER'S language list — strict `<`
-    * update, so the first language in the list wins ties — and the winning
-    * language index is recorded per matched area,
-    * `matched_area_lang_`/guess_context.h:43-46). Without this, any corpus
-    * with bilingual admin areas (Brussels, Switzerland, most of Asia)
-    * ranks against one arbitrary name.
-    *
-    * areas:   array<struct<names: array<struct<name,lang>>, level, pop>>
-    * langs:   array<string> — the user's language preference order
-    * returns: struct<tok, amask, dist, alang> where `alang` packs, per
-    *          matched area index i (1-based), the 1-based position in
-    *          `langs` of the winning language into nibble i-1 (0 = area
-    *          unmatched; a later phrase re-matching the same area
-    *          OVERWRITES its nibble, exactly the reference's
-    *          `area_lang[best_area_idx] = ...` assignment). Nibble packing
-    *          bounds area sets at 16 — the reference's own area_set_lang_t
-    *          is a fixed small array (guess_context.h:43-46).
-    *
-    * INDEX-SPACE NOTE (deliberate divergence): the reference stores
-    * `find_lang`'s index into the AREA's OWN name-language list (it later
-    * indexes `area_names_[lang_idx]` with it); here the nibble is the
-    * 1-based position in the USER `langs` preference list instead. The
-    * denormalized Spark schema has no stable per-area language array to
-    * index — names arrive as array<struct<name,lang>> whose order is not
-    * an identity — so the user-list index is the only well-defined space,
-    * and downstream consumers (q38/q42 oracles, SuggestSpec goldens)
-    * resolve the winning name via (area, langs[nibble]) lookup rather
-    * than positional indexing. Semantics (which language wins, tie order)
-    * are identical; only the integer's coordinate system differs. */
-  def greedyAreaAssemblyML(phrases: Column, areas: Column, langs: Column,
-      initMask: Column): Column =
-    graft.functions.area_fold(phrases, areas, langs, initMask.cast("long"))
-
   /** The ORIGINAL interpreted-HOF formulation of the fold, kept as the
     * executable specification the codegen [[graft.functions.AreaFold]]
     * kernel is byte-parity-tested against (ExtrasSpec). Catalyst HOF
@@ -430,7 +361,7 @@ object Extras {
           struct(((col("c_nationkey") * 37) % 100).cast("string").as("name"),
             lit("en").as("lang"))).as("names"),
         lit(12).as("level"), lit(0L).as("pop")))
-    val res = greedyAreaAssemblyML(phrases, areas,
+    val res = graft.functions.area_fold(phrases, areas,
       array(lit("en"), lit("de")), lit(0L))
     // fixed-point 1e-4 units (same rationale as q42's score_fp: the pop
     // bonus k·2/1e7 makes the dist decimal-half-way prone, and Spark's

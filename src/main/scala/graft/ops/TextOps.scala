@@ -17,12 +17,6 @@ import graft.{functions => gf}
 object TextOps {
   import Tables.load
 
-  /** Distinct space-free character trigrams via the one-pass native
-    * expression (the built-in `transform(sequence, substr)` formulation is
-    * O(n²) on long documents — UTF8String.substring rescans from the
-    * start; 4.6 s → 0.3 s on sf0.1 documents). */
-  def trigramStrings(c: Column): Column = gf.trigram_strings(c)
-
   /** X1/X2: normalization. */
   def q10Normalize(spark: SparkSession, dir: String): DataFrame =
     load(spark, dir, "documents")
@@ -39,7 +33,7 @@ object TextOps {
   def q12Trigrams(spark: SparkSession, dir: String): DataFrame =
     load(spark, dir, "documents")
       .select(col("doc_id"),
-        explode(trigramStrings(gf.normalize_text(col("text")))).as("gram"))
+        explode(gf.trigram_strings(gf.normalize_text(col("text")))).as("gram"))
       .groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
 
@@ -54,7 +48,7 @@ object TextOps {
       .select(gf.normalize_text(col("p_name")).as("name"), col("p_partkey"))
       .groupBy(col("name")).agg(min(col("p_partkey")).as("name_id"))
     val p = interned
-      .withColumn("tris", trigramStrings(col("name")))
+      .withColumn("tris", gf.trigram_strings(col("name")))
       .withColumn("n_grams", size(col("tris")))
     val keyed = p.select(col("name_id"), col("n_grams"), explode(col("tris")).as("gram"))
     // hot-gram cap (Dedup.MaxBlock, mirrored in the oracle): a gram shared
@@ -152,7 +146,7 @@ object TextOps {
     // membership counting == the per-language filter size.
     val d = docs
       .withColumn("ph",
-        gf.profile_hits(trigramStrings(gf.normalize_text(col("text")))))
+        gf.profile_hits(gf.trigram_strings(gf.normalize_text(col("text")))))
       .withColumn("sc", gf.script_counts(col("text")))
     def scAt(i: Int) = element_at(col("sc"), i)
     val groupCounts: Seq[(String, Column)] = Seq(

@@ -149,9 +149,9 @@ object StreamOps {
   final case class KeyedBlockPair(src: Long, dst: Long,
       src_key: String, dst_key: String)
 
-  /** Per-key blocking state: members seen so far as (string_id,
-    * match_key) — bounded — or saturated (the key went hot and emits
-    * nothing further). */
+  /** Per-key pair-engine state: members seen so far as (id, payload) —
+    * bounded — or saturated (the key went hot and emits nothing
+    * further). */
   final case class BlockState(members: Vector[(Long, String)], saturated: Boolean)
 
   /** Streaming incremental candidate generation — the ingest-side analogue
@@ -222,8 +222,36 @@ object StreamOps {
           p => length(p) >= 5))).as("bkey"), // "p:" + code of length >= 3
       col("string_id").cast("long").as("string_id"),
       col("match_key").cast("string").as("match_key"))
-    keyed.as[(String, Long, String)]
-      .groupByKey(_._1)
+    statefulPairs(keyed.as[(String, Long, String)], maxBlock)
+  }
+
+  /** Streaming scored candidate pairs: keyed blocking + the SAME scalar
+    * accept gate batch scoring uses (er.Pipeline.scoreKeyed — one shared
+    * kernel, so streamed and batch verdicts cannot diverge). Stateless
+    * past the blocking state: the gate is pure codegen'd column math on
+    * (src_key, dst_key), no join, no extra shuffle. Output: (src, dst,
+    * jw, lev, sift, accepted) per emitted pair; the global hub rule
+    * (matchEdges) stays a maintenance-window concern — it is a top-1 over
+    * all of a satellite's pairs, which a stream has not all seen yet. */
+  def incrementalScoredPairs(spark: SparkSession, strings: DataFrame,
+      maxBlock: Int = 256): DataFrame =
+    graft.er.Pipeline.scoreKeyed(
+        incrementalKeyedBlocking(spark, strings, maxBlock).toDF())
+      .select(col("src"), col("dst"), col("jw"), col("lev"), col("sift"),
+        col("accepted"))
+
+  /** The one saturating pair engine over (block key, id, payload) rows:
+    * each key's GroupState accumulates members, as (id, payload), up to
+    * `maxBlock`; past it the key saturates (the member list is dropped
+    * and the key emits nothing further), and every admitted member pairs
+    * against all prior members plus earlier same-batch admits, the pair
+    * carrying both payloads. Deterministic within a micro-batch (ids
+    * sorted before admission). The payload is a member's match key for
+    * keyed blocking and empty for near-dup buckets. */
+  private def statefulPairs(keyed: Dataset[(String, Long, String)],
+      maxBlock: Int): Dataset[KeyedBlockPair] = {
+    import keyed.sparkSession.implicits._
+    keyed.groupByKey(_._1)
       .flatMapGroupsWithState[BlockState, KeyedBlockPair](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, rows: Iterator[(String, Long, String)],
@@ -252,58 +280,6 @@ object StreamOps {
       }
   }
 
-  /** Streaming scored candidate pairs: keyed blocking + the SAME scalar
-    * accept gate batch scoring uses (er.Pipeline.scoreKeyed — one shared
-    * kernel, so streamed and batch verdicts cannot diverge). Stateless
-    * past the blocking state: the gate is pure codegen'd column math on
-    * (src_key, dst_key), no join, no extra shuffle. Output: (src, dst,
-    * jw, lev, sift, accepted) per emitted pair; the global hub rule
-    * (matchEdges) stays a maintenance-window concern — it is a top-1 over
-    * all of a satellite's pairs, which a stream has not all seen yet. */
-  def incrementalScoredPairs(spark: SparkSession, strings: DataFrame,
-      maxBlock: Int = 256): DataFrame =
-    graft.er.Pipeline.scoreKeyed(
-        incrementalKeyedBlocking(spark, strings, maxBlock).toDF())
-      .select(col("src"), col("dst"), col("jw"), col("lev"), col("sift"),
-        col("accepted"))
-
-  /** Per-bucket state for id-only pair emission (streaming LSH near-dup):
-    * member ids seen so far, or saturated. */
-  final case class IdBlockState(members: Vector[Long], saturated: Boolean)
-
-  /** Stateful pair emission over (bucket_key, id) rows — the shared
-    * engine shape of [[incrementalKeyedBlocking]], id-only: each bucket's
-    * GroupState accumulates members up to `maxBlock` (then saturates and
-    * emits nothing further), and every admitted member pairs against all
-    * prior members plus earlier same-batch admits. Deterministic within
-    * a micro-batch (ids sorted before admission). */
-  private def statefulPairs(keyed: Dataset[(String, Long)],
-      maxBlock: Int): Dataset[BlockPair] = {
-    import keyed.sparkSession.implicits._
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[IdBlockState, BlockPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, Long)],
-            state: GroupState[IdBlockState]) =>
-          val st = state.getOption.getOrElse(IdBlockState(Vector.empty, saturated = false))
-          if (st.saturated) Iterator.empty
-          else {
-            val seen = st.members.toSet
-            val fresh = rows.map(_._2).toVector.distinct.sorted
-              .filterNot(seen)
-            val admitted = fresh.take(math.max(0, maxBlock - st.members.size))
-            val nowSat = st.members.size + fresh.size > maxBlock
-            state.update(
-              if (nowSat) IdBlockState(Vector.empty, saturated = true)
-              else IdBlockState(st.members ++ admitted, saturated = false))
-            for {
-              (n, i) <- admitted.iterator.zipWithIndex
-              o <- st.members.iterator ++ admitted.iterator.take(i)
-            } yield if (o < n) BlockPair(o, n) else BlockPair(n, o)
-          }
-      }
-  }
-
   /** Streaming MinHash-LSH near-duplicate candidates — the ingest-side
     * analogue of the batch q22/lshPairsXx: each arriving document's 4
     * band fingerprints (the SAME fused minhash_xx signature + banding
@@ -320,8 +296,9 @@ object StreamOps {
     import spark.implicits._
     val keyed = graft.ops.Dedup.bandExplode(graft.ops.Dedup.xxSigs(docs))
       .select(concat_ws("#", col("band").cast("string"), col("band_sig")).as("bkey"),
-        col("doc_id").cast("long").as("doc_id"))
-    statefulPairs(keyed.as[(String, Long)], maxBlock)
+        col("doc_id").cast("long").as("doc_id"), lit("").as("payload"))
+    statefulPairs(keyed.as[(String, Long, String)], maxBlock)
+      .map(p => BlockPair(p.src, p.dst))
   }
 
   /** Run a streaming DataFrame from a parquet-backed file stream to a

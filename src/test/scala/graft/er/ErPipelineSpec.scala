@@ -287,7 +287,8 @@ class ErPipelineSpec extends AnyFunSuite {
     val (triPairs, pfreq) = blockPairs(prefix, isKept)
     val kept = prefix.map { case (id, ks) => id -> ks.filter(k => isKept(pfreq(k))) }
     val codes = strings.map { case (id, k) =>
-      id -> k.split(" ", -1).map(graft.functions.ExprKernels.doubleMetaphone)
+      id -> k.split(" ", -1).map(t => graft.functions.ExprKernels.doubleMetaphone(
+        org.apache.spark.unsafe.types.UTF8String.fromString(t)).toString)
         .filter(c => c.codePointCount(0, c.length) >= 3).toSet
     }.toMap
     val (phonPairs, cfreq) = blockPairs(codes, isKept)

@@ -255,6 +255,102 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  /** One select list per `GraftExtensions.sqlFunctions` name, over the
+    * `kernel_rows` view (i, s, t, x, y, ring, v, w, v64, html): a new SQL
+    * kernel needs a sample here. */
+  private val kernelSamples: Map[String, String] = Map(
+    "normalize_text" -> "normalize_text(s), normalize_text(NULL)",
+    "match_key" -> "match_key(s)",
+    "trigram_keys" -> "trigram_keys(normalize_text(s))",
+    "trigram_strings" -> "trigram_strings(s)",
+    "script_counts" -> "script_counts(s)",
+    "profile_hits" -> "profile_hits(trigram_strings(normalize_text(s)))",
+    "double_metaphone" -> "double_metaphone(s)",
+    "sift4_cp" -> "sift4_cp(s, t)",
+    "bounded_levenshtein" -> "bounded_levenshtein(s, t)",
+    "jaro_winkler" -> "jaro_winkler(s, t)",
+    "ref_match_score" -> "ref_match_score(s, normalize_text(t)), ref_match_score(s, match_key(s))",
+    "ref_match_score_pre" -> "ref_match_score_pre(match_key(s), normalize_text(t))",
+    "ref_best_phrase" ->
+      "ref_best_phrase(match_key(s), array(normalize_text(t), match_key(s)), array(1L, 2L))",
+    "cosine_sim" -> "cosine_sim(v, w), cosine_sim(w, w), cosine_sim(v, array(1.0D))",
+    "point_in_ring" -> "point_in_ring(ring, x, y)",
+    "polyline_dist2" -> "polyline_dist2(ring, x, y), polyline_dist2(slice(ring, 1, 1), x, y)",
+    "lsh_band_vals" -> "lsh_band_vals(v64), lsh_band_vals(CAST(v64 AS array<float>))",
+    "minhash_md5" -> "minhash_md5(normalize_text(s))",
+    "minhash_xx" -> "minhash_xx(normalize_text(s))",
+    "shingle_hashes" -> "shingle_hashes(normalize_text(s))",
+    "area_fold" -> ("area_fold(array(named_struct('s', normalize_text(s), 'bits', 1L), " +
+      "named_struct('s', normalize_text(t), 'bits', 2L), named_struct('s', '12', 'bits', 4L)), " +
+      "array(named_struct('names', array(named_struct('name', normalize_text(t), 'lang', 'de'), " +
+      "named_struct('name', normalize_text(s), 'lang', 'en')), 'level', 4, 'pop', i * 1000), " +
+      "named_struct('names', array(named_struct('name', '12', 'lang', 'en')), 'level', 12, " +
+      "'pop', 3L)), array('en', 'de'), IF(i % 3 = 0, NULL, i % 2))"),
+    "format_address" -> ("format_address(s, t, NULL, 'Toulouse', s, 'FR'), " +
+      "format_address('12', s, '64283', t, 'Deutschland', 'DE')"),
+    "html_text" -> "html_text(html), html_text(CAST(html AS binary))",
+    "html_links" -> "html_links(html), html_links(CAST(html AS binary))",
+    "block_pairs" -> ("block_pairs(i % 2, array(named_struct('id', i, 'keys', array(i % 2, 7L)), " +
+      "named_struct('id', 100L, 'keys', array(i % 2)), named_struct('id', 101L, 'keys', array(7L))))"))
+
+  private val kernelStrings = samples ++ Seq("the quick brown fox jumps", "Rue de la Paix 12",
+    "12", "Ελληνικά γράμματα και λέξεις", "東京都 港区 六本木")
+
+  /** The `kernel_rows` view, backed by parquet rather than a local
+    * relation, so the optimizer cannot evaluate the projections itself. */
+  private lazy val kernelRows: String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-kernel-rows").toString
+    kernelStrings.zip(kernelStrings.reverse).zipWithIndex
+      .map { case ((s, t), i) => (i.toLong, s, t) }
+      .toDF("i", "s", "t")
+      .selectExpr("i", "s", "t", "CAST(i AS double) * 0.5 AS x", "1.0D AS y",
+        "array(named_struct('x', 0.0D, 'y', 0.0D), named_struct('x', 4.0D, 'y', 0.0D), " +
+          "named_struct('x', 4.0D, 'y', 4.0D)) AS ring",
+        "CAST(array(i, 2.5, -1.0) AS array<float>) AS v",
+        "IF(i % 4 = 1, array(0.0D, 0.0D, 0.0D), array(1.0D, CAST(i AS double), 3.0D)) AS w",
+        "transform(sequence(1, 64), k -> sin(CAST(i * k AS double))) AS v64",
+        "concat('<p>', s, '<script>x</script></p><a href=\"/', t, '\">', s, '</a>') AS html")
+      .write.parquet(s"$dir/rows")
+    spark.read.parquet(s"$dir/rows").createOrReplaceTempView("kernel_rows")
+    "kernel_rows"
+  }
+
+  test("every SQL kernel gives the same rows interpreted and generated") {
+    injectGraftExtensions()
+    assert(kernelSamples.keySet == graft.GraftExtensions.sqlFunctions.map(_._1).toSet)
+    def rows(sql: String, conf: (String, String)*): Seq[String] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try spark.sql(sql).collect().map(_.toString).toSeq.sorted
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    kernelSamples.toSeq.sortBy(_._1).foreach { case (name, select) =>
+      val sql = s"SELECT i, $select FROM $kernelRows"
+      val interpreted = rows(sql, "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+      val generated = rows(sql, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false")
+      assert(interpreted.size >= kernelStrings.size, name)
+      assert(generated == interpreted, name)
+    }
+  }
+
+  test("every SQL kernel but block_pairs runs as a static ExprKernels call") {
+    import org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    injectGraftExtensions()
+    kernelSamples.toSeq.filter(_._1 != "block_pairs").foreach { case (name, select) =>
+      val qe = spark.sql(s"SELECT $select FROM $kernelRows").queryExecution
+      val named = qe.analyzed.expressions.flatMap(_.collect {
+        case e if e.prettyName == name => e })
+      assert(named.nonEmpty && named.forall(_.isInstanceOf[RuntimeReplaceable]), name)
+      assert(qe.optimizedPlan.expressions.exists(_.exists {
+        case s: StaticInvoke => s.staticObject == ExprKernels.getClass
+        case _ => false
+      }), name)
+    }
+  }
+
   test("BoundedLevenshteinRewrite: unbounded lev-vs-literal becomes banded form") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.Levenshtein

@@ -85,7 +85,7 @@ class ExtrasSpec extends AnyFunSuite {
     val df = foldDf
     val hof = Extras.greedyAreaAssemblyMLHof(
       col("phrases"), col("areas"), langs, col("init"))
-    val gen = Extras.greedyAreaAssemblyML(
+    val gen = graft.functions.area_fold(
       col("phrases"), col("areas"), langs, col("init"))
     def dump(c: org.apache.spark.sql.Column) = df
       .select(col("qid"), c("tok"), c("amask"), c("dist"), c("alang"))
@@ -124,7 +124,7 @@ class ExtrasSpec extends AnyFunSuite {
           "'level', x._2, 'pop', x._3)) AS areas",
         "init")
     val e = intercept[Exception] {
-      df.select(Extras.greedyAreaAssemblyML(col("phrases"), col("areas"),
+      df.select(graft.functions.area_fold(col("phrases"), col("areas"),
         array(lit("en")), col("init"))).collect()
     }
     def rootMsg(t: Throwable): String =
@@ -146,7 +146,7 @@ class ExtrasSpec extends AnyFunSuite {
         |    named_struct('names', array(named_struct('name', 'berlim', 'lang', 'de')),
         |      'level', 4L, 'pop', 77L)) AS areas,
         |  array('en', 'de') AS langs, 0L AS init""".stripMargin)
-    val r = df.select(Extras.greedyAreaAssemblyML(col("phrases"),
+    val r = df.select(graft.functions.area_fold(col("phrases"),
       col("areas"), col("langs"), col("init")).as("r"))
       .select("r.tok", "r.amask", "r.dist", "r.alang").collect().head
     assert(r.getLong(0) == 1L, "phrase must still match through area 2")
@@ -161,9 +161,10 @@ class ExtrasSpec extends AnyFunSuite {
       .toDF("qid", "p", "a").selectExpr(
         "qid",
         "transform(p, x -> named_struct('s', x._1, 'bits', x._2)) AS phrases",
-        "transform(a, x -> named_struct('name', x._1, 'level', x._2, 'pop', x._3)) AS areas")
-    val r = df.select(Extras.greedyAreaAssembly(
-      col("phrases"), col("areas")).as("r")).collect().head.getStruct(0)
+        "transform(a, x -> named_struct('names', array(named_struct('name', x._1, " +
+          "'lang', 'default')), 'level', x._2, 'pop', x._3)) AS areas")
+    val r = df.select(graft.functions.area_fold(col("phrases"), col("areas"),
+      array(lit("default")), lit(0L)).as("r")).collect().head.getStruct(0)
     assert(r.getLong(0) == 3L && r.getLong(1) == 3L)
     assert(r.getDouble(2) == 0.0 + 0.0 - 100000L * 2.0 / 1e7 + 0.0)
   }

@@ -2,12 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** Unloads the state stores of this spec's stopped queries and stops
+    * their maintenance task: a later spec that stops the shared session
+    * would otherwise leave that task failing against the gone state-store
+    * coordinator for the rest of the run. */
+  override def afterAll(): Unit =
+    try StateStore.stop() finally super.afterAll()
 
   private val dir = "/root/testdata/sf0.001"
 
