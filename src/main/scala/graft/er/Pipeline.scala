@@ -1,6 +1,6 @@
 package graft.er
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
@@ -29,9 +29,10 @@ import graft.ops.Components.IterationMetrics
   *
   * Scale design: all shuffles after interning are on fixed-width keys
   * (Int trigrams, Long ids); hot blocking keys are capped with the dropped
-  * volume logged (the reference's kMaxMatches=6000 analogue,
-  * typeahead.cc:428); clustering checkpoints each iteration to parquet
-  * with per-partition metrics for lineage-free resumability.
+  * keys and volume counted in [[BlockingStats]] (the reference's
+  * kMaxMatches=6000 analogue, typeahead.cc:428); clustering checkpoints
+  * each iteration to parquet for lineage-free resumability, with
+  * per-partition metrics when `Config.collectStats`.
   */
 object Pipeline {
 
@@ -51,11 +52,16 @@ object Pipeline {
       maxIterations: Int = 20,
       workDir: String = "/tmp/graft_er",
       resume: Boolean = false,
-      // false = skip all metric-only actions (counts/stats collects) so a
-      // bench run is one lazy DAG per cluster iteration; production keeps
-      // true (the north_rule wants logged stats).
+      // true = write the per-partition metrics JSONL of every clustering
+      // round (Components.WorkDir.round; one scan + collect per round, the
+      // north_rule's logged stats). It gates nothing else: BlockingStats
+      // ride the pair walk's action either way.
       collectStats: Boolean = true)
 
+  /** Blocking counters (SparkER's blocks and dropped-volume counters),
+    * exact on every run: prefix keys in total, kept keys (2 ≤ pfreq ≤
+    * maxBlockSize), hot keys dropped (pfreq > maxBlockSize) and their
+    * summed member count, and the candidate pairs emitted. */
   final case class BlockingStats(
       totalKeys: Long, keptKeys: Long, hotKeysDropped: Long,
       hotVolumeDropped: Long, candidatePairs: Long)
@@ -181,8 +187,9 @@ object Pipeline {
     * rarest shared grams in-prefix and the pair is still generated, while
     * Zipf-hot grams (shared by thousands of strings — zero discriminative
     * signal) stop producing quadratic blocks at all. Residual over-hot
-    * prefix blocks are capped at maxBlockSize with the dropped volume
-    * logged (the reference's kMaxMatches=6000 cap, typeahead.cc:428).
+    * prefix blocks are capped at maxBlockSize with the dropped keys and
+    * volume counted in the returned [[BlockingStats]] (the reference's
+    * kMaxMatches=6000 cap, typeahead.cc:428).
     * Precision is NOT blocking's job here — every candidate pair goes
     * through the codegen'd scalar gate + hub rule (scorePairs/matchEdges).
     * Double-Metaphone phonetic keys union in as a second key family.
@@ -237,23 +244,22 @@ object Pipeline {
       .select($"string_id", $"e.key".as("key"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+    // prefix-key frequencies. The blocking stats are an observation over
+    // them that rides the pair walk's one action below, so they cost no
+    // job of their own. keptKeys is counted from the kept predicate
+    // itself, NOT derived as total - hot: prefix keys whose pfreq is 1 (a
+    // gram that survived into only one string's prefix after rank
+    // truncation) are dropped by the kept filter too.
+    val statsObs = Observation("blocking_stats")
+    def countWhere(p: Column): Column = coalesce(sum(when(p, 1L).otherwise(0L)), lit(0L))
+    val statCols = Seq(count(lit(1)).as("total"),
+      countWhere($"cnt" > cfg.maxBlockSize).as("hot"),
+      coalesce(sum(when($"cnt" > cfg.maxBlockSize, $"cnt").otherwise(0L)), lit(0L))
+        .as("hot_volume"),
+      countWhere($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize).as("kept"))
     val pfreq = prefixed.groupBy($"key").agg(count(lit(1)).as("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (totalKeys, hotKeys, hotVolume, keptKeyCount) =
-      if (cfg.collectStats) {
-        val agg = pfreq.agg(count(lit(1)).as("t"),
-          coalesce(sum(when($"cnt" > cfg.maxBlockSize, 1L).otherwise(0L)), lit(0L)).as("k"),
-          coalesce(sum(when($"cnt" > cfg.maxBlockSize, $"cnt").otherwise(0L)), lit(0L)).as("v"),
-          // keptKeys counted from the kept predicate itself, NOT derived
-          // as total - hot: prefix keys whose pfreq is 1 (a gram that
-          // survived into only one string's prefix after rank truncation)
-          // are dropped by the kept filter too, so total - hot overcounts
-          coalesce(sum(when($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize, 1L)
-            .otherwise(0L)), lit(0L)).as("kk"))
-          .collect()(0)
-        (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
-      } else (-1L, -1L, -1L, -1L)
-    val kept = pfreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize)
+    val kept = pfreq.observe(statsObs, statCols.head, statCols.tail: _*)
+      .filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize)
 
     // phonetic blocking: per-token Double Metaphone codes (len >= 3);
     // the scorer does the precision work on these coarse keys. A code
@@ -301,19 +307,26 @@ object Pipeline {
       .repartition(sessionParts)
       .select(gf.block_pairs($"key", $"members"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // always materialize here: the keyed/prefix/pfreq caches feed the
-    // pair DAG, so they must still be cached when it first computes
-    // (collectStats only gates the *extra* stats aggregation above)
+    // always materialize here: the keyed/prefix caches feed the pair DAG,
+    // so they must still be cached when it first computes
     val nPairs = pairs.count()
+    // Adaptive execution replaces a subtree whose stage came out empty
+    // with an empty relation, and an observed node inside it then reports
+    // no row. The counts then come from one aggregate over the same
+    // frequencies (their input is still cached); only a corpus with no
+    // kept prefix key gets here.
+    val s = Some(statsObs.get).filter(_.nonEmpty).getOrElse {
+      val r = pfreq.agg(statCols.head, statCols.tail: _*).head()
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+    }
     keyed.unpersist()
     prefixed.unpersist()
-    pfreq.unpersist()
 
     val stats = BlockingStats(
-      totalKeys = totalKeys,
-      keptKeys = keptKeyCount,
-      hotKeysDropped = hotKeys,
-      hotVolumeDropped = hotVolume,
+      totalKeys = s("total").asInstanceOf[Long],
+      keptKeys = s("kept").asInstanceOf[Long],
+      hotKeysDropped = s("hot").asInstanceOf[Long],
+      hotVolumeDropped = s("hot_volume").asInstanceOf[Long],
       candidatePairs = nPairs)
     (pairs, stats)
   }
@@ -592,13 +605,11 @@ object Pipeline {
     // The read-back cuts the assembly lineage before the corpus-sized
     // membership-expand join reuses the frame.
     val labelPath = s"${cfg.workDir}/labels_iter_${dir.start + metrics.size}"
-    timed("forest.labels_write") {
-      // the assembly joins run at session width for parallelism, but the
-      // label table is string-sized: coalesce to the loop width merges
-      // post-join without reshuffling instead of committing near-empty files
-      assembled.coalesce(loopParts).write.mode(SaveMode.Overwrite)
-        .format(graft.ops.TableIO.format).save(labelPath)
-    }
+    // the assembly joins run at session width for parallelism, but the
+    // label table is string-sized: coalesce to the loop width merges
+    // post-join without reshuffling instead of committing near-empty files
+    assembled.coalesce(loopParts).write.mode(SaveMode.Overwrite)
+      .format(graft.ops.TableIO.format).save(labelPath)
     (graft.ops.TableIO.read(spark, labelPath), metrics)
   }
 
@@ -765,53 +776,40 @@ object Pipeline {
 
   // ---------------------------------------------------------------- e2e
 
-  final case class RunResult(
-      mentions: Long, distinctStrings: Long, stats: BlockingStats,
-      acceptedPairs: Long, clusters: Long, iterations: Int, eval: EvalResult)
-
   final case class PipelineOutput(
-      mentions: Long, distinctStrings: Long, stats: BlockingStats,
-      acceptedPairs: Long, clusters: Long, iterations: Int,
+      stats: BlockingStats,
       pairs: DataFrame, membership: DataFrame, labels: DataFrame,
       strings: DataFrame, stringLabels: DataFrame)
 
   /** Skew: salt buckets for the membership-expand join (hot string_ids). */
   final val SaltBuckets = 8
 
-  private def timed[T](tag: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      println(f"[stage] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
-  /** The timed pipeline: pages → mentions → intern → block → score →
-    * cluster. No evaluation work (truth/universe expansion) — this is the
-    * unit ScalingBench/Bench measure. */
+  /** The measured pipeline: pages → mentions → intern → block → score →
+    * cluster → mention labels. No evaluation work (truth/universe
+    * expansion) — this is the unit ScalingBench/Bench measure. The stages
+    * run no count-only actions: their work runs inside the pair walk's
+    * count, the clustering rounds and the final labels count, so a stage
+    * has no wall time of its own here (perfbench `--trace 1` times them
+    * one by one). */
   def runPipeline(spark: SparkSession, cfg: Config): PipelineOutput = {
     import spark.implicits._
     val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
     val mentions = extractMentions(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    val nMentions = timed("extract")(if (cfg.collectStats) mentions.count() else -1L)
 
     val (strings0, membership0) = internStrings(mentions)
     val strings = strings0.persist(StorageLevel.MEMORY_AND_DISK)
     val membership = membership0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nStrings = timed("intern")(if (cfg.collectStats) strings.count() else -1L)
 
-    val (pairs, stats) = timed("blocking")(candidatePairs(strings, cfg))
+    val (pairs, stats) = candidatePairs(strings, cfg)
     val accepted = matchEdges(pairs, strings, cfg,
         if (cfg.contextEvidence) Some(mentions) else None)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nAccepted = timed("scoring")(if (cfg.collectStats) accepted.count() else -1L)
 
     // cluster the *string* graph only (strings are the interned minority;
     // iterating pointer doubling over every mention would shuffle the
     // full corpus per iteration), then expand to mentions with ONE join
     // through the membership table.
-    val (stringLabels, metrics) =
-      timed("cluster")(forestLabels(strings.select($"string_id"), accepted, cfg))
+    val (stringLabels, _) = forestLabels(strings.select($"string_id"), accepted, cfg)
     // Expand string labels to mentions with an EXPLICITLY SALTED join:
     // membership is Zipf-skewed on string_id (a hot surface form carries
     // millions of mentions on a single key at corpus scale, all hashed to
@@ -838,15 +836,11 @@ object Pipeline {
       .join(replicatedLabels, Seq("string_id", "salt"))
       .select($"mention_id".as("id"), $"mention_id2".as("id2"), $"label")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nClusters = timed("expand") {
-      // the membership join is the only job that must run here; count it
-      // always (it materializes the labels for callers)
-      if (cfg.collectStats) labels.select($"label").distinct().count()
-      else { labels.count(); -1L }
-    }
+    // the membership join is the only job that must run here: it
+    // materializes the labels for callers
+    labels.count()
     mentions.unpersist(); strings.unpersist(); accepted.unpersist()
-    PipelineOutput(nMentions, nStrings, stats, nAccepted, nClusters,
-      metrics.size, pairs, membership, labels, strings, stringLabels)
+    PipelineOutput(stats, pairs, membership, labels, strings, stringLabels)
   }
 
   /** Release a PipelineOutput's persisted frames (pairs, membership,
@@ -859,15 +853,12 @@ object Pipeline {
   }
 
   /** Full pipeline + pairwise-F1 evaluation against generator truth. */
-  def run(spark: SparkSession, cfg: Config): RunResult = {
-    import spark.implicits._
+  def run(spark: SparkSession, cfg: Config): EvalResult = {
     val out = runPipeline(spark, cfg)
     val truth = withMentionIds(
       Corpus.truth(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF())
-    val universe = labeledPairUniverse(out.pairs, out.membership)
-    val eval = evaluate(universe, truth, out.labels)
+    val eval = evaluate(labeledPairUniverse(out.pairs, out.membership), truth, out.labels)
     release(out)
-    RunResult(out.mentions, out.distinctStrings, out.stats,
-      out.acceptedPairs, out.clusters, out.iterations, eval)
+    eval
   }
 }

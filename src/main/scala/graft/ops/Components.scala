@@ -249,38 +249,17 @@ object Components {
       .select(col("id").as("name_id"), col("label"))
   }
 
-  /** The q33 match graph as data: interned part names + JW-accepted
-    * blocking edges (shared by q33 and the incremental variant q45). */
+  /** The q33 match graph as data: interned part names + JW ≥ 0.9 edges
+    * over their trigram blocking ([[TextOps.nameBlockingPairs]]), shared
+    * by q33 and the incremental variant q45. */
   private[graft] def nameGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val interned = Caches.persist(load(spark, dir, "part")
-      .select(gf.normalize_text(col("p_name")).as("name"), col("p_partkey"))
-      .groupBy(col("name")).agg(min(col("p_partkey")).as("name_id")))
-      // referenced by the trigram index, the name join, AND the vertex set
-      // — persist once instead of recomputing the scan+groupBy per branch;
-      // registered with Caches so the harness releases it after the
-      // query's sink action (q33 and q45 each build the graph)
-    val withTris = interned
-      .withColumn("tris", gf.trigram_strings(col("name")))
-      .withColumn("n", size(col("tris")))
-    val keyed = withTris.select(col("name_id"), col("n"), explode(col("tris")).as("gram"))
-    // hot-gram cap (same rule + oracle mirror as q13/q23): no gram block
-    // may expand quadratically at corpus scale
-    val keptGrams = keyed.groupBy(col("gram"))
-      .agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt").between(2, Dedup.MaxBlock))
-      .select(col("gram"))
-    val capped = keyed.join(keptGrams, Seq("gram"))
-    val counted = capped.as("a").join(capped.as("b"),
-        col("a.gram") === col("b.gram") && col("a.name_id") < col("b.name_id"))
-      .groupBy(col("a.name_id").as("src"), col("b.name_id").as("dst"),
-        col("a.n").as("n1"), col("b.n").as("n2"))
-      .agg(count(lit(1)).as("shared"))
-    val minN = least(col("n1"), col("n2")).cast("int")
-    val mmc = lit(2) + floor(minN / (lit(4) + floor(minN / lit(10))))
-    val cand = counted.filter(col("shared") >= mmc.cast("long") &&
-      (col("shared") * col("shared")).cast("double") >= lit(0.17) * col("n1") * col("n2"))
+    // referenced by the blocking, the name join, AND the vertex set —
+    // persisted once instead of recomputing the scan+groupBy per branch;
+    // registered with Caches so the harness releases it after the
+    // query's sink action (q33 and q45 each build the graph)
+    val interned = Caches.persist(TextOps.partNames(spark, dir))
     val kv = interned.select(col("name_id"), col("name"))
-    val edges = cand
+    val edges = TextOps.nameBlockingPairs(interned)
       .join(kv.withColumnRenamed("name_id", "src").withColumnRenamed("name", "name_src"), Seq("src"))
       .join(kv.withColumnRenamed("name_id", "dst").withColumnRenamed("name", "name_dst"), Seq("dst"))
       .filter(gf.jaro_winkler(col("name_src"), col("name_dst")) >= 0.9)

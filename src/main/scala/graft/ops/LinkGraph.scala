@@ -50,7 +50,7 @@ object LinkGraph {
     * in any engine. Plan shape per iteration: edges ⋈ ranks on src →
     * groupBy dst (one shuffle) → left join back to the vertex set; at
     * web scale the edge side is pre-partitioned by src once and each
-    * iteration checkpoints (the [[pageRankDeep]] production loop below —
+    * iteration checkpoints (the [[pageRankFp]] production loop below —
     * here 5 small iterations compose as one lazy DAG).
     *
     * NOTE: construction is EAGER — `d.count()` runs a Spark job at

@@ -37,21 +37,25 @@ object TextOps {
       .groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
 
-  /** J1 + A2 + A3: the blocking join — part-name pairs sharing trigrams,
-    * filtered by the reference's min-match-count and cosine cutoff
-    * (typeahead.cc:409-423). */
-  def q13BlockingPairs(spark: SparkSession, dir: String): DataFrame = {
-    // intern first (reference D1/D2): pair generation over *distinct*
-    // names only — 2000 parts share 64 names; at 100x scale the pair
-    // count stays bounded by name diversity, not row count
-    val interned = load(spark, dir, "part")
+  /** Part names interned (reference D1/D2): one row per distinct
+    * normalized name, `name_id` = its smallest p_partkey. Pair generation
+    * runs over distinct names only — 2000 parts share 64 names; at 100x
+    * scale the pair count stays bounded by name diversity, not row count. */
+  private[ops] def partNames(spark: SparkSession, dir: String): DataFrame =
+    load(spark, dir, "part")
       .select(gf.normalize_text(col("p_name")).as("name"), col("p_partkey"))
       .groupBy(col("name")).agg(min(col("p_partkey")).as("name_id"))
-    val p = interned
+
+  /** J1 + A2 + A3 over interned names (`name_id`, `name`): the (src < dst)
+    * name pairs sharing trigrams, with their `shared` gram count, filtered
+    * by the reference's min-match-count and cosine cutoff
+    * (typeahead.cc:409-423). The blocking of q13 and of the q33/q45 match
+    * graph. */
+  private[ops] def nameBlockingPairs(names: DataFrame): DataFrame = {
+    val keyed = names
       .withColumn("tris", gf.trigram_strings(col("name")))
-      .withColumn("n_grams", size(col("tris")))
-    val keyed = p.select(col("name_id"), col("n_grams"), explode(col("tris")).as("gram"))
-    // hot-gram cap (Dedup.MaxBlock, mirrored in the oracle): a gram shared
+      .select(col("name_id"), size(col("tris")).as("n"), explode(col("tris")).as("gram"))
+    // hot-gram cap (Dedup.MaxBlock, mirrored in the oracles): a gram shared
     // by > cap names is a Zipf-hot stopgram with no discriminative signal
     // and a quadratic join block — drop it whole before the self-join
     val keptGrams = keyed.groupBy(col("gram"))
@@ -59,25 +63,26 @@ object TextOps {
       .filter(col("gcnt").between(2, Dedup.MaxBlock))
       .select(col("gram"))
     val capped = keyed.join(keptGrams, Seq("gram"))
-    val pairs = capped.as("a").join(capped.as("b"),
+    val counted = capped.as("a").join(capped.as("b"),
         col("a.gram") === col("b.gram") && col("a.name_id") < col("b.name_id"))
-      .groupBy(
-        col("a.name_id").as("p1"), col("b.name_id").as("p2"),
-        col("a.n_grams").as("n1"), col("b.n_grams").as("n2"))
+      .groupBy(col("a.name_id").as("src"), col("b.name_id").as("dst"),
+        col("a.n").as("n1"), col("b.n").as("n2"))
       .agg(count(lit(1)).as("shared"))
     val minN = least(col("n1"), col("n2")).cast("int")
     val mmc = lit(2) + floor(minN / (lit(4) + floor(minN / lit(10))))
-    pairs.filter(col("shared") >= mmc.cast("long") &&
+    counted.filter(col("shared") >= mmc.cast("long") &&
         (col("shared") * col("shared")).cast("double") >= lit(0.17) * col("n1") * col("n2"))
-      .select(col("p1"), col("p2"), col("shared"))
+      .select(col("src"), col("dst"), col("shared"))
   }
+
+  /** The blocking join over part names ([[nameBlockingPairs]]). */
+  def q13BlockingPairs(spark: SparkSession, dir: String): DataFrame =
+    nameBlockingPairs(partNames(spark, dir))
+      .select(col("src").as("p1"), col("dst").as("p2"), col("shared"))
 
   /** X-family pair scoring on the blocked pairs (JW + Levenshtein). */
   def q14PairScores(spark: SparkSession, dir: String): DataFrame = {
-    val names = load(spark, dir, "part")
-      .select(gf.normalize_text(col("p_name")).as("name"), col("p_partkey"))
-      .groupBy(col("name")).agg(min(col("p_partkey")).as("name_id"))
-      .select(col("name_id"), col("name"))
+    val names = partNames(spark, dir).select(col("name_id"), col("name"))
     q13BlockingPairs(spark, dir)
       .join(names.withColumnRenamed("name_id", "p1").withColumnRenamed("name", "name1"), Seq("p1"))
       .join(names.withColumnRenamed("name_id", "p2").withColumnRenamed("name", "name2"), Seq("p2"))

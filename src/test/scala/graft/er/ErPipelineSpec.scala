@@ -24,17 +24,17 @@ class ErPipelineSpec extends AnyFunSuite {
   test("pairwise F1 >= 0.99 on labeled same-blocking-key pairs (seed 42)") {
     val cfg = Pipeline.Config(seed = 42L, nPages = 800, nEntities = 150,
       workDir = freshDir("f1_s42"))
-    val res = Pipeline.run(spark, cfg)
-    assert(res.eval.f1 >= 0.99, s"F1 gate failed: $res")
-    assert(res.eval.precision >= 0.99, s"precision: ${res.eval}")
-    assert(res.eval.recall >= 0.99, s"recall: ${res.eval}")
+    val eval = Pipeline.run(spark, cfg)
+    assert(eval.f1 >= 0.99, s"F1 gate failed: $eval")
+    assert(eval.precision >= 0.99, s"precision: $eval")
+    assert(eval.recall >= 0.99, s"recall: $eval")
   }
 
   test("pairwise F1 >= 0.99 holds on a different seed") {
     val cfg = Pipeline.Config(seed = 7L, nPages = 800, nEntities = 150,
       workDir = freshDir("f1_s7"))
-    val res = Pipeline.run(spark, cfg)
-    assert(res.eval.f1 >= 0.99, s"F1 gate failed on seed 7: $res")
+    val eval = Pipeline.run(spark, cfg)
+    assert(eval.f1 >= 0.99, s"F1 gate failed on seed 7: $eval")
   }
 
   test("weighted string-level evaluation equals the expanded mention-level one") {
@@ -229,6 +229,78 @@ class ErPipelineSpec extends AnyFunSuite {
     assert(stats.keptKeys + stats.hotKeysDropped <= stats.totalKeys)
   }
 
+  test("blocking stats are exact and equal with and without collectStats") {
+    val cfg = Pipeline.Config(seed = 42L, nPages = 400, nEntities = 80,
+      workDir = freshDir("stats_modes"))
+    val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
+    val strings = Pipeline.internStrings(Pipeline.extractMentions(pages))._1.cache()
+    val (p1, off) = Pipeline.candidatePairs(strings, cfg.copy(collectStats = false))
+    val (p2, on) = Pipeline.candidatePairs(strings, cfg)
+    assert(off == on, s"collectStats changed the blocking stats: $off vs $on")
+    assert(off.productIterator.forall(_.asInstanceOf[Long] >= 0L), s"negative stat: $off")
+    assert(off == referenceStats(
+      strings.select($"string_id", $"match_key").as[(Long, String)].collect().toSeq, cfg),
+      "stats differ from a direct aggregate over the prefix-key frequencies")
+    Seq(p1, p2, strings).foreach(_.unpersist())
+  }
+
+  test("a corpus without candidate pairs gets exact blocking stats") {
+    // adaptive execution prunes the stages that come out empty, the
+    // observed key frequencies with them, and the stats must still
+    // arrive (and not hang). The first two corpora share no trigram and
+    // no phonetic code: every stat is zero. The last one has prefix keys,
+    // all over the cap, so only its kept-key frame is empty.
+    val cfg = Pipeline.Config(workDir = freshDir("stats_empty"))
+    for ((corpus, cap) <- Seq(
+        Seq((1L, "abcd"), (2L, "wxyz")) -> 256,
+        Seq.empty[(Long, String)] -> 256,
+        Seq((1L, "qqqxa"), (2L, "qqqxe"), (3L, "qqqxi")) -> 2)) {
+      val c = cfg.copy(maxBlockSize = cap)
+      val run = scala.concurrent.Future(
+        Pipeline.candidatePairs(corpus.toDF("string_id", "match_key"), c))(
+        scala.concurrent.ExecutionContext.global)
+      val (pairs, stats) = scala.concurrent.Await.result(run,
+        scala.concurrent.duration.Duration(120, "s"))
+      assert(stats == referenceStats(corpus, c), s"$corpus")
+      if (cap == 256) assert(stats == Pipeline.BlockingStats(0L, 0L, 0L, 0L, 0L))
+      else assert(stats.hotKeysDropped > 0 && stats.keptKeys == 0L, s"$stats")
+      pairs.unpersist()
+    }
+  }
+
+  test("collectStats adds only the per-round metrics jobs to runPipeline") {
+    // Spark jobs started while `body` runs, counted by a listener
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet(): Unit
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { body; org.apache.spark.TestBus.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      n.get()
+    }
+    val cfg = Pipeline.Config(seed = 42L, nPages = 400, nEntities = 80)
+    def pipelineJobs(stats: Boolean) = jobs(Pipeline.release(Pipeline.runPipeline(spark,
+      cfg.copy(workDir = freshDir(s"jobs_pipeline_$stats"), collectStats = stats))))
+    val pipelineDelta = pipelineJobs(true) - pipelineJobs(false)
+    // the same edges straight into forestLabels
+    val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
+    val strings = Pipeline.internStrings(Pipeline.extractMentions(pages))._1.cache()
+    val (pairs, _) = Pipeline.candidatePairs(strings, cfg)
+    val edges = Pipeline.matchEdges(pairs, strings, cfg).cache()
+    edges.count()
+    def forestJobs(stats: Boolean) = jobs(Pipeline.forestLabels(strings.select($"string_id"),
+      edges, cfg.copy(workDir = freshDir(s"jobs_forest_$stats"), collectStats = stats)): Unit)
+    val forestDelta = forestJobs(true) - forestJobs(false)
+    assert(forestDelta > 0, "collectStats must still write the per-round metrics")
+    assert(pipelineDelta == forestDelta,
+      s"collectStats adds $pipelineDelta jobs to runPipeline, $forestDelta to forestLabels")
+    Seq(pairs, edges, strings).foreach(_.unpersist())
+  }
+
   test("a pathological hot block is capped, logged, and does not hurt recall") {
     // 400 DISTINCT strings whose every repeated trigram (and every
     // Double-Metaphone token code) is shared by all 400 — the worst-case
@@ -258,6 +330,7 @@ class ErPipelineSpec extends AnyFunSuite {
     * blocks, every a < b pair in every kept block. The intermediates are
     * returned so specs can check what a hand-built corpus covers. */
   private case class BlockingRef(
+      prefix: Map[Long, Set[Int]], // every string's prefix keys
       kept: Map[Long, Set[Int]], // K(s): kept prefix keys
       hot: Set[Int], // prefix keys over the cap
       phon: Map[Long, Set[String]], // Q(s): kept phonetic keys
@@ -292,10 +365,25 @@ class ErPipelineSpec extends AnyFunSuite {
         .filter(c => c.codePointCount(0, c.length) >= 3).toSet
     }.toMap
     val (phonPairs, cfreq) = blockPairs(codes, isKept)
-    BlockingRef(kept,
+    BlockingRef(prefix, kept,
       pfreq.collect { case (k: Int, n) if n > cfg.maxBlockSize => k }.toSet,
       codes.map { case (id, cs) => id -> cs.filter(c => isKept(cfreq(c))) },
       triPairs, phonPairs)
+  }
+
+  /** BlockingStats from a direct aggregate over the reference's
+    * prefix-key frequencies. */
+  private def referenceStats(strings: Seq[(Long, String)],
+      cfg: Pipeline.Config): Pipeline.BlockingStats = {
+    val ref = blockingRef(strings, cfg)
+    val pfreq = ref.prefix.values.toSeq.flatten.groupBy(identity).map(_._2.size)
+    val hot = pfreq.filter(_ > cfg.maxBlockSize)
+    Pipeline.BlockingStats(
+      totalKeys = pfreq.size,
+      keptKeys = pfreq.count(n => n >= 2 && n <= cfg.maxBlockSize),
+      hotKeysDropped = hot.size,
+      hotVolumeDropped = hot.map(_.toLong).sum,
+      candidatePairs = ref.pairs.size)
   }
 
   /** candidatePairs == the reference pair set, with src < dst and no

@@ -91,10 +91,16 @@ class ExtrasSpec extends AnyFunSuite {
       .select(col("qid"), c("tok"), c("amask"), c("dist"), c("alang"))
       .orderBy("qid").collect().map(_.toSeq).toSeq
     val expected = dump(hof)
-    Seq(true, false).foreach { wscg => // codegen'd AND interpreted eval paths
-      spark.conf.set("spark.sql.codegen.wholeStage", wscg)
-      try assert(dump(gen) == expected, s"parity (wholeStageCodegen=$wscg)")
-      finally spark.conf.set("spark.sql.codegen.wholeStage", true)
+    // codegen'd AND interpreted eval paths: with whole-stage codegen off
+    // the projection is still generated unless the factory is NO_CODEGEN
+    val modes = Seq(Map("spark.sql.codegen.wholeStage" -> "true"),
+      Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (mode <- modes) {
+      val prior = mode.keys.map(k => k -> spark.conf.get(k))
+      mode.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assert(dump(gen) == expected, s"parity ($mode)")
+      finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
     }
     // sanity on the semantics themselves, not just parity
     val byQid = expected.map(r => r.head -> r.tail).toMap
