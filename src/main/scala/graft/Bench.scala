@@ -63,10 +63,10 @@ object Bench {
     // a leaked (or even a kept-winner's) mention-scale cache would evict
     // blocks inside the very window being timed. The frames needed for
     // evaluation come from ONE untimed run after the loop — keeping a
-    // timed rep's output is also a correctness trap: each fresh run
-    // cleans + rewrites the labels_iter checkpoint files, so a kept
-    // stringLabels frame's file listing goes stale (FileNotFoundException
-    // at evaluation whenever the winner is not the last rep).
+    // timed rep's output is also a correctness trap: each run overwrites
+    // the work dir's labels table, so a kept stringLabels frame's file
+    // listing goes stale (FileNotFoundException at evaluation whenever
+    // the winner is not the last rep).
     var erSec = Double.MaxValue
     for (_ <- 1 to 3) {
       val erT0 = System.nanoTime()

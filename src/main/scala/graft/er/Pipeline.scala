@@ -1,6 +1,6 @@
 package graft.er
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
@@ -558,7 +558,9 @@ object Pipeline {
     * Each round checkpoints the parent map to `parents_iter_k` under
     * cfg.workDir (lineage cut, crash resume via cfg.resume, per-partition
     * metrics JSONL when cfg.collectStats) and the loop fails loudly after
-    * cfg.maxIterations rounds; see [[Components.WorkDir]].
+    * cfg.maxIterations rounds; the labels go to the one table
+    * `<workDir>/labels` that every run overwrites. See
+    * [[Components.WorkDir]].
     */
   def forestLabels(
       vertices: DataFrame, // (id)
@@ -589,28 +591,23 @@ object Pipeline {
       try graft.ops.Components.pointerDoubling(par0, Some(dir))
       finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
 
-    // assemble: every tree member (satellites + the root itself) grouped
-    // by root, labeled with the min member id; isolated vertices label
-    // themselves. Partial aggregation absorbs root skew map-side.
-    val rootSelf = par.select($"par".as("id"), $"par").distinct()
-    val all = par.unionByName(rootSelf)
-    val minPerRoot = all.groupBy($"par").agg(min($"id").as("label"))
-    val treeLabels = all.join(minPerRoot, Seq("par")).select($"id", $"label")
-    val assembled = vertices.select(col(vertices.columns.head).as("id"))
-      .join(treeLabels, Seq("id"), "left")
-      .select($"id", coalesce($"label", $"id").as("label"))
-    // materialize the FINAL labels once as `labels_iter_k` (k = the round
-    // after the last checkpoint), so labels consumers — resume tooling,
-    // ScalingBench's cross-level identity check — find them by max index.
-    // The read-back cuts the assembly lineage before the corpus-sized
-    // membership-expand join reuses the frame.
-    val labelPath = s"${cfg.workDir}/labels_iter_${dir.start + metrics.size}"
-    // the assembly joins run at session width for parallelism, but the
-    // label table is string-sized: coalesce to the loop width merges
-    // post-join without reshuffling instead of committing near-empty files
-    assembled.coalesce(loopParts).write.mode(SaveMode.Overwrite)
-      .format(graft.ops.TableIO.format).save(labelPath)
-    (graft.ops.TableIO.read(spark, labelPath), metrics)
+    // assemble: every vertex's root (its own id for a tree root or an
+    // isolated vertex), one min member id per root, joined back on the
+    // root. The groupBy's partial aggregation absorbs root skew map-side.
+    val withRoot = vertices.select(col(vertices.columns.head).as("id"))
+      .join(par, Seq("id"), "left")
+      .select($"id", coalesce($"par", $"id").as("root"))
+    val labels = withRoot
+      .join(withRoot.groupBy($"root").agg(min($"id").as("label")), Seq("root"))
+      .select($"id", $"label")
+    // materialize the final labels once as the work dir's labels table;
+    // the read-back cuts the assembly lineage before the corpus-sized
+    // membership-expand join reuses the frame. The assembly joins run at
+    // session width for parallelism, but the label table is
+    // string-sized: coalesce to the loop width merges post-join without
+    // reshuffling instead of committing near-empty files
+    graft.ops.TableIO.write(labels.coalesce(loopParts), dir.labels)
+    (graft.ops.TableIO.read(spark, dir.labels), metrics)
   }
 
   // ---------------------------------------------------------------- eval

@@ -117,19 +117,20 @@ object ScalingBench {
   final case class Level(cores: Int, seconds: Double, pairsPerSec: Double,
       pagesPerSec: Double)
 
+  private def workDir(cores: Int): String = s"/tmp/graft_scaling_$cores"
+
+  private def levelJson(l: Level): String =
+    f"""{"cores":${l.cores},"seconds":${l.seconds}%.2f,"pairs_per_sec":${l.pairsPerSec}%.0f,""" +
+      f""""pages_per_sec":${l.pagesPerSec}%.0f}"""
+
   def runAt(cores: Int, nPages: Long, nEntities: Int): Level = {
-    // stale checkpoints from an earlier invocation would satisfy
-    // latestLabels() with OLD labels if this run converges in fewer
-    // iterations — always start each level from an empty workDir
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/tmp/graft_scaling_$cores"))
     val spark = session(cores)
     try {
       // JIT/codegen warmup on a small corpus so the measured run is steady-state
       Pipeline.runPipeline(spark, Pipeline.Config(nPages = 500, nEntities = 100,
         workDir = s"/tmp/graft_scaling_warm_$cores", collectStats = false))
       val cfg = Pipeline.Config(nPages = nPages, nEntities = nEntities,
-        workDir = s"/tmp/graft_scaling_$cores", collectStats = false)
+        workDir = workDir(cores), collectStats = false)
       // min-of-2: single runs on a shared box are contention-noisy
       var best = Double.MaxValue
       // only the candidate-pair COUNT survives the loop (a Long, already
@@ -178,12 +179,9 @@ object ScalingBench {
     // the expensive eval + cross-level identity check already ran in the
     // first invocation and stays valid (labels are deterministic).
     if (sys.env.contains("GRAFT_SCALING_NO_EVAL")) {
-      def lj(l: Level): String =
-        f"""{"cores":${l.cores},"seconds":${l.seconds}%.2f,"pairs_per_sec":${l.pairsPerSec}%.0f,""" +
-          f""""pages_per_sec":${l.pagesPerSec}%.0f}"""
       println(
         f"""{"bench":"er_scaling_levels","pages":$nPages,"entities":$nEntities,""" +
-          s""""levels":[${results.map(lj).mkString(",")}]}""")
+          s""""levels":[${results.map(levelJson).mkString(",")}]}""")
       return
     }
     val lo = results(0)
@@ -194,9 +192,11 @@ object ScalingBench {
     // every parallelism level (north_rule equivalence) + ONE pairwise-F1
     // evaluation — valid for all levels because the labels are identical.
     val spark = session(levels.max)
-    val first = spark.read.parquet(latestLabels(s"/tmp/graft_scaling_${levels.head}"))
+    def labels(cores: Int) =
+      graft.ops.TableIO.read(spark, graft.ops.Components.WorkDir.labels(workDir(cores)))
+    val first = labels(levels.head)
     val identical = levels.tail.forall { c =>
-      val l = spark.read.parquet(latestLabels(s"/tmp/graft_scaling_$c"))
+      val l = labels(c)
       first.exceptAll(l).isEmpty && l.exceptAll(first).isEmpty
     }
     val evalCfg = Pipeline.Config(nPages = nPages, nEntities = nEntities,
@@ -208,21 +208,11 @@ object ScalingBench {
       out.pairs, out.strings, out.membership, truth, out.stringLabels)
     spark.stop()
 
-    def levelJson(l: Level): String =
-      f"""{"cores":${l.cores},"seconds":${l.seconds}%.2f,"pairs_per_sec":${l.pairsPerSec}%.0f,""" +
-        f""""pages_per_sec":${l.pagesPerSec}%.0f}"""
     println(
       f"""{"bench":"er_scaling","pages":$nPages,"entities":$nEntities,""" +
         s""""levels":[${results.map(levelJson).mkString(",")}],""" +
         f""""criterion_pair":[${lo.cores},${hi.cores}],"scaling_efficiency":$eff%.3f,""" +
         f""""f1":${eval.f1}%.5f,"labeled_pairs":${eval.labeledPairs},""" +
         s""""identical_clusters":$identical}""")
-  }
-
-  private def latestLabels(dir: String): String = {
-    val iters = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(n => n.startsWith("labels_iter_") && !n.endsWith(".jsonl"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("labels_iter_").toInt).toOption)
-    s"$dir/labels_iter_${iters.max}"
   }
 }

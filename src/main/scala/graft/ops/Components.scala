@@ -25,11 +25,12 @@ object Components {
     * writes `parents_iter_k` (a lineage cut, and the resume point after a
     * crash when `resume`), appends per-partition metrics JSONL when
     * `collectStats`, and the loop fails loudly after `maxIterations`
-    * rounds. A fresh run first removes the previous run's `parents_iter_*`
-    * and `labels_iter_*`: the final index varies with the round count, so
-    * a stale higher-indexed table would shadow this run's output. The
-    * work dir goes through the Hadoop filesystem — java.io.File would
-    * silently no-op on hdfs:// and s3a:// paths. */
+    * rounds. The final labels of a run go to the one table [[labels]],
+    * which every run overwrites. A fresh run first removes the previous
+    * run's `parents_iter_*` and labels table, so a later resume cannot
+    * pick up an older run's rounds and a failed run leaves no stale
+    * labels behind. The work dir goes through the Hadoop filesystem —
+    * java.io.File would silently no-op on hdfs:// and s3a:// paths. */
   private[graft] final case class WorkDir(spark: SparkSession, path: String,
       resume: Boolean, maxIterations: Int, collectStats: Boolean) {
     private val root = new org.apache.hadoop.fs.Path(path)
@@ -37,14 +38,15 @@ object Components {
     fs.mkdirs(root): Unit
 
     def parents(i: Int): String = s"$path/parents_iter_$i"
+    def labels: String = WorkDir.labels(path)
 
-    private def rounds(prefix: String): Vector[(Int, org.apache.hadoop.fs.Path)] =
+    private def rounds: Vector[(Int, org.apache.hadoop.fs.Path)] =
       (try fs.listStatus(root).toVector
        catch { case _: java.io.FileNotFoundException => Vector.empty })
         .flatMap { st =>
           val n = st.getPath.getName
-          if (n.startsWith(prefix))
-            scala.util.Try(n.stripPrefix(prefix).toInt).toOption.map(i => (i, st.getPath))
+          if (n.startsWith("parents_iter_"))
+            scala.util.Try(n.stripPrefix("parents_iter_").toInt).toOption.map(i => (i, st.getPath))
           else None
         }
 
@@ -60,28 +62,24 @@ object Components {
         def complete(p: org.apache.hadoop.fs.Path): Boolean =
           if (TableIO.format == "iceberg") fs.exists(p)
           else fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-        rounds("parents_iter_").collect { case (i, p) if complete(p) => i + 1 }
-          .foldLeft(0)(math.max)
+        rounds.collect { case (i, p) if complete(p) => i + 1 }.foldLeft(0)(math.max)
       } else {
-        for (prefix <- Seq("parents_iter_", "labels_iter_"); (_, p) <- rounds(prefix))
+        for (p <- rounds.map(_._2) :+ new org.apache.hadoop.fs.Path(labels))
           if (!fs.delete(p, true) && fs.exists(p))
             throw new java.io.IOException(
-              s"cannot remove stale checkpoint $p — it would shadow this run's output")
+              s"cannot remove the previous run's table $p")
         0
       }
 
-    /** Writes one round, counting advanced pointers with an `observe`
-      * that rides the write, and returns the re-read parent map. */
-    def round(jumped: DataFrame, iter: Int): (DataFrame, IterationMetrics) = {
-      val obs = Observation(s"parents_iter_$iter")
-      TableIO.write(jumped.observe(obs, sum(col("advanced")).as("advanced"))
-        .select(col("id"), col("par")), parents(iter))
-      val advanced = obs.get("advanced") match {
-        case null => 0L
-        case l: java.lang.Long => l.longValue()
-      }
-      val checked = TableIO.read(spark, parents(iter))
-      // per-partition metrics are metric-only work (a scan + collect)
+    /** Writes one round's parent map and returns it re-read. */
+    def cut(jumped: DataFrame, iter: Int): DataFrame = {
+      TableIO.write(jumped, parents(iter))
+      TableIO.read(spark, parents(iter))
+    }
+
+    /** A round's metrics; with `collectStats`, also the checkpoint's
+      * per-partition rows, appended as JSONL (a scan + collect). */
+    def roundMetrics(checked: DataFrame, iter: Int, advanced: Long): IterationMetrics = {
       val perPartition = Option.when(collectStats)(
         checked.groupBy(spark_partition_id().as("partition_id"))
           .agg(count(lit(1)).as("rows")).collect().sortBy(_.getInt(0)))
@@ -89,9 +87,14 @@ object Components {
         Paths.get(s"$path/parent_metrics_iter_$iter.jsonl"),
         pp.map(r => s"""{"iteration":$iter,"partition_id":${r.getInt(0)},""" +
           s""""rows":${r.getLong(1)},"advanced":$advanced}""").mkString("", "\n", "\n")))
-      (checked, IterationMetrics(iter, advanced,
-        perPartition.map(_.map(_.getLong(1)).sum), perPartition.map(_.length)))
+      IterationMetrics(iter, advanced,
+        perPartition.map(_.map(_.getLong(1)).sum), perPartition.map(_.length))
     }
+  }
+
+  private[graft] object WorkDir {
+    /** The labels table of the work dir at `path`. */
+    def labels(path: String): String = s"$path/labels"
   }
 
   /** Pointer doubling to fixpoint: `par0` is a parent map (id, par)
@@ -118,20 +121,23 @@ object Components {
     val metrics = Vector.newBuilder[IterationMetrics]
     var iter = start
     while (!converged && dir.forall(iter < _.maxIterations)) {
+      // the advanced pointers are counted by an observation that rides
+      // the round's cut, whichever cut it is
+      val obs = Observation()
       val jumped = par
         .join(par.select(col("id").as("par"), col("par").as("gpar")), Seq("par"), "left")
         .select(col("id"), coalesce(col("gpar"), col("par")).as("par"),
           col("gpar").isNotNull.cast("long").as("advanced"))
-      val (next, m) = dir match {
-        case Some(d) => d.round(jumped, iter)
-        case None =>
-          val cut = jumped.localCheckpoint(true)
-          (cut.select(col("id"), col("par")), IterationMetrics(iter,
-            cut.agg(coalesce(sum(col("advanced")), lit(0L))).head().getLong(0), None, None))
+        .observe(obs, sum(col("advanced")).as("advanced"))
+        .select(col("id"), col("par"))
+      par = dir.fold(jumped.localCheckpoint(true))(_.cut(jumped, iter))
+      val advanced = obs.get("advanced") match {
+        case null => 0L
+        case l: java.lang.Long => l.longValue()
       }
-      metrics += m
-      par = next
-      converged = m.pointersAdvanced == 0L || settled
+      metrics += dir.fold(IterationMetrics(iter, advanced, None, None))(
+        _.roundMetrics(par, iter, advanced))
+      converged = advanced == 0L || settled
       iter += 1
     }
     // non-root parents would group members under intermediate ancestors:

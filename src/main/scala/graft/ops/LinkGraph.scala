@@ -48,10 +48,10 @@ object LinkGraph {
     * is `rank div 3`, the damped update is `base + (85·Σcontrib) div 100`
     * — all floor division, so the result is exact and order-independent
     * in any engine. Plan shape per iteration: edges ⋈ ranks on src →
-    * groupBy dst (one shuffle) → left join back to the vertex set; at
-    * web scale the edge side is pre-partitioned by src once and each
-    * iteration checkpoints (the [[pageRankFp]] production loop below —
-    * here 5 small iterations compose as one lazy DAG).
+    * groupBy dst (one shuffle) → left join back to the vertex set. The 5
+    * small iterations compose as one lazy DAG; a loop of web-scale depth
+    * would partition the edge side by src once and cut the lineage every
+    * few iterations, as Components' pointer doubling does.
     *
     * NOTE: construction is EAGER — `d.count()` runs a Spark job at
     * DataFrame-build time because n parameterizes the synthetic edge
@@ -81,86 +81,6 @@ object LinkGraph {
     }
     val out = ranks.select(col("id").as("doc_id"), col("r").as("rank_fp"))
     out
-  }
-
-  /** Production PageRank loop for real iteration depths (the q49 demo
-    * composes 5 iterations as one lazy DAG — correct there, but lineage
-    * grows linearly and the optimizer re-plans the whole history each
-    * action; at depth 30+ planning alone dominates).
-    *
-    * Differences from the demo, all scale-motivated:
-    *  - generic graph: out-degree computed from the edge set (no
-    *    3-regular assumption); dangling vertices contribute nothing
-    *    (their mass is absorbed by the base term, the common
-    *    web-graph convention).
-    *  - the edge side (edges ⋈ out-degree) is hash-repartitioned on src
-    *    ONCE and persisted — every iteration's edges⋈ranks join reuses
-    *    that exchange instead of re-shuffling the (much larger) edge set
-    *    per iteration. Persist is harness-released via [[Caches]].
-    *  - `localCheckpoint(eager)` every `checkpointEvery` iterations
-    *    truncates lineage (same rationale as Components' loop; for
-    *    crash-RESUMABLE runs swap in a parquet checkpoint per round as
-    *    Components.WorkDir does — the loop body is identical).
-    *
-    * Fixed-point BIGINT arithmetic (1e-12 units, floor division): on a
-    * uniform-out-degree graph this is bit-identical to q49's lazy
-    * compose at equal iterations — LinkGraphSpec proves the parity — and
-    * order-independent on any engine. */
-  def pageRankFp(vertices: DataFrame, edges: DataFrame, iterations: Int,
-      checkpointEvery: Int = 5): DataFrame = {
-    require(iterations >= 1 && checkpointEvery >= 1)
-    val v = Caches.persist(vertices.select(col("id")))
-    val n = v.count()
-    require(n > 0, "pageRankFp: empty vertex set")
-    val base = 15000000000000L / (100L * n)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val e = Caches.persist(
-      edges.join(deg, Seq("src")).repartition(col("src")))
-    var ranks = v.select(col("id"), lit(1000000000000L / n).as("r"))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.select(col("id").as("src"), col("r")), Seq("src"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = v
-        .join(contrib.select(col("dst").as("id"), col("s")), Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("id"), col("r").as("rank_fp"))
-  }
-
-  /** Float-typed production instance: identical loop shape to
-    * [[pageRankFp]] with IEEE double rank mass — what you'd actually ship
-    * when cross-engine bit-parity is not the requirement (float sums are
-    * order-DEPENDENT, so no hash oracle; LinkGraphSpec bounds it against
-    * the fixed-point ranks instead). */
-  def pageRankFloat(vertices: DataFrame, edges: DataFrame, iterations: Int,
-      damping: Double = 0.85, checkpointEvery: Int = 5): DataFrame = {
-    require(iterations >= 1 && checkpointEvery >= 1)
-    val v = Caches.persist(vertices.select(col("id")))
-    val n = v.count()
-    require(n > 0, "pageRankFloat: empty vertex set")
-    val base = (1.0 - damping) / n
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val e = Caches.persist(
-      edges.join(deg, Seq("src")).repartition(col("src")))
-    var ranks = v.select(col("id"), lit(1.0 / n).as("r"))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.select(col("id").as("src"), col("r")), Seq("src"))
-        .select(col("dst"), (col("r") / col("deg")).as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = v
-        .join(contrib.select(col("dst").as("id"), col("s")), Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + lit(damping) * coalesce(col("s"), lit(0.0))).as("r"))
-      if (i % checkpointEvery == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("id"), col("r").as("rank"))
   }
 
   val oracles: Map[String, String] = Map(

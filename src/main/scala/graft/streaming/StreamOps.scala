@@ -82,31 +82,27 @@ object StreamOps {
   }
 
   /** Sink-time audit for [[incrementalIntern]]: string ids claimed by more
-    * than one distinct match key (empty = no cross-key hash fusion).
-    * Run against the sink table after each ingest window; a non-empty
-    * result means those ids must be re-keyed before clustering. */
+    * than one distinct match key, with those keys sorted (empty = no
+    * cross-key hash fusion). Run against the sink table after each ingest
+    * window; a non-empty result means those ids must be re-keyed before
+    * clustering. One partial-aggregated groupBy on string_id, no
+    * self-join: collect_set is bounded (2-3 keys on a genuine 64-bit hash
+    * collision; anything larger is corruption and still worth printing). */
   def internIdCollisions(interned: DataFrame): DataFrame =
     interned.groupBy(col("string_id"))
-      .agg(countDistinct(col("match_key")).as("n_keys"))
-      .filter(col("n_keys") > 1)
+      .agg(sort_array(collect_set(col("match_key"))).as("keys"))
+      .filter(size(col("keys")) > 1)
 
   /** LOUD sink-time guard over [[internIdCollisions]] — the streaming
     * counterpart of the batch `assignStringIds` repair+assert (the stream
     * cannot repair, because colliding keys live in GroupState groups that
     * never see each other, so it must FAIL and hand the re-key to a
     * maintenance window). Call per ingest window, e.g. from foreachBatch
-    * after appending the micro-batch to the sink table: the check is one
-    * partial-aggregated groupBy on string_id over the sink — skew-free
-    * and tiny next to the ingest itself. Throws IllegalStateException
-    * naming the fused ids and their keys. */
+    * after appending the micro-batch to the sink table: the check is
+    * skew-free and tiny next to the ingest itself. Throws
+    * IllegalStateException naming the fused ids and their keys. */
   def assertNoInternCollisions(interned: DataFrame): Unit = {
-    // one aggregate, no self-join: collect_set is bounded (2-3 keys on a
-    // genuine 64-bit hash collision; anything larger is corruption and
-    // still worth printing)
-    val hits = interned.groupBy(col("string_id"))
-      .agg(sort_array(collect_set(col("match_key"))).as("keys"))
-      .filter(size(col("keys")) > 1)
-      .limit(3).collect()
+    val hits = internIdCollisions(interned).limit(3).collect()
     if (hits.nonEmpty)
       throw new IllegalStateException(
         "cross-key string-id fusion detected (id-hash collision): " +

@@ -76,6 +76,39 @@ class ErPipelineSpec extends AnyFunSuite {
       s"variant forest should resolve in <=3 pointer-jump rounds, took ${fm.size}")
   }
 
+  test("forestLabels equals a sequential union-find on random forests at 2 and 8 " +
+      "partitions") {
+    // each forest: 30 isolated vertices, a 17-vertex chain (four rounds)
+    // and a random recursive forest whose roots are drawn at random, so
+    // most roots are not their tree's minimum — the case the min-per-root
+    // step exists for. Every edge endpoint is a vertex.
+    def forest(seed: Long): (Seq[Long], Seq[(Long, Long)]) = {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((0L until 5000L).toVector).take(450)
+      val chain = ids.slice(30, 47)
+      val rest = ids.drop(47)
+      val treeEdges = rest.indices.collect {
+        case i if i > 0 && rnd.nextInt(4) != 0 => rest(i) -> rest(rnd.nextInt(i))
+      }
+      (ids, chain.zip(chain.tail) ++ treeEdges)
+    }
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (seed <- 1L to 3L; parts <- Seq("2", "8")) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        val (ids, edges) = forest(seed)
+        val want = graft.ops.UnionFind.labels(ids, edges)
+        val roots = ids.toSet -- edges.map(_._1)
+        assert(roots.exists(r => want(r) != r), s"seed $seed: every root is its tree minimum")
+        val (got, m) = Pipeline.forestLabels(ids.map(Tuple1(_)).toDF("id"),
+          edges.toDF("src", "dst"), Pipeline.Config(workDir = freshDir(s"forest_prop_$seed")))
+        assert(got.as[(Long, Long)].collect().toMap == want,
+          s"seed $seed at $parts partitions: forest labels diverge from a union-find")
+        assert(m.size >= 3, s"seed $seed: the chain must take 3+ rounds, took ${m.size}")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("extraction is byte-identical per url regardless of partitioning") {
     val pages1 = Corpus.pages(spark, 200, 50, 42L).toDF().repartition(1)
     val pages2 = Corpus.pages(spark, 200, 50, 42L).toDF().repartition(17)
@@ -444,6 +477,34 @@ class ErPipelineSpec extends AnyFunSuite {
     assert(shared(30L, 31L).isEmpty && sharedPhon(30L, 31L).nonEmpty,
       "30/31: phonetic-only pair")
     assert(Set((10L, 11L), (20L, 21L), (30L, 31L)).subsetOf(ref.pairs))
+  }
+
+  test("forestLabels keeps its labels in one table that every run overwrites") {
+    assume(graft.ops.TableIO.format == "parquet")
+    val dir = freshDir("forest_labels_table")
+    val cfg = Pipeline.Config(workDir = dir)
+    def chain(n: Long) = ((1L to n).map(Tuple1(_)).toDF("id"),
+      (1L until n).map(i => (i, i + 1)).toDF("src", "dst"))
+    val (v17, e17) = chain(17)
+    Pipeline.forestLabels(v17, e17, cfg)
+    val (v3, e3) = chain(3)
+    val (labels, _) = Pipeline.forestLabels(v3, e3, cfg)
+    val want = Set((1L, 1L), (2L, 1L), (3L, 1L))
+    def table = spark.read.parquet(s"$dir/labels")
+    assert(table.as[(Long, Long)].collect().toSet == want,
+      "the labels table must hold exactly the last run's labels")
+    assert(labels.as[(Long, Long)].collect().toSet == want)
+    val names = new java.io.File(dir).list().toSet
+    assert(!names.exists(_.startsWith("labels_iter_")), names)
+    // the part files carry the writing job's id: new names, a new write
+    def parts = new java.io.File(s"$dir/labels").list().filter(_.startsWith("part-")).toSet
+    val written = parts
+    val (resumed, m) = Pipeline.forestLabels(v3, e3, cfg.copy(resume = true))
+    assert(m.isEmpty, "the 3-chain's checkpoint is converged")
+    assert(parts.nonEmpty && (parts & written).isEmpty, "resume must rewrite the labels table")
+    assert(resumed.inputFiles.forall(_.contains(s"$dir/labels/")), resumed.inputFiles.toSeq)
+    assert(table.as[(Long, Long)].collect().toSet == want)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("labels_iter_")))
   }
 
   test("forestLabels resume skips incomplete iteration directories") {

@@ -18,43 +18,6 @@ class LinkGraphSpec extends AnyFunSuite {
       "unclosed tag at EOF yields nothing")
   }
 
-  test("pageRankFp production loop is bit-identical to the q49 lazy compose") {
-    import spark.implicits._
-    val n = 500L
-    val v = (0L until n).toDF("id")
-    val e = v.select(col("id").as("src"), explode(array(
-      (col("id") + 97L) % n, (col("id") + 194L) % n,
-      (col("id") + 291L) % n)).as("dst"))
-    // checkpointEvery=2 exercises two lineage cuts inside the 5 iterations
-    val prod = LinkGraph.pageRankFp(v, e, iterations = 5, checkpointEvery = 2)
-      .select(col("id").as("doc_id"), col("rank_fp"))
-    val lazyCompose = LinkGraph.q49PageRank(spark, "/root/testdata/sf0.001")
-    assert(prod.exceptAll(lazyCompose).isEmpty &&
-      lazyCompose.exceptAll(prod).isEmpty,
-      "production loop diverges from the lazy 5-iteration compose")
-    Caches.releaseAll()
-  }
-
-  test("pageRankFloat tracks the fixed-point ranks and handles dangling vertices") {
-    import spark.implicits._
-    // non-regular graph WITH a dangling vertex (9 has no outlinks) and a
-    // hub (0 receives from everyone)
-    val v = (0L to 9L).toDF("id")
-    val e = (1L to 9L).map(i => (i, 0L)) ++ Seq((0L, 1L), (0L, 2L), (3L, 4L))
-    val fp = LinkGraph.pageRankFp(v, e.toDF("src", "dst"), 10, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fl = LinkGraph.pageRankFloat(v, e.toDF("src", "dst"), 10, 0.85, 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(fp.keySet == (0L to 9L).toSet && fl.keySet == fp.keySet)
-    // double vs 1e-12 fixed point: agree to well under one fixed-point ulp
-    // accumulation (floor bleeds at most iterations × vertices units)
-    for (id <- 0L to 9L)
-      assert(math.abs(fl(id) - fp(id) / 1e12) < 1e-9,
-        s"vertex $id: float ${fl(id)} vs fp ${fp(id) / 1e12}")
-    assert(fl(0L) == fl.values.max, "the hub must rank highest")
-    Caches.releaseAll()
-  }
-
   test("q49 fixed-point PageRank: every rank positive, total mass sane") {
     val out = LinkGraph.q49PageRank(spark, "/root/testdata/sf0.001")
     val n = 500L

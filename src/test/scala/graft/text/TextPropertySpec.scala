@@ -134,29 +134,37 @@ class TextPropertySpec extends AnyFunSuite {
     assert(boosted > pairs.size / 10, s"only $boosted pairs got a prefix boost")
   }
 
+  /** A word of 0–20 codepoints drawn from `abc`, one in nine a space. */
+  private def wordOver(abc: Seq[String]): Gen[Vector[String]] =
+    Gen.choose(0, 20).flatMap(Gen.listOfN(_,
+      Gen.frequency(8 -> Gen.oneOf(abc), 1 -> Gen.const(" ")))).map(_.toVector)
+
+  /** A word over `abc` and a copy with 0–3 typos: an insertion, a
+    * deletion, a transposition of two neighbours, or (at the last
+    * codepoint) a substitution that ends the word. */
+  private def typoPair(abc: Seq[String]): Gen[(String, String)] = for {
+    a <- wordOver(abc)
+    edits <- Gen.choose(0, 3)
+    positions <- Gen.listOfN(edits, Gen.choose(0, 1000))
+    chars <- Gen.listOfN(edits, Gen.oneOf(abc))
+  } yield (a.mkString, positions.zip(chars).foldLeft(a) { case (w, (p, c)) =>
+    if (w.isEmpty) Vector(c)
+    else {
+      val i = p % w.length
+      p % 3 match {
+        case 0 => w.patch(i, Seq(c), 0)
+        case 1 => w.patch(i, Nil, 1)
+        case _ if i + 1 < w.length => w.updated(i, w(i + 1)).updated(i + 1, w(i))
+        case _ => w.take(i) :+ c
+      }
+    }
+  }.mkString)
+
   test("property: Sift4.distCodepoints is invariant under an injective " +
       "renaming of codepoints (Cyrillic and CJK onto ASCII)") {
     val script = ('а' to 'я') ++ "水火木金土山川田中日月人口女子大".toSeq
-    val scriptWord = Gen.choose(0, 20).flatMap(Gen.listOfN(_,
-      Gen.frequency(8 -> Gen.oneOf(script), 1 -> Gen.const(' ')))).map(_.mkString)
-    val scriptPair = for {
-      a <- scriptWord
-      edits <- Gen.choose(0, 3)
-      positions <- Gen.listOfN(edits, Gen.choose(0, 1000))
-      chars <- Gen.listOfN(edits, Gen.oneOf(script))
-    } yield (a, positions.zip(chars).foldLeft(a) { case (w, (p, c)) =>
-      if (w.isEmpty) c.toString
-      else {
-        val i = p % w.length
-        p % 3 match {
-          case 0 => w.substring(0, i) + c + w.substring(i)
-          case 1 => w.substring(0, i) + w.substring(i + 1)
-          case _ if i + 1 < w.length => // transposition
-            w.substring(0, i) + w(i + 1) + w(i) + w.substring(i + 2)
-          case _ => w.substring(0, i) + c
-        }
-      }
-    })
+    val scriptWord = wordOver(script.map(_.toString)).map(_.mkString)
+    val scriptPair = typoPair(script.map(_.toString))
     val ascii = (('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9')).toVector
     val pairs = sample(scriptPair, 3000, 7) ++ sample(Gen.zip(scriptWord, scriptWord), 1000, 8)
     for (seed <- 1 to 3) {
@@ -173,5 +181,34 @@ class TextPropertySpec extends AnyFunSuite {
     }
     val nonZero = pairs.count { case (a, b) => Sift4.distCodepoints(a, b, 3, 0) > 0 }
     assert(nonZero > pairs.size / 2, s"only $nonZero of ${pairs.size} pairs differ")
+  }
+
+  test("property: Sift4.distCodepoints lies within the length bounds, is 0 only " +
+      "on equal strings, and the ER band keeps every in-band result") {
+    val latin = ('a' to 'z').map(_.toString)
+    val cyrillic = ('а' to 'я').map(_.toString)
+    // CJK from the BMP and from plane 2 (two UTF-16 units each)
+    val cjk = "水火木金土山川田中日月人口女子大𠀀𠀋𠂉𠃌".codePoints().toArray.toSeq
+      .map(Character.toString)
+    val pairs = Seq(latin, cyrillic, cjk, latin ++ cyrillic ++ cjk).zipWithIndex.flatMap {
+      case (abc, k) =>
+        val word = wordOver(abc).map(_.mkString)
+        sample(typoPair(abc), 3000, 20 + k) ++ sample(Gen.zip(word, word), 1000, 30 + k)
+    }
+    var inBand = 0
+    pairs.foreach { case (a, b) =>
+      val (la, lb) = (a.codePointCount(0, a.length), b.codePointCount(0, b.length))
+      val d = Sift4.distCodepoints(a, b, 3, 0)
+      assert(math.abs(la - lb) <= d && d <= math.max(la, lb), s"'$a' vs '$b': $d")
+      assert(Sift4.distCodepoints(a, a, 3, 0) == 0, s"'$a'")
+      assert((d == 0) == (a == b), s"'$a' vs '$b': $d")
+      val band = math.min(la, lb) / 2 + 2
+      if (d <= band) {
+        inBand += 1
+        assert(Sift4.distCodepoints(a, b, 3, band) == d, s"'$a' vs '$b' under band $band")
+      }
+    }
+    assert(inBand > pairs.size / 3 && inBand < pairs.size,
+      s"$inBand of ${pairs.size} pairs inside the band")
   }
 }
