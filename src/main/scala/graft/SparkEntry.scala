@@ -17,8 +17,9 @@ object SparkEntry {
 
   /** Flagship: the entity-resolution pipeline end-to-end on a small
     * deterministic synthetic corpus — mention extraction → interning →
-    * trigram+phonetic blocking → JW/Levenshtein scoring → union-find
-    * clustering. Returns one row per cluster with its size. */
+    * trigram+phonetic blocking → JW/Levenshtein scoring → forest
+    * clustering (the production `Pipeline.forestLabels`). Returns one row
+    * per cluster with its size. */
   def entry(spark: SparkSession): DataFrame = {
     val cfg = er.Pipeline.Config(
       nPages = 300, nEntities = 60, workDir = "/tmp/graft_entry")
@@ -27,11 +28,10 @@ object SparkEntry {
     val (strings, membership) = er.Pipeline.internStrings(mentions)
     val (pairs, _) = er.Pipeline.candidatePairs(strings, cfg)
     val accepted = er.Pipeline.matchEdges(pairs, strings, cfg)
-    // cluster the (small, interned) string graph, then expand labels to
+    // cluster the (small, interned) string forest, then expand labels to
     // mentions through membership — mention and string id spaces stay
     // disjoint by design (see Pipeline.internStrings)
-    val labels = Components.connectedComponents(
-      strings.select(col("string_id").as("id")), accepted)
+    val (labels, _) = er.Pipeline.forestLabels(strings.select(col("string_id")), accepted, cfg)
     labels.join(membership.select(col("string_id").as("id"), col("mention_id")), Seq("id"))
       .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
   }

@@ -279,11 +279,13 @@ object Pipeline {
       .otherwise(raise_error(lit("phonetic key longer than 7 bytes")).cast("long"))
 
     // one ownership set per string: its kept prefix keys K(s) and its
-    // kept phonetic keys Q(s), in one key space ordered K before Q
+    // kept phonetic keys Q(s), in one key space ordered K before Q. The
+    // kept keys are distinct, and a left-semi join pins AQE's broadcast
+    // build side to them, whichever stage finishes first
     val own = prefixed
-      .join(kept.select($"key"), Seq("key")) // drops singleton + capped keys
+      .join(kept.select($"key"), Seq("key"), "left_semi") // drops singleton + capped keys
       .select($"string_id", $"key".cast("long").as("key"))
-      .unionByName(phonKeyed.join(phonKept.select($"pkey"), Seq("pkey"))
+      .unionByName(phonKeyed.join(phonKept.select($"pkey"), Seq("pkey"), "left_semi")
         .select($"string_id", phonId.as("key")))
       .groupBy($"string_id")
       .agg(collect_list($"key").as("keys"))
@@ -553,9 +555,10 @@ object Pipeline {
     * level: a depth-d tree resolves in ceil(log2 d) rounds over one row
     * per satellite (real variant forests: d ≤ 3), and the component label
     * (min member id, equal to a sequential union-find's — ErPipelineSpec)
-    * is one partial-aggregating groupBy at the end.
+    * is one window at the end, `min(id) over (partition by root)`.
     *
-    * Each round checkpoints the parent map to `parents_iter_k` under
+    * Rounds and window run at [[Components.withLoopWidth]]. Each
+    * round checkpoints the parent map to `parents_iter_k` under
     * cfg.workDir (lineage cut, crash resume via cfg.resume, per-partition
     * metrics JSONL when cfg.collectStats) and the loop fails loudly after
     * cfg.maxIterations rounds; the labels go to the one table
@@ -568,45 +571,24 @@ object Pipeline {
       cfg: Config): (DataFrame, Vector[IterationMetrics]) = {
     val spark = vertices.sparkSession
     import spark.implicits._
-
-    // Size the loop's shuffle width from the DATA, not the session: the
-    // match graph lives over interned strings, orders of magnitude below
-    // the corpus-sized stages the session width is set for, and every
-    // round pays per-task scheduling and checkpoint-file cost at that
-    // width (measured 40 s → 16 s at 500k pages going 64 → 16
-    // partitions). ~2M rows per partition, with a floor of two full
-    // waves per core so single-wave stages bin-pack.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val minParts = 2 * spark.sparkContext.defaultParallelism
     val par0 = edges.select($"src".as("id"), $"dst".as("par"))
-    val parRows = par0.count()
-    val loopParts = math.max(minParts.toLong, math.min(
-      math.max(sessionParts, minParts).toLong,
-      parRows / 2000000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     val dir = graft.ops.Components.WorkDir(
       spark, cfg.workDir, cfg.resume, cfg.maxIterations, cfg.collectStats)
-    val (par, metrics) =
-      try graft.ops.Components.pointerDoubling(par0, Some(dir))
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-
-    // assemble: every vertex's root (its own id for a tree root or an
-    // isolated vertex), one min member id per root, joined back on the
-    // root. The groupBy's partial aggregation absorbs root skew map-side.
-    val withRoot = vertices.select(col(vertices.columns.head).as("id"))
-      .join(par, Seq("id"), "left")
-      .select($"id", coalesce($"par", $"id").as("root"))
-    val labels = withRoot
-      .join(withRoot.groupBy($"root").agg(min($"id").as("label")), Seq("root"))
-      .select($"id", $"label")
-    // materialize the final labels once as the work dir's labels table;
-    // the read-back cuts the assembly lineage before the corpus-sized
-    // membership-expand join reuses the frame. The assembly joins run at
-    // session width for parallelism, but the label table is
-    // string-sized: coalesce to the loop width merges post-join without
-    // reshuffling instead of committing near-empty files
-    graft.ops.TableIO.write(labels.coalesce(loopParts), dir.labels)
+    val metrics = graft.ops.Components.withLoopWidth(spark, par0.count()) {
+      val (par, metrics) = graft.ops.Components.pointerDoubling(par0, Some(dir))
+      // every vertex's root (its own id for a tree root or an isolated
+      // vertex) and one min member id per root. A whole tree lands in one
+      // task, as it would in a groupBy's join back on the root; a small
+      // parent map is broadcast, so the vertices are shuffled once.
+      val labels = vertices.select(col(vertices.columns.head).as("id"))
+        .join(par, Seq("id"), "left")
+        .select($"id", min($"id").over(org.apache.spark.sql.expressions.Window
+          .partitionBy(coalesce($"par", $"id"))).as("label"))
+      // the read-back cuts the assembly lineage before the corpus-sized
+      // membership-expand join reuses the frame
+      graft.ops.TableIO.write(labels, dir.labels)
+      metrics
+    }
     (graft.ops.TableIO.read(spark, dir.labels), metrics)
   }
 

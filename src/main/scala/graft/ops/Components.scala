@@ -11,7 +11,8 @@ import graft.{functions => gf}
   * parent map ([[pointerDoubling]]). [[connectedComponents]] feeds it
   * min-neighbor forests level by level for arbitrary edge sets;
   * er.Pipeline.forestLabels feeds it the match forest directly with
-  * resumable parquet checkpoints ([[WorkDir]]).
+  * resumable parquet checkpoints ([[WorkDir]]). Both size their loop
+  * by one rule here ([[withLoopWidth]]).
   */
 object Components {
   import Tables.load
@@ -26,8 +27,9 @@ object Components {
     * crash when `resume`), appends per-partition metrics JSONL when
     * `collectStats`, and the loop fails loudly after `maxIterations`
     * rounds. The final labels of a run go to the one table [[labels]],
-    * which every run overwrites. A fresh run first removes the previous
-    * run's `parents_iter_*` and labels table, so a later resume cannot
+    * which every run overwrites, written at the rounds' loop width. A
+    * fresh run first removes the previous run's `parents_iter_*` and
+    * labels table, so a later resume cannot
     * pick up an older run's rounds and a failed run leaves no stale
     * labels behind. The work dir goes through the Hadoop filesystem —
     * java.io.File would silently no-op on hdfs:// and s3a:// paths. */
@@ -95,6 +97,26 @@ object Components {
   private[graft] object WorkDir {
     /** The labels table of the work dir at `path`. */
     def labels(path: String): String = s"$path/labels"
+  }
+
+  /** The shuffle width of a pointer-doubling loop over `rows` input rows,
+    * from the DATA: a match graph is far below the corpus-sized stages
+    * the session width is set for, and every round pays per-task
+    * scheduling and checkpoint files at its width (40 s → 16 s at 500k
+    * pages going 64 → 16 partitions; 32 near-empty tasks on a 100-row
+    * graph cost ~1 s per round). One partition per ~512 rows up to two
+    * per core, or ~2M rows each up to the session width. */
+  private[graft] def loopWidth(rows: Long, cores: Int, sessionWidth: Int): Int =
+    math.max(math.min(2L * cores, rows / 512L + 1L),
+      math.min(sessionWidth.toLong, rows / 2000000L + 1L)).toInt
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to the
+    * [[loopWidth]] of `rows`, and restores the session's width after. */
+  private[graft] def withLoopWidth[T](spark: SparkSession, rows: Long)(body: => T): T = {
+    def setWidth(w: String): Unit = spark.conf.set("spark.sql.shuffle.partitions", w)
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    setWidth(loopWidth(rows, spark.sparkContext.defaultParallelism, sessionWidth.toInt).toString)
+    try body finally setWidth(sessionWidth)
   }
 
   /** Pointer doubling to fixpoint: `par0` is a parent map (id, par)
@@ -166,23 +188,12 @@ object Components {
     * corpus-sized. ComponentsSpec checks it against a sequential
     * union-find. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
     val und = edges.select(col("src").as("a"), col("dst").as("b"))
       .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
       .persist() // scoped: released in the finally below, not at harness drain
-    // Size the loop's shuffle width from the DATA: big graphs get ≥ cores
-    // partitions (~2M rows each), tiny ones only as many as have ≥~512
-    // rows of work — 32 near-empty tasks per stage on a 100-row graph cost
-    // ~1 s per round of pure scheduling. The count also materializes the
-    // persisted edges.
+    // the count sizes the loop and materializes the persisted edges
     val edgeRows = und.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.min(sessionParts.toLong, math.max(
-      edgeRows / 2000000L + 1L,
-      math.min(spark.sparkContext.defaultParallelism.toLong, edgeRows / 512L + 1L))).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    try withLoopWidth(vertices.sparkSession, edgeRows) {
       var residual = und
       var labels = Option.empty[DataFrame] // (id, par): non-root touched vertices
       var more = edgeRows > 0L
@@ -208,10 +219,7 @@ object Components {
         vertices.select(col("id"))
           .join(l.withColumnRenamed("par", "touched_label"), Seq("id"), "left")
           .select(col("id"), coalesce(col("touched_label"), col("id")).as("label")))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      und.unpersist()
-    }
+    } finally und.unpersist()
   }
 
   /** Incremental cluster maintenance: merge a batch of NEW edges into an

@@ -81,10 +81,12 @@ class ErPipelineSpec extends AnyFunSuite {
     // each forest: 30 isolated vertices, a 17-vertex chain (four rounds)
     // and a random recursive forest whose roots are drawn at random, so
     // most roots are not their tree's minimum — the case the min-per-root
-    // step exists for. Every edge endpoint is a vertex.
+    // step exists for. Every edge endpoint is a vertex. Over 2 048 parent
+    // rows, so the loop width rule gives the rounds more than one
+    // partition.
     def forest(seed: Long): (Seq[Long], Seq[(Long, Long)]) = {
       val rnd = new scala.util.Random(seed)
-      val ids = rnd.shuffle((0L until 5000L).toVector).take(450)
+      val ids = rnd.shuffle((0L until 30000L).toVector).take(3000)
       val chain = ids.slice(30, 47)
       val rest = ids.drop(47)
       val treeEdges = rest.indices.collect {
@@ -97,6 +99,9 @@ class ErPipelineSpec extends AnyFunSuite {
       for (seed <- 1L to 3L; parts <- Seq("2", "8")) {
         spark.conf.set("spark.sql.shuffle.partitions", parts)
         val (ids, edges) = forest(seed)
+        assert(edges.size >= 2048, s"seed $seed: ${edges.size} parent rows")
+        assert(graft.ops.Components.loopWidth(edges.size.toLong,
+          spark.sparkContext.defaultParallelism, parts.toInt) > 1)
         val want = graft.ops.UnionFind.labels(ids, edges)
         val roots = ids.toSet -- edges.map(_._1)
         assert(roots.exists(r => want(r) != r), s"seed $seed: every root is its tree minimum")

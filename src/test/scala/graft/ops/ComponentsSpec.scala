@@ -135,4 +135,18 @@ class ComponentsSpec extends AnyFunSuite {
           es.map { case (a, b) => (a + offset(k), b + offset(k)) } })
     }
   }
+
+  test("loopWidth sizes every pointer-doubling loop by one rule") {
+    // (rows, cores, session width) -> width: tiny graphs get one task,
+    // small ones one per ~512 rows up to two waves per core (17 112 is
+    // the er_batch forest at seed 42), huge ones ~2M rows per partition
+    // up to the session width
+    val points = Seq(
+      (100L, 4, 4) -> 1, (3000L, 4, 4) -> 6, (17112L, 4, 4) -> 8,
+      (100000000L, 4, 4) -> 8,
+      (100000000L, 16, 64) -> 51, (1000000000L, 16, 64) -> 64)
+    for (((rows, cores, session), want) <- points)
+      assert(Components.loopWidth(rows, cores, session) == want,
+        s"rows=$rows cores=$cores session=$session")
+  }
 }

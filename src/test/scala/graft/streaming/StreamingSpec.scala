@@ -167,6 +167,44 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed.count() > 0)
   }
 
+  test("property: streaming blocking equals the batch pair set under shuffled arrival " +
+      "orders") {
+    val pages = graft.er.Corpus.pages(spark, 300, 60, 42L).toDF()
+    val mentions = graft.er.Pipeline.extractMentions(pages)
+    val (strings, _) = graft.er.Pipeline.internStrings(mentions)
+    val rows = strings.select($"string_id", $"match_key").as[(Long, String)].collect().toVector
+    val batch = batchPairsAllKeys(rows.toDF("string_id", "match_key"))
+      .as[(Long, Long)].collect().toSet
+    val streamed = for (seed <- Seq(1L, 2L, 3L)) yield {
+      // the strings in one seeded order, cut into four files whose
+      // modification times lie a minute apart: the file source takes the
+      // oldest first, one file per micro-batch
+      val d = new java.io.File(s"/tmp/graft_stream_order_$seed")
+      org.apache.commons.io.FileUtils.deleteQuietly(d)
+      d.mkdirs()
+      val order = new scala.util.Random(seed).shuffle(rows)
+      for ((chunk, k) <- order.grouped((order.size + 3) / 4).zipWithIndex) {
+        val tmp = new java.io.File(s"${d.getPath}_part_$k")
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+        chunk.toDF("string_id", "match_key").coalesce(1).write.parquet(tmp.getPath)
+        val file = new java.io.File(d, s"batch_$k.parquet")
+        java.nio.file.Files.move(
+          tmp.listFiles().find(_.getName.endsWith(".parquet")).get.toPath, file.toPath)
+        file.setLastModified(1700000000000L + 60000L * k)
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+      }
+      val stream = spark.readStream.schema(spark.read.parquet(d.getPath).schema)
+        .option("maxFilesPerTrigger", "1").parquet(d.getPath)
+      StreamOps.runToMemory(spark,
+        StreamOps.incrementalBlocking(spark, stream, maxBlock = 10000).toDF(),
+        s"order_out_$seed", OutputMode.Append())
+      spark.table(s"order_out_$seed").select($"src", $"dst").as[(Long, Long)].collect().toSet
+    }
+    assert(batch.nonEmpty)
+    for ((got, seed) <- streamed.zip(1 to 3))
+      assert(got == batch, s"order $seed: streamed ${got.size} pairs, batch ${batch.size}")
+  }
+
   test("streaming scored pairs carry the exact batch accept verdicts") {
     val pages = graft.er.Corpus.pages(spark, 300, 60, 42L).toDF()
     val mentions = graft.er.Pipeline.extractMentions(pages)
