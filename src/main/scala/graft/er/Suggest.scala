@@ -48,11 +48,6 @@ object Suggest {
   val MaxTokens = 8 // types.h:142
   val MaxPhraseLen = 4
 
-  private def isNumToken(t: Column): Column = // normalize.h:192-206
-    lit(2) * length(regexp_replace(t, "[^0-9]", "")) >= length(t)
-
-  private def byteLen(c: Column): Column = octet_length(c)
-
   /** Entity `areas` column type: MULTI-LANGUAGE names per area
     * (typeahead.h:88-90 area_names_/area_name_lang_ — one name per
     * discovered language; the fold takes the best across the user's
@@ -185,7 +180,7 @@ object Suggest {
           struct(
             concat_ws(" ", words).as("s"),
             ((pow(lit(2.0d), len) - 1) * pow(lit(2.0d), frm - 1)).cast("long").as("bits"),
-            forall(words, isNumToken).as("is_num"))
+            forall(words, graft.ops.Extras.isNumToken).as("is_num"))
         })))
     }
     // canonical match keys on BOTH sides replace the reference's
@@ -213,9 +208,6 @@ object Suggest {
     val qGrams = q
       .select(col("query_id"), gf.trigram_strings(col("norm")).as("tris"))
       .select(col("query_id"), size(col("tris")).as("n_q"), explode(col("tris")).as("gram"))
-    // min-match-count from the QUERY's n-gram count alone — the reference
-    // formula (typeahead.cc:409): mmc = 2 + n_q / (4 + n_q / 10)
-    val mmc = lit(2) + floor(col("n_q") / (lit(4) + floor(col("n_q") / lit(10))))
     // ONE exchange on query_id serves the (query_id, entity_id) count and
     // the K1 window: hash(query_id) satisfies both clustered
     // distributions, so the count aggregates after the exchange instead
@@ -227,8 +219,9 @@ object Suggest {
       .groupBy(col("query_id"), col("entity_id"))
       .agg(count(lit(1)).as("shared"), first(col("n_q")).as("n_q"),
         first(col("n_grams")).as("n_grams"))
-      .filter(col("shared") >= mmc.cast("long") &&
-        (col("shared") * col("shared")).cast("double") >= lit(0.17) * col("n_q") * col("n_grams"))
+      // the min-match-count comes from the QUERY's gram count alone
+      .filter(col("shared") >= graft.ops.TextOps.minMatchCount(col("n_q")) &&
+        graft.ops.TextOps.cosineCut(col("shared"), col("n_q"), col("n_grams")))
       .withColumn("cos2",
         (col("shared") * col("shared")).cast("double") / (col("n_q") * col("n_grams")))
       .withColumn("crnk", row_number().over(
@@ -258,29 +251,20 @@ object Suggest {
   }
 
   /** The entity side of candidate generation, which depends on the entity
-    * table alone (the import-time index of typeahead.cc:317-337):
-    * `postings(gram, entity_id, n_grams)`, one row per trigram of a
-    * name's canonical match key, without the grams of more than
-    * `ops.Dedup.MaxBlock` names (the hot-gram cap that bounds each
-    * query's posting walk). It is persisted only when it is not cached
-    * yet (`cached`): Spark's CacheManager matches the plan of a later
-    * build over the same entity frame to that copy. A prepared plan
-    * builds the index once; each bound call reads the cached copy
-    * through the CacheManager. The persist goes through `ops.Caches`: a
-    * harness that drains it after each query (Verify, Bench) releases
-    * the index with the query's other frames, and a caller that never
-    * drains it keeps one index per entity table. */
-  private def entityIndex(entities: DataFrame): DataFrame = {
-    val nameGrams = entities
-      .select(col("entity_id"), gf.trigram_strings(gf.match_key(col("name"))).as("tris"))
-      .select(col("entity_id"), size(col("tris")).as("n_grams"),
-        explode(col("tris")).as("gram"))
-    val keptGrams = nameGrams.groupBy(col("gram"))
-      .agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt") <= graft.ops.Dedup.MaxBlock)
-      .select(col("gram"))
-    cached(nameGrams.join(keptGrams, Seq("gram")))
-  }
+    * table alone: the [[graft.ops.TextOps.postings]] index
+    * `(gram, entity_id, n_grams)` over each name's canonical match key,
+    * under the hot-gram cap that bounds each query's posting walk. It is
+    * persisted only when it is not cached yet (`cached`): Spark's
+    * CacheManager matches the plan of a later build over the same entity
+    * frame to that copy. A prepared plan builds the index once; each
+    * bound call reads the cached copy through the CacheManager. The
+    * persist goes through `ops.Caches`: a harness that drains it after
+    * each query (Verify, Bench) releases the index with the query's other
+    * frames, and a caller that never drains it keeps one index per entity
+    * table. */
+  private def entityIndex(entities: DataFrame): DataFrame =
+    cached(graft.ops.TextOps.postings(
+      entities.select(col("entity_id"), gf.match_key(col("name")).as("key")), minIds = 1))
 
   private def cached(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) graft.ops.Caches.persist(df) else df
@@ -355,7 +339,7 @@ object Suggest {
       sequence(lit(1), size(col("tokens"))), lit(0.0d),
       (acc, i) => acc + when(
         finalMask.bitwiseAND(pow(lit(2.0d), i - 1).cast("long")) === 0,
-        byteLen(element_at(col("tokens"), i)).cast("double") * 3.0d).otherwise(0.0d))
+        octet_length(element_at(col("tokens"), i)).cast("double") * 3.0d).otherwise(0.0d))
     val areaBonus = col("ar")("dist") -
       lit(2.0d) * bit_count(col("ar")("amask")).cast("double") // X12 per-area -2
     val hnBonus = when(col("h").isNotNull,

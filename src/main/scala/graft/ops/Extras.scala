@@ -63,11 +63,6 @@ object Extras {
       round(category + pop + langScore, 6).as("score"))
   }
 
-  /** J5/J6 spatial cell join: customers as points, suppliers as sites with
-    * deterministic synthetic coordinates; sites replicated into their 3×3
-    * neighbor cells, points probe one cell; exact squared-degree-distance
-    * range predicate (IEEE-exact — no trig on the filter path) plus
-    * haversine (X13) and distance-bias tiers (X10) as score columns. */
   /** Deterministic synthetic coordinates shared by q34/q40/q52. */
   private[ops] def coords(df: DataFrame, key: String, idName: String): DataFrame =
     df.select(col(key).as(idName),
@@ -94,17 +89,45 @@ object Extras {
     siteCells.join(broadcast(kept), Seq("cla", "clo"))
   }
 
-  def q34SpatialCellJoin(spark: SparkSession, dir: String): DataFrame = {
-    val pts = coords(load(spark, dir, "customer"), "c_custkey", "id")
+  /** Each point's own one-degree cell (`cla`, `clo`) from its `lat`/`lng`
+    * — the probe side of the cell index. */
+  private[ops] def probeCells(points: DataFrame): DataFrame =
+    points
       .withColumn("cla", floor(col("lat")).cast("int"))
       .withColumn("clo", floor(col("lng")).cast("int"))
-    val sites = capCells(
-      coords(load(spark, dir, "supplier"), "s_suppkey", "site_id")
-        .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-        .withColumn("dy", explode(array(lit(-1), lit(0), lit(1))))
-        .select(col("site_id"), col("lat").as("s_lat"), col("lng").as("s_lng"),
-          (floor(col("lat")) + col("dx")).cast("int").as("cla"),
-          (floor(col("lng")) + col("dy")).cast("int").as("clo")))
+
+  /** Each site copied into the 3×3 one-degree cells (`cla`, `clo`) around
+    * its own, then hot cells dropped ([[capCells]]) — the site side of the
+    * cell index: a point within one degree of a site in both coordinates
+    * probes one of its cells, so a point needs its own cell only. */
+  private[ops] def siteCells(sites: DataFrame, lat: String, lng: String): DataFrame = {
+    val offset = explode(array(lit(-1), lit(0), lit(1)))
+    capCells(sites
+      .withColumn("dx", offset).withColumn("dy", offset)
+      .withColumn("cla", (floor(col(lat)) + col("dx")).cast("int"))
+      .withColumn("clo", (floor(col(lng)) + col("dy")).cast("int"))
+      .drop("dx", "dy"))
+  }
+
+  /** Customers as probes (id, lat, lng, cla, clo), shared by q34, q40,
+    * q52 and q58. */
+  private[ops] def probePoints(spark: SparkSession, dir: String): DataFrame =
+    probeCells(coords(load(spark, dir, "customer"), "c_custkey", "id"))
+
+  /** Suppliers as sites (site_id, s_lat, s_lng), shared by q34, q40, q52
+    * and q58. */
+  private[ops] def supplierSites(spark: SparkSession, dir: String): DataFrame =
+    coords(load(spark, dir, "supplier"), "s_suppkey", "site_id")
+      .toDF("site_id", "s_lat", "s_lng")
+
+  /** J5/J6 spatial cell join: customers as points, suppliers as sites with
+    * deterministic synthetic coordinates; sites replicated into their 3×3
+    * neighbor cells, points probe one cell; exact squared-degree-distance
+    * range predicate (IEEE-exact — no trig on the filter path) plus
+    * haversine (X13) and distance-bias tiers (X10) as score columns. */
+  def q34SpatialCellJoin(spark: SparkSession, dir: String): DataFrame = {
+    val pts = probePoints(spark, dir)
+    val sites = siteCells(supplierSites(spark, dir), "s_lat", "s_lng")
     val dlat = col("lat") - col("s_lat")
     val dlng = col("lng") - col("s_lng")
     val dist2 = dlat * dlat + dlng * dlng
@@ -133,9 +156,7 @@ object Extras {
     * expression (HOF lambdas are interpreted per row — ~9× slower on the
     * 67M-pair sf0.1 candidate stream). */
   def q40PointInPolygon(spark: SparkSession, dir: String): DataFrame = {
-    val pts = coords(load(spark, dir, "customer"), "c_custkey", "id")
-      .withColumn("cla", floor(col("lat")).cast("int"))
-      .withColumn("clo", floor(col("lng")).cast("int"))
+    val pts = probePoints(spark, dir)
     def radius(mult: Int): Column =
       lit(0.05) + ((col("site_id") * mult) % 20).cast("double") / 100.0
     val ring = array( // irregular diamond: 4 vertices, distinct radii
@@ -143,15 +164,8 @@ object Extras {
       struct((col("s_lng") + radius(17)).as("x"), col("s_lat").as("y")),
       struct(col("s_lng").as("x"), (col("s_lat") - radius(19)).as("y")),
       struct((col("s_lng") - radius(23)).as("x"), col("s_lat").as("y")))
-    val polys = capCells(
-      coords(load(spark, dir, "supplier"), "s_suppkey", "site_id")
-        .withColumnRenamed("lat", "s_lat").withColumnRenamed("lng", "s_lng")
-        .withColumn("ring", ring) // S5: nested ring column
-        .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-        .withColumn("dy", explode(array(lit(-1), lit(0), lit(1))))
-        .select(col("site_id"), col("ring"),
-          (floor(col("s_lat")) + col("dx")).cast("int").as("cla"),
-          (floor(col("s_lng")) + col("dy")).cast("int").as("clo")))
+    val polys = siteCells( // S5: nested ring column
+      supplierSites(spark, dir).withColumn("ring", ring), "s_lat", "s_lng")
     pts.join(polys, Seq("cla", "clo")) // cell candidates (J6 shape)
       .withColumn("n_crossings",
         graft.functions.point_in_ring(col("ring"), col("lng"), col("lat")))
@@ -240,17 +254,19 @@ object Extras {
         .when(col("p_partkey") % 4 === 1,
           (col("p_size") + 1000).cast("string")) // numeric, no such HN
         .otherwise(col("p_size").cast("string")).as("hn_phrase"))
-    val isNum = // reference numeric-token rule: digits*2 >= length
-      lit(2) * length(regexp_replace(col("hn_phrase"), "[^0-9]", "")) >=
-        length(col("hn_phrase"))
     queries
       .join(interned, Seq("name"))
-      .withColumn("is_numeric", isNum)
+      .withColumn("is_numeric", isNumToken(col("hn_phrase")))
       .join(children, col("name_id") === col("c_name_id") &&
         col("hn") === col("hn_phrase") && col("is_numeric"), "left")
       .select(col("qid"), col("name_id"), col("hn_phrase"),
         col("is_numeric"), col("hn").isNotNull.as("hn_matched"))
   }
+
+  /** The reference's numeric-token rule (normalize.h:192-206): a token is
+    * numeric iff at least half its characters are digits. */
+  private[graft] def isNumToken(t: Column): Column =
+    lit(2) * length(regexp_replace(t, "[^0-9]", "")) >= length(t)
 
   /** The ORIGINAL interpreted-HOF formulation of the fold, kept as the
     * executable specification the codegen [[graft.functions.AreaFold]]
@@ -274,8 +290,7 @@ object Extras {
       // numeric_tokens_mask): every token must be majority-digits — the
       // whole-string digit ratio would misgate mixed phrases like "a1 b2"
       // (tokens both numeric, joined ratio 4/5 < 1/2 with the space)
-      val isNum = forall(split(p("s"), " "), t =>
-        lit(2) * length(regexp_replace(t, "[^0-9]", "")) >= length(t))
+      val isNum = forall(split(p("s"), " "), isNumToken)
       val scored = transform(sequence(lit(1), size(areas)), i => {
         val a = element_at(areas, i)
         // best score across the user's languages; areas without a name in

@@ -21,13 +21,6 @@ import graft.{functions => gf}
 object ReverseGeo {
   import Tables.load
 
-  /** Customer probes with their containing-cell keys — shared by q52 and
-    * q58 so the probe geometry has one definition. */
-  private[ops] def probePoints(spark: SparkSession, dir: String): DataFrame =
-    Extras.coords(load(spark, dir, "customer"), "c_custkey", "id")
-      .withColumn("cla", floor(col("lat")).cast("int"))
-      .withColumn("clo", floor(col("lng")).cast("int"))
-
   /** Capped 3×3-replicated street-polyline cells (site_id, line, cla,
     * clo) — each supplier owns an irregular 3-vertex polyline (2
     * segments, deterministic radii). ONE definition shared by q52 and
@@ -41,27 +34,9 @@ object ReverseGeo {
       struct((col("s_lng") - radius(17)).as("x"), (col("s_lat") - radius(13)).as("y")),
       struct(col("s_lng").as("x"), col("s_lat").as("y")),
       struct((col("s_lng") + radius(23)).as("x"), (col("s_lat") + radius(19)).as("y")))
-    Extras.capCells(
-      Extras.coords(load(spark, dir, "supplier"), "s_suppkey", "site_id")
-        .withColumnRenamed("lat", "s_lat").withColumnRenamed("lng", "s_lng")
-        .withColumn("line", line) // S6 mm_vecvec segment storage analogue
-        .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-        .withColumn("dy", explode(array(lit(-1), lit(0), lit(1))))
-        .select(col("site_id"), col("line"),
-          (floor(col("s_lat")) + col("dx")).cast("int").as("cla"),
-          (floor(col("s_lng")) + col("dy")).cast("int").as("clo")))
+    Extras.siteCells(Extras.supplierSites(spark, dir)
+      .withColumn("line", line), "s_lat", "s_lng") // S6 mm_vecvec segment storage analogue
   }
-
-  /** Capped 3×3-replicated point sites (site_id, p_lat, p_lng, cla, clo)
-    * — q58's house/place branch, the q34 cell shape over suppliers. */
-  private[ops] def placeCells(spark: SparkSession, dir: String): DataFrame =
-    Extras.capCells(
-      Extras.coords(load(spark, dir, "supplier"), "s_suppkey", "site_id")
-        .withColumn("dx", explode(array(lit(-1), lit(0), lit(1))))
-        .withColumn("dy", explode(array(lit(-1), lit(0), lit(1))))
-        .select(col("site_id"), col("lat").as("p_lat"), col("lng").as("p_lng"),
-          (floor(col("lat")) + col("dx")).cast("int").as("cla"),
-          (floor(col("lng")) + col("dy")).cast("int").as("clo")))
 
   /** q52: top-3 streets per probe by exact point-to-polyline squared
     * degree distance, with the closest point — reverse.cc's street
@@ -69,7 +44,7 @@ object ReverseGeo {
     * segment with the identical IEEE association, so the hash check is
     * exact. */
   def q52ReverseStreets(spark: SparkSession, dir: String): DataFrame = {
-    val pts = probePoints(spark, dir)
+    val pts = Extras.probePoints(spark, dir)
     val streets = streetCells(spark, dir)
     pts.join(streets, Seq("cla", "clo")) // R-tree candidate pass analogue
       .withColumn("r", gf.polyline_dist2(col("line"), col("lng"), col("lat")))
@@ -104,7 +79,7 @@ object ReverseGeo {
     * Probes deterministically exercise the filter gate: id%3==0 →
     * address-only (streets), id%3==1 → places-only, else both. */
   def q58ReverseLookup(spark: SparkSession, dir: String): DataFrame = {
-    val pts = probePoints(spark, dir)
+    val pts = Extras.probePoints(spark, dir)
     // street branch: q52's polylines (shared builder — see streetCells),
     // score = polyline distance (no bonus)
     val streetHits = pts.join(streetCells(spark, dir), Seq("cla", "clo"))
@@ -116,9 +91,9 @@ object ReverseGeo {
     // place branch: q34's point sites (namespaced by kind), score =
     // point distance − 10 (the reference's house/place bonus: a point hit
     // AT its location should outrank a street you are merely near)
-    val places = placeCells(spark, dir)
-    val dlat = col("lat") - col("p_lat")
-    val dlng = col("lng") - col("p_lng")
+    val places = Extras.siteCells(Extras.supplierSites(spark, dir), "s_lat", "s_lng")
+    val dlat = col("lat") - col("s_lat")
+    val dlng = col("lng") - col("s_lng")
     // identity is the (kind, entity_id) PAIR — no numeric offset: any
     // constant offset collides with the street id space once site ids
     // exceed it (e.g. supplier keys past 1e7), silently mis-attributing

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{functions => gf}
 
 /** Similarity search over the embeddings table: brute-force cosine top-k
   * (the exact baseline) and a coarse-quantizer (IVF-style) bucketed
@@ -19,9 +20,6 @@ object Similarity {
   private def withNorm(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding").as("v"))
 
-  private def cosine(va: Column, vb: Column): Column =
-    graft.functions.cosine_sim(va, vb)
-
   /** Brute-force exact cosine top-10 for query vectors (vec_id < 5).
     * Deliberately a BroadcastNestedLoopJoin with the BOUNDED 5-row query
     * set as the build side — the exact-recall baseline that q25 (LSH) and
@@ -33,7 +31,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("v").as("vq"))
     val c = e.select(col("vec_id"), col("v"))
     q.crossJoin(c).filter(col("qid") =!= col("vec_id"))
-      .withColumn("cosine", cosine(col("vq"), col("v")))
+      .withColumn("cosine", gf.cosine_sim(col("vq"), col("v")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rnk") <= 10)
@@ -87,7 +85,7 @@ object Similarity {
     def nearest(cents: DataFrame, keep: Int): DataFrame =
       e.crossJoin(broadcast(cents))
         .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
-          .orderBy(cosine(col("v"), col("c")).desc, col("cell"))))
+          .orderBy(gf.cosine_sim(col("v"), col("c")).desc, col("cell"))))
         .filter(col("rn") <= keep)
         .select(col("vec_id"), col("cell"), col("rn"))
     // seed means → assign → refined means (one Lloyd step) → final assign
@@ -102,7 +100,7 @@ object Similarity {
     probes.join(members, Seq("cell")) // cell-local candidates only
       .filter(col("qid") =!= col("vec_id"))
       .join(e.select(col("vec_id").as("qid"), col("v").as("vq")), Seq("qid"))
-      .withColumn("cosine", cosine(col("vq"), col("v")))
+      .withColumn("cosine", gf.cosine_sim(col("vq"), col("v")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))))
       .filter(col("rnk") <= 5)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{functions => gf}
@@ -35,85 +35,67 @@ object SubsetCache {
   import Tables.load
 
   /** Incremental candidate counts for prefix-extended queries.
-    * Entities = interned lowercase part names with distinct space-free
-    * trigram postings under the hot-gram cap (the q13 blocking corpus);
-    * queries = every even-id name of length ≥ 8, "typed" in two steps:
-    * the first 5 characters (the cached state) and then the full string.
-    * Output: (query_id, name_id, shared) for candidates
-    * passing the reference mmc gate (typeahead.cc:409) on the FULL
-    * query — computed without ever joining the full gram set. */
+    * Entities = interned lowercase part names in the [[TextOps.postings]]
+    * index (the q13 blocking corpus); queries = every even-id name of
+    * length ≥ 8, "typed" in two steps: the first 5 characters (the
+    * cached state) and then the full string. Output: (query_id, name_id,
+    * shared) for candidates passing the reference mmc gate
+    * (typeahead.cc:409) on the FULL query — computed without ever joining
+    * the full gram set. */
   def q44SubsetCache(spark: SparkSession, dir: String): DataFrame = {
-    val interned = load(spark, dir, "part")
-      .groupBy(lower(col("p_name")).as("name"))
-      .agg(min(col("p_partkey")).cast("long").as("name_id"))
-    val g = interned.select(col("name_id"),
-      explode(gf.trigram_strings(col("name"))).as("gram"))
-    // hot-gram cap (scale rule, mirrored in the oracle): grams carried by
-    // a single name match nothing; grams above MaxBlock are stopword-like
-    val kept = g.groupBy(col("gram")).agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt").between(2, Dedup.MaxBlock))
-      .select(col("gram"))
-    val postings = g.join(kept, Seq("gram"))
-
-    val queries = interned
-      .filter(length(col("name")) >= 8 && col("name_id") % 2 === 0)
-      .select(col("name_id").as("query_id"), col("name").as("full"),
-        substring(col("name"), 1, 5).as("prefix"))
+    val (queries, postings) = index(spark, dir)
     // ---- the CACHED vector: the prefix query's count frame, exactly what
     // the reference stores (cache.h:64-79). In a live session this frame
     // is the persisted output of the previous keystroke's run.
-    val cached = queries
-      .select(col("query_id"), explode(gf.trigram_strings(col("prefix"))).as("gram"))
-      .join(postings, Seq("gram"))
-      .groupBy(col("query_id"), col("name_id"))
-      .agg(count(lit(1)).as("c0"))
+    val cached = counts(queries, postings, gf.trigram_strings(col("prefix")), "c0")
     // ---- the DELTA: only the grams the new keystrokes introduced
     // (typeahead.cc:397-401 joins exactly these posting lists on a hit)
-    val delta = queries
-      .select(col("query_id"), explode(array_except(
-        gf.trigram_strings(col("full")),
-        gf.trigram_strings(col("prefix")))).as("gram"))
-      .join(postings, Seq("gram"))
-      .groupBy(col("query_id"), col("name_id"))
-      .agg(count(lit(1)).as("c1"))
+    val delta = counts(queries, postings, array_except(
+      gf.trigram_strings(col("full")), gf.trigram_strings(col("prefix"))), "c1")
     // ---- merge: cached + delta ≡ from-scratch counts over G_full
-    val nQ = queries.select(col("query_id"),
-      size(gf.trigram_strings(col("full"))).as("n_q"))
-    cached.join(delta, Seq("query_id", "name_id"), "full_outer")
+    fullQueryCut(queries, cached.join(delta, Seq("query_id", "name_id"), "full_outer")
       .select(col("query_id"), col("name_id"),
-        (coalesce(col("c0"), lit(0L)) + coalesce(col("c1"), lit(0L))).as("shared"))
-      .join(nQ, Seq("query_id"))
-      .filter(col("shared") >=
-        (lit(2) + floor(col("n_q") / (lit(4) + floor(col("n_q") / lit(10))))).cast("long"))
-      .select(col("query_id"), col("name_id"), col("shared"))
+        (coalesce(col("c0"), lit(0L)) + coalesce(col("c1"), lit(0L))).as("shared")))
   }
 
   /** From-scratch counts over the full gram set — the independent witness
     * the incremental path must equal (used by SubsetCacheSpec; the
     * driver's DuckDB oracle recomputes the same thing in SQL). */
   private[graft] def fromScratch(spark: SparkSession, dir: String): DataFrame = {
+    val (queries, postings) = index(spark, dir)
+    fullQueryCut(queries,
+      counts(queries, postings, gf.trigram_strings(col("full")), "shared"))
+  }
+
+  /** The queries `(query_id, full, prefix)` and the postings of the
+    * interned part names they probe (grams of one name match nothing). */
+  private def index(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val interned = load(spark, dir, "part")
       .groupBy(lower(col("p_name")).as("name"))
       .agg(min(col("p_partkey")).cast("long").as("name_id"))
-    val g = interned.select(col("name_id"),
-      explode(gf.trigram_strings(col("name"))).as("gram"))
-    val kept = g.groupBy(col("gram")).agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt").between(2, Dedup.MaxBlock))
-      .select(col("gram"))
-    val postings = g.join(kept, Seq("gram"))
     val queries = interned
       .filter(length(col("name")) >= 8 && col("name_id") % 2 === 0)
-      .select(col("name_id").as("query_id"), col("name").as("full"))
-    val nQ = queries.select(col("query_id"),
-      size(gf.trigram_strings(col("full"))).as("n_q"))
-    queries
-      .select(col("query_id"), explode(gf.trigram_strings(col("full"))).as("gram"))
+      .select(col("name_id").as("query_id"), col("name").as("full"),
+        substring(col("name"), 1, 5).as("prefix"))
+    (queries, TextOps.postings(interned.select(col("name_id"), col("name")), minIds = 2))
+  }
+
+  /** Per (query_id, name_id), the count `as` of the query's `grams` that
+    * the name's postings hold. */
+  private def counts(queries: DataFrame, postings: DataFrame, grams: Column,
+      as: String): DataFrame =
+    queries.select(col("query_id"), explode(grams).as("gram"))
       .join(postings, Seq("gram"))
       .groupBy(col("query_id"), col("name_id"))
-      .agg(count(lit(1)).as("shared"))
-      .join(nQ, Seq("query_id"))
-      .filter(col("shared") >=
-        (lit(2) + floor(col("n_q") / (lit(4) + floor(col("n_q") / lit(10))))).cast("long"))
+      .agg(count(lit(1)).as(as))
+
+  /** The (query_id, name_id, shared) counts that pass the min-match-count
+    * of the FULL query's gram count. */
+  private def fullQueryCut(queries: DataFrame, counted: DataFrame): DataFrame = {
+    val nQ = queries.select(col("query_id"),
+      size(gf.trigram_strings(col("full"))).as("n_q"))
+    counted.join(nQ, Seq("query_id"))
+      .filter(col("shared") >= TextOps.minMatchCount(col("n_q")))
       .select(col("query_id"), col("name_id"), col("shared"))
   }
 

@@ -46,32 +46,50 @@ object TextOps {
       .select(gf.normalize_text(col("p_name")).as("name"), col("p_partkey"))
       .groupBy(col("name")).agg(min(col("p_partkey")).as("name_id"))
 
-  /** J1 + A2 + A3 over interned names (`name_id`, `name`): the (src < dst)
-    * name pairs sharing trigrams, with their `shared` gram count, filtered
-    * by the reference's min-match-count and cosine cutoff
-    * (typeahead.cc:409-423). The blocking of q13 and of the q33/q45 match
-    * graph. */
-  private[ops] def nameBlockingPairs(names: DataFrame): DataFrame = {
-    val keyed = names
-      .withColumn("tris", gf.trigram_strings(col("name")))
-      .select(col("name_id"), size(col("tris")).as("n"), explode(col("tris")).as("gram"))
-    // hot-gram cap (Dedup.MaxBlock, mirrored in the oracles): a gram shared
-    // by > cap names is a Zipf-hot stopgram with no discriminative signal
-    // and a quadratic join block — drop it whole before the self-join
-    val keptGrams = keyed.groupBy(col("gram"))
+  /** The trigram posting index of a `(id, key)` frame (the import-time
+    * index of typeahead.cc:317-337): one `(gram, <id>, n_grams)` row per
+    * distinct space-free trigram of `key`, with the key's gram count. A
+    * gram held by fewer than `minIds` ids matches nothing; one held by
+    * more than `Dedup.MaxBlock` ids (the hot-gram cap, mirrored in the
+    * oracles) is a Zipf-hot stopgram with no discriminative signal and a
+    * quadratic join block, so it is dropped whole. The one index of
+    * Suggest, the name blocking and the subset cache. */
+  private[graft] def postings(keyed: DataFrame, minIds: Int): DataFrame = {
+    val Array(id, key) = keyed.columns
+    val grams = keyed
+      .select(col(id), gf.trigram_strings(col(key)).as("tris"))
+      .select(col(id), size(col("tris")).as("n_grams"), explode(col("tris")).as("gram"))
+    val kept = grams.groupBy(col("gram"))
       .agg(count(lit(1)).as("gcnt"))
-      .filter(col("gcnt").between(2, Dedup.MaxBlock))
+      .filter(col("gcnt").between(minIds, Dedup.MaxBlock))
       .select(col("gram"))
-    val capped = keyed.join(keptGrams, Seq("gram"))
-    val counted = capped.as("a").join(capped.as("b"),
+    grams.join(kept, Seq("gram"))
+  }
+
+  /** The reference's min-match-count over `n` grams (typeahead.cc:409),
+    * as a long: `2 + n / (4 + n / 10)` in integer division, the Column
+    * twin of [[graft.text.Ngrams.minMatchCount]]. */
+  private[graft] def minMatchCount(n: Column): Column =
+    (lit(2) + floor(n / (lit(4) + floor(n / lit(10))))).cast("long")
+
+  /** The reference's cosine cut (typeahead.cc:423): `shared² ≥ 0.17·n1·n2`. */
+  private[graft] def cosineCut(shared: Column, n1: Column, n2: Column): Column =
+    (shared * shared).cast("double") >= lit(0.17) * n1 * n2
+
+  /** J1 + A2 + A3 over interned names (`name_id`, `name`): the (src < dst)
+    * name pairs sharing trigrams of the [[postings]] index, with their
+    * `shared` gram count, filtered by the reference's min-match-count and
+    * cosine cut (typeahead.cc:409-423). The blocking of q13 and of the
+    * q33/q45 match graph. */
+  private[ops] def nameBlockingPairs(names: DataFrame): DataFrame = {
+    val index = postings(names.select(col("name_id"), col("name")), minIds = 2)
+    index.as("a").join(index.as("b"),
         col("a.gram") === col("b.gram") && col("a.name_id") < col("b.name_id"))
       .groupBy(col("a.name_id").as("src"), col("b.name_id").as("dst"),
-        col("a.n").as("n1"), col("b.n").as("n2"))
+        col("a.n_grams").as("n1"), col("b.n_grams").as("n2"))
       .agg(count(lit(1)).as("shared"))
-    val minN = least(col("n1"), col("n2")).cast("int")
-    val mmc = lit(2) + floor(minN / (lit(4) + floor(minN / lit(10))))
-    counted.filter(col("shared") >= mmc.cast("long") &&
-        (col("shared") * col("shared")).cast("double") >= lit(0.17) * col("n1") * col("n2"))
+      .filter(col("shared") >= minMatchCount(least(col("n1"), col("n2"))) &&
+        cosineCut(col("shared"), col("n1"), col("n2")))
       .select(col("src"), col("dst"), col("shared"))
   }
 
@@ -143,56 +161,48 @@ object TextOps {
     // ONE fused codegen pass computes all 16 per-language profile hit
     // counts (gf.profile_hits over the distinct trigram set — hash probe
     // per trigram); the per-language decision columns below are plain
-    // element_at reads of that array. This replaces 16 interpreted
+    // reads of that array. This replaces 16 interpreted
     // `size(filter(tris, isin(profile)))` HOF trees per document (352
     // lambdafunction spans in the round-5 plan) with zero lambdas —
     // the RefBestPhrase/AreaFold codegen-kernel rule, third instance.
     // Counts are identical: the trigram set is distinct, so hash-probe
     // membership counting == the per-language filter size.
+    // slot i (1-based) of `ph` = LangProfiles.all(i-1); latin occupies
+    // slots 1..12, cyrillic 13..16. Each argmax is one named column:
+    // inlined into every branch of a `when` chain, a `greatest` chain
+    // grows the generated code past janino's 64 KB limit.
+    def scAt(i: Int) = element_at(col("sc"), i)
     val d = docs
       .withColumn("ph",
         gf.profile_hits(gf.trigram_strings(gf.normalize_text(col("text")))))
       .withColumn("sc", gf.script_counts(col("text")))
-    def scAt(i: Int) = element_at(col("sc"), i)
-    val groupCounts: Seq[(String, Column)] = Seq(
-      "latin" -> scAt(1), "cyrillic" -> scAt(2), "greek" -> scAt(3),
-      "arabic" -> scAt(4), "hebrew" -> scAt(5), "devanagari" -> scAt(6),
-      "thai" -> scAt(7), "hangul" -> scAt(8),
-      "cjk" -> (scAt(9) + scAt(10) + scAt(11)))
-    val m = groupCounts.map(_._2).reduce(greatest(_, _))
-    val scriptPred = groupCounts.foldRight(lit("none"): Column) {
-      case ((g, c), els) => when(c === m && m > 0, lit(g)).otherwise(els)
-    }
-    // slot i (1-based) of `ph` = LangProfiles.all(i-1); latin occupies
-    // slots 1..12, cyrillic 13..16 — same first-match tie order as before
-    def profilePred(profs: Seq[(String, Seq[String])], offset: Int): (Column, Column) = {
-      val hits = profs.zipWithIndex.map { case ((lang, _), i) =>
-        lang -> element_at(col("ph"), offset + i + 1)
-      }
-      val best = hits.map(_._2).reduce(greatest(_, _))
-      val pred = hits.foldRight(lit("xx"): Column) { case ((lang, h), els) =>
-        when(h === best && best > 0, lit(lang)).otherwise(els)
-      }
-      (pred, greatest(best, lit(0)))
-    }
-    val (latinPred, latinBest) = profilePred(latinProfiles, 0)
-    val (cyrPred, cyrBest) = profilePred(cyrillicProfiles, latinProfiles.size)
+      .withColumn("groups", array((1 to 8).map(scAt) :+ (scAt(9) + scAt(10) + scAt(11)): _*))
+      .withColumn("latin", slice(col("ph"), 1, latinProfiles.size))
+      .withColumn("cyr", slice(col("ph"), latinProfiles.size + 1, cyrillicProfiles.size))
+      .withColumn("m", array_max(col("groups")))
+      .withColumn("lb", array_max(col("latin")))
+      .withColumn("cb", array_max(col("cyr")))
+    // the name of the first slot holding the max (array_position keeps
+    // the first-match tie order), `none` when every count is 0
+    def firstMax(counts: String, best: String, names: Seq[String], none: String): Column =
+      when(col(best) > 0, element_at(typedLit(names),
+        array_position(col(counts), col(best)).cast("int"))).otherwise(lit(none))
     val base = d
-      .withColumn("script_pred", scriptPred)
+      .withColumn("script_pred", firstMax("groups", "m", scriptGroups, "none"))
       .withColumn("script_chars",
-        when(col("script_pred") === "none", lit(0)).otherwise(m))
+        when(col("script_pred") === "none", lit(0)).otherwise(col("m")))
     val langPred = scriptDirect.foldLeft(
-      when(col("script_pred") === "latin", latinPred)
-        .when(col("script_pred") === "cyrillic", cyrPred)) {
+      when(col("script_pred") === "latin", firstMax("latin", "lb", latinProfiles.map(_._1), "xx"))
+        .when(col("script_pred") === "cyrillic",
+          firstMax("cyr", "cb", cyrillicProfiles.map(_._1), "xx"))) {
       case (acc, (script, lang)) =>
         acc.when(col("script_pred") === script, lit(lang))
     }.when(col("script_pred") === "cjk",
-        when(element_at(col("sc"), 9) + element_at(col("sc"), 10) > 0, "ja")
-          .otherwise("zh"))
+        when(scAt(9) + scAt(10) > 0, "ja").otherwise("zh"))
       .otherwise(lit("xx"))
     val profHits =
-      when(col("script_pred") === "latin", latinBest)
-        .when(col("script_pred") === "cyrillic", cyrBest)
+      when(col("script_pred") === "latin", greatest(col("lb"), lit(0)))
+        .when(col("script_pred") === "cyrillic", greatest(col("cb"), lit(0)))
         .otherwise(lit(0))
     base.select(col("doc_id"), col("script_pred"),
       langPred.as("lang_pred"), col("script_chars"),
@@ -251,17 +261,11 @@ object TextOps {
     * (Full raster decode needs image libs absent from this sandbox; the
     * header parse is the real, tested part of the decode path.) */
   def q32MediaMeta(spark: SparkSession, dir: String): DataFrame = {
-    val d = load(spark, dir, "documents").withColumn("h", md5(col("text")))
-    def hexVal(i: Int): Column =
-      expr(s"locate(substring(h, $i, 1), '0123456789abcdef') - 1")
     // deterministic ground truth for the synthesizer only (the decoder
     // below must recover these from payload BYTES alone)
     val fmtCode = hexVal(1) % 3
     val wTrue = hexVal(2) * 16 + hexVal(3) + 1 // 1..256
     val hTrue = hexVal(4) * 16 + hexVal(5) + 1
-    def beHex(v: Column, bytes: Int): Column = lpad(hex(v), bytes * 2, "0")
-    def leHex16(v: Column): Column = // u16 little-endian
-      concat(lpad(hex(v % 256), 2, "0"), lpad(hex(v.cast("int") / 256), 2, "0"))
     val payloadHex = when(fmtCode === 0, // PNG: sig + IHDR len + "IHDR" + w u32 BE + h u32 BE
         concat(lit("89504E470D0A1A0A" + "0000000D" + "49484452"),
           beHex(wTrue, 4), beHex(hTrue, 4)))
@@ -269,19 +273,13 @@ object TextOps {
         concat(lit("FFD8" + "FFE000104A46494600010100000100010000" + "FFC0" + "0011" + "08"),
           beHex(hTrue, 2), beHex(wTrue, 2)))
       .otherwise( // GIF89a: sig + w u16 LE + h u16 LE + flags/bg/aspect
-        concat(lit("474946383961"), leHex16(wTrue), leHex16(hTrue), lit("F70000")))
-    val withPayload = d
-      .withColumn("payload", unhex(payloadHex))
-      .select(col("doc_id"), col("payload"))
+        concat(lit("474946383961"), leHex(wTrue, 2), leHex(hTrue, 2), lit("F70000")))
     // ---- the decoder: payload bytes -> (fmt, width, height) ----
-    val ph = upper(hex(col("payload")))
-    def hexAt(pos: Column, nChars: Int): Column = // hex-digit substring -> int
-      conv(substring(ph, pos, lit(nChars)), 16, 10).cast("int")
-    val isPng = substring(ph, 1, 16) === "89504E470D0A1A0A"
-    val isJpeg = substring(ph, 1, 4) === "FFD8"
-    val isGif = substring(ph, 1, 12) === "474946383961"
-    val sof = locate("FFC0", ph) // JPEG marker scan (APP0 JFIF bytes never contain FFC0)
-    withPayload.select(
+    val isPng = substring(payloadDigits, 1, 16) === "89504E470D0A1A0A"
+    val isJpeg = substring(payloadDigits, 1, 4) === "FFD8"
+    val isGif = substring(payloadDigits, 1, 12) === "474946383961"
+    val sof = locate("FFC0", payloadDigits) // JPEG marker scan (APP0 JFIF bytes never contain FFC0)
+    withPayload(spark, dir, payloadHex).select(
       col("doc_id"),
       length(col("payload")).as("payload_len"),
       when(isPng, "png").when(isJpeg, "jpeg").when(isGif, "gif")
@@ -289,11 +287,11 @@ object TextOps {
       when(isPng, hexAt(lit(33), 8)) // IHDR: bytes 17-20 BE
         .when(isJpeg, hexAt(sof + 14, 4)) // SOF0: marker+len+prec+h, then w u16 BE
         .when(isGif, hexAt(lit(15), 2) * 256 + hexAt(lit(13), 2)) // u16 LE
-        .as("width"),
+        .cast("int").as("width"),
       when(isPng, hexAt(lit(41), 8))
         .when(isJpeg, hexAt(sof + 10, 4))
         .when(isGif, hexAt(lit(19), 2) * 256 + hexAt(lit(17), 2))
-        .as("height"))
+        .cast("int").as("height"))
   }
 
   /** q56: audio companion to q32 — a fully-valid WAV (RIFF) header is
@@ -307,9 +305,6 @@ object TextOps {
     * division — exact in any engine) are the real, tested part of the
     * ingest path. */
   def q56AudioMeta(spark: SparkSession, dir: String): DataFrame = {
-    val d = load(spark, dir, "documents").withColumn("h", md5(col("text")))
-    def hexVal(i: Int): Column =
-      expr(s"locate(substring(h, $i, 1), '0123456789abcdef') - 1")
     // ground truth for the synthesizer only (division-free: Column `/`
     // on longs is DOUBLE division in Spark)
     val chT = (hexVal(1) % 2 + 1).cast("long") // 1..2
@@ -321,40 +316,22 @@ object TextOps {
     val blockT = chT * bytesPerSample
     val dataT = nSamp * blockT
     val byteRateT = rateT * blockT
-    def le(v: Column, bytes: Int): Column = { // little-endian hex
-      val bs = (0 until bytes).map { i =>
-        val divisor = math.pow(256, i).toLong
-        // values < 2^52 so the double division is exact; cast truncates
-        val byteV = ((v / lit(divisor)).cast("long")) % 256L
-        lpad(hex(byteV), 2, "0")
-      }
-      concat(bs: _*)
-    }
     val payloadHex = concat(
-      lit("52494646"), le(lit(36L) + dataT, 4), lit("57415645"), // RIFF size WAVE
-      lit("666D7420"), lit("10000000"), lit("0100"),            // fmt, len 16, PCM
-      le(chT, 2), le(rateT, 4), le(byteRateT, 4), le(blockT, 2), le(bitsT, 2),
-      lit("64617461"), le(dataT, 4))                            // data chunk
-    val withPayload = d.withColumn("payload", unhex(payloadHex))
-      .select(col("doc_id"), col("payload"))
-    // ---- the decoder: payload bytes -> fields (byte i = hex chars 2i-1..2i)
-    val ph = upper(hex(col("payload")))
-    def hexAt(pos: Int, nChars: Int): Column =
-      conv(substring(ph, pos, nChars), 16, 10).cast("long")
-    val isWav = substring(ph, 1, 8) === "52494646" &&
-      substring(ph, 17, 8) === "57415645"
-    val channels = hexAt(45, 2) + hexAt(47, 2) * 256
-    val rate = hexAt(49, 2) + hexAt(51, 2) * 256 +
-      hexAt(53, 2) * 65536 + hexAt(55, 2) * 16777216
-    val bits = hexAt(69, 2) + hexAt(71, 2) * 256
-    val dataBytes = hexAt(81, 2) + hexAt(83, 2) * 256 +
-      hexAt(85, 2) * 65536 + hexAt(87, 2) * 16777216
-    withPayload.select(col("doc_id"),
+      lit("52494646"), leHex(lit(36L) + dataT, 4), lit("57415645"), // RIFF size WAVE
+      lit("666D7420"), lit("10000000"), lit("0100"),               // fmt, len 16, PCM
+      leHex(chT, 2), leHex(rateT, 4), leHex(byteRateT, 4), leHex(blockT, 2), leHex(bitsT, 2),
+      lit("64617461"), leHex(dataT, 4))                            // data chunk
+    // ---- the decoder: payload bytes -> fields
+    def u16(pos: Int): Column = hexAt(lit(pos), 2) + hexAt(lit(pos + 2), 2) * 256
+    def u32(pos: Int): Column = u16(pos) + u16(pos + 4) * 65536
+    val isWav = substring(payloadDigits, 1, 8) === "52494646" &&
+      substring(payloadDigits, 17, 8) === "57415645"
+    withPayload(spark, dir, payloadHex).select(col("doc_id"),
         when(isWav, "wav").otherwise("unknown").as("fmt"),
-        when(isWav, channels).as("channels"),
-        when(isWav, rate).as("sample_rate"),
-        when(isWav, bits).as("bits"),
-        when(isWav, dataBytes).as("data_bytes"))
+        when(isWav, u16(45)).as("channels"),
+        when(isWav, u32(49)).as("sample_rate"),
+        when(isWav, u16(69)).as("bits"),
+        when(isWav, u32(81)).as("data_bytes"))
       // integer floor division (exact in any engine); null-propagates on
       // non-wav rows
       .withColumn("duration_ms", expr(
@@ -371,10 +348,6 @@ object TextOps {
     * the timescale algebra (integer floor division, engine-exact) and
     * the sample-count rule are the real, tested ingest path. */
   def q57VideoMeta(spark: SparkSession, dir: String): DataFrame = {
-    val d = load(spark, dir, "documents").withColumn("h", md5(col("text")))
-    def hexVal(i: Int): Column =
-      expr(s"locate(substring(h, $i, 1), '0123456789abcdef') - 1")
-    def beHex(v: Column, bytes: Int): Column = lpad(hex(v), bytes * 2, "0")
     // ground truth for the synthesizer only
     val tsT = when(hexVal(1) % 4 === 0, 600L).when(hexVal(1) % 4 === 1, 1000L)
       .when(hexVal(1) % 4 === 2, 90000L).otherwise(24000L)
@@ -390,18 +363,13 @@ object TextOps {
     val payloadHex = concat(
       lit("00000014" + "66747970" + "69736F6D" + "00000200" + "6D703431"),
       lit("00000074" + "6D6F6F76"), mvhdHex) // moov size 8+108=116=0x74
-    val withPayload = d.withColumn("payload", unhex(payloadHex))
-      .select(col("doc_id"), col("payload"))
     // ---- the decoder: payload bytes -> fields
-    val ph = upper(hex(col("payload")))
-    def hexAtC(pos: Column, nChars: Int): Column =
-      conv(substring(ph, pos, lit(nChars)), 16, 10).cast("long")
-    val isMp4 = substring(ph, 9, 8) === "66747970"
-    val isIsom = substring(ph, 17, 8) === "69736F6D"
-    val mvhd = locate("6D766864", ph) // box-type scan (q32's marker style)
-    val timescale = hexAtC(mvhd + 32, 8) // 16 bytes after the type tag
-    val durUnits = hexAtC(mvhd + 40, 8)
-    withPayload.select(col("doc_id"),
+    val isMp4 = substring(payloadDigits, 9, 8) === "66747970"
+    val isIsom = substring(payloadDigits, 17, 8) === "69736F6D"
+    val mvhd = locate("6D766864", payloadDigits) // box-type scan (q32's marker style)
+    val timescale = hexAt(mvhd + 32, 8) // 16 bytes after the type tag
+    val durUnits = hexAt(mvhd + 40, 8)
+    withPayload(spark, dir, payloadHex).select(col("doc_id"),
         when(isMp4 && isIsom, "mp4/isom").when(isMp4, "mp4")
           .otherwise("unknown").as("fmt"),
         when(isMp4, timescale).as("timescale"),
@@ -414,6 +382,35 @@ object TextOps {
       .withColumn("n_sample_frames",
         expr("least(8, duration_ms div 500 + 1)"))
   }
+
+  // ---- byte-header helpers of q32/q56/q57: the synthesizers read the
+  // documents' md5 digits and write hex, the decoders read the payload
+
+  /** Hex digit `i` (1-based) of the document's md5 `h`, as an int. */
+  private def hexVal(i: Int): Column =
+    expr(s"locate(substring(h, $i, 1), '0123456789abcdef') - 1")
+
+  /** `v` as a `bytes`-byte big-endian hex string. */
+  private def beHex(v: Column, bytes: Int): Column = lpad(hex(v), bytes * 2, "0")
+
+  /** `v` as a `bytes`-byte little-endian hex string (values < 2^52, so the
+    * double division is exact; the cast truncates). */
+  private def leHex(v: Column, bytes: Int): Column =
+    concat((0 until bytes).map { i =>
+      lpad(hex((v / lit(math.pow(256, i).toLong)).cast("long") % 256L), 2, "0")
+    }: _*)
+
+  /** (doc_id, payload): each document's synthesized header bytes. */
+  private def withPayload(spark: SparkSession, dir: String, payloadHex: Column): DataFrame =
+    load(spark, dir, "documents").withColumn("h", md5(col("text")))
+      .select(col("doc_id"), unhex(payloadHex).as("payload"))
+
+  /** The payload as upper-case hex: byte i is hex chars 2i-1..2i. */
+  private def payloadDigits: Column = upper(hex(col("payload")))
+
+  /** `nChars` hex digits of the payload from char `pos`, as a long. */
+  private def hexAt(pos: Column, nChars: Int): Column =
+    conv(substring(payloadDigits, pos, lit(nChars)), 16, 10).cast("long")
 
   /** HTML ingestion for the input_hint's `html: binary` page column: each
     * document is wrapped in a full synthetic page — head title, a

@@ -36,9 +36,14 @@ class EntrySpec extends AnyFunSuite {
 
   test("all queries run non-empty on sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (name, fn) =>
+    // without the interpreted fallback, a query whose generated code
+    // fails to compile fails here instead of running interpreted
+    val fallback = "spark.sql.codegen.fallback"
+    val prior = spark.conf.get(fallback)
+    spark.conf.set(fallback, "false")
+    try SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, dir).count()
       assert(n > 0, s"$name returned 0 rows")
-    }
+    } finally spark.conf.set(fallback, prior)
   }
 }

@@ -27,6 +27,34 @@ class ExtrasSpec extends AnyFunSuite {
     assert(Extras.capCells(atCap).count() == 256L)
   }
 
+  test("siteCells copies each site into exactly its 9 neighbour cells, " +
+      "and every point within one degree of a site probes one of them") {
+    val rnd = new scala.util.Random(15)
+    // 60 sites over 400 cells: every cell stays under Dedup.MaxBlock
+    val sites = (0 until 60).map(i =>
+      (i.toLong, rnd.nextDouble() * 20 - 10, rnd.nextDouble() * 20 - 10)) ++
+      Seq((60L, 0.0, 0.0), (61L, -3.0, 2.5))
+    val cells = Extras.siteCells(sites.toDF("site_id", "s_lat", "s_lng"), "s_lat", "s_lng")
+    val bySite = cells.select("site_id", "cla", "clo").as[(Long, Int, Int)]
+      .collect().groupBy(_._1)
+    sites.foreach { case (id, lat, lng) =>
+      val own = (math.floor(lat).toInt, math.floor(lng).toInt)
+      val expected = for (dx <- -1 to 1; dy <- -1 to 1) yield (own._1 + dx, own._2 + dy)
+      val got = bySite(id).map(r => (r._2, r._3)).toSeq
+      assert(got.sorted == expected.sorted, s"site $id: $got")
+    }
+    // points strictly within one degree in each coordinate, the cell
+    // edges included
+    val offsets = Seq((0.999, -0.999), (-0.999, 0.999), (0.0, 0.0)) ++
+      (0 until 8).map(_ => (rnd.nextDouble() * 1.998 - 0.999, rnd.nextDouble() * 1.998 - 0.999))
+    val points = for ((id, lat, lng) <- sites; ((dlat, dlng), k) <- offsets.zipWithIndex)
+      yield (id * 100 + k, id, lat + dlat, lng + dlng)
+    val probes = Extras.probeCells(points.toDF("id", "near", "lat", "lng"))
+    val found = probes.join(cells, Seq("cla", "clo"))
+      .filter(col("near") === col("site_id"))
+    assert(found.count() == points.size, "each point must share exactly one cell with its site")
+  }
+
   // ---- AreaFold codegen kernel vs the interpreted-HOF specification ----
 
   /** Rows spanning every branch of the fold: greedy skip on overlapping

@@ -151,6 +151,14 @@ class TextAnalysisSpec extends AnyFunSuite {
       s"; misrouted: ${wrongDetail.mkString(", ")}")
   }
 
+  test("the Column minMatchCount equals Ngrams.minMatchCount for 0..2000 grams") {
+    val got = (0 to 2000).toDF("n")
+      .select(col("n"), TextOps.minMatchCount(col("n")).as("mmc"))
+      .as[(Int, Long)].collect().toSeq
+    val expected = (0 to 2000).map(n => (n, graft.text.Ngrams.minMatchCount(n).toLong))
+    assert(got.sorted == expected)
+  }
+
   test("repetition filter scores duplicated 5-grams and clean text apart") {
     val docs = Seq(
       // 10 tokens repeated 5x: a scraper-loop page — most 5-grams repeat
