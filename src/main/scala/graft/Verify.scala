@@ -1,9 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType, MapType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Row count and order-insensitive content hash of a query output:
+    * the sum of one xxhash64 per row. Top-level floating-point columns
+    * are rounded to six decimals first, so the last bits of a sum whose
+    * order depends on task timing do not change the hash; a map column
+    * is hashed as its sorted entries (xxhash64 takes no maps, and entry
+    * order is not part of a map's value). EntrySpec pins every query
+    * with it. */
+  def fingerprint(df: DataFrame): (Long, String) = {
+    val cols = df.schema.fields.map { f =>
+      val c = df.col(s"`${f.name}`")
+      f.dataType match {
+        case DoubleType | FloatType => round(c, 6)
+        case _: MapType => sort_array(map_entries(c))
+        case _ => c
+      }
+    }
+    val r = df.select(xxhash64(cols.toSeq: _*).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), coalesce(sum(col("h")), lit(0).cast("decimal(38,0)"))).head()
+    (r.getLong(0), r.getDecimal(1).toPlainString)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -19,7 +19,7 @@ import graft.{functions => gf}
   *    (already term- resp. doc-unique) frame;
   *  - corpus scalars (N, Σdl) attach as a broadcast single-row cross
   *    join — the canonical scalar-attach, a 1-row
-  *    BroadcastNestedLoopJoin (PLANS.md audit: intentional);
+  *    BroadcastNestedLoopJoin (reviewed: EntrySpec.NestedLoopSites);
   *  - the df join back is a shuffle hash join on term; hot terms are
   *    wide but each (doc, term) row joins exactly one df row, so AQE's
   *    skew split handles the distribution — no block expansion anywhere;

@@ -56,8 +56,8 @@ object LinkGraph {
     * NOTE: construction is EAGER — `d.count()` runs a Spark job at
     * DataFrame-build time because n parameterizes the synthetic edge
     * arithmetic and the per-vertex base rank (plan-only callers like
-    * PlanDump pay one tiny scan). Both persists are harness-released
-    * via [[Caches]]. */
+    * EntrySpec's plan checks pay one tiny scan). Both persists are
+    * harness-released via [[Caches]]. */
   def q49PageRank(spark: SparkSession, dir: String): DataFrame = {
     val d = Caches.persist(load(spark, dir, "documents").select(col("doc_id")))
     val n = d.count()

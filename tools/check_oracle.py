@@ -6,6 +6,9 @@ exact equality for ints/strings/bools/timestamps and tight tolerance for
 floats — mirroring a hash compare while giving usable diffs).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+
+Exits 0 only when every oracle passes, so it can gate a command chain
+(the query pins, see src/test/scala/graft/QueryPins.scala).
 """
 import sys, json, glob, math
 import duckdb
@@ -71,6 +74,7 @@ def main():
     for name, v in sorted(results.items()):
         print(("PASS " if v.startswith("OK") else "FAIL ") + name + ": " + v)
     print(f"== {n_ok}/{len(results)} PASS")
+    return 0 if results and n_ok == len(results) else 1
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
