@@ -39,6 +39,7 @@ object GraftExtensions {
     "profile_hits" -> (es => ProfileHits(es(0))),
     "double_metaphone" -> (es => DoubleMetaphoneKey(es(0))),
     "sift4_cp" -> (es => Sift4CpDist(es(0), es(1))),
+    "accept_gate" -> (es => AcceptGateExpr(es(0), es(1))),
     "bounded_levenshtein" -> (es => BoundedLevenshtein(es(0), es(1))),
     "jaro_winkler" -> (es => JaroWinkler(es(0), es(1))),
     "ref_match_score" -> (es => RefMatchScore(es(0), es(1))),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 import graft.{functions => gf}
 import graft.ops.Components.IterationMetrics
+import graft.text.AcceptGate
 
 /** The web-scale entity-resolution pipeline (BASELINE.json north_rule):
   * pages → mentions → string interning → blocking → pairwise scoring →
@@ -53,9 +54,9 @@ object Pipeline {
       workDir: String = "/tmp/graft_er",
       resume: Boolean = false,
       // true = write the per-partition metrics JSONL of every clustering
-      // round (Components.WorkDir.round; one scan + collect per round, the
-      // north_rule's logged stats). It gates nothing else: BlockingStats
-      // ride the pair walk's action either way.
+      // round (Components.WorkDir.roundMetrics; one scan + collect per
+      // round, the north_rule's logged stats). It gates nothing else:
+      // BlockingStats ride the action that runs the pair walk either way.
       collectStats: Boolean = true)
 
   /** Blocking counters (SparkER's blocks and dropped-volume counters),
@@ -191,7 +192,8 @@ object Pipeline {
     * volume counted in the returned [[BlockingStats]] (the reference's
     * kMaxMatches=6000 cap, typeahead.cc:428).
     * Precision is NOT blocking's job here — every candidate pair goes
-    * through the codegen'd scalar gate + hub rule (scorePairs/matchEdges).
+    * through the scalar accept gate + hub rule (matchEdges; in
+    * runPipeline the walk applies the gate itself, see [[pairWalk]]).
     * Double-Metaphone phonetic keys union in as a second key family.
     *
     * Exactly-once ownership (canonical-block dedup: the prefix-filter
@@ -211,9 +213,27 @@ object Pipeline {
     * Each block member carries its own(s) (≤ PrefixKeys + a few codes)
     * and `gf.block_pairs` applies the test while walking i < j, so the
     * pair set is duplicate-free by construction: no global (src, dst)
-    * exchange.
+    * exchange. The returned pairs are persisted.
     */
   def candidatePairs(strings: DataFrame, cfg: Config): (DataFrame, BlockingStats) = {
+    val walk = pairWalk(strings, cfg, verify = false)
+    val pairs = walk.rows.persist(StorageLevel.MEMORY_AND_DISK)
+    (pairs, walk.finish(pairs.count()))
+  }
+
+  /** The blocking pair walk, not yet run: `rows` are its output, and
+    * `finish`, called with the walk's row count once an action has run
+    * it, reads the blocking stats and releases the walk's caches. */
+  private final case class PairWalk(rows: DataFrame, finish: Long => BlockingStats)
+
+  /** The walk [[candidatePairs]] describes. With `verify`, each block
+    * member also carries its match key and frequency, and the walk
+    * verifies each pair where it is born: `rows` are (src, dst,
+    * accepted, sift, src_freq, dst_freq), the accept gate's verdict and
+    * the pair's SIFT4 distance (null when rejected) beside every pair it
+    * owns (Fuzzy Joins Using MapReduce verifies a candidate in the
+    * reducer that generated it); without, `rows` are (src, dst). */
+  private def pairWalk(strings: DataFrame, cfg: Config, verify: Boolean): PairWalk = {
     val spark = strings.sparkSession
     import spark.implicits._
 
@@ -245,12 +265,12 @@ object Pipeline {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // prefix-key frequencies. The blocking stats are an observation over
-    // them that rides the pair walk's one action below, so they cost no
-    // job of their own. keptKeys is counted from the kept predicate
-    // itself, NOT derived as total - hot: prefix keys whose pfreq is 1 (a
-    // gram that survived into only one string's prefix after rank
-    // truncation) are dropped by the kept filter too.
-    val statsObs = Observation("blocking_stats")
+    // them that rides the action that runs the walk, so they cost no job
+    // of their own. keptKeys is counted from the kept predicate itself,
+    // NOT derived as total - hot: prefix keys whose pfreq is 1 (a gram
+    // that survived into only one string's prefix after rank truncation)
+    // are dropped by the kept filter too.
+    val statsObs = Observation()
     def countWhere(p: Column): Column = coalesce(sum(when(p, 1L).otherwise(0L)), lit(0L))
     val statCols = Seq(count(lit(1)).as("total"),
       countWhere($"cnt" > cfg.maxBlockSize).as("hot"),
@@ -289,6 +309,10 @@ object Pipeline {
         .select($"string_id", phonId.as("key")))
       .groupBy($"string_id")
       .agg(collect_list($"key").as("keys"))
+    val (owners, member) =
+      if (!verify) (own, struct($"string_id".as("id"), $"keys"))
+      else (own.join(strings.select($"string_id", $"match_key", $"freq"), Seq("string_id")),
+        struct($"string_id".as("id"), $"keys", $"match_key", $"freq"))
 
     // AQE sizes stages by their INPUT bytes, so the aggregated block list
     // (~small) gets coalesced to a couple of partitions — and the pair
@@ -302,60 +326,43 @@ object Pipeline {
     // i < j walk per block, bounded by maxBlockSize²/2 per key; a block
     // emits only the pairs whose smallest shared key it is — so a
     // phonetic block skips every pair that shares a kept trigram key
-    val pairs = own
-      .select($"string_id", $"keys", explode($"keys").as("key"))
+    val rows = owners
+      .select(member.as("member"), explode($"keys").as("key"))
       .groupBy($"key")
-      .agg(collect_list(struct($"string_id".as("id"), $"keys")).as("members"))
+      .agg(collect_list($"member").as("members"))
       .repartition(sessionParts)
       .select(gf.block_pairs($"key", $"members"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // always materialize here: the keyed/prefix caches feed the pair DAG,
-    // so they must still be cached when it first computes
-    val nPairs = pairs.count()
-    // Adaptive execution replaces a subtree whose stage came out empty
-    // with an empty relation, and an observed node inside it then reports
-    // no row. The counts then come from one aggregate over the same
-    // frequencies (their input is still cached); only a corpus with no
-    // kept prefix key gets here.
-    val s = Some(statsObs.get).filter(_.nonEmpty).getOrElse {
-      val r = pfreq.agg(statCols.head, statCols.tail: _*).head()
-      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
-    }
-    keyed.unpersist()
-    prefixed.unpersist()
 
-    val stats = BlockingStats(
-      totalKeys = s("total").asInstanceOf[Long],
-      keptKeys = s("kept").asInstanceOf[Long],
-      hotKeysDropped = s("hot").asInstanceOf[Long],
-      hotVolumeDropped = s("hot_volume").asInstanceOf[Long],
-      candidatePairs = nPairs)
-    (pairs, stats)
+    PairWalk(rows, nPairs => {
+      // Adaptive execution replaces a subtree whose stage came out empty
+      // with an empty relation, and an observed node inside it then
+      // reports no row. The counts then come from one aggregate over the
+      // same frequencies (their input is still cached); only a corpus
+      // with no kept prefix key gets here.
+      val s = Some(statsObs.get).filter(_.nonEmpty).getOrElse {
+        val r = pfreq.agg(statCols.head, statCols.tail: _*).head()
+        r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+      }
+      keyed.unpersist()
+      prefixed.unpersist()
+      BlockingStats(
+        totalKeys = s("total").asInstanceOf[Long],
+        keptKeys = s("kept").asInstanceOf[Long],
+        hotKeysDropped = s("hot").asInstanceOf[Long],
+        hotVolumeDropped = s("hot_volume").asInstanceOf[Long],
+        candidatePairs = nPairs)
+    })
   }
 
   // ---------------------------------------------------------------- scoring
 
-  /** Per-aligned-token closeness gate (scoreKeyed tok_ok): every aligned
-    * token pair must satisfy lev ≤ TokLevMax OR jw ≥ TokJwMin. */
-  final val TokLevMax = 2
-  final val TokJwMin = 0.92
-  /** Allowed Levenshtein edits per character of the shorter key, capped
-    * at LevMaxCap (plain Levenshtein counts a transposition as 2). */
-  final val LevMaxPerChar = 1.0 / 12.0
-  final val LevMaxCap = 2
-  /** SIFT4 counts a transposition as 1 (the reference scorer's
-    * property); budget 2 because canonicalization can amplify one user
-    * typo into two key edits (digraph fold: deleting 'f' in "haferring"
-    * creates "ae" which folds to "a" — a 2-edit key delta). Precision
-    * at 2 edits is recovered by the distance-first hub rule. */
-  final val SiftMaxEdits = 2
-
   /** candidate string pairs → scored pairs with the scalar accept gate.
     * Scores: Jaro-Winkler + banded Levenshtein + SIFT4 on the canonical
     * match keys (all codegen'd Catalyst expressions — no UDF dispatch).
-    * Accept: sift_cp ≤ SiftMaxEdits ∧ lev_cp ≤ lev_max ∧ token-aligned
-    * gate — all codepoint-level (one typo = one edit on any script); final
-    * edge selection adds the frequency-prior hub rule — see matchEdges. */
+    * Accept: graft.text.AcceptGate — sift_cp ≤ SiftMaxEdits ∧ lev_cp ≤
+    * lev_max ∧ token-aligned gate, all codepoint-level (one typo = one
+    * edit on any script); final edge selection adds the frequency-prior
+    * hub rule — see matchEdges. */
   def scorePairs(pairs: DataFrame, strings: DataFrame): DataFrame =
     scoreKeyed(withMatchKeys(pairs, strings)).select(col("src"), col("dst"),
       col("jw"), col("lev"), col("sift"), col("min_len"), col("tok_ok"), col("accepted"))
@@ -373,51 +380,31 @@ object Pipeline {
     * `src_key`/`dst_key` (stateless, all codegen — no joins, no shuffle):
     * the shared kernel of batch [[scorePairs]] and the streaming
     * scored-edge path (graft.streaming.StreamOps.incrementalScoredPairs),
-    * so the two CANNOT diverge. Appends jw/lev/sift/min_len/tok_ok/
-    * accepted to the input columns. */
+    * whose `accepted` is the `accept_gate` kernel over the same
+    * graft.text.AcceptGate the pair walk runs, so the three CANNOT
+    * diverge. Appends jw/lev/sift/min_len/lev_max/tok_ok/accepted to the
+    * input columns. */
   def scoreKeyed(withKeys: DataFrame): DataFrame = {
     val spark = withKeys.sparkSession
     import spark.implicits._
     withKeys
       .withColumn("jw", gf.jaro_winkler($"src_key", $"dst_key"))
-      // gate distances are CODEPOINT-level (sift4_cp + Spark's built-in
-      // levenshtein): one user typo = one edit on any script. Byte-level
-      // distances double-count multi-byte UTF-8 edits (a Cyrillic
-      // transposition = 4 byte edits), silently splitting every non-Latin
-      // cluster under a tight edit budget.
-      // (bounded form: -1 when the distance exceeds LevMaxCap — banded DP,
-      // O(n·cap) instead of O(n²) on the pairwise hot path)
-      .withColumn("lev", levenshtein($"src_key", $"dst_key", LevMaxCap))
+      // codepoint-level distances, as the gate's (bounded form: -1 when
+      // the distance exceeds LevMaxCap)
+      .withColumn("lev", levenshtein($"src_key", $"dst_key", AcceptGate.LevMaxCap))
       .withColumn("sift", gf.sift4_cp($"src_key", $"dst_key"))
       .withColumn("min_len", least(length($"src_key"), length($"dst_key")))
-      .withColumn("lev_max", greatest(lit(1),
-        least(lit(LevMaxCap), ceil($"min_len" * LevMaxPerChar))).cast("int"))
-      // token-aligned gate: a whole-string score can stay high when one
-      // *aligned token* is a different word entirely (long shared base +
-      // short differing city, or long base + different suffix) — require
-      // every aligned token pair to be individually close. Token-count
-      // mismatches (e.g. a deleted space) fall back to the full-string
-      // rule alone.
-      .withColumn("tok_ok", {
-        val ta = split($"src_key", " ")
-        val tb = split($"dst_key", " ")
-        when(size(ta) =!= size(tb), lit(true)).otherwise(
-          forall(zip_with(ta, tb, (a, b) =>
-            levenshtein(a, b) <= TokLevMax ||
-              gf.jaro_winkler(a, b) >= TokJwMin), x => x))
-      })
-      // Scalar accept: the edit-distance gate ONLY. The corruption model a
-      // correct matcher must absorb is "≤1 typo per surface" — SIFT4 ≤ 1
-      // (counts a transposition as one edit, like the reference scorer)
-      // with plain-Levenshtein ≤ 2 as the band check. Whole-string JW is
+      .withColumn("lev_max", greatest(lit(1), least(lit(AcceptGate.LevMaxCap),
+        ceil($"min_len" * AcceptGate.LevMaxPerChar))).cast("int"))
+      // Scalar accept: the edit-distance gate ONLY. Whole-string JW is
       // deliberately NOT an accept path: on dense entity spaces it passes
       // corrupted variants of *different* entities (jw up to 0.99
       // measured) faster than it recovers true pairs. Precision beyond
       // this gate comes from the frequency-prior hub rule (matchEdges).
-      .withColumn("accepted",
-        $"sift" <= SiftMaxEdits &&
-          ($"lev" >= 0 && $"lev" <= $"lev_max") &&
-          $"tok_ok")
+      .withColumn("gate", gf.accept_gate($"src_key", $"dst_key"))
+      .withColumn("tok_ok", $"gate.tok_ok")
+      .withColumn("accepted", $"gate.accepted")
+      .drop("gate")
   }
 
   /** Context caps: distinct strings per page entering co-occurrence (a
@@ -459,19 +446,10 @@ object Pipeline {
     * this many times more frequent (frequency prior, reference X9). */
   final val HubFreqRatio = 2.0
 
-  /** Scored pairs → accepted match edges via the frequency-prior HUB rule
-    * (the reference's population/category priors X8/X9, recast for ER):
-    * after interning, an entity's mention mass concentrates on one
-    * canonical surface form (case/punctuation/synonym/diacritic variants
-    * all collapse to the same match key), while typo variants are
-    * low-frequency satellites one edit away. So each low-frequency string
-    * links ONLY to its single best higher-frequency hub (top-1 by hub
-    * frequency) and never to a sibling satellite: satellite↔satellite
-    * edges across entities are exactly the false-positive class on dense
-    * entity spaces (two corrupted forms of different entities can land 1
-    * edit apart — no pairwise distance can separate that from a true
-    * pair; the frequency prior can). Transitivity through the hub still
-    * connects all same-entity satellites. */
+  /** Candidate pairs → accepted match edges: the scalar accept gate
+    * ([[scoreKeyed]]), then the frequency-prior hub rule ([[hubEdges]]).
+    * runPipeline reaches the same edges without a candidate-pair frame:
+    * its pair walk applies the gate itself ([[walkEdges]]). */
   def matchEdges(pairs: DataFrame, strings: DataFrame, cfg: Config,
       mentions: Option[DataFrame] = None): DataFrame = {
     val spark = pairs.sparkSession
@@ -481,20 +459,38 @@ object Pipeline {
     // lev ∈ [0, lev_max] with lev_max ≤ LevMaxCap), so filtering lev ≥ 0
     // first drops no accepted edge — it keeps sift4/token-gate/projection
     // work off the vast majority of candidate pairs the distance gate
-    // rejects anyway (the scorer columns were previously projected for
-    // every candidate pair because `sift` is needed downstream). scorePairs
-    // itself stays unfiltered: StreamingSpec compares the streaming gate's
-    // verdicts on the rejected pairs too.
+    // rejects anyway. scorePairs itself stays unfiltered: StreamingSpec
+    // compares the streaming gate's verdicts on the rejected pairs too.
     val withKeys = withMatchKeys(pairs, strings)
-      .filter(levenshtein($"src_key", $"dst_key", LevMaxCap) >= 0)
-    val scored = scoreKeyed(withKeys).filter($"accepted")
+      .filter(levenshtein($"src_key", $"dst_key", AcceptGate.LevMaxCap) >= 0)
     val freqs = strings.select($"string_id", $"freq")
-    val withF = scored
+    hubEdges(scoreKeyed(withKeys).filter($"accepted")
       .join(freqs.withColumnRenamed("string_id", "src").withColumnRenamed("freq", "src_freq"), Seq("src"))
-      .join(freqs.withColumnRenamed("string_id", "dst").withColumnRenamed("freq", "dst_freq"), Seq("dst"))
+      .join(freqs.withColumnRenamed("string_id", "dst").withColumnRenamed("freq", "dst_freq"), Seq("dst")),
+      strings, cfg, mentions)
+  }
+
+  /** Accepted pairs (src, dst, sift, src_freq, dst_freq) → match edges
+    * via the frequency-prior HUB rule (the reference's population/category
+    * priors X8/X9, recast for ER): after interning, an entity's mention
+    * mass concentrates on one canonical surface form (case/punctuation/
+    * synonym/diacritic variants all collapse to the same match key), while
+    * typo variants are low-frequency satellites one edit away. So each
+    * low-frequency string links ONLY to its single best higher-frequency
+    * hub (top-1 by hub frequency) and never to a sibling satellite:
+    * satellite↔satellite edges across entities are exactly the
+    * false-positive class on dense entity spaces (two corrupted forms of
+    * different entities can land 1 edit apart — no pairwise distance can
+    * separate that from a true pair; the frequency prior can).
+    * Transitivity through the hub still connects all same-entity
+    * satellites. The one edge tail of [[matchEdges]] and [[walkEdges]]. */
+  private def hubEdges(accepted: DataFrame, strings: DataFrame, cfg: Config,
+      mentions: Option[DataFrame]): DataFrame = {
+    val spark = accepted.sparkSession
+    import spark.implicits._
     // orient each edge satellite→hub (ties in freq broken by id: no
     // orientation is possible, and the ratio gate drops the edge anyway)
-    val oriented = withF.select(
+    val oriented = accepted.select(
       when($"src_freq" < $"dst_freq" ||
           ($"src_freq" === $"dst_freq" && $"src" > $"dst"),
         struct($"src".as("low"), $"dst".as("high"),
@@ -540,6 +536,33 @@ object Pipeline {
             $"sift".asc, $"ctx_cnt".desc, $"high_freq".desc, $"high".asc)))
       .filter($"rnk" === 1)
       .select($"low".as("src"), $"high".as("dst"))
+  }
+
+  /** strings → the accepted match edges straight from the pair walk,
+    * which verifies each pair where it is born ([[pairWalk]] with
+    * `verify`): no candidate-pair frame is persisted, re-read or joined
+    * back to its match keys. Returns the edges, persisted and
+    * materialized; the candidate pairs (src, dst) as lineage only, which
+    * recomputes the walk when read; and the blocking stats, whose
+    * candidate-pair count is an observation over the walk's rows that
+    * rides the edges' one action. The edges equal
+    * `matchEdges(candidatePairs(strings, cfg)._1, strings, cfg, mentions)`
+    * (ErPipelineSpec). */
+  private[er] def walkEdges(strings: DataFrame, cfg: Config,
+      mentions: Option[DataFrame]): (DataFrame, DataFrame, BlockingStats) = {
+    val spark = strings.sparkSession
+    import spark.implicits._
+    val walk = pairWalk(strings, cfg, verify = true)
+    val walked = Observation()
+    val accepted = hubEdges(
+        walk.rows.observe(walked, count(lit(1)).as("pairs")).filter($"accepted"),
+        strings, cfg, mentions)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    accepted.count()
+    // a walk stage that came out empty can be pruned with its observed
+    // node (see pairWalk); the walk is then counted from its lineage
+    val nPairs = walked.get.get("pairs").fold(walk.rows.count())(_.asInstanceOf[Long])
+    (accepted, walk.rows.select($"src", $"dst"), walk.finish(nPairs))
   }
 
   // ---------------------------------------------------------------- clustering
@@ -755,6 +778,10 @@ object Pipeline {
 
   // ---------------------------------------------------------------- e2e
 
+  /** One pipeline pass: the blocking stats; the candidate pairs
+    * (src, dst), lineage only (reading them recomputes the pair walk);
+    * mention membership and labels, persisted; the interned strings and
+    * their labels. */
   final case class PipelineOutput(
       stats: BlockingStats,
       pairs: DataFrame, membership: DataFrame, labels: DataFrame,
@@ -763,26 +790,32 @@ object Pipeline {
   /** Skew: salt buckets for the membership-expand join (hot string_ids). */
   final val SaltBuckets = 8
 
-  /** The measured pipeline: pages → mentions → intern → block → score →
-    * cluster → mention labels. No evaluation work (truth/universe
-    * expansion) — this is the unit ScalingBench/Bench measure. The stages
-    * run no count-only actions: their work runs inside the pair walk's
+  /** The measured pipeline: pages → mentions → intern → block and verify
+    * → cluster → mention labels. No evaluation work (truth/universe
+    * expansion) — this is the unit ScalingBench/Bench measure. The pair
+    * walk verifies each candidate where it is born ([[walkEdges]]), so no
+    * frame of candidate-pair cardinality is persisted; the stages run no
+    * count-only actions: their work runs inside the accepted edges'
     * count, the clustering rounds and the final labels count, so a stage
-    * has no wall time of its own here (perfbench `--trace 1` times them
-    * one by one). */
+    * has no wall time of its own here (perfbench `--trace 1` times the
+    * separate-stage API one by one). Only membership and labels stay
+    * persisted when it returns. */
   def runPipeline(spark: SparkSession, cfg: Config): PipelineOutput = {
     import spark.implicits._
     val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
-    val mentions = extractMentions(pages).persist(StorageLevel.MEMORY_AND_DISK)
+    // only the columns later stages read: contextPairs is the one reader
+    // of `url`
+    val mentions = extractMentions(pages)
+      .select((Seq("match_key", "mention_id", "mention_id2") ++
+        Option.when(cfg.contextEvidence)("url")).map(col): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val (strings0, membership0) = internStrings(mentions)
     val strings = strings0.persist(StorageLevel.MEMORY_AND_DISK)
     val membership = membership0.persist(StorageLevel.MEMORY_AND_DISK)
 
-    val (pairs, stats) = candidatePairs(strings, cfg)
-    val accepted = matchEdges(pairs, strings, cfg,
-        if (cfg.contextEvidence) Some(mentions) else None)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (accepted, pairs, stats) = walkEdges(strings, cfg,
+      if (cfg.contextEvidence) Some(mentions) else None)
 
     // cluster the *string* graph only (strings are the interned minority;
     // iterating pointer doubling over every mention would shuffle the
@@ -822,13 +855,13 @@ object Pipeline {
     PipelineOutput(stats, pairs, membership, labels, strings, stringLabels)
   }
 
-  /** Release a PipelineOutput's persisted frames (pairs, membership,
-    * labels — the three caches runPipeline leaves alive for the caller).
-    * Repeated-run harnesses (Bench min-of-3, ScalingBench reps) MUST call
-    * this on every output they discard: each leaked mention-scale cache
-    * evicts blocks the next timed run needs. */
+  /** Release a PipelineOutput's persisted frames (membership and labels —
+    * the two caches runPipeline leaves alive for the caller; its pairs
+    * are lineage only). Repeated-run harnesses (Bench min-of-3,
+    * ScalingBench reps) MUST call this on every output they discard: each
+    * leaked mention-scale cache evicts blocks the next timed run needs. */
   def release(o: PipelineOutput): Unit = {
-    o.pairs.unpersist(); o.membership.unpersist(); o.labels.unpersist()
+    o.membership.unpersist(); o.labels.unpersist()
   }
 
   /** Full pipeline + pairwise-F1 evaluation against generator truth. */

@@ -136,6 +136,20 @@ case class Sift4CpDist(left: Expression, right: Expression)
   override def prettyName: String = "sift4_cp"
 }
 
+/** The ER accept gate (graft.text.AcceptGate) on two match keys:
+  * struct<tok_ok, accepted>, the token-aligned gate alone and the whole
+  * verdict. (String, String) → struct<boolean, boolean>. */
+case class AcceptGateExpr(left: Expression, right: Expression)
+    extends KernelCall with BinaryLike[Expression] with StringArgs {
+  override def dataType: DataType = StructType(Seq(
+    StructField("tok_ok", BooleanType, nullable = false),
+    StructField("accepted", BooleanType, nullable = false)))
+  override lazy val replacement: Expression = call("acceptGate")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): AcceptGateExpr =
+    copy(left = l, right = r)
+  override def prettyName: String = "accept_gate"
+}
+
 /** Banded Levenshtein with the 255 overflow sentinel
   * (include/adr/score.h:15-57). (String, String) → Int. */
 case class BoundedLevenshtein(left: Expression, right: Expression)
@@ -539,9 +553,14 @@ object ExprKernels {
 
   /** The band counts codepoints, as the distance does (`String.length`
     * would count an astral-plane codepoint twice). */
-  def sift4Cp(l: UTF8String, r: UTF8String): Int = {
-    val maxDist = math.min(l.numChars, r.numChars) / 2 + 2
-    graft.text.Sift4.distCodepoints(l.toString, r.toString, 3, maxDist)
+  def sift4Cp(l: UTF8String, r: UTF8String): Int =
+    graft.text.AcceptGate.sift4(l.toString.codePoints.toArray, r.toString.codePoints.toArray)
+
+  def acceptGate(l: UTF8String, r: UTF8String): InternalRow = {
+    val a = new graft.text.AcceptGate.Key(l.toString)
+    val b = new graft.text.AcceptGate.Key(r.toString)
+    new GenericInternalRow(Array[Any](
+      graft.text.AcceptGate.tokensClose(a, b), graft.text.AcceptGate.verdict(a, b) >= 0))
   }
 
   def jaroWinkler(l: UTF8String, r: UTF8String): Double =
@@ -1229,40 +1248,63 @@ case class AreaFold(first: Expression, second: Expression,
 }
 
 /** Exactly-once candidate-pair emission for one blocking key
-  * (er.Pipeline.candidatePairs): a generator over (key: bigint, members:
+  * (er.Pipeline's blocking): a generator over (key: bigint, members:
   * array<struct<id: bigint, keys: array<bigint>>>). Walks members i < j
-  * only and emits (least(id), greatest(id)) iff min(keys(a) ∩ keys(b)) =
-  * key. A pair sits in the block of every key its members share, so
-  * exactly one block — the smallest shared key's — emits it:
-  * canonical-block ownership, the prefix-filter dedup of Fuzzy Joins
-  * Using MapReduce (ICDE 2012). Null members, null ids and null key
+  * only and emits (src, dst) = (least(id), greatest(id)) iff
+  * min(keys(a) ∩ keys(b)) = key. A pair sits in the block of every key
+  * its members share, so exactly one block — the smallest shared key's —
+  * emits it: canonical-block ownership, the prefix-filter dedup of Fuzzy
+  * Joins Using MapReduce (ICDE 2012).
+  *
+  * Members that also carry (match_key: string, freq: bigint) get each
+  * owned pair verified where it is born: the row adds the accept gate's
+  * verdict on (src's key, dst's key) (graft.text.AcceptGate) as
+  * `accepted`, the pair's SIFT4 distance as `sift` (null when rejected),
+  * and both frequencies as `src_freq`/`dst_freq`.
+  *
+  * Null members, null ids, null match keys or frequencies and null key
   * elements are skipped. Rows are produced lazily into one reused row
   * (GenerateExec projects each row before pulling the next), so a
   * 256-member block never materializes its 32 640 candidates. */
 case class BlockPairs(key: Expression, members: Expression)
     extends Generator with CodegenFallback {
   override def children: Seq[Expression] = Seq(key, members)
+
+  /** The members carry match keys and frequencies: the walk verifies. */
+  private def verifies: Boolean = members.dataType match {
+    case ArrayType(s: StructType, _) => s.length == 4
+    case _ => false
+  }
+
   override def elementSchema: StructType = StructType(Seq(
     StructField("src", LongType, nullable = false),
-    StructField("dst", LongType, nullable = false)))
+    StructField("dst", LongType, nullable = false)) ++ (if (!verifies) Nil else Seq(
+    StructField("accepted", BooleanType, nullable = false),
+    StructField("sift", IntegerType, nullable = true),
+    StructField("src_freq", LongType, nullable = false),
+    StructField("dst_freq", LongType, nullable = false))))
 
   override def checkInputDataTypes(): TypeCheckResult =
     (key.dataType, members.dataType) match {
       case (LongType, ArrayType(StructType(Array(
-          StructField(_, LongType, _, _), StructField(_, ArrayType(LongType, _), _, _))), _)) =>
+          StructField(_, LongType, _, _), StructField(_, ArrayType(LongType, _), _, _))), _)) |
+          (LongType, ArrayType(StructType(Array(
+          StructField(_, LongType, _, _), StructField(_, ArrayType(LongType, _), _, _),
+          StructField(_, _: StringType, _, _), StructField(_, LongType, _, _))), _)) =>
         TypeCheckResult.TypeCheckSuccess
       case _ =>
         TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires (bigint, array<struct<id: bigint, keys: " +
-            s"array<bigint>>>), got ${key.dataType.simpleString}, " +
-            members.dataType.simpleString)
+            s"array<bigint>>>) or (bigint, array<struct<id: bigint, keys: " +
+            s"array<bigint>, match_key: string, freq: bigint>>), got " +
+            s"${key.dataType.simpleString}, ${members.dataType.simpleString}")
     }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val k = key.eval(input)
     val ms = members.eval(input).asInstanceOf[ArrayData]
     if (k == null || ms == null) Iterator.empty
-    else BlockPairs.owned(k.asInstanceOf[Long], ms)
+    else BlockPairs.owned(k.asInstanceOf[Long], ms, verifies)
   }
 
   override protected def withNewChildrenInternal(
@@ -1272,6 +1314,8 @@ case class BlockPairs(key: Expression, members: Expression)
 }
 
 object BlockPairs {
+  import graft.text.AcceptGate
+
   /** min(a ∩ b), Long.MaxValue when disjoint — nested loops: the sets
     * are a string's few ownership keys, too small to be worth sorting */
   private def minShared(a: Array[Long], b: Array[Long]): Long = {
@@ -1289,26 +1333,38 @@ object BlockPairs {
     best
   }
 
-  private def owned(key: Long, ms: ArrayData): Iterator[InternalRow] = {
+  private def owned(key: Long, ms: ArrayData, verifies: Boolean): Iterator[InternalRow] = {
+    val width = if (verifies) 4 else 2
     val ids = Array.newBuilder[Long]
     val keys = Array.newBuilder[Array[Long]]
+    val gateKeys = Array.newBuilder[AcceptGate.Key]
+    val freqs = Array.newBuilder[Long]
     var m = 0
     while (m < ms.numElements()) {
       if (!ms.isNullAt(m)) {
-        val member = ms.getStruct(m, 2)
-        if (!member.isNullAt(0)) {
+        val member = ms.getStruct(m, width)
+        if (!member.isNullAt(0) &&
+            !(verifies && (member.isNullAt(2) || member.isNullAt(3)))) {
           ids += member.getLong(0)
           keys += (if (member.isNullAt(1)) Array.emptyLongArray else {
             val ks = member.getArray(1)
             (0 until ks.numElements()).filterNot(ks.isNullAt).map(ks.getLong).toArray
           })
+          if (verifies) {
+            gateKeys += new AcceptGate.Key(member.getUTF8String(2).toString)
+            freqs += member.getLong(3)
+          }
         }
       }
       m += 1
     }
     val id = ids.result()
     val ks = keys.result()
-    val row = new SpecificInternalRow(Seq(LongType, LongType))
+    val gk = gateKeys.result()
+    val freq = freqs.result()
+    val row = new SpecificInternalRow(
+      if (verifies) Seq(LongType, LongType, BooleanType, IntegerType, LongType, LongType)
+      else Seq(LongType, LongType))
     new Iterator[InternalRow] {
       private var i = 0
       private var j = 0
@@ -1326,8 +1382,16 @@ object BlockPairs {
       override def next(): InternalRow = {
         if (!hasNext) throw new NoSuchElementException
         ready = false
-        row.setLong(0, math.min(id(i), id(j)))
-        row.setLong(1, math.max(id(i), id(j)))
+        val (s, d) = if (id(i) < id(j)) (i, j) else (j, i)
+        row.setLong(0, id(s))
+        row.setLong(1, id(d))
+        if (verifies) {
+          val sift = AcceptGate.verdict(gk(s), gk(d))
+          row.setBoolean(2, sift >= 0)
+          if (sift >= 0) row.setInt(3, sift) else row.setNullAt(3)
+          row.setLong(4, freq(s))
+          row.setLong(5, freq(d))
+        }
         row
       }
     }

@@ -36,6 +36,10 @@ package object functions {
     * (score.h:75-79; ER accept gate — one typo = one edit on any script). */
   def sift4_cp(l: Column, r: Column): Column = col(Sift4CpDist(ex(l), ex(r)))
 
+  /** the ER accept gate (graft.text.AcceptGate) on two match keys:
+    * struct<tok_ok, accepted>. */
+  def accept_gate(l: Column, r: Column): Column = col(AcceptGateExpr(ex(l), ex(r)))
+
   /** banded Levenshtein, 255 sentinel on overflow (score.h:15-57). */
   def bounded_levenshtein(l: Column, r: Column): Column =
     col(BoundedLevenshtein(ex(l), ex(r)))
@@ -109,7 +113,8 @@ package object functions {
 
   /** exactly-once pair emission for one blocking key: generator of
     * (src, dst) rows, src < dst, for the member pairs whose smallest
-    * shared key is `key` — see [[BlockPairs]]. */
+    * shared key is `key`; members that carry match keys and frequencies
+    * also get each pair's accept-gate verdict — see [[BlockPairs]]. */
   def block_pairs(key: Column, members: Column): Column =
     col(BlockPairs(ex(key), ex(members)))
 }

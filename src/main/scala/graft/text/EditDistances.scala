@@ -75,6 +75,40 @@ object EditDistances {
     prev(t.length)
   }
 
+  /** Levenshtein distance over codepoints when it is at most `cap`, else
+    * -1: Spark's `levenshtein(a, b, cap)`. Only the cells within `cap`
+    * of the diagonal are filled, and a row whose band is all over `cap`
+    * ends the walk (every alignment crosses every row). */
+  def levenshteinWithin(a: Array[Int], b: Array[Int], cap: Int): Int = {
+    val (s, t) = if (a.length <= b.length) (a, b) else (b, a)
+    val n = s.length
+    val m = t.length
+    if (m - n > cap) return -1
+    val over = cap + 1
+    var prev = Array.tabulate(n + 1)(i => math.min(i, over))
+    var cur = new Array[Int](n + 1)
+    var j = 1
+    while (j <= m) {
+      val lo = math.max(1, j - cap)
+      val hi = math.min(n, j + cap)
+      cur(lo - 1) = if (lo == 1) math.min(j, over) else over
+      var rowMin = cur(lo - 1)
+      var i = lo
+      while (i <= hi) {
+        val sub = prev(i - 1) + (if (s(i - 1) == t(j - 1)) 0 else 1)
+        val d = math.min(math.min(cur(i - 1), prev(i)) + 1, sub)
+        cur(i) = math.min(d, over)
+        if (cur(i) < rowMin) rowMin = cur(i)
+        i += 1
+      }
+      if (hi < n) cur(hi + 1) = over
+      if (rowMin > cap) return -1
+      val tmp = prev; prev = cur; cur = tmp
+      j += 1
+    }
+    if (prev(n) <= cap) prev(n) else -1
+  }
+
   /** Jaro similarity on bytes. */
   def jaro(a: String, b: String): Double =
     jaroBytes(a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))

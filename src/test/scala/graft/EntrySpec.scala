@@ -193,18 +193,13 @@ object EntrySpec {
       "build side"))
 
   /** The lambda sites of `er.Pipeline.scorePairs`' plan, its cached
-    * mention, string and pair inputs included. The `tok_ok` gate's
-    * `zip_with`/`forall` zip the two keys' tokens and test every aligned
-    * pair once per SCORED pair, which the rule above forbids: they are
-    * listed, not adjudicated, so that any change to them fails here, and
-    * ROADMAP.md direction 5 (verify where the pair is born) is where the
-    * gate leaves the per-pair lambda. */
+    * mention, string and pair inputs included: only the blocking inputs'
+    * once-per-row arrays. The accept gate, token gate included, is the
+    * `accept_gate` kernel, so no lambda runs per scored pair. */
   val ScorePairsLambdas: Map[String, String] = Map(
     "filter" -> "extractMentions' `loc:` line filter, one line array per page",
     "array_sort" -> "candidatePairs' prefix cut, about 20 (cnt, key) structs per string",
-    "transform" -> "candidatePairs' phonetic codes, one token array per string",
-    "zip_with" -> "tok_ok gate, per scored pair (not reviewed: direction 5)",
-    "forall" -> "tok_ok gate, per scored pair (not reviewed: direction 5)")
+    "transform" -> "candidatePairs' phonetic codes, one token array per string")
 
   /** Every operator of a planned or executed query: through adaptive
     * stages, cached relations and subqueries. */

@@ -114,6 +114,44 @@ class ErPipelineSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  test("runPipeline's walk-verified edges equal the separate-stage path, and " +
+      "only membership and labels stay persisted") {
+    val cfg = Pipeline.Config(seed = 42L, nPages = 800, nEntities = 150,
+      workDir = freshDir("walk_pipeline"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Pipeline.runPipeline(spark, cfg)
+    val kept = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(kept.size == 2 && out.membership.storageLevel.useMemory &&
+      out.labels.storageLevel.useMemory && !out.pairs.storageLevel.isValid,
+      s"runPipeline left ${kept.size} persisted frames")
+    Pipeline.release(out)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "release must free every frame runPipeline left persisted")
+
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
+    val mentions = Pipeline.extractMentions(pages).cache()
+    val strings = Pipeline.internStrings(mentions)._1.cache()
+    val (pairs, stats) = Pipeline.candidatePairs(strings, cfg)
+    assert(out.stats == stats && stats.candidatePairs == pairs.count())
+    assert(same(out.pairs, pairs), "the pipeline's pairs differ from candidatePairs'")
+    for (ctx <- Seq(false, true)) {
+      val c = cfg.copy(contextEvidence = ctx)
+      val edges = Pipeline.matchEdges(pairs, strings, c, Some(mentions)).cache()
+      val (walked, walkPairs, walkStats) = Pipeline.walkEdges(strings, c, Some(mentions))
+      assert(edges.count() > 0 && same(walked, edges), s"context $ctx: edges differ")
+      assert(walkStats == stats && same(walkPairs, pairs), s"context $ctx")
+      if (!ctx) {
+        val (labels, _) = Pipeline.forestLabels(strings.select($"string_id"), edges,
+          cfg.copy(workDir = freshDir("walk_separate")))
+        assert(same(labels, out.stringLabels), "string labels differ")
+      }
+      Seq(edges, walked).foreach(_.unpersist())
+    }
+    Seq(pairs, strings, mentions).foreach(_.unpersist())
+  }
+
   test("extraction is byte-identical per url regardless of partitioning") {
     val pages1 = Corpus.pages(spark, 200, 50, 42L).toDF().repartition(1)
     val pages2 = Corpus.pages(spark, 200, 50, 42L).toDF().repartition(17)

@@ -267,6 +267,7 @@ class ExpressionsSpec extends AnyFunSuite {
     "profile_hits" -> "profile_hits(trigram_strings(normalize_text(s)))",
     "double_metaphone" -> "double_metaphone(s)",
     "sift4_cp" -> "sift4_cp(s, t)",
+    "accept_gate" -> "accept_gate(match_key(s), match_key(t)), accept_gate(s, s)",
     "bounded_levenshtein" -> "bounded_levenshtein(s, t)",
     "jaro_winkler" -> "jaro_winkler(s, t)",
     "ref_match_score" -> "ref_match_score(s, normalize_text(t)), ref_match_score(s, match_key(s))",
@@ -452,6 +453,22 @@ class ExpressionsSpec extends AnyFunSuite {
       "array(5L, CAST(NULL AS BIGINT))), named_struct('id', 1L, 'keys', array(3L, 5L))) AS members")
     assert(pairs(withNull) == Set((1L, 4L)))
     assert(pairs(Seq((1L, Seq.empty[(Long, Seq[Long])])).toDF("key", "members")).isEmpty)
+    // members with match keys and frequencies: the same pairs, each with
+    // the gate's verdict on (src's key, dst's key) and both frequencies
+    val keysOf = Map(1L -> "berlin hauptstrasse", 2L -> "berlin hauptstrase", 3L -> "hamburg")
+    // (member 4, without a match key, is skipped)
+    val verified = Seq((5L, Seq((2L, Seq(5L, 3L), keysOf(2L), 7L), (1L, Seq(5L, 9L),
+        keysOf(1L), 40L), (3L, Seq(9L, 5L), keysOf(3L), 2L), (4L, Seq(5L), null, 1L))))
+      .toDF("key", "members")
+      .select(gf.block_pairs($"key", $"members"))
+      .as[(Long, Long, Boolean, Option[Int], Long, Long)].collect().toSet
+    val freqOf = Map(1L -> 40L, 2L -> 7L, 3L -> 2L)
+    assert(verified.count(_._3) == 1)
+    assert(verified == Set((1L, 2L), (1L, 3L), (2L, 3L)).map { case (a, b) =>
+      val v = graft.text.AcceptGate.verdict(
+        new graft.text.AcceptGate.Key(keysOf(a)), new graft.text.AcceptGate.Key(keysOf(b)))
+      (a, b, v >= 0, Option.when(v >= 0)(v), freqOf(a), freqOf(b))
+    })
     val bad = intercept[org.apache.spark.sql.AnalysisException] {
       Seq((1, Seq((1L, Seq(1))))).toDF("key", "members")
         .select(gf.block_pairs($"key", $"members")).collect()
